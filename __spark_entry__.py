@@ -12,14 +12,12 @@ The first entries of queries() are the driver's 50-query correctness
 window. The driver caps CORRECTNESS_r{N}.json at 50 entries, so the
 window ROTATES each round to accumulate driver-verified coverage.
 The full per-round rotation history lives in COVERAGE.md's
-"Driver-window ledger" section; after r12 the cumulative ledger held
-491 of 498 registered queries.
+"Driver-window ledger" section, kept by ``tools/ledger.py`` (append
+each CORRECTNESS file, then ``stale`` for the next window's names).
 
-Round 14's window (per VERDICT r13 #1, staged and 3-SF-pre-certified
-at the r13 close): flagship + the 37 remaining r2/r3-era names + the
-12 oldest r4-era names. Several of the r4-era slots are queries whose
-internals were optimized in round 14 (OPTIMIZATION_r14.md), so this
-window also gives that work fresh driver-hash evidence.
+The current window: flagship, then the ten trade-graph consumers
+(graph.py/graph2.py), whose plans changed when they moved onto the
+one cached trade_graph relation, then the 39 stalest ledger names.
 """
 
 from __future__ import annotations
@@ -35,41 +33,35 @@ registry.load_all()
 
 _WINDOW = [
     "flagship_revenue_by_nation",
-    # --- r14 rotation, exactly as staged and 3-SF-pre-certified at the
-    #     r13 close (VERDICT r13 ask #1): the 37 remaining r2/r3-era
-    #     names, then the 12 oldest r4-era names in ledger order. The
-    #     r4 block doubles as fresh driver evidence for this round's
-    #     optimization work: text_tfidf_top_term, corpus_clean_pipeline,
-    #     dedup_clusters/_twostar, dedup_embedding_cosine and
-    #     dedup_leakage_safe_split were all restructured or
-    #     cache-shared in r14 (see OPTIMIZATION_r14.md) and re-certified
-    #     at all three SFs before this rotation.
-    "a3_count_star_alias", "a7_count_scalar", "f1_log_guarded",
-    "j3_broadcast_dim", "j3_cross", "j3_left_outer", "j3_left_semi",
-    "j3_right_outer", "p2_column_subset", "p3_rename", "set_except",
-    "set_intersect", "set_union_all", "set_union_by_name",
-    "a6_approx_quantile", "asof_last_click_before_purchase",
-    "dedup_exact", "dedup_keep_newest", "f10_monthly_revenue",
-    "f3_haversine", "f6_quantile_clamp", "m1_string_indexer",
-    "m4_pipeline_fit_transform", "m6_target_stats",
-    "m8_smearing_inverse", "mm_image_features", "o1_global_sort_desc",
-    "o2_topk", "p4_null_filter", "p5_sql_string_filter",
-    "p6_range_filter_drop", "p7_conditional_case", "s4_local_rows",
-    "s6_csv_sink_native", "set_drop_duplicates", "sim_bruteforce_topk",
-    "text_tfidf_top_term",
-    # --- oldest r4-era names
-    "a33_runs_test", "corpus_clean_pipeline",
-    "corpus_temperature_mixture", "corpus_token_budget",
-    "dedup_clusters", "dedup_clusters_twostar",
-    "dedup_embedding_cosine", "dedup_leakage_safe_split",
-    "dedup_minhash_incremental", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_simhash",
+    # --- the ten trade-graph consumers, which now all read the one
+    #     cached trade_graph relation (graph.py) and, for pagerank and
+    #     personalized pagerank, one recurrence
+    "graph_pagerank_trade", "graph_personalized_pagerank",
+    "graph_label_propagation", "graph_modularity", "graph_link_prediction",
+    "graph_bfs_hops", "graph_mis_luby", "graph_degree_assortativity",
+    "graph_rich_club", "graph_anf_neighborhood",
+    # --- the 39 stalest ledger names outside the above, per
+    #     `python tools/ledger.py stale --top 39` after folding
+    #     CORRECTNESS_r13..r15 into COVERAGE.md
+    "dq8_id_gap_islands", "dq9_referential_integrity", "f16_mom_growth",
+    "graph_kcore", "graph_triangle_count", "m23_roc_auc_ranksum",
+    "mm_ahash_neardup", "mm_scene_cut", "p14_dense_reid",
+    "pack_documents_greedy", "range_join_clicks_before_purchase",
+    "s22_csv_malformed_modes", "s24_bucketed_join_no_shuffle",
+    "scd2_intervals", "sim_lsh_ann", "st_stateful_running_totals",
+    "text_contamination_ngrams", "text_langid", "text_quality_score",
+    "text_token_count", "tpch_q18_large_orders", "tpch_q1_pricing_summary",
+    "tpch_q21_waiting_supplier", "tpch_q3_shipping_priority",
+    "tpch_q5_region_revenue", "tpch_q7_nation_volume",
+    "tpch_q9_product_profit", "ts_cusum_changepoints",
+    "x18_systematic_pps_sample", "x20_cdc_apply",
+    "a34_weighted_median_prefix", "dedup_containment",
+    "dq10_uniqueness_audit", "dq12_merkle_bucket_diff", "dq13_psi_drift",
+    "j10_bloom_join_prune", "j9_interval_overlap_join",
+    "m11_regression_metrics_sql", "m27_ndcg_ranking_eval",
 ]
 assert len(_WINDOW) == 50, len(_WINDOW)
-
-# r15 window: continue the freshness rotation mechanically — flagship
-# + the 49 stalest ledger names per `tools/ledger.py --stalest` after
-# folding CORRECTNESS_r14 (the remaining r4-r7-era tail).
+assert len(set(_WINDOW)) == 50
 
 
 def _ordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,12 +1,12 @@
-"""Iterative graph analytics on DataFrames: fixed-point PageRank.
+"""Iterative graph analytics on DataFrames over the customer–supplier
+trade graph (who bought from whom, via orders ⋈ lineitem).
 
-The customer–supplier trade graph (who bought from whom, via
-orders ⋈ lineitem) is mined with PageRank run as a driver-side loop of
-DataFrame transformations — each iteration is one distributed
-join + aggregate, with the rank state cached between iterations. This
-is the canonical Spark shape for iterative algorithms (same loop
-structure as MLlib's ALS/KMeans internals): the LOOP is on the driver,
-every step of WORK is on the cluster.
+The graph is built once per session by trade_graph — one cached
+(src, dst, d) relation that every iterative trade-graph operator reads
+— and mined with driver-side loops of distributed steps: the LOOP is on
+the driver, every step of WORK is on the cluster (the MLlib ALS/KMeans
+shape). PageRank and personalized PageRank share one recurrence,
+pagerank.
 
 Cross-engine determinism: ranks are kept in scaled integer arithmetic
 (micro-ranks, 1e12 = rank 1.0) so every contribution, damping multiply
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realestate_engine.dedup import cache_once
-from realestate_engine.registry import register, t
+from realestate_engine.registry import input_width, register, t
 
 SCALE = 1_000_000_000_000  # 1e12 micro-rank units per unit of rank
 DAMPING_NUM, DAMPING_DEN = 85, 100  # 0.85 as an exact ratio
@@ -58,107 +58,140 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank_fixed_point(
-    edges: DataFrame, n_iter: int = N_ITER, width: int | None = None
-) -> DataFrame:
-    """Fixed-point PageRank over an edge list (src, dst): returns
-    (node, rank_micro BIGINT). Every node in the edge list has out-
-    degree >= 1 (edges are bidirectional), so there is no dangling-mass
-    term. Per iteration: contribution = rank div out_degree (integer),
-    new rank = base + 85% of the contribution sum — all BIGINT."""
-    # Partition the (static) edge list by src ONCE, attach each edge's
-    # SOURCE degree (also static), and cache that (src, dst, d)
-    # artifact. Degrees come from a groupBy on the same partitioning —
-    # a zero-shuffle partial aggregate — joined back colocated (both
-    # sides hash(src)), so the build pays the one unavoidable edge
-    # shuffle and nothing else. With d riding the cached edges, the
-    # per-iteration ``deg ⋈ ranks`` join of the r13/r14 form is GONE
-    # (guide §2.4 — remove shuffles outright): each iteration is now
-    # exactly one node-sized join (ranks onto the src layout) + the
-    # unavoidable groupBy(dst) of contributions. ``rank div d`` is
-    # evaluated per edge instead of once per source — the same integer
-    # value replicated, so every inflow sum is bit-identical.
-    rep = edges.repartition(width, "src") if width else edges.repartition("src")
+def trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trade graph every iterative trade-graph operator reads: one
+    cached (src, dst, d) relation per session and input directory.
+
+    - **Packed ids.** Nodes are BIGINTs, customer = 2*custkey and
+      supplier = 2*suppkey + 1 (trade_edges), so the side of a node is
+      its parity and every key is 8 bytes.
+    - **Mirrored.** Each undirected trade link is two rows, (c, s) and
+      (s, c), and the edge list is a set. Out-degree therefore IS
+      degree, every node appears as a src, and there are no dangling
+      nodes.
+    - **src layout.** The relation is hash-partitioned by src, so
+      per-src aggregates and joins keyed on src read it with no
+      exchange.
+    - **d on the edges.** d is the degree of src, attached once with a
+      colocated groupBy + join; node degrees are
+      ``select("src", "d").distinct()`` and no caller recounts them.
+    - **Width.** input_width(orders, lineitem, 8 MB per partition):
+      derived from the input bytes, one rule for every consumer.
+
+    cache_once keys the relation by its plan, so every caller in a
+    session shares one materialization until the cache is cleared."""
+    width = input_width(spark, sf_dir, "orders", "lineitem", mb_per_part=8)
+    rep = trade_edges(spark, sf_dir).repartition(width, "src")
     deg = rep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges_p = cache_once(rep.join(deg, "src"))
-    # node set and count read the CACHED relation (distinct on the
-    # cached hash(src) layout adds no exchange), not the deg subtree,
-    # which would replay the edge build.
-    nodes = edges_p.select("src").distinct().select(F.col("src").alias("node"))
-    n_nodes = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    # base = floor(0.15 * SCALE / N), init = floor(SCALE / N): 1-row
-    # broadcast, exact integers.
-    ranks = (
-        nodes.crossJoin(F.broadcast(n_nodes))
-        .select("node", F.expr(f"{SCALE} div n").alias("rank_micro"), "n")
+    return cache_once(rep.join(deg, "src"))
+
+
+def pagerank(edges_p: DataFrame, n_iter: int, seeds: DataFrame | None = None) -> DataFrame:
+    """Fixed-point PageRank over a (src, dst, d) edge relation with the
+    trade_graph contract (mirrored, d = degree of src): returns
+    (node, rank_micro BIGINT) for every node. Per round each node's
+    rank flows out as ``rank div d`` per edge and the new rank is
+    base + 85% of the inflow, all in BIGINT.
+
+    Without ``seeds`` the walk teleports anywhere: init SCALE div N,
+    base 15% of SCALE div N over the N nodes. ``seeds`` (a frame with
+    a ``node`` column) makes it personalized PageRank: init and base go
+    to the seeds present in the graph only, split over their count.
+
+    The recurrence is ONE spark.sql statement over the bound edge
+    relation, not a driver loop of DataFrame calls: the physical plan
+    is the same join/agg tree, but plan composition is one parse
+    instead of ~30 py4j round-trips (measured build 0.41→0.25s at
+    sf0.1). spark.sql binds the frames as temporary views and drops
+    them once the statement is analyzed, and dropping a view uncaches
+    the cache entry whose plan equals the view's — trade_graph's. So
+    each frame is bound behind a no-op filter: the view's plan then
+    differs from the cached one, the query still reads the cache, and
+    the optimizer removes the filter (the physical plan is unchanged)."""
+    base = f"(15 * {SCALE}) div (100 * first(r.n))"
+    frames = {"e": edges_p}
+    if seeds is None:
+        head = f"""
+    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
+    r0 AS (SELECT node, {SCALE} div n AS rank_micro, n FROM nodes CROSS JOIN nn)"""
+        hint = seed_join = ""
+    else:
+        head = f"""
+    sd AS (SELECT DISTINCT s.node FROM {{s}} s JOIN nodes ON nodes.node = s.node),
+    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sd),
+    r0 AS (
+        SELECT nodes.node,
+               CASE WHEN sd.node IS NULL THEN 0 ELSE {SCALE} div n END AS rank_micro, n
+        FROM nodes LEFT JOIN sd ON sd.node = nodes.node CROSS JOIN nn
+    )"""
+        base = f"CASE WHEN max(s.node) IS NULL THEN 0 ELSE {base} END"
+        hint = "/*+ BROADCAST(s) */ "
+        seed_join = "\n        LEFT JOIN sd s ON s.node = e.dst"
+        frames["s"] = seeds
+    ctes = ["nodes AS (SELECT DISTINCT src AS node FROM {e})", head]
+    for i in range(1, n_iter + 1):
+        ctes.append(
+            f"""
+    r{i} AS (
+        SELECT {hint}e.dst AS node,
+               {base}
+                 + ({DAMPING_NUM} * SUM(r.rank_micro div e.d)) div {DAMPING_DEN} AS rank_micro,
+               first(r.n) AS n
+        FROM {{e}} e JOIN r{i - 1} r ON r.node = e.src{seed_join}
+        GROUP BY e.dst
+    )"""
+        )
+    return edges_p.sparkSession.sql(
+        f"WITH {','.join(ctes)}\n    SELECT node, rank_micro FROM r{n_iter}",
+        **{k: v.where(F.lit(True)) for k, v in frames.items()},
     )
-    for _ in range(n_iter):
-        contrib = (
-            edges_p.join(
-                ranks.select(F.col("node").alias("src"), "rank_micro", "n"), "src"
-            )
-            .groupBy("dst")
-            .agg(
-                F.sum(F.expr("rank_micro div d")).alias("inflow"),
-                F.first("n").alias("n"),
-            )
-        )
-        ranks = contrib.select(
-            F.col("dst").alias("node"),
-            F.expr(
-                f"(15 * {SCALE}) div (100 * n) + ({DAMPING_NUM} * inflow) div {DAMPING_DEN}"
-            ).alias("rank_micro"),
-            "n",
-        )
-    return ranks.select("node", "rank_micro")
 
 
-_PAGERANK_ORACLE = f"""
+# The trade graph as oracle SQL — trade_edges' packed, mirrored edge
+# set, computed once per statement. Every trade-graph oracle opens with
+# it and appends its own CTEs after a comma (dedup's _CLUSTERS_CTES
+# composition).
+_TRADE_EDGES_CTES = """
     WITH pairs AS (
         SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ),
-    edges AS (
+    edges AS MATERIALIZED (
         SELECT c AS src, s AS dst FROM pairs
         UNION ALL
         SELECT s AS src, c AS dst FROM pairs
-    ),
+    )"""
+
+
+def _pagerank_round_sql(prev: str, out: str, seeded: bool) -> str:
+    """One unrolled oracle round of pagerank's recurrence."""
+    share = f"(15 * {SCALE}) // (100 * nn.n)"
+    base = f"ANY_VALUE({share})"
+    seed_join = ""
+    if seeded:
+        base = f"MAX(CASE WHEN s.node IS NOT NULL THEN {share} ELSE 0 END)"
+        seed_join = " LEFT JOIN seeds s ON s.node = e.dst"
+    return f"""
+    {out} AS (
+        SELECT e.dst AS node,
+               {base}
+                 + (85 * SUM(r.rank_micro // deg.d)) // 100 AS rank_micro
+        FROM edges e
+        JOIN deg ON deg.src = e.src
+        JOIN {prev} r ON r.node = e.src{seed_join}
+        CROSS JOIN nn
+        GROUP BY e.dst
+    )"""
+
+
+_PAGERANK_ORACLE = f"""{_TRADE_EDGES_CTES},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     nn AS (SELECT COUNT(*) AS n FROM nodes),
     deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
     r0 AS (SELECT node, {SCALE} // n AS rank_micro FROM nodes, nn),
-    r1 AS (
-        SELECT e.dst AS node,
-               (15 * {SCALE}) // (100 * ANY_VALUE(nn.n))
-                 + (85 * SUM(r.rank_micro // deg.d)) // 100 AS rank_micro
-        FROM edges e
-        JOIN deg ON deg.src = e.src
-        JOIN r0 r ON r.node = e.src
-        CROSS JOIN nn
-        GROUP BY e.dst
-    ),
-    r2 AS (
-        SELECT e.dst AS node,
-               (15 * {SCALE}) // (100 * ANY_VALUE(nn.n))
-                 + (85 * SUM(r.rank_micro // deg.d)) // 100 AS rank_micro
-        FROM edges e
-        JOIN deg ON deg.src = e.src
-        JOIN r1 r ON r.node = e.src
-        CROSS JOIN nn
-        GROUP BY e.dst
-    ),
-    r3 AS (
-        SELECT e.dst AS node,
-               (15 * {SCALE}) // (100 * ANY_VALUE(nn.n))
-                 + (85 * SUM(r.rank_micro // deg.d)) // 100 AS rank_micro
-        FROM edges e
-        JOIN deg ON deg.src = e.src
-        JOIN r2 r ON r.node = e.src
-        CROSS JOIN nn
-        GROUP BY e.dst
-    )
+    {",".join(_pagerank_round_sql(f"r{i}", f"r{i + 1}", False) for i in range(N_ITER))}
     SELECT CAST(node AS BIGINT) AS node, CAST(rank_micro AS BIGINT) AS rank_micro
-    FROM r3
+    FROM r{N_ITER}
     ORDER BY rank_micro DESC, node
     LIMIT 50
 """
@@ -171,49 +204,11 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the identical integer recurrence as three chained
     CTEs — every arithmetic step is BIGINT, so Spark and DuckDB agree
     bit-for-bit (a floating-point PageRank could not be hash-compared:
-    its per-group sums are partition-order dependent).
-
-    r15 form: the recurrence is composed as ONE spark.sql statement
-    over the cached (src, dst, d) edge view instead of a driver loop of
-    ~30 DataFrame calls — the physical plan is identical (verified:
-    collected results match the DataFrame form bit-for-bit; Catalyst
-    lowers both to the same join/agg tree), but plan COMPOSITION drops
-    from ~0.4s of py4j round-trips to one parse (guide §5: the driver
-    should do almost no work; measured build 0.41→0.25s at sf0.1).
-    pagerank_fixed_point keeps the loop form for arbitrary edge inputs
-    (tests, personalized PR)."""
-    from realestate_engine.registry import input_width
-
-    width = input_width(spark, sf_dir, "orders", "lineitem", mb_per_part=8)
-    rep = trade_edges(spark, sf_dir).repartition(width, "src")
-    deg = rep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    # Same cached (src, dst, d) artifact as pagerank_fixed_point (see
-    # its comment): one edge shuffle, degree attached colocated, the
-    # per-iteration deg join gone.
-    edges_p = cache_once(rep.join(deg, "src"))
-    edges_p.createOrReplaceTempView("_pr_edges")
-    rounds = []
-    for i in range(1, N_ITER + 1):
-        rounds.append(
-            f"""
-    r{i} AS (
-        SELECT e.dst AS node,
-               (15 * {SCALE}) div (100 * first(r.n))
-                 + ({DAMPING_NUM} * SUM(r.rank_micro div e.d)) div {DAMPING_DEN} AS rank_micro,
-               first(r.n) AS n
-        FROM _pr_edges e JOIN r{i - 1} r ON r.node = e.src
-        GROUP BY e.dst
-    )"""
-        )
-    return spark.sql(
-        f"""
-    WITH nodes AS (SELECT DISTINCT src AS node FROM _pr_edges),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    r0 AS (SELECT node, {SCALE} div n AS rank_micro, n FROM nodes CROSS JOIN nn),
-    {','.join(rounds)}
-    SELECT node, rank_micro FROM r{N_ITER}
-    ORDER BY rank_micro DESC, node LIMIT 50
-    """
+    its per-group sums are partition-order dependent)."""
+    return (
+        pagerank(trade_graph(spark, sf_dir), N_ITER)
+        .orderBy(F.desc("rank_micro"), "node")
+        .limit(50)
     )
 
 
@@ -231,20 +226,13 @@ def _lp_round_sql(prev: str, out: str) -> str:
     )"""
 
 
-_LP_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+_LP_CTES = f"""{_TRADE_EDGES_CTES},
     l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
     {_lp_round_sql("l0", "l1")},
     {_lp_round_sql("l1", "l2")},
-    {_lp_round_sql("l2", "l3")}
+    {_lp_round_sql("l2", "l3")}"""
+
+_LP_ORACLE = f"""{_LP_CTES}
     SELECT CAST(label AS BIGINT) AS community, CAST(COUNT(*) AS BIGINT) AS size
     FROM l3 GROUP BY label
     ORDER BY size DESC, community
@@ -296,9 +284,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the identical recurrence unrolled as three chained CTEs
     (integer counts + integer labels — no float anywhere, so the
     argmax is bit-exact); tests additionally re-run it in pure Python."""
-    edges = trade_edges(spark, sf_dir)
-    edges_p = cache_once(edges.repartition("src"))
-    labels = lp_labels(edges_p, 3)
+    labels = lp_labels(trade_graph(spark, sf_dir), 3)
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("size"))
@@ -321,20 +307,7 @@ _MODULARITY_TERM = (
     " * 1000000000) AS BIGINT)"
 )
 
-_MODULARITY_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
-    l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-    {_lp_round_sql("l0", "l1")},
-    {_lp_round_sql("l1", "l2")},
-    {_lp_round_sql("l2", "l3")},
+_MODULARITY_ORACLE = f"""{_LP_CTES},
     deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
     tot AS (SELECT COUNT(*) AS m2 FROM edges),
     comm AS (
@@ -383,10 +356,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     floating-point is the final shared-text divide/multiply/FLOOR
     (_MODULARITY_TERM), identical on both engines and correctly rounded
     per IEEE-754, so hash-comparable at any SF."""
-    edges = trade_edges(spark, sf_dir)
-    edges_p = cache_once(edges.repartition("src"))
+    edges_p = trade_graph(spark, sf_dir)
     labels = lp_labels(edges_p, 3)
-    deg = edges_p.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    deg = edges_p.select("src", "d").distinct()
     tot = edges_p.agg(F.count(F.lit(1)).alias("m2"))
     comm = (
         labels.join(deg, labels.node == deg.src)
@@ -426,62 +398,21 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PPR_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+_PPR_ORACLE = f"""{_TRADE_EDGES_CTES},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     seeds AS (
         SELECT DISTINCT c_custkey * 2 AS node FROM customer WHERE c_nationkey = 0
     ),
-    sn AS (SELECT COUNT(*) AS n FROM seeds JOIN nodes USING (node)),
+    nn AS (SELECT COUNT(*) AS n FROM seeds JOIN nodes USING (node)),
     deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
     r0 AS (
         SELECT n.node,
-               CASE WHEN s.node IS NOT NULL THEN {SCALE} // sn.n ELSE 0 END AS rank_micro
-        FROM nodes n LEFT JOIN seeds s ON s.node = n.node CROSS JOIN sn
+               CASE WHEN s.node IS NOT NULL THEN {SCALE} // nn.n ELSE 0 END AS rank_micro
+        FROM nodes n LEFT JOIN seeds s ON s.node = n.node CROSS JOIN nn
     ),
-    r1 AS (
-        SELECT e.dst AS node,
-               MAX(CASE WHEN s.node IS NOT NULL THEN (15 * {SCALE}) // (100 * sn.n) ELSE 0 END)
-                 + (85 * SUM(r.rank_micro // deg.d)) // 100 AS rank_micro
-        FROM edges e
-        JOIN deg ON deg.src = e.src
-        JOIN r0 r ON r.node = e.src
-        LEFT JOIN seeds s ON s.node = e.dst
-        CROSS JOIN sn
-        GROUP BY e.dst
-    ),
-    r2 AS (
-        SELECT e.dst AS node,
-               MAX(CASE WHEN s.node IS NOT NULL THEN (15 * {SCALE}) // (100 * sn.n) ELSE 0 END)
-                 + (85 * SUM(r.rank_micro // deg.d)) // 100 AS rank_micro
-        FROM edges e
-        JOIN deg ON deg.src = e.src
-        JOIN r1 r ON r.node = e.src
-        LEFT JOIN seeds s ON s.node = e.dst
-        CROSS JOIN sn
-        GROUP BY e.dst
-    ),
-    r3 AS (
-        SELECT e.dst AS node,
-               MAX(CASE WHEN s.node IS NOT NULL THEN (15 * {SCALE}) // (100 * sn.n) ELSE 0 END)
-                 + (85 * SUM(r.rank_micro // deg.d)) // 100 AS rank_micro
-        FROM edges e
-        JOIN deg ON deg.src = e.src
-        JOIN r2 r ON r.node = e.src
-        LEFT JOIN seeds s ON s.node = e.dst
-        CROSS JOIN sn
-        GROUP BY e.dst
-    )
+    {",".join(_pagerank_round_sql(f"r{i}", f"r{i + 1}", True) for i in range(N_ITER))}
     SELECT CAST(node AS BIGINT) AS node, CAST(rank_micro AS BIGINT) AS rank_micro
-    FROM r3 WHERE rank_micro > 0
+    FROM r{N_ITER} WHERE rank_micro > 0
     ORDER BY rank_micro DESC, node
     LIMIT 50
 """
@@ -493,67 +424,18 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     SET (nation-0 customers) instead of everywhere, so the stationary
     mass measures proximity TO THE SEEDS: the graph-recommendation /
     trust-propagation primitive (who does this cohort actually trade
-    with, transitively?). Same fixed-point BIGINT scheme as
-    graph_pagerank_trade (bit-exact vs the unrolled-CTE oracle); the
-    only changes are the seed-restricted init and base term. The seed
-    flag joins as a tiny broadcast; everything else reuses the cached
-    src-partitioned edge layout."""
-    from realestate_engine.registry import input_width
-
-    # Same cached (src, dst, d) artifact as pagerank_fixed_point (r15;
-    # see its comment): the source degree rides the cached edges, so
-    # the per-iteration deg ⋈ ranks join is gone and the relation is
-    # plan-identical with graph_pagerank_trade's — one shared cache.
-    width = input_width(spark, sf_dir, "orders", "lineitem", mb_per_part=8)
-    rep = trade_edges(spark, sf_dir).repartition(width, "src")
-    deg = rep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges_p = cache_once(rep.join(deg, "src"))
-    nodes = edges_p.select("src").distinct().select(F.col("src").alias("node"))
+    with, transitively?). Same fixed-point BIGINT recurrence as
+    graph_pagerank_trade (pagerank with a seed set; bit-exact vs the
+    unrolled-CTE oracle); the only changes are the seed-restricted init
+    and base term."""
     seeds = (
         t(spark, sf_dir, "customer")
         .where(F.col("c_nationkey") == 0)
         .select((F.col("c_custkey") * 2).alias("node"))
-        .distinct()
-        .join(nodes, "node")
     )
-    sn = seeds.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    seeded = nodes.join(seeds.withColumn("_s", F.lit(1)), "node", "left").crossJoin(
-        F.broadcast(sn)
-    )
-    ranks = seeded.select(
-        "node",
-        F.when(F.col("_s").isNotNull(), F.expr(f"{SCALE} div n")).otherwise(F.lit(0)).alias(
-            "rank_micro"
-        ),
-        "n",
-    )
-    seed_flag = seeds.select(F.col("node").alias("dst"), F.lit(1).alias("_sd"))
-    for _ in range(3):
-        contrib = (
-            edges_p.join(
-                ranks.select(F.col("node").alias("src"), "rank_micro", "n"), "src"
-            )
-            .groupBy("dst")
-            .agg(
-                F.sum(F.expr("rank_micro div d")).alias("inflow"),
-                F.first("n").alias("n"),
-            )
-        )
-        ranks = (
-            contrib.join(F.broadcast(seed_flag), "dst", "left")
-            .select(
-                F.col("dst").alias("node"),
-                (
-                    F.when(F.col("_sd").isNotNull(), F.expr(f"(15 * {SCALE}) div (100 * n)"))
-                    .otherwise(F.lit(0))
-                    + F.expr("(85 * inflow) div 100")
-                ).alias("rank_micro"),
-                "n",
-            )
-        )
     return (
-        ranks.where(F.col("rank_micro") > 0)
-        .select("node", "rank_micro")
+        pagerank(trade_graph(spark, sf_dir), N_ITER, seeds)
+        .where(F.col("rank_micro") > 0)
         .orderBy(F.desc("rank_micro"), "node")
         .limit(50)
     )
@@ -621,19 +503,11 @@ def _kcore_round_sql(prev: str, out: str, k: int) -> str:
 
 
 _KCORE_ORACLE = (
-    """
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    e0 AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    )"""
+    _TRADE_EDGES_CTES
     + ","
     + ",".join(
-        _kcore_round_sql(f"e{i}", f"e{i + 1}", KCORE_K) for i in range(KCORE_ROUNDS)
+        _kcore_round_sql(f"e{i}" if i else "edges", f"e{i + 1}", KCORE_K)
+        for i in range(KCORE_ROUNDS)
     )
     + f"""
     SELECT CAST(src AS BIGINT) AS node, CAST(COUNT(*) AS BIGINT) AS core_degree
@@ -656,16 +530,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_link_prediction",
-    """
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+    _TRADE_EDGES_CTES
+    + """,
     deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src),
     mid AS (SELECT src FROM deg WHERE d <= 64),
     two_hop AS (
@@ -705,22 +571,20 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_common therefore counts common NON-HUB neighbors; the Jaccard
     denominators keep full degrees. Counts are exact BIGINTs, the
     Jaccard floor-scaled micro units, top-50 via TakeOrdered."""
-    edges = trade_edges(spark, sf_dir)
-    e = cache_once(edges.repartition("src"))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    e = trade_graph(spark, sf_dir)
+    deg = e.select("src", "d").distinct()
     # HUB CAP on the middle node: the 2-hop expansion is sum of deg(m)^2
     # over common neighbors m, so one hub with degree 10^4 contributes
     # 10^8 pairs (OOM'd the sweep at sf0.1 before the cap). Neighbors
     # shared via a node everyone touches carry no similarity signal
     # anyway (the df-cap argument from dedup_containment), so middle
-    # nodes above degree 64 are excluded from candidate generation;
-    # Jaccard denominators still use FULL degrees.
-    mid = deg.filter(F.col("d") <= 64).select(F.col("src").alias("m"))
+    # nodes above degree 64 are excluded from candidate generation —
+    # m is e2's src, so the cap is a filter on e2's own d; Jaccard
+    # denominators still use FULL degrees.
     e1 = e.select(F.col("src").alias("a"), F.col("dst").alias("m"))
-    e2 = e.select(F.col("src").alias("m"), F.col("dst").alias("b"))
+    e2 = e.where(F.col("d") <= 64).select(F.col("src").alias("m"), F.col("dst").alias("b"))
     two_hop = (
-        e1.join(mid, "m", "left_semi")
-        .join(e2, "m")
+        e1.join(e2, "m")
         .where(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
@@ -811,7 +675,7 @@ def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed point, each half-step renormalized by the MAX raw score
     ((raw * 1e6) div max — an exact integer division, where the
     textbook L2 norm would be an irrational float no oracle could
-    replay). The loop is the pagerank_fixed_point shape: driver-side
+    replay). The loop is the pagerank shape: driver-side
     rounds, per-round one colocated edge join + partial-aggregated
     groupBy, node-sized frames shuffling against the cached directed
     edge layout, the 1-row max broadcast back. Returns the top-25
@@ -852,14 +716,8 @@ def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_distribution",
-    """
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-        SELECT c AS src FROM pairs UNION ALL SELECT s FROM pairs
-    ),
+    _TRADE_EDGES_CTES
+    + """,
     deg AS (
         SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src
     ),
@@ -1060,16 +918,7 @@ def _bfs_round_sql(prev: str, out: str) -> str:
     )"""
 
 
-_BFS_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+_BFS_ORACLE = f"""{_TRADE_EDGES_CTES},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     d0 AS (
         SELECT node, CAST(0 AS BIGINT) AS dist FROM nodes
@@ -1096,12 +945,12 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     form: no visited-set state, re-relaxations are idempotent, so the
     rounds are plain shuffles on the 8-byte node key and the oracle
     unrolls them as chained MATERIALIZED CTEs. Scale: identical
-    posture to pagerank_fixed_point (cached src-partitioned edges
-    reused every round, node-keyed hash aggs); at 100 TB the same
+    posture to pagerank (the cached trade_graph edges reused every
+    round, node-keyed hash aggs); at 100 TB the same
     plan runs with AQE-sized exchanges — BFS via joins is exactly how
     GraphX/Pregel lowers it. Output is the hop histogram with
     min/max node ids as a content fingerprint.""".format(n=_BFS_ROUNDS)
-    edges = cache_once(trade_edges(spark, sf_dir).repartition("src"))
+    edges = trade_graph(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     dist = nodes.where((F.col("node") % 2 == 1) & (F.expr("node div 2") <= 3)).select(
         "node", F.lit(0).cast("bigint").alias("dist")
@@ -1192,11 +1041,7 @@ def _mst_round_sql(r: int) -> str:
     )"""
 
 
-_MST_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
+_MST_ORACLE = f"""{_TRADE_EDGES_CTES},
     ek AS MATERIALIZED (
         SELECT src, dst, lo, hi, w % {_MST_WMOD} AS wsmall,
                (w % {_MST_WMOD}) * 1099511627776 + lo * 1048576 + hi AS key
@@ -1205,11 +1050,7 @@ _MST_ORACLE = f"""
                    LEAST(src, dst) AS lo, GREATEST(src, dst) AS hi,
                    (LEAST(src, dst) * 1000003 + GREATEST(src, dst))
                      % 2147483647 AS w
-            FROM (
-                SELECT c AS src, s AS dst FROM pairs
-                UNION ALL
-                SELECT s AS src, c AS dst FROM pairs
-            )
+            FROM edges
         )
     ),
     l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM ek),
@@ -1343,23 +1184,14 @@ def _walk_step_sql(r: int) -> str:
                ARG_MIN(e.dst, ('0x' || SUBSTR(MD5(
                    CAST(e.src AS VARCHAR) || '_' || CAST(e.dst AS VARCHAR)
                    || '_' || '{r}'), 1, 8))::BIGINT) AS node
-        FROM w{r} w JOIN ek2 e ON e.src = w.node
+        FROM w{r} w JOIN edges e ON e.src = w.node
         GROUP BY w.start_node
     )"""
 
 
-_WALK_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    ek2 AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+_WALK_ORACLE = f"""{_TRADE_EDGES_CTES},
     w0 AS (
-        SELECT DISTINCT src AS start_node, src AS node FROM ek2
+        SELECT DISTINCT src AS start_node, src AS node FROM edges
         WHERE src % 2 = 1 AND src // 2 <= 10
     ),
     {",".join(_walk_step_sql(r) for r in range(_WALK_STEPS))}
@@ -1599,16 +1431,7 @@ _MIS_SHIFT = 16_777_216
 
 
 def _mis_oracle_sql() -> str:
-    head = """
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+    head = _TRADE_EDGES_CTES + """,
     u0 AS MATERIALIZED (
         SELECT src AS node,
                ('0x' || SUBSTR(MD5('mis-' || CAST(src AS VARCHAR)), 1, 8))::BIGINT
@@ -1692,7 +1515,7 @@ def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned once and reused — the Pregel posture. At 100 TB rounds
     stay O(E/p) with no skew beyond degree (cappable exactly like the
     link-prediction mid-degree guard)."""
-    edges = cache_once(trade_edges(spark, sf_dir).repartition("src"))
+    edges = trade_graph(spark, sf_dir)
     und = cache_once(
         edges.select("src")
         .distinct()
@@ -1904,16 +1727,7 @@ _ASSORT_R = (
     " * 1000000) END AS BIGINT)"
 )
 
-_ASSORT_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+_ASSORT_ORACLE = f"""{_TRADE_EDGES_CTES},
     deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d
             FROM edges GROUP BY src),
     joined AS (
@@ -1943,10 +1757,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson correlation of (deg(src), deg(dst)) over directed edges,
     the "do hubs attach to hubs" readout (bipartite trade graphs are
     typically DISassortative: high-degree suppliers serve long tails
-    of low-degree customers). Plan: degrees are one zero-shuffle
-    partial agg off the cached src-partitioned edges; the endpoint
-    join is two node-keyed hash joins; moments are ONE map-side
-    aggregate. Exactness: all six moments are BIGINT sums — with
+    of low-degree customers). Plan: deg(src) is the d already on the
+    cached trade_graph edges; deg(dst) is one node-keyed join against
+    the node degrees; moments are ONE map-side aggregate. Exactness: all six moments are BIGINT sums — with
     64-bit headroom up to ~3e5 max degree at 1e8 directed edges
     (m2*sxx is the binding term; past that, center degrees on the
     integer mean first, the ts10 rule) — and the final r is the
@@ -1955,19 +1768,10 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bidirectional edge list sx=sy and sxx=syy; both are still
     computed independently so the oracle cross-checks the join, and
     the symmetry is pinned in tests."""
-    edges = trade_edges(spark, sf_dir)
-    edges_p = cache_once(edges.repartition("src"))
-    deg = edges_p.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    joined = (
-        edges_p.join(
-            deg.select(F.col("src").alias("e_src"), F.col("d").alias("jx")),
-            F.col("src") == F.col("e_src"),
-        )
-        .join(
-            deg.select(F.col("src").alias("e_dst"), F.col("d").alias("jy")),
-            F.col("dst") == F.col("e_dst"),
-        )
-        .select("jx", "jy")
+    edges_p = trade_graph(spark, sf_dir)
+    deg = edges_p.select(F.col("src").alias("e_dst"), F.col("d").alias("jy")).distinct()
+    joined = edges_p.join(deg, F.col("dst") == F.col("e_dst")).select(
+        F.col("d").alias("jx"), "jy"
     )
     moms = joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("m2"),

@@ -2,9 +2,10 @@
 (1,906 after round 9's modularity + assortativity), so new graph
 operators land here (the VERDICT r8 #6 family-file rule).
 
-Same contract as graph.py: integer node ids, cached src-partitioned
-edge relations, BIGINT state, oracle SQL replaying the identical
-arithmetic.
+Same contract as graph.py: the trade graph comes from trade_graph
+(packed ids, mirrored, cached src-partitioned with d on the edges) and
+its oracle prelude from _TRADE_EDGES_CTES; BIGINT state, oracle SQL
+replaying the identical arithmetic.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realestate_engine.dedup import cache_once
-from realestate_engine.graph import trade_edges
+from realestate_engine.graph import _TRADE_EDGES_CTES, trade_edges, trade_graph
 from realestate_engine.registry import register
 
 _RICH_KS = [1, 2, 4, 8, 16, 32]
@@ -32,16 +33,7 @@ def _rich_phi(idiv: str) -> str:
         f" e_rich_directed * 1000000 {idiv} (n_rich * (n_rich - 1)) END AS BIGINT)"
     )
 
-_RICH_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+_RICH_ORACLE = f"""{_TRADE_EDGES_CTES},
     deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d
             FROM edges GROUP BY src),
     ks AS (SELECT UNNEST({_RICH_KS}) AS k),
@@ -81,16 +73,15 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     bipartite customer<->supplier graph hubs of the same side never
     link, so phi stays far below an equivalent unipartite graph's, and
     the replay test pins phi <= the overall density ratio shape).
-    Plan: degree census off the cached src-partitioned edges (the
-    assortativity shape), endpoint-degree join once, then a 6-way
+    Plan: d_src is the d on the cached trade_graph edges and d_dst
+    one node-keyed join (the assortativity shape), then a 6-way
     threshold fan-out of COUNTS — the k-grid multiplies a node/edge
     CENSUS, never the corpus. Exactness: counts are BIGINT; phi is one
     all-integer micro division (_rich_phi; e_dir is even by edge-list
     symmetry so the directed count IS 2x the undirected count the
     classic definition wants — the /2 cancels in the ratio)."""
-    edges = trade_edges(spark, sf_dir)
-    edges_p = cache_once(edges.repartition("src"))
-    deg = edges_p.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    edges_p = trade_graph(spark, sf_dir)
+    deg = edges_p.select("src", "d").distinct()
     ks = spark.range(0).sparkSession.createDataFrame(
         [(k,) for k in _RICH_KS], "k bigint"
     )
@@ -99,17 +90,10 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k")
         .agg(F.count(deg.d).cast("bigint").alias("n_rich"))
     )
-    endp = (
-        edges_p.join(
-            deg.select(F.col("src").alias("e_src"), F.col("d").alias("d_src")),
-            F.col("src") == F.col("e_src"),
-        )
-        .join(
-            deg.select(F.col("src").alias("e_dst"), F.col("d").alias("d_dst")),
-            F.col("dst") == F.col("e_dst"),
-        )
-        .select("d_src", "d_dst")
-    )
+    endp = edges_p.join(
+        deg.select(F.col("src").alias("e_dst"), F.col("d").alias("d_dst")),
+        F.col("dst") == F.col("e_dst"),
+    ).select(F.col("d").alias("d_src"), "d_dst")
     edges_k = (
         endp.join(
             F.broadcast(ks),
@@ -162,16 +146,7 @@ def _anf_round_sql(prev: str, out: str) -> str:
     )"""
 
 
-_ANF_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
+_ANF_ORACLE = f"""{_TRADE_EDGES_CTES},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     s0 AS (
         SELECT node,
@@ -224,7 +199,7 @@ def graph_anf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-round localCheckpoint truncates the 3-round lineage.""".format(
         n=_ANF_ROUNDS, b=_ANF_WORD_BITS, m=_ANF_SAMPLE_MOD
     )
-    edges = cache_once(trade_edges(spark, sf_dir).repartition("src"))
+    edges = trade_graph(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     state = (
         nodes.where(F.col("node") % _ANF_SAMPLE_MOD == 1)
@@ -315,15 +290,10 @@ def _match_round_sql(prev: str, r: int) -> str:
     )"""
 
 
-_MATCH_ORACLE = f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
+_MATCH_ORACLE = f"""{_TRADE_EDGES_CTES},
     a0 AS MATERIALIZED (
-        SELECT LEAST(c, s) AS u, GREATEST(c, s) AS v,
-               CAST({_MATCH_PRI_DUCK} AS BIGINT) AS pri
-        FROM pairs
+        SELECT src AS u, dst AS v, CAST({_MATCH_PRI_DUCK} AS BIGINT) AS pri
+        FROM edges WHERE src < dst
     ),
     {",".join(_match_round_sql(f"a{r - 1}", r) for r in range(1, _MATCH_ROUNDS + 1))},
     allsel AS (

@@ -121,7 +121,12 @@ def input_width(
     per-row codec work through one worker. At production volume
     bytes/mb_per_part >> cores, so the clamp hits defaultParallelism
     and behavior matches the old constants exactly; only the
-    tiny-snapshot regime changes."""
+    tiny-snapshot regime changes.
+
+    No local bytes at all — a missing directory, or a path the os
+    module cannot size (hdfs://, s3a://, dbfs:/) — means the size is
+    unknown, not tiny: the width is then defaultParallelism, never a
+    silent 1."""
     import math
     import os as _os
 
@@ -144,6 +149,8 @@ def input_width(
         except OSError:
             pass
     width = spark.sparkContext.defaultParallelism
+    if size == 0:
+        return width
     need = max(floor, math.ceil(size / int(mb_per_part * (1 << 20))))
     if python_floor:
         # at least 2 (when the session has ≥2 cores): a width of 1

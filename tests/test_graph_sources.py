@@ -7,24 +7,40 @@ import os
 
 from pyspark.sql import functions as F
 
-from realestate_engine.graph import SCALE, pagerank_fixed_point
+from realestate_engine.graph import SCALE, pagerank
 from realestate_engine.queries_sources_sql import s13_binaryfile_scan
 
 
-def _reference_pagerank(edges: list[tuple[str, str]], n_iter: int) -> dict[str, int]:
-    """Plain-Python mirror of the integer recurrence."""
+def _reference_pagerank(
+    edges: list[tuple[str, str]], n_iter: int, seeds: set[str] | None = None
+) -> dict[str, int]:
+    """Plain-Python mirror of the integer recurrence; with ``seeds`` the
+    personalized form (init and base term on the seeds in the graph)."""
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    n = len(nodes)
+    targets = set(nodes) if seeds is None else set(nodes) & seeds
+    n = len(targets)
     deg: dict[str, int] = {}
     for s, _ in edges:
         deg[s] = deg.get(s, 0) + 1
-    ranks = {v: SCALE // n for v in nodes}
+    ranks = {v: SCALE // n if v in targets else 0 for v in nodes}
     for _ in range(n_iter):
         inflow = {v: 0 for v in nodes}
         for s, d in edges:
             inflow[d] += ranks[s] // deg[s]
-        ranks = {v: (15 * SCALE) // (100 * n) + (85 * inflow[v]) // 100 for v in nodes}
+        ranks = {
+            v: ((15 * SCALE) // (100 * n) if v in targets else 0) + (85 * inflow[v]) // 100
+            for v in nodes
+        }
     return ranks
+
+
+def _pagerank_rows(spark, edges, n_iter, seeds=None) -> dict[str, int]:
+    """pagerank over a plain (src, dst) list, with d attached the way
+    trade_graph attaches it."""
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    edges_p = df.join(df.groupBy("src").agg(F.count(F.lit(1)).alias("d")), "src")
+    seed_df = None if seeds is None else spark.createDataFrame([(s,) for s in sorted(seeds)], ["node"])
+    return {r["node"]: r["rank_micro"] for r in pagerank(edges_p, n_iter, seed_df).collect()}
 
 
 def test_pagerank_matches_exact_recurrence(spark):
@@ -34,8 +50,7 @@ def test_pagerank_matches_exact_recurrence(spark):
         ("b", "c"), ("c", "b"),
         ("c", "d"), ("d", "c"),
     ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["rank_micro"] for r in pagerank_fixed_point(df, 3).collect()}
+    got = _pagerank_rows(spark, edges, 3)
     want = _reference_pagerank(edges, 3)
     assert got == want
     # total rank mass stays ~1.0 (floor losses only: < n_nodes units per step)

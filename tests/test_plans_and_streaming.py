@@ -833,10 +833,65 @@ def test_minhash_lsh_never_goes_all_pairs(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_pagerank_reuses_cached_edges_across_iterations(spark, sf_dir):
-    """Pin the Pregel distribution shape (PLANS.md): the src-partitioned
-    edge list is cached once and re-read from the in-memory relation by
-    every iteration's join, instead of rebuilding the trade graph from
-    parquet each round."""
-    plan = _simple_plan(QUERIES["graph_pagerank_trade"](spark, sf_dir))
-    assert plan.count("InMemoryTableScan") >= 2
+def _cache_entries(plan, jvm, out: set[int]) -> set[int]:
+    """Identities of the cache entries a Catalyst plan reads, including
+    entries read inside other cached plans."""
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            _cache_entries(leaf.inputPlan(), jvm, out)
+            continue
+        if kind == "InMemoryTableScanExec":
+            leaf = leaf.relation()
+        elif kind != "InMemoryRelation":
+            continue
+        out.add(jvm.System.identityHashCode(leaf.cacheBuilder()))
+        _cache_entries(leaf.cacheBuilder().cachedPlan(), jvm, out)
+    return out
+
+
+def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
+    """The ten iterative trade-graph operators all read ONE cached
+    (src, dst, d) relation, trade_graph's, and none of them drops it
+    (spark.sql's view binding in pagerank would, unguarded). ANF's
+    rounds are checkpointed while it is built, so its final plan no
+    longer reads the edges; its build must have filled the cache."""
+    from realestate_engine.graph import trade_graph
+
+    jvm = spark._jvm
+
+    def entry():
+        rel = trade_graph(spark, sf_dir)._jdf.queryExecution().withCachedData()
+        assert rel.getClass().getSimpleName() == "InMemoryRelation"
+        return rel.cacheBuilder()
+
+    spark.catalog.clearCache()
+    QUERIES["graph_anf_neighborhood"](spark, sf_dir)
+    assert entry().isCachedColumnBuffersLoaded()
+    shared = jvm.System.identityHashCode(entry())
+    for name in (
+        "graph_pagerank_trade", "graph_personalized_pagerank",
+        "graph_label_propagation", "graph_modularity", "graph_link_prediction",
+        "graph_bfs_hops", "graph_mis_luby", "graph_degree_assortativity",
+        "graph_rich_club",
+    ):
+        qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
+        assert shared in _cache_entries(qe.executedPlan(), jvm, set()), name
+        assert jvm.System.identityHashCode(entry()) == shared, name
+
+
+def test_input_width_without_local_files_is_default_parallelism(spark, tmp_path, monkeypatch):
+    """A path with no local files (a missing directory, a remote URI)
+    has an unknown size, not a tiny one: input_width gives
+    defaultParallelism there, never a silent 1. Local bytes still
+    drive the width."""
+    from realestate_engine.registry import input_width
+
+    monkeypatch.delenv("SPARK_GRAFT_BATCH_PARTS", raising=False)
+    cores = spark.sparkContext.defaultParallelism
+    for missing in (str(tmp_path / "missing"), "s3a://bucket/sf1"):
+        assert input_width(spark, missing, "orders", "lineitem", mb_per_part=8) == cores
+    (tmp_path / "orders.parquet").write_bytes(b"x")
+    assert input_width(spark, str(tmp_path), "orders", "lineitem", mb_per_part=8) == 1

@@ -4,11 +4,11 @@ many rows into ONE Spark job so the property sweep stays fast."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tests.test_graph_sources import _py_interleave, _reference_pagerank
+from tests.test_graph_sources import _pagerank_rows, _py_interleave, _reference_pagerank
 
 COMMON = dict(
     deadline=None,
@@ -43,15 +43,34 @@ def test_zorder_interleave_property(spark, pairs):
 )
 @settings(**COMMON)
 def test_pagerank_property(spark, raw_edges, n_iter):
-    from realestate_engine.graph import pagerank_fixed_point
-
     # undirected, deduped — matches the engine's edge contract
     edges = sorted({(f"n{a}", f"n{b}") for a, b in raw_edges} | {
         (f"n{b}", f"n{a}") for a, b in raw_edges
     })
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["rank_micro"] for r in pagerank_fixed_point(df, n_iter).collect()}
-    assert got == _reference_pagerank(edges, n_iter)
+    assert _pagerank_rows(spark, edges, n_iter) == _reference_pagerank(edges, n_iter)
+
+
+@given(
+    raw_edges=st.lists(
+        st.tuples(st.integers(0, 6), st.integers(0, 6)).filter(lambda e: e[0] != e[1]),
+        min_size=1,
+        max_size=15,
+    ),
+    seed_ids=st.sets(st.integers(0, 9), min_size=1, max_size=4),
+    n_iter=st.integers(1, 3),
+)
+@settings(**COMMON)
+def test_personalized_pagerank_property(spark, raw_edges, seed_ids, n_iter):
+    """The seeded recurrence (personalized PageRank). Seed ids 7-9 are
+    never graph nodes, so the restriction of the seed set to the graph
+    is exercised too; a draw with no seed in the graph is skipped."""
+    edges = sorted({(f"n{a}", f"n{b}") for a, b in raw_edges} | {
+        (f"n{b}", f"n{a}") for a, b in raw_edges
+    })
+    seeds = {f"n{i}" for i in seed_ids}
+    assume(seeds & {s for s, _ in edges})
+    got = _pagerank_rows(spark, edges, n_iter, seeds)
+    assert got == _reference_pagerank(edges, n_iter, seeds)
 
 
 def test_portable_hash_pipeline_matches_duckdb(spark):

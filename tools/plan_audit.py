@@ -14,6 +14,11 @@ Flags:
 - parquet scans with no pushed filters when the query filters the scan
   column (informational).
 
+Each query's line also carries its plan-shape counts — exchanges,
+sort-merge and broadcast joins, Python nodes and InMemoryTableScans —
+from perfbench.trace.plan_counts, the counter the benchmark's
+``plan.*`` metrics use, over the same executed-plan tree string.
+
 Usage: python tools/plan_audit.py [--sf DIR] [name ...]
 Exit code 1 if any hard flag fires.
 """
@@ -296,6 +301,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
+    from perfbench.trace import plan_counts
     from realestate_engine.registry import QUERIES, load_all
     from realestate_engine.session import create_session
 
@@ -308,7 +314,9 @@ def main() -> int:
     for name in names:
         try:
             df = QUERIES[name](spark, args.sf)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            qe = df._jdf.queryExecution()
+            plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+            c = plan_counts(qe.executedPlan().toString())
         except Exception as e:  # noqa: BLE001 - audit must not abort on one query
             hard_flags.append(f"{name}: explain failed: {e}")
             continue
@@ -327,11 +335,15 @@ def main() -> int:
             n_unpart = _unpartitioned_window_specs(plan)
             if n_unpart:
                 problems.append(f"UnpartitionedWindow x{n_unpart}")
+        shape = (
+            f"exch={c['exchanges']} smj={c['sort_merge_joins']} bhj={c['broadcast_joins']}"
+            f" py={c['python_nodes']} inmem={c['inmem_scans']}"
+        )
         if problems:
             hard_flags.append(f"{name}: {', '.join(problems)}")
-            print(f"FLAG {name}: {', '.join(problems)}")
+            print(f"FLAG {name} [{shape}]: {', '.join(problems)}")
         else:
-            print(f"ok   {name}")
+            print(f"ok   {name} [{shape}]")
 
     print(f"\n{len(names) - len(hard_flags)} clean, {len(hard_flags)} flagged")
     for f in hard_flags:
