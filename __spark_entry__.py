@@ -16,8 +16,11 @@ The full per-round rotation history lives in COVERAGE.md's
 each CORRECTNESS file, then ``stale`` for the next window's names).
 
 The current window: flagship, then the ten trade-graph consumers
-(graph.py/graph2.py), whose plans changed when they moved onto the
-one cached trade_graph relation, then the 39 stalest ledger names.
+(graph.py/graph2.py), which read the one cached trade_graph relation,
+then the six queries on the session store's paths (the four readers
+of the memoized dedup cluster labels, two-star clustering over the
+same near-dup edges, and the walks, which now read trade_graph), then
+the 33 stalest ledger names.
 """
 
 from __future__ import annotations
@@ -40,8 +43,13 @@ _WINDOW = [
     "graph_label_propagation", "graph_modularity", "graph_link_prediction",
     "graph_bfs_hops", "graph_mis_luby", "graph_degree_assortativity",
     "graph_rich_club", "graph_anf_neighborhood",
-    # --- the 39 stalest ledger names outside the above, per
-    #     `python tools/ledger.py stale --top 39` after folding
+    # --- the session store's paths: memoized cluster labels
+    #     (registry.shared) and the walks on trade_graph
+    "dedup_clusters", "dedup_clusters_twostar", "dedup_canonical_selection",
+    "dedup_leakage_safe_split", "dedup_pipeline_summary",
+    "graph_deterministic_walks",
+    # --- the 33 stalest ledger names outside the above, per
+    #     `python tools/ledger.py stale` after folding
     #     CORRECTNESS_r13..r15 into COVERAGE.md
     "dq8_id_gap_islands", "dq9_referential_integrity", "f16_mom_growth",
     "graph_kcore", "graph_triangle_count", "m23_roc_auc_ranksum",
@@ -56,9 +64,7 @@ _WINDOW = [
     "tpch_q9_product_profit", "ts_cusum_changepoints",
     "x18_systematic_pps_sample", "x20_cdc_apply",
     "a34_weighted_median_prefix", "dedup_containment",
-    "dq10_uniqueness_audit", "dq12_merkle_bucket_diff", "dq13_psi_drift",
-    "j10_bloom_join_prune", "j9_interval_overlap_join",
-    "m11_regression_metrics_sql", "m27_ndcg_ranking_eval",
+    "dq10_uniqueness_audit",
 ]
 assert len(_WINDOW) == 50, len(_WINDOW)
 assert len(set(_WINDOW)) == 50

@@ -1,5 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's core count) and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
 "queries": {...}, "sf": ..., "duckdb": {...}, "duckdb_total": ...}.
 
@@ -101,9 +102,29 @@ def _loadavg() -> list[float] | None:
         return None
 
 
+def read_quiet_best(path: str, cpus: int) -> float | None:
+    """The best quiet-host total in the BENCH_QUIET.json at ``path``
+    for this core count ({cpus: record}), or None."""
+    try:
+        return float(json.load(open(path))[str(cpus)]["quiet_best"])
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
+def record_quiet(path: str, cpus: int, record: dict) -> None:
+    """Store ``record`` as this core count's entry, keeping the others."""
+    try:
+        records = json.load(open(path))
+    except (OSError, ValueError):
+        records = {}
+    records[str(cpus)] = record
+    with open(path, "w") as f:
+        json.dump(records, f, indent=1)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
     # warn-and-retry on a busy machine: r5's first six queries regressed
     # 17-26% purely because the run started at loadavg 6, and the r12
@@ -251,39 +272,28 @@ def main() -> None:
     # could never pass and the record silently never updated. An
     # externally-loaded run only ever produces a SLOWER total, which
     # cannot displace a min-record, so the end-check bought nothing.
-    # sf0.1-only: other SF dirs would not be comparable. Core-count
-    # aware (r15): the record is only read/updated when this run's
-    # core count matches the file's — the driver's 8-core scaling run
-    # would otherwise displace the graded 32-core history (an 8-core
-    # total is FASTER at sf0.1: per-stage fixed costs scale with local
-    # thread count) and the 32-core record could never update again.
+    # sf0.1-only: other SF dirs would not be comparable. One record per
+    # core count: an 8-core total is FASTER at sf0.1 (per-stage fixed
+    # costs scale with local thread count), so runs are only compared
+    # with runs at the same core count.
     quiet_best = None
     if sf_val == 0.1:
         quiet_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_QUIET.json"
         )
-        try:
-            rec = json.load(open(quiet_path))
-            if int(rec.get("cpus", 32)) == int(cpus):
-                quiet_best = float(rec["quiet_best"])
-        except (OSError, ValueError, KeyError, TypeError):
-            quiet_best = None
-        loadavg_end = _loadavg()
-        run_quiet = not contended and int(cpus) == 32
-        if run_quiet and (quiet_best is None or total < quiet_best):
+        quiet_best = read_quiet_best(quiet_path, int(cpus))
+        if not contended and (quiet_best is None or total < quiet_best):
             quiet_best = total
-            with open(quiet_path, "w") as f:
-                json.dump(
-                    {
-                        "quiet_best": total,
-                        "cpus": int(cpus),
-                        "queries": timings,
-                        "loadavg_start": loadavg_start,
-                        "loadavg_end": loadavg_end,
-                    },
-                    f,
-                    indent=1,
-                )
+            record_quiet(
+                quiet_path,
+                int(cpus),
+                {
+                    "quiet_best": total,
+                    "queries": timings,
+                    "loadavg_start": loadavg_start,
+                    "loadavg_end": _loadavg(),
+                },
+            )
     print(
         json.dumps(
             {

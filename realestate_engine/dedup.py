@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import ORACLES, register, t
+from realestate_engine.registry import ORACLES, cache_once, register, shared, t
 
 # ---------------------------------------------------------------------------
 # Exact + keep-newest (SQL-checkable)
@@ -84,25 +84,6 @@ def word_shingles(text_col: Column, n: int = 3) -> Column:
             lambda a, b: F.concat(a, F.lit(" "), b),
         )
     return F.array_distinct(F.filter(acc, lambda x: x.isNotNull()))
-
-
-def cache_once(df: DataFrame) -> DataFrame:
-    """cache() unless this exact (canonicalized) plan is already in the
-    cache manager — avoids the 'Asked to cache already cached data'
-    WARN when two queries share a cached relation (e.g. the shingle
-    relation of the batch and incremental LSH pipelines).
-
-    Lifetime contract: queries return LAZY DataFrames (the driver
-    materializes them), so unpersisting inside a query body would drop
-    the cache before first use. Instead the leak is BOUNDED: every
-    cached plan here is a pure function of sf_dir (sinks round-trip
-    through stable_tmp paths, not fresh mkdtemp dirs), so repeated
-    bench/correctness runs canonicalize to the same plan and re-use
-    the one existing entry rather than accumulating new ones; MEMORY
-    storage evicts LRU under pressure. A long-lived service embedding
-    this engine should call spark.catalog.clearCache() between jobs."""
-    lvl = df.storageLevel
-    return df if (lvl.useMemory or lvl.useDisk) else df.cache()
 
 
 def portable_hash32(col: Column) -> Column:
@@ -809,27 +790,16 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_labels(spark, sf_dir).orderBy("doc_id")
 
 
-# (session, sf_dir) -> (session strong-ref, labels DataFrame). The CC
-# labels over _dup_pairs are consumed by FOUR queries (dedup_clusters,
-# dedup_canonical_selection, dedup_leakage_safe_split,
-# dedup_pipeline_summary); the r14 verdict's "one clustering pass"
-# principle, extended across the family (r15). Plan-keyed cache_once
-# cannot dedupe the loop — every invocation materializes fresh
-# localCheckpoint RDDs, so no two builds canonicalize equal — hence a
-# session memo with the same lifetime semantics as cache_once and
-# registry's scan memo: in-session only, first use computes from the
-# parquet inputs, one entry per (session, sf_dir), nothing persists
-# across processes. The strong session ref keeps id(spark) stable.
-_CC_MEMO: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-
-
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    hit = _CC_MEMO.get(key)
-    if hit is None:
-        hit = (spark, connected_components(_dup_pairs(spark, sf_dir)))
-        _CC_MEMO[key] = hit
-    return hit[1]
+    """Connected-component labels over _dup_pairs, computed once per
+    session and read by dedup_clusters, dedup_canonical_selection,
+    dedup_leakage_safe_split and dedup_pipeline_summary. Plan-keyed
+    cache_once cannot share them: each build materializes fresh
+    localCheckpoint RDDs, so no two builds have equal plans."""
+    return shared(
+        spark, ("cluster_labels", sf_dir),
+        lambda: connected_components(_dup_pairs(spark, sf_dir)),
+    )
 
 
 @register("dedup_minhash_lsh_mllib")  # rows-only (seeded; hand-rolled variant is oracle-side)
@@ -1034,7 +1004,7 @@ def _dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_leakage_safe_split, dedup_pipeline_summary) and each used to
     replay the quadratic per-(lang, source) pair join — the same
     shared-relation reasoning as the minhash shingle cache (see
-    cache_once's lifetime contract); the edge list is KB-scale at
+    registry.shared for lifetimes); the edge list is KB-scale at
     oracle SFs and bounded by the near-dup rate at 100 TB."""
     d = t(spark, sf_dir, "documents").filter(F.col("n_chars") <= 200)
     words = F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))

@@ -26,8 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.dedup import cache_once
-from realestate_engine.registry import input_width, register, t
+from realestate_engine.registry import cache_once, input_width, register, t
 
 SCALE = 1_000_000_000_000  # 1e12 micro-rank units per unit of rank
 DAMPING_NUM, DAMPING_DEN = 85, 100  # 0.85 as an exact ratio
@@ -1222,11 +1221,11 @@ def graph_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Three steps from each low-id supplier; emits the path and its
     distinct-visit count (revisits happen — the walk is not
     self-avoiding, visible as data). Scale: each step is ONE
-    equi-join of the walk frontier against the cached edge list +
+    equi-join of the walk frontier against the cached trade_graph +
     a per-walk argmin hash-agg — walk count scales embarrassingly,
     step count linearly; the 100 TB corpus walk is this exact plan
     with a frontier of billions."""
-    edges = cache_once(trade_edges(spark, sf_dir))
+    edges = trade_graph(spark, sf_dir)
     starts = (
         edges.select("src").distinct()
         .where((F.col("src") % 2 == 1) & (F.expr("src div 2") <= 10))

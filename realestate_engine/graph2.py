@@ -13,9 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.dedup import cache_once
 from realestate_engine.graph import _TRADE_EDGES_CTES, trade_edges, trade_graph
-from realestate_engine.registry import register
+from realestate_engine.registry import cache_once, register
 
 _RICH_KS = [1, 2, 4, 8, 16, 32]
 

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from realestate_engine.registry import input_width, register, t
+from realestate_engine.registry import cache_once, input_width, register, t
 
 
 def _decode_width(spark: SparkSession, sf_dir: str) -> int:
@@ -1065,10 +1065,8 @@ def mm_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: cache the doc-sized (doc_id, ahash) relation — the band
     # self-join consumes it on BOTH sides, and without the cache each
     # side re-runs the whole Python hashing pass (the minhash shingle
-    # cache lesson; see cache_once's lifetime contract). 5.4s -> 1.3s
+    # cache lesson; lifetimes: registry.shared). 5.4s -> 1.3s
     # warm at sf0.1.
-    from realestate_engine.dedup import cache_once
-
     hashes = cache_once(ahash_binary(binary_df))
     banded = hashes.select(
         "doc_id",

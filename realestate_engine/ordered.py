@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import register, t
+from realestate_engine.registry import cache_once, register, t
 
 
 def distributed_prefix_sum(
@@ -40,7 +40,6 @@ def distributed_prefix_sum(
     keyed by canonicalized plan, so repeated invocations of the same
     query reuse one entry rather than accumulating, and entries are
     LRU-evicted under memory pressure — deliberate, not a leak."""
-    from realestate_engine.dedup import cache_once
 
     ranked = cache_once(
         df.repartitionByRange(n_parts, *order_cols).withColumn(

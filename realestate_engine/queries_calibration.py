@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.registry import register, t
+from realestate_engine.registry import cache_once, register, t
 
 
 @register(
@@ -344,7 +344,6 @@ def m54_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan per round: scan + hash-agg + 1-row broadcast cross-join —
     no driver-side math, no windows; at 100 TB each Newton step is
     one map-side-combined pass over the score column."""
-    from realestate_engine.dedup import cache_once
 
     o = t(spark, sf_dir, "orders").select(
         (F.round(F.col("o_totalprice") * 100).cast("bigint") / F.lit(1000000))

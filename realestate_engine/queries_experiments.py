@@ -15,8 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.dedup import cache_once, portable_hash32
-from realestate_engine.registry import register, t
+from realestate_engine.dedup import portable_hash32
+from realestate_engine.registry import cache_once, register, t
 
 
 @register(
@@ -548,7 +548,6 @@ def ev13_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff("done_date", F.col("o_orderdate").cast("date")).alias("dur"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("ev"),
     )
-    from realestate_engine.dedup import cache_once
 
     # r15 (guide §1.2): cache the ~130-row per-duration census and the
     # KM terms below — both feed broadcast non-equi SELF-joins, and

@@ -19,8 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from realestate_engine.ordered import exclusive_prefix_offsets
-from realestate_engine.dedup import cache_once
-from realestate_engine.registry import ORACLES, register, stable_tmp, t
+from realestate_engine.registry import ORACLES, cache_once, register, stable_tmp, t
 
 
 @register(

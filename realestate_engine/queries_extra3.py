@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.dedup import cache_once, portable_hash32
-from realestate_engine.registry import register, t
+from realestate_engine.dedup import portable_hash32
+from realestate_engine.registry import cache_once, register, t
 
 # --- Bloom-filter semi-join pruning ----------------------------------------
 #

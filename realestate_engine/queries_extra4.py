@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import register, t
+from realestate_engine.registry import cache_once, register, t
 
 # --- EV26: Markov transition matrix + stationary distribution ----------------
 
@@ -839,7 +839,6 @@ def m58_delong_auc_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey", "s_a", "label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("s_b"))
     )
-    from realestate_engine.dedup import cache_once
 
     base = cache_once(base)
     tot = base.agg(
@@ -1022,8 +1021,6 @@ def ev28_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame
     # consumed TWICE (the quantile cutoff aggregate below and the
     # in-bandwidth moment pass), and without the cache each consumer
     # replays the full lineitem⋈orders join + groupBy.
-    from realestate_engine.dedup import cache_once
-
     base = cache_once(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderkey", "cents")

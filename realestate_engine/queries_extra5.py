@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realestate_engine.ordered import distributed_prefix_sum
-from realestate_engine.registry import register, t
+from realestate_engine.registry import cache_once, register, t
 
 # --- A54: Kruskal-Wallis H (k-group rank ANOVA, tie-corrected) ---------------
 
@@ -1089,7 +1089,6 @@ def ev32_cox_proportional_hazards(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum("ev").cast("bigint").alias("d_all"),
         F.sum(F.col("ev") * F.col("grp")).cast("bigint").alias("d_g1"),
     )
-    from realestate_engine.dedup import cache_once
 
     a, b = per.alias("a"), per.alias("b")
     at_risk = cache_once(

@@ -15,7 +15,7 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.ml.regression import LinearRegression, RandomForestRegressor
 
 from realestate_engine.ordered import distributed_prefix_sum
-from realestate_engine.registry import register, t
+from realestate_engine.registry import cache_once, register, t
 from realestate_engine.train import SEED
 
 
@@ -1535,8 +1535,6 @@ def m27_ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     on that aggregate (partitioned — group-bounded), two k-row joins
     against the broadcast 10-row discount dim."""
     from pyspark.sql.window import Window
-
-    from realestate_engine.dedup import cache_once
 
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders")

@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.dedup import cache_once, portable_hash32
-from realestate_engine.registry import input_width, register, t
+from realestate_engine.dedup import portable_hash32
+from realestate_engine.registry import cache_once, input_width, register, t
 
 
 @register(
@@ -566,8 +566,6 @@ def m36_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost of the query. Cache the K-row replicate frame (K = 32) so
     # the weighted pass runs once (and repeats reuse the K-row entry);
     # measured warm 6.8s -> 1.1s at sf0.1.
-    from realestate_engine.dedup import cache_once
-
     rep_means = cache_once(
         weighted.groupBy("r")
         .agg(F.expr("CAST(SUM(w * cents) DIV SUM(w) AS BIGINT)").alias("mean_cents"), F.sum("w").alias("tw"))

@@ -11,9 +11,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from realestate_engine.dedup import cache_once
 from realestate_engine.queries_sources_sql import _interleave_bits_expr
-from realestate_engine.registry import register, stable_tmp, t
+from realestate_engine.registry import cache_once, register, stable_tmp, t
 
 
 @register(

@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from realestate_engine.dedup import cache_once
-from realestate_engine.registry import ORACLES, register, stable_tmp, t
+from realestate_engine.registry import ORACLES, cache_once, register, stable_tmp, t
 
 
 @register("s10_orc_roundtrip", "SELECT n_nationkey, n_name, n_regionkey FROM nation")

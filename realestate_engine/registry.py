@@ -161,22 +161,73 @@ def input_width(
     return max(1, min(need, width))
 
 
-# (session, sf_dir, table) -> (session strong-ref, scan DataFrame).
-# A DataFrame is an immutable LAZY plan: memoizing the scan relation
-# reuses the resolved schema + file index across query builds, it never
-# stores rows or results — every action still reads the parquet files.
-# Measured r15 (guide §5: the driver should do almost no data work):
-# each spark.read.parquet costs ~70-95 ms of py4j + footer/schema
-# resolution, repeated for EVERY table of EVERY query build; across the
-# 26-query bench that was ~3 s of the ~16 s steady-state total. The
-# strong session ref keeps id(spark) from being recycled by the GC
-# while the memo entry lives.
-_TABLE_MEMO: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
+_STORE = "_realestate_shared"
+
+
+def shared(spark: SparkSession, key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+    """The session store: ``build()`` once per (session, key), then the
+    same DataFrame for every later call in that session. It holds the
+    relations a session reuses across queries: table scans (``t``) and
+    the near-dup cluster labels (``dedup._cluster_labels``). Plan-keyed
+    ``cache_once`` relations are the third kind of reuse; ``reset``
+    frees all three.
+
+    Lifetime. The dict lives on the SparkSession object itself, so an
+    entry lives exactly as long as its session and never pins another
+    one (a module-level map keyed by the session would be kept alive by
+    its own values: every DataFrame references its session). Within a
+    session, entries and cached plans are a pure function of sf_dir
+    (sinks round-trip through stable_tmp paths), so repeated runs reuse
+    one entry instead of adding new ones. ``reset(spark)`` drops them.
+
+    Self-joins. ``t()`` returns the SAME Dataset on every call, so both
+    sides of a self-join share their attributes and ``df1.x == df2.x``
+    resolves to one column. Self-joins must alias each side
+    (``t(...).alias("a")`` with ``F.col("a.x")``) or rename columns in
+    a projection first.
+
+    Checkpoints. Iterative queries materialize their rounds with
+    ``localCheckpoint()``, and the memoized cluster labels are such a
+    checkpoint. Those blocks are not in the cache manager, so
+    ``spark.catalog.clearCache()`` does not free them, and they have no
+    lineage: on a cluster, losing the executor that holds them makes
+    every later read of the entry fail. ``reset(spark)`` is the way out
+    in both cases; the next call rebuilds from the parquet inputs."""
+    memo = vars(spark).setdefault(_STORE, {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
+def cache_once(df: DataFrame) -> DataFrame:
+    """cache() unless this exact (canonicalized) plan is already in the
+    cache manager — avoids the 'Asked to cache already cached data'
+    WARN when two queries share a cached relation (e.g. the shingle
+    relation of the batch and incremental LSH pipelines). Queries
+    return LAZY DataFrames, so nothing unpersists inside a query body:
+    entries live until ``reset`` (see ``shared``)."""
+    lvl = df.storageLevel
+    return df if (lvl.useMemory or lvl.useDisk) else df.cache()
+
+
+def reset(spark: SparkSession) -> None:
+    """Free what the session holds: drop its ``shared`` entries, clear
+    the cache manager, and unpersist every RDD still persisted in the
+    SparkContext (the localCheckpoint blocks ``clearCache`` leaves).
+    A DataFrame built before the reset may read freed checkpoint
+    blocks; build it again."""
+    vars(spark).pop(_STORE, None)
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (memoized lazy scan per
-    session x sf_dir x table — see _TABLE_MEMO).
+    """Load one driver testdata table: a lazy scan, ``shared`` per
+    session x sf_dir x table. Memoizing the scan reuses its resolved
+    schema and file index across query builds (each
+    ``spark.read.parquet`` costs ~70-95 ms of py4j and footer
+    resolution); every action still reads the files.
 
     The events table's ts column has varied across driver testdata
     generations: parquet TIMESTAMP(NANOS) (unmappable natively — read
@@ -190,26 +241,23 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    key = (id(spark), sf_dir, name)
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    # The driver supplies its own SparkSession; pin the timezone so
-    # timestamp-derived values (year/date_trunc/window) match the
-    # DuckDB oracle regardless of host timezone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
+    def scan() -> DataFrame:
+        # The driver supplies its own SparkSession; pin the timezone so
+        # timestamp-derived values (year/date_trunc/window) match the
+        # DuckDB oracle regardless of host timezone.
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        if name != "events":
+            return spark.read.parquet(f"{sf_dir}/{name}.parquet")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_MEMO[key] = (spark, df)
-    return df
+            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        if ts_type == "timestamp_ntz":
+            return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df
+
+    return shared(spark, ("scan", sf_dir, name), scan)
 
 
 def load_all() -> None:

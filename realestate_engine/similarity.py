@@ -18,8 +18,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.dedup import cache_once, cosine_sim
-from realestate_engine.registry import register, t
+from realestate_engine.dedup import cosine_sim
+from realestate_engine.registry import cache_once, register, t
 
 # Deterministic pseudo-random hyperplanes: plane b, component i has
 # sign +1 iff portable_hash32(f"{b}:{i}") is even (md5-prefix hash —
@@ -97,7 +97,9 @@ def lsh_bucket(vec: Column, bits: int = 8) -> Column:
     expression: sign of <v, h_b> contributes bit b. Sign vectors are
     constant literals (see _hyperplane_signs_py), sliced to the
     vector's length so any dim <= _LSH_MAX_DIM folds element-for-
-    element exactly as the old transform did."""
+    element exactly as the old transform did. A longer vector fails the
+    query: past the literal, zip_with pads the signs with nulls and the
+    vector would land in bucket 0."""
     acc = F.lit(0).cast("long")
     for b in range(bits):
         # one F.expr per sign array (a 256-literal array() text parses
@@ -119,7 +121,10 @@ def lsh_bucket(vec: Column, bits: int = 8) -> Column:
             lambda a, x: a + x,
         )
         acc = acc + F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-    return acc
+    return F.when(
+        F.size(vec) > _LSH_MAX_DIM,
+        F.raise_error(F.lit(f"lsh_bucket: vector dimension exceeds {_LSH_MAX_DIM}")),
+    ).otherwise(acc)
 
 
 def brute_force_topk(

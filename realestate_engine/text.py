@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import register, t
+from realestate_engine.registry import cache_once, register, t
 
 _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
@@ -145,7 +145,6 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same bounded shared-relation pattern as the minhash shingle
     cache (doc-term pairs, LRU-evictable; at 100 TB a pipeline would
     materialize tf once for the whole IR family anyway)."""
-    from realestate_engine.dedup import cache_once
 
     d = t(spark, sf_dir, "documents")
     words = d.select("doc_id", F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"))
@@ -511,7 +510,7 @@ def text_contamination_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the exact join IS the oracle-checkable semantics. The rate is
     an int/int division of identical counts — bit-identical across
     engines, no rounding fudge needed."""
-    from realestate_engine.dedup import cache_once, word_shingles
+    from realestate_engine.dedup import word_shingles
 
     d = t(spark, sf_dir, "documents")
     # 4-grams via the zip_with shingle helper: a pure map-side
@@ -870,7 +869,6 @@ def text_sparse_dot_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     workable and a runaway plan at 100 TB. Raw-count dot products stay
     in exact BIGINTs (a tf-idf weighting would be float and
     non-hash-comparable)."""
-    from realestate_engine.dedup import cache_once
 
     d = t(spark, sf_dir, "documents")
     toks = d.select(

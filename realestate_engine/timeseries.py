@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.dedup import cache_once
-from realestate_engine.registry import input_width, register, t
+from realestate_engine.registry import cache_once, input_width, register, t
 
 
 def _user_recurrence_map(

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import register, t
+from realestate_engine.registry import cache_once, register, t
 
 def _bpe_pair_counts(vocab: DataFrame) -> DataFrame:
     """Adjacent-symbol pair counts over a (sym array<string>, freq)
@@ -331,7 +331,6 @@ def t25_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Final ranking is TakeOrdered (top-k, no global sort materialized).
     At 100 TB this is exactly the distributed KN estimation layout:
     count once, aggregate the count table three ways, join small."""
-    from realestate_engine.dedup import cache_once
 
     d = t(spark, sf_dir, "documents")
     toks = d.select(
@@ -464,7 +463,6 @@ def t26_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size vocab broadcast, every join an equi hash join —
     the 100 TB tokenizer is this exact plan with a bigger vocab
     table."""
-    from realestate_engine.dedup import cache_once
 
     d = t(spark, sf_dir, "documents").select("text")
     raw = d.select(
@@ -818,7 +816,6 @@ def t31_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     32k tokens and the DAG stays |distinct words| x O(len) — this
     exact plan. Cited reference behavior: none (the reference has no
     tokenizer; north-star surface)."""
-    from realestate_engine.dedup import cache_once
 
     d = t(spark, sf_dir, "documents").select("text")
     raw = d.select(
@@ -1013,7 +1010,6 @@ def t32_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the final division — no order-dependent float summation.
     Emits the curve (shingles, types, type-token ratio micro) with the
     fitted beta_micro alongside."""
-    from realestate_engine.dedup import cache_once
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
     arrs = d.select(

@@ -92,6 +92,18 @@ def test_lsh_recall_vs_exact(vectors):
     assert buckets[99] != buckets[0]
 
 
+def test_lsh_bucket_rejects_vectors_past_the_sign_literal(spark):
+    """Signs are precomputed for _LSH_MAX_DIM (256) dimensions. A longer
+    vector fails the query instead of silently landing in bucket 0."""
+    def bucket(dim):
+        df = spark.createDataFrame([([1.0] * dim,)], "v array<double>")
+        return df.select(lsh_bucket(F.col("v"), bits=4).alias("b")).collect()[0].b
+
+    assert 0 <= bucket(256) < 16
+    with pytest.raises(Exception, match="exceeds 256"):
+        bucket(257)
+
+
 def test_cosine_sim_expression(spark):
     df = spark.createDataFrame(
         [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0])],

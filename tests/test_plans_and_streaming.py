@@ -8,7 +8,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from realestate_engine.registry import QUERIES, load_all
+from realestate_engine.registry import QUERIES, load_all, reset
 from realestate_engine.schemas import TESTDATA_SCHEMAS
 from realestate_engine.streaming import streamify, tumbling_counts
 from realestate_engine.multimodal import extract_image_features
@@ -853,7 +853,7 @@ def _cache_entries(plan, jvm, out: set[int]) -> set[int]:
 
 
 def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
-    """The ten iterative trade-graph operators all read ONE cached
+    """The eleven trade-graph operators all read ONE cached
     (src, dst, d) relation, trade_graph's, and none of them drops it
     (spark.sql's view binding in pagerank would, unguarded). ANF's
     rounds are checkpointed while it is built, so its final plan no
@@ -867,7 +867,7 @@ def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
         assert rel.getClass().getSimpleName() == "InMemoryRelation"
         return rel.cacheBuilder()
 
-    spark.catalog.clearCache()
+    reset(spark)
     QUERIES["graph_anf_neighborhood"](spark, sf_dir)
     assert entry().isCachedColumnBuffersLoaded()
     shared = jvm.System.identityHashCode(entry())
@@ -875,11 +875,25 @@ def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
         "graph_pagerank_trade", "graph_personalized_pagerank",
         "graph_label_propagation", "graph_modularity", "graph_link_prediction",
         "graph_bfs_hops", "graph_mis_luby", "graph_degree_assortativity",
-        "graph_rich_club",
+        "graph_rich_club", "graph_deterministic_walks",
     ):
         qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
         assert shared in _cache_entries(qe.executedPlan(), jvm, set()), name
         assert jvm.System.identityHashCode(entry()) == shared, name
+
+
+def test_reset_frees_checkpoints_and_rebuilds_the_session_store(spark, sf_dir):
+    """reset(spark) frees what the session holds, including the
+    localCheckpoint blocks of iterative queries and of the memoized
+    cluster labels, which clearCache() alone leaves resident. The
+    next build recomputes the same rows."""
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = QUERIES["dedup_clusters"](spark, sf_dir).collect()
+    QUERIES["graph_mis_luby"](spark, sf_dir).collect()
+    assert len(storage()) > 0
+    reset(spark)
+    assert len(storage()) == 0
+    assert QUERIES["dedup_clusters"](spark, sf_dir).collect() == before
 
 
 def test_input_width_without_local_files_is_default_parallelism(spark, tmp_path, monkeypatch):

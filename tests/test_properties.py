@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the deterministic kernels:
-Z-order interleaving and fixed-point PageRank. Each example batches
-many rows into ONE Spark job so the property sweep stays fast."""
+Z-order interleaving, fixed-point PageRank and connected components.
+Each example batches many rows into ONE Spark job so the property
+sweep stays fast."""
 
 from __future__ import annotations
 
@@ -71,6 +72,41 @@ def test_personalized_pagerank_property(spark, raw_edges, seed_ids, n_iter):
     assume(seeds & {s for s, _ in edges})
     got = _pagerank_rows(spark, edges, n_iter, seeds)
     assert got == _reference_pagerank(edges, n_iter, seeds)
+
+
+def _union_find_labels(pairs):
+    """Python union-find reference: node -> min id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@given(
+    pairs=st.lists(
+        st.tuples(st.integers(0, 40), st.integers(0, 40)), min_size=1, max_size=20
+    )
+)
+@settings(**COMMON)
+def test_connected_components_match_union_find(spark, pairs):
+    """Both CC algorithms (label propagation with pointer doubling, and
+    two-star contraction) label each node with its component's min id."""
+    from realestate_engine.dedup import connected_components, connected_components_twostar
+
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    want = _union_find_labels(pairs)
+    for cc in (connected_components, connected_components_twostar):
+        got = {r.doc_id: r.cluster_id for r in cc(df).collect()}
+        assert got == want, cc.__name__
 
 
 def test_portable_hash_pipeline_matches_duckdb(spark):

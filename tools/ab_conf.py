@@ -2,7 +2,7 @@
 
 Usage: python tools/ab_conf.py [name ...]
 
-For each query and each conf variant: clearCache, one warm-up run, then
+For each query and each conf variant: reset, one warm-up run, then
 best-of-3 noop-sink timings. Prints a table. Experiment tool only (not
 part of the bench contract).
 """
@@ -38,9 +38,9 @@ DEFAULTS = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
-    from realestate_engine.registry import QUERIES, load_all
+    from realestate_engine.registry import QUERIES, load_all, reset
     from realestate_engine.session import create_session
 
     load_all()
@@ -69,7 +69,7 @@ def main() -> None:
         for vname, conf in VARIANTS.items():
             for k, v in {**DEFAULTS, **conf}.items():
                 spark.conf.set(k, v)
-            spark.catalog.clearCache()
+            reset(spark)
             spark.sparkContext.setJobDescription(f"{name}:{vname}")
             # warm-up (build caches under this conf, JIT)
             QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()

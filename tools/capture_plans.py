@@ -22,7 +22,7 @@ def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r14"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
     from realestate_engine.registry import QUERIES, load_all
     from realestate_engine.session import create_session

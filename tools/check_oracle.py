@@ -10,6 +10,7 @@ order-insensitive values. Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
@@ -126,7 +127,8 @@ def main() -> int:
     from realestate_engine.session import create_session
 
     load_all()
-    spark = create_session("check_oracle", master="local[8]", shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    spark = create_session("check_oracle", master=f"local[{cpus}]", shuffle_partitions=cpus)
 
     con = duckdb.connect()
     for tb in TABLES:

@@ -25,9 +25,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/registry_times.json"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
-    from realestate_engine.registry import QUERIES, load_all
+    from realestate_engine.registry import QUERIES, load_all, reset
     from realestate_engine.session import create_session
 
     load_all()
@@ -57,14 +57,13 @@ def main() -> None:
         results[name] = rec
         print(f"[{i + 1}/{len(names)}] {name}: {rec}", flush=True)
         # checkpoint every 25 queries so a crash keeps partial data,
-        # and release accumulated cache_once relations (ADVICE r14 /
-        # r15: a 498-query session otherwise accumulates every family's
-        # cached relations — measured ~10% total drift plus 3-10x
-        # late-sweep outliers on UNTOUCHED queries from the resulting
-        # GC pressure; each query's warm number is unaffected because
-        # its own cold run rebuilds what it caches)
+        # and free what the session holds: a 498-query session otherwise
+        # accumulates every family's cached relations and checkpoints
+        # (measured ~10% total drift plus 3-10x late-sweep outliers on
+        # UNTOUCHED queries from the GC pressure); each query's warm
+        # number is unaffected because its own cold run rebuilds them
         if (i + 1) % 25 == 0 or i + 1 == len(names):
-            spark.catalog.clearCache()
+            reset(spark)
             with open(out_path, "w") as f:
                 json.dump(results, f, indent=1)
     spark.sparkContext.setJobDescription(None)
