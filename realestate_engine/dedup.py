@@ -665,7 +665,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
     cluster_id) where cluster_id = min id reachable. Iterative min-label
     propagation: each round every node takes min(own label, neighbors'
     labels) — converges in O(component diameter) rounds (near-dup
-    clusters are shallow; max_iter bounds pathological chains).
+    clusters are shallow; max_iter bounds pathological chains, and a
+    run that reaches no fixed point within it raises, as
+    connected_components_twostar does).
 
     Scale (r15 round shape, guide §2.4 — remove shuffles outright): the
     STATIC edge list gains a SELF-LOOP per node and is cached
@@ -739,6 +741,15 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
         labels = new_labels.drop("_chg")
         if not changed:
             break
+    else:
+        # fail loudly rather than return unconverged labels: a chain
+        # deeper than the budget assumed leaves some node still
+        # pointing past its component's min id
+        raise RuntimeError(
+            f"connected_components: no label fixed point after {max_iter} "
+            f"rounds; raise max_iter (the rounds needed grow with component "
+            f"depth) or use connected_components_twostar"
+        )
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

@@ -1,12 +1,16 @@
-"""Iterative graph analytics on DataFrames over the customer–supplier
-trade graph (who bought from whom, via orders ⋈ lineitem).
+"""Iterative graph analytics on DataFrames over two projections of the
+TPC-H tables: the customer–supplier trade graph (who bought from whom,
+via orders ⋈ lineitem) and the part co-purchase graph (parts on the
+same order, via a lineitem self-join).
 
-The graph is built once per session by trade_graph — one cached
-(src, dst, d) relation that every iterative trade-graph operator reads
-— and mined with driver-side loops of distributed steps: the LOOP is on
-the driver, every step of WORK is on the cluster (the MLlib ALS/KMeans
-shape). PageRank and personalized PageRank share one recurrence,
-pagerank.
+Each graph has one definition, built once per session and cached:
+trade_graph, the (src, dst, d) relation every iterative trade-graph
+operator except HITS reads, and part_graph, the (u < v) pairs at a
+given co-occurrence support. Their oracle twins are the preludes
+_TRADE_EDGES_CTES and _part_pairs_cte. The graphs are mined with
+driver-side loops of distributed steps: the LOOP is on the driver,
+every step of WORK is on the cluster (the MLlib ALS/KMeans shape).
+PageRank and personalized PageRank share one recurrence, pagerank.
 
 Cross-engine determinism: ranks are kept in scaled integer arithmetic
 (micro-ranks, 1e12 = rank 1.0) so every contribution, damping multiply
@@ -58,8 +62,9 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The trade graph every iterative trade-graph operator reads: one
-    cached (src, dst, d) relation per session and input directory.
+    """The trade graph every iterative trade-graph operator but HITS
+    reads: one cached (src, dst, d) relation per session and input
+    directory.
 
     - **Packed ids.** Nodes are BIGINTs, customer = 2*custkey and
       supplier = 2*suppkey + 1 (trade_edges), so the side of a node is
@@ -83,6 +88,47 @@ def trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = trade_edges(spark, sf_dir).repartition(width, "src")
     deg = rep.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     return cache_once(rep.join(deg, "src"))
+
+
+_MIN_SUPPORT = 2  # co-occurrence support threshold: the projection sparsifier
+
+
+def part_graph(spark: SparkSession, sf_dir: str, min_support: int) -> DataFrame:
+    """The part co-purchase graph every part-projection operator reads:
+    one cached (u, v) relation per session, input directory and
+    support threshold.
+
+    - **Oriented.** Each undirected link is one row with u < v (part
+      keys, from a lineitem self-join on l_orderkey); consumers that
+      need both directions mirror it themselves.
+    - **Support.** (u, v) is an edge when the two parts co-occur on at
+      least ``min_support`` orders. 1 is the raw projection
+      (graph_triangle_count); _MIN_SUPPORT = 2 is the market-basket
+      sparsifier (clustering coefficient, k-truss, Adamic-Adar).
+    - **Why support sparsifies.** Co-occurrence projections DENSIFY
+      with data volume: the raw part projection grows 8.9k -> 116k ->
+      1.2M edges across the three test SFs (the raw supplier
+      projection is already complete at sf0.01), while the
+      support-filtered edge set stays ~2.5-3.9k. Without it wedge
+      counts saturate and every wedge join goes superlinear (measured
+      18s at sf0.1 on the raw supplier graph); with it the operators
+      are flat across SFs.
+
+    cache_once keys the relation by its plan, so each min_support
+    value is one materialization shared by its callers in a session."""
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    a, b = li.alias("a"), li.alias("b")
+    return cache_once(
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= min_support)
+        .select("u", "v")
+    )
 
 
 def pagerank(edges_p: DataFrame, n_iter: int, seeds: DataFrame | None = None) -> DataFrame:
@@ -159,6 +205,21 @@ _TRADE_EDGES_CTES = """
         SELECT c AS src, s AS dst FROM pairs
         UNION ALL
         SELECT s AS src, c AS dst FROM pairs
+    )"""
+
+
+def _part_pairs_cte(min_support: int) -> str:
+    """part_graph as oracle SQL: the (u < v) co-purchase pairs with
+    support >= min_support, computed once per statement. Part-graph
+    oracles open with it and append their own CTEs after a comma, as
+    the trade-graph oracles do with _TRADE_EDGES_CTES."""
+    return f"""
+    WITH pairs AS MATERIALIZED (
+        SELECT a.l_partkey AS u, b.l_partkey AS v
+        FROM lineitem a JOIN lineitem b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2
+        HAVING COUNT(*) >= {min_support}
     )"""
 
 
@@ -524,7 +585,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutually-dense core remains. The oracle unrolls the identical
     simultaneous peel as chained CTEs; integer node ids and counts make
     every round hash-exact across engines."""
-    return kcore_peel(trade_edges(spark, sf_dir)).orderBy("node")
+    return kcore_peel(trade_graph(spark, sf_dir).select("src", "dst")).orderBy("node")
 
 
 @register(
@@ -773,16 +834,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MIN_SUPPORT = 2  # co-occurrence support threshold: the projection sparsifier
-
-_TRIANGLE_ORACLE = """
-    WITH pairs AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= 2
-    ),
+_TRIANGLE_ORACLE = f"""{_part_pairs_cte(_MIN_SUPPORT)},
     deg AS (
         SELECT n, CAST(COUNT(*) AS BIGINT) AS d
         FROM (SELECT u AS n FROM pairs UNION ALL SELECT v FROM pairs)
@@ -818,15 +870,9 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle census. Two deliberate scale controls on top of
     graph_triangle_count's id-oriented count:
 
-    1. **Min-support edges** (co-occurrence count >= 2, the
-       market-basket sparsifier): co-occurrence projections DENSIFY
-       with data volume — measured here, the raw supplier projection
-       is already a complete graph at sf0.01 and the raw part
-       projection grows 8.9k -> 116k -> 1.2M edges across the three
-       SFs, while the support-filtered edge set stays ~2.5-3.9k.
-       Without this control the metric saturates at 1.0 AND the wedge
-       join goes superlinear (measured 18s at sf0.1 on the raw
-       supplier graph); with it the operator is flat across SFs.
+    1. **Min-support edges**: part_graph(_MIN_SUPPORT), the
+       market-basket sparsifier; on the raw projection the metric
+       saturates at 1.0 and the wedge join goes superlinear.
     2. **Degree-ordered orientation**: every edge points from its
        (degree, id)-smaller endpoint, so each triangle counts once and
        the e1⋈e2 wedge volume is bounded by O(m^1.5) instead of
@@ -837,19 +883,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines. (The customer-supplier trade graph itself is
     bipartite and triangle-free; projections are where community
     structure lives.)"""
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = cache_once(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= _MIN_SUPPORT)
-        .select("u", "v")
-    )
+    pairs = part_graph(spark, sf_dir, _MIN_SUPPORT)
     deg = (
         pairs.select(F.col("u").alias("n"))
         .unionAll(pairs.select(F.col("v").alias("n")))
@@ -1077,7 +1111,7 @@ def graph_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin is one hash-agg, contraction is label-frame joins; no
     all-pairs anywhere. Oracle replays both rounds as unrolled
     MATERIALIZED CTEs.""".format(j=_MST_JUMPS)
-    edges = trade_edges(spark, sf_dir)
+    edges = trade_graph(spark, sf_dir)
     lo = F.least("src", "dst")
     hi = F.greatest("src", "dst")
     w = (lo * 1000003 + hi) % 2147483647
@@ -1291,45 +1325,27 @@ _KTRUSS_ROUNDS = 2
 
 def _ktruss_support_sql(edges: str, sup: str) -> str:
     """Per-edge triangle support over a (u < v) edge CTE: each triangle
-    (a<b<c) is enumerated once by the two-wedge join, then its three
-    edge roles are unioned and counted."""
+    (a<b<c) is enumerated once by the two-wedge join into tri_{sup},
+    then its three edge roles are unioned and counted."""
     return f"""
+    tri_{sup} AS MATERIALIZED (
+        SELECT e1.u AS a, e1.v AS b, e2.v AS c
+        FROM {edges} e1
+        JOIN {edges} e2 ON e2.u = e1.v
+        JOIN {edges} e3 ON e3.u = e1.u AND e3.v = e2.v
+    ),
     {sup} AS MATERIALIZED (
         SELECT u, v, CAST(COUNT(*) AS BIGINT) AS support
         FROM (
-            SELECT t.a AS u, t.b AS v FROM (
-                SELECT e1.u AS a, e1.v AS b, e2.v AS c
-                FROM {edges} e1
-                JOIN {edges} e2 ON e2.u = e1.v
-                JOIN {edges} e3 ON e3.u = e1.u AND e3.v = e2.v
-            ) t
-            UNION ALL
-            SELECT t.b, t.c FROM (
-                SELECT e1.u AS a, e1.v AS b, e2.v AS c
-                FROM {edges} e1
-                JOIN {edges} e2 ON e2.u = e1.v
-                JOIN {edges} e3 ON e3.u = e1.u AND e3.v = e2.v
-            ) t
-            UNION ALL
-            SELECT t.a, t.c FROM (
-                SELECT e1.u AS a, e1.v AS b, e2.v AS c
-                FROM {edges} e1
-                JOIN {edges} e2 ON e2.u = e1.v
-                JOIN {edges} e3 ON e3.u = e1.u AND e3.v = e2.v
-            ) t
+            SELECT a AS u, b AS v FROM tri_{sup}
+            UNION ALL SELECT b, c FROM tri_{sup}
+            UNION ALL SELECT a, c FROM tri_{sup}
         )
         GROUP BY u, v
     )"""
 
 
-_KTRUSS_ORACLE = f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= {_MIN_SUPPORT}
-    ),
+_KTRUSS_ORACLE = f"""{_part_pairs_cte(_MIN_SUPPORT)},
     {_ktruss_support_sql('pairs', 'sup1')},
     e1 AS MATERIALIZED (
         SELECT p.u, p.v FROM pairs p JOIN sup1 s ON s.u = p.u AND s.v = p.v
@@ -1367,26 +1383,17 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_boruvka_msf.
 
     Scale shape: support is the standard triangle-enumeration join
-    bounded by the min-support sparsifier (see
-    graph_clustering_coefficient — the raw projection densifies, the
-    support-filtered edge set stays ~3k across SFs); each round is
+    bounded by the min-support sparsifier (part_graph); each round is
     edge-keyed shuffles only, and the edge frame is localCheckpoint()ed
     per round so the iterative self-join lineage stays flat (the
-    Boruvka lesson, PLANS.md r7)."""
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= _MIN_SUPPORT)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    Boruvka lesson, PLANS.md r7). part_graph's output is checkpointed
+    once before the loop too, so the rounds self-join a checkpoint
+    leaf rather than the cached relation's plan (measured warm at
+    sf0.1, local[4], 7 alternating pairs in one session: 2.36 -> 1.88 s
+    median). Each edge set is counted once: a round's n_edges_in is
+    the previous round's n_edges_out."""
+    edges = part_graph(spark, sf_dir, _MIN_SUPPORT).localCheckpoint()
+    n_in = edges.count()
     census = []
     for rnd in range(1, _KTRUSS_ROUNDS + 1):
         e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
@@ -1406,7 +1413,6 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(tris.select(F.col("a").alias("u"), F.col("c").alias("v")))
         )
         sup = roles.groupBy("u", "v").agg(F.count(F.lit(1)).cast("bigint").alias("support"))
-        n_in = edges.count()
         edges = (
             edges.join(sup, ["u", "v"])
             .filter(F.col("support") >= _KTRUSS_K - 2)
@@ -1415,6 +1421,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_out = edges.count()
         census.append((rnd, n_in, n_out, n_in - n_out))
+        n_in = n_out
     return spark.createDataFrame(
         census, "round int, n_edges_in bigint, n_edges_out bigint, n_removed bigint"
     ).orderBy("round")
@@ -1594,14 +1601,7 @@ def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Adamic-Adar link prediction (common-neighbor scoring) -------------------
 
-_AA_ORACLE = """
-    WITH pairs AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= 2
-    ),
+_AA_ORACLE = f"""{_part_pairs_cte(_MIN_SUPPORT)},
     edges AS MATERIALIZED (
         SELECT u AS n, v AS nbr FROM pairs
         UNION ALL
@@ -1653,27 +1653,14 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: candidate volume is sum-of-deg^2 over shared neighbors —
     the same wedge bound as the triangle census, tamed by the
-    min-support sparsifier (measured: keeps the edge set ~3k across
-    SFs while the raw projection grows 8.9k -> 1.2M). At 100 TB the
-    additional controls are a per-node neighbor cap before the wedge
-    join and/or degree-thresholding hubs, both one filter on deg —
+    min-support sparsifier (part_graph). At 100 TB the additional
+    controls are a per-node neighbor cap before the wedge join and/or
+    degree-thresholding hubs, both one filter on deg —
     the plan shape (broadcast deg, one self-join, one hash agg,
     anti-join to drop known edges) is unchanged. Reference has no
     graph surface (north-star territory; cf. dedup clustering,
     dedup.py:385)."""
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = cache_once(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= _MIN_SUPPORT)
-        .select("u", "v")
-    )
+    pairs = part_graph(spark, sf_dir, _MIN_SUPPORT)
     edges = pairs.select(F.col("u").alias("n"), F.col("v").alias("nbr")).unionAll(
         pairs.select(F.col("v").alias("n"), F.col("u").alias("nbr"))
     )

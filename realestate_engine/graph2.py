@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.graph import _TRADE_EDGES_CTES, trade_edges, trade_graph
+from realestate_engine.graph import _TRADE_EDGES_CTES, trade_graph
 from realestate_engine.registry import cache_once, register
 
 _RICH_KS = [1, 2, 4, 8, 16, 32]
@@ -340,7 +340,7 @@ def graph_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds as MATERIALIZED CTEs. Maximality within the horizon is
     reported honestly as n_alive_after (edges whose endpoints are all
     unmatched after round {n}).""".format(n=_MATCH_ROUNDS)
-    e0 = trade_edges(spark, sf_dir).where(F.col("src") < F.col("dst"))
+    e0 = trade_graph(spark, sf_dir).where(F.col("src") < F.col("dst"))
     alive = cache_once(
         e0.select(
             F.col("src").alias("u"),

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from realestate_engine.graph import _part_pairs_cte, part_graph
 from realestate_engine.ordered import exclusive_prefix_offsets
 from realestate_engine.registry import ORACLES, cache_once, register, stable_tmp, t
 
@@ -959,19 +960,15 @@ def p14_dense_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_triangle_count",
-    """
-    WITH pp AS (
-        SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a
-        JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    _part_pairs_cte(1)
+    + """,
     tri AS (
         SELECT COUNT(*) AS n_triangles
-        FROM pp e1
-        JOIN pp e2 ON e2.pa = e1.pb
-        JOIN pp e3 ON e3.pa = e1.pa AND e3.pb = e2.pb
+        FROM pairs e1
+        JOIN pairs e2 ON e2.u = e1.v
+        JOIN pairs e3 ON e3.u = e1.u AND e3.v = e2.v
     )
-    SELECT CAST((SELECT COUNT(*) FROM pp) AS BIGINT) AS n_edges,
+    SELECT CAST((SELECT COUNT(*) FROM pairs) AS BIGINT) AS n_edges,
            CAST(n_triangles AS BIGINT) AS n_triangles
     FROM tri
     """,
@@ -983,27 +980,16 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-count and halves the wedge fan-out), build wedges by joining
     edges on the shared middle vertex, then close each wedge with a
     third edge-join — two shuffle joins on integer keys, no iteration.
-    The edge list is built once and cached; at 100 TB the wedge join is
-    the skew point (hot vertices) and composes with the a21/x4 salting
-    ops. Integer counts, bit-exact."""
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .distinct()
-    )
-    edges = cache_once(edges)
+    The edge list is the cached raw projection, part_graph with
+    min_support 1; at 100 TB the wedge join is the skew point (hot
+    vertices) and composes with the a21/x4 salting ops. Integer
+    counts, bit-exact."""
+    edges = part_graph(spark, sf_dir, 1)
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    wedges = e1.join(e2, F.col("e2.pa") == F.col("e1.pb"))
+    wedges = e1.join(e2, F.col("e2.u") == F.col("e1.v"))
     tri = wedges.join(
         e3,
-        (F.col("e3.pa") == F.col("e1.pa")) & (F.col("e3.pb") == F.col("e2.pb")),
+        (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
     n_edges = edges.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     return n_edges.crossJoin(tri).select("n_edges", "n_triangles")

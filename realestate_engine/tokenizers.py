@@ -35,6 +35,64 @@ def _bpe_pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
+def _bpe_learn(spark: SparkSession, sf_dir: str, rounds: int) -> tuple[list, DataFrame]:
+    """The Spark side of BPE training, shared by the learn query
+    (text_bpe_merge_rounds) and the encode query (t30_bpe_encode), as
+    _bpe_cte_chain is by their oracles. The corpus word-frequency
+    vocabulary, split into symbols, goes through ``rounds`` merge
+    rounds: one pair-count aggregate (_bpe_pair_counts) and a 1-row
+    argmax pull to the driver (lexicographic tie-break), then the
+    merge applied corpus-wide as a space-joined regexp rewrite, with
+    a localCheckpoint per round. Returns the merges as (round, left,
+    right, pair_count) tuples and the final (word, sym, freq)
+    vocabulary."""
+    d = t(spark, sf_dir, "documents")
+    words = d.select(
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
+    )
+    vocab = (
+        words.groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        # split("(?!^)") on this Spark version emits a TRAILING EMPTY
+        # element (zero-width match at end-of-string), i.e. a phantom
+        # '' symbol whose (last_char, '') pair counts are word
+        # frequencies — large enough to WIN a merge round at sf0.1
+        # (caught by the round-6 DuckDB oracle; the in-memory
+        # reference test agreed but only ran at sf0.001). Filter it.
+        .select(
+            "word",
+            F.filter(F.split("word", "(?!^)"), lambda s: s != "").alias("sym"),
+            "freq",
+        )
+        .localCheckpoint()
+    )
+    merges = []
+    for rnd in range(rounds):
+        top = (
+            _bpe_pair_counts(vocab)
+            .orderBy(F.desc("cnt"), "l", "r")
+            .limit(1)
+            .collect()[0]
+        )
+        merges.append((rnd + 1, top["l"], top["r"], int(top["cnt"])))
+        pat = "(?<= )\\Q" + top["l"] + "\\E \\Q" + top["r"] + "\\E(?= )"
+        vocab = vocab.select(
+            "word",
+            F.split(
+                F.trim(
+                    F.regexp_replace(
+                        F.concat(F.lit(" "), F.array_join("sym", " "), F.lit(" ")),
+                        pat,
+                        top["l"] + top["r"],
+                    )
+                ),
+                " ",
+            ).alias("sym"),
+            "freq",
+        ).localCheckpoint()
+    return merges, vocab
+
+
 def _bpe_cte_chain(rounds: int = 3) -> str:
     r"""The unrolled BPE merge-round CTE chain (w, v0, then
     pc/m/mt/isl/mg/v{k+1} per round) shared by BOTH BPE oracles —
@@ -127,11 +185,8 @@ def _bpe_oracle_sql(rounds: int = 3) -> str:
 def text_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T18: byte-pair-encoding vocabulary induction — N=3 real BPE
     merge rounds over the corpus word-frequency table, the core step of
-    tokenizer training (GPT-2/SentencePiece-class). Each round is one
-    distributed pair-count aggregate (explode + sum(freq), map-side
-    partials) followed by a 1-row argmax pull to the driver — the same
-    loop-on-driver/work-on-cluster shape as PageRank; the merge itself
-    is a space-joined regexp rewrite applied corpus-wide in parallel.
+    tokenizer training (GPT-2/SentencePiece-class), run by _bpe_learn:
+    the same loop-on-driver/work-on-cluster shape as PageRank.
     Tie-breaks are lexicographic, so the learned merges are fully
     deterministic. Oracle-checked since round 6: the 3-round loop is
     unrolled into chained DuckDB CTEs over symbol-position rows
@@ -139,48 +194,7 @@ def text_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-overlap merge semantics exactly; tests/test_new_ops.py
     additionally re-derives the merges with an exact Python
     reference."""
-    d = t(spark, sf_dir, "documents")
-    words = d.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
-    )
-    vocab = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        # split("(?!^)") on this Spark version emits a TRAILING EMPTY
-        # element (zero-width match at end-of-string), i.e. a phantom
-        # '' symbol whose (last_char, '') pair counts are word
-        # frequencies — large enough to WIN a merge round at sf0.1
-        # (caught by the round-6 DuckDB oracle; the in-memory
-        # reference test agreed but only ran at sf0.001). Filter it.
-        .select(
-            F.filter(F.split("word", "(?!^)"), lambda s: s != "").alias("sym"),
-            "freq",
-        )
-        .localCheckpoint()
-    )
-    merges = []
-    for rnd in range(3):
-        top = (
-            _bpe_pair_counts(vocab)
-            .orderBy(F.desc("cnt"), "l", "r")
-            .limit(1)
-            .collect()[0]
-        )
-        merges.append((rnd + 1, top["l"], top["r"], int(top["cnt"])))
-        pat = "(?<= )\\Q" + top["l"] + "\\E \\Q" + top["r"] + "\\E(?= )"
-        vocab = vocab.select(
-            F.split(
-                F.trim(
-                    F.regexp_replace(
-                        F.concat(F.lit(" "), F.array_join("sym", " "), F.lit(" ")),
-                        pat,
-                        top["l"] + top["r"],
-                    )
-                ),
-                " ",
-            ).alias("sym"),
-            "freq",
-        ).localCheckpoint()
+    merges, _ = _bpe_learn(spark, sf_dir, 3)
     return spark.createDataFrame(
         merges, "round int, left string, right string, pair_count bigint"
     )
@@ -638,49 +652,12 @@ def t30_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct word types containing the token, token length). This is
     the vocabulary/frequency table a tokenizer ships with.
 
-    Plan: identical loop posture to the learn query (per round one
-    pair-count aggregate + a 1-row argmax pull, merges applied
-    corpus-wide as a regexp rewrite, per-round localCheckpoint), plus
-    ONE final explode + hash agg for the census. The oracle reuses the
+    Plan: the learn query's loop (_bpe_learn), plus ONE final
+    explode + hash agg for the census. The oracle reuses the
     unrolled learn-CTE chain and reads the final symbol state, so any
     divergence in merge application (the left-to-right non-overlap
     subtlety) flips the hash."""
-    d = t(spark, sf_dir, "documents")
-    words = d.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
-    )
-    vocab = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            "word",
-            F.filter(F.split("word", "(?!^)"), lambda s: s != "").alias("sym"),
-            "freq",
-        )
-        .localCheckpoint()
-    )
-    for _ in range(3):
-        top = (
-            _bpe_pair_counts(vocab)
-            .orderBy(F.desc("cnt"), "l", "r")
-            .limit(1)
-            .collect()[0]
-        )
-        pat = "(?<= )\\Q" + top["l"] + "\\E \\Q" + top["r"] + "\\E(?= )"
-        vocab = vocab.select(
-            "word",
-            F.split(
-                F.trim(
-                    F.regexp_replace(
-                        F.concat(F.lit(" "), F.array_join("sym", " "), F.lit(" ")),
-                        pat,
-                        top["l"] + top["r"],
-                    )
-                ),
-                " ",
-            ).alias("sym"),
-            "freq",
-        ).localCheckpoint()
+    _, vocab = _bpe_learn(spark, sf_dir, 3)
     return (
         vocab.select("word", "freq", F.explode("sym").alias("token"))
         .groupBy("token")

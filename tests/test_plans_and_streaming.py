@@ -852,24 +852,34 @@ def _cache_entries(plan, jvm, out: set[int]) -> set[int]:
     return out
 
 
+def _cache_builder(df):
+    """The cache entry a cached relation's plan resolves to."""
+    rel = df._jdf.queryExecution().withCachedData()
+    assert rel.getClass().getSimpleName() == "InMemoryRelation"
+    return rel.cacheBuilder()
+
+
 def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
-    """The eleven trade-graph operators all read ONE cached
+    """The fourteen trade-graph operators all read ONE cached
     (src, dst, d) relation, trade_graph's, and none of them drops it
-    (spark.sql's view binding in pagerank would, unguarded). ANF's
-    rounds are checkpointed while it is built, so its final plan no
-    longer reads the edges; its build must have filled the cache."""
+    (spark.sql's view binding in pagerank would, unguarded). ANF,
+    k-core, Boruvka and matching checkpoint their rounds while they
+    are built, so their final plans no longer read the edges; each
+    build, from an empty session, must have filled the cache."""
     from realestate_engine.graph import trade_graph
 
     jvm = spark._jvm
 
     def entry():
-        rel = trade_graph(spark, sf_dir)._jdf.queryExecution().withCachedData()
-        assert rel.getClass().getSimpleName() == "InMemoryRelation"
-        return rel.cacheBuilder()
+        return _cache_builder(trade_graph(spark, sf_dir))
 
-    reset(spark)
-    QUERIES["graph_anf_neighborhood"](spark, sf_dir)
-    assert entry().isCachedColumnBuffersLoaded()
+    for name in (
+        "graph_anf_neighborhood", "graph_kcore", "graph_boruvka_msf",
+        "graph_greedy_matching",
+    ):
+        reset(spark)
+        QUERIES[name](spark, sf_dir)
+        assert entry().isCachedColumnBuffersLoaded(), name
     shared = jvm.System.identityHashCode(entry())
     for name in (
         "graph_pagerank_trade", "graph_personalized_pagerank",
@@ -880,6 +890,34 @@ def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
         qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
         assert shared in _cache_entries(qe.executedPlan(), jvm, set()), name
         assert jvm.System.identityHashCode(entry()) == shared, name
+
+
+def test_part_graph_consumers_share_one_cached_relation_per_support(spark, sf_dir):
+    """The clustering coefficient, k-truss and Adamic-Adar read ONE
+    cached part_graph relation (min support _MIN_SUPPORT); triangle
+    count reads its own (min support 1). k-truss checkpoints its
+    rounds while it is built, so its build, from an empty session,
+    must have filled the entry."""
+    from realestate_engine.graph import _MIN_SUPPORT, part_graph
+
+    jvm = spark._jvm
+
+    def entry(min_support):
+        return _cache_builder(part_graph(spark, sf_dir, min_support))
+
+    reset(spark)
+    QUERIES["graph_ktruss"](spark, sf_dir)
+    assert entry(_MIN_SUPPORT).isCachedColumnBuffersLoaded()
+    shared = jvm.System.identityHashCode(entry(_MIN_SUPPORT))
+    for name in ("graph_clustering_coefficient", "graph_adamic_adar"):
+        qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
+        assert shared in _cache_entries(qe.executedPlan(), jvm, set()), name
+    qe = QUERIES["graph_triangle_count"](spark, sf_dir)._jdf.queryExecution()
+    read = _cache_entries(qe.executedPlan(), jvm, set())
+    raw = jvm.System.identityHashCode(entry(1))
+    assert raw != shared
+    assert raw in read and shared not in read
+    assert jvm.System.identityHashCode(entry(_MIN_SUPPORT)) == shared
 
 
 def test_reset_frees_checkpoints_and_rebuilds_the_session_store(spark, sf_dir):

@@ -5,6 +5,7 @@ sweep stays fast."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -107,6 +108,20 @@ def test_connected_components_match_union_find(spark, pairs):
     for cc in (connected_components, connected_components_twostar):
         got = {r.doc_id: r.cluster_id for r in cc(df).collect()}
         assert got == want, cc.__name__
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A chain too deep for the round budget raises instead of
+    returning unconverged labels; the default budget still matches
+    union-find on the same chain."""
+    from realestate_engine.dedup import connected_components
+
+    chain = [(i, i + 1) for i in range(32)]
+    df = spark.createDataFrame(chain, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="no label fixed point after 2 rounds"):
+        connected_components(df, max_iter=2)
+    got = {r.doc_id: r.cluster_id for r in connected_components(df).collect()}
+    assert got == _union_find_labels(chain)
 
 
 def test_portable_hash_pipeline_matches_duckdb(spark):
