@@ -208,21 +208,12 @@ def main() -> None:
 
     # DuckDB denominator: time each headline query's oracle SQL on the
     # same parquet files (views over read_parquet; default = all cores)
-    import duckdb
+    from tools.check_oracle import oracle_connection, oracle_sql
 
-    from realestate_engine.registry import ORACLES
-
-    con = duckdb.connect()
-    for tbl in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {tbl} AS SELECT * FROM read_parquet('{sf_dir}/{tbl}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
     duck: dict[str, float] = {}
     for name in HEADLINE:
-        sql = ORACLES.get(name)
+        sql = oracle_sql(name, sf_dir)
         if sql is None:
             continue
         best = float("inf")

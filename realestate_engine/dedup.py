@@ -333,6 +333,33 @@ _JACCARD_SELECT = """
              / LEN(LIST_DISTINCT(LIST_CONCAT(sa.sh, sb.sh))), 6) AS jaccard"""
 
 
+def pair_shingle_sets(sh: DataFrame, pairs: DataFrame, key: str, a: str, b: str) -> DataFrame:
+    """The shingle sets of both documents of each pair: (a, b, sh_a,
+    sh_b) for every (a, b) row of pairs, where sh is keyed by key.
+
+    The (expensive) shingle relation is read in ONE pass: each pair is
+    exploded to its two ids, joined to sh once, and the two sides are
+    folded back with first(when(id == ...)). The naive two-join form
+    computes the corpus-wide shingling twice. Unlike first/last, the
+    explicit pick stays correct if a group ever held a row count other
+    than two (a missing shingle row yields a NULL set, not a silent
+    1.0 jaccard). A broadcast hint on pairs carries to the shingle
+    join: right for LSH candidate lists (small; the corpus is never
+    shuffled), wrong for an all-pairs universe that could blow driver
+    memory. Read by
+    dedup_minhash_lsh, dedup_minhash_incremental,
+    dedup_lsh_recall_report and dedup_threshold_sweep."""
+    sides = pairs.select(a, b, F.explode(F.array(F.col(a), F.col(b))).alias(key))
+    return (
+        sh.join(sides, key)
+        .groupBy(a, b)
+        .agg(
+            F.first(F.when(F.col(key) == F.col(a), F.col("sh")), ignorenulls=True).alias("sh_a"),
+            F.first(F.when(F.col(key) == F.col(b), F.col("sh")), ignorenulls=True).alias("sh_b"),
+        )
+    )
+
+
 @register(
     "dedup_minhash_lsh",
     f"""
@@ -372,22 +399,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashed shingle sets: jaccard over 3-gram hashes == jaccard over
     # 3-gram strings up to 32-bit hash collisions (~1e-7 per pair)
     sh = sh_rel.select(F.col("id").alias("doc_id"), "sh")
-    # Verification reads the (expensive) shingle sets in ONE pass: explode
-    # each candidate pair to its two doc ids, join the shingle relation
-    # once (pairs are small → broadcast, the corpus is never shuffled),
-    # then fold the two sides back with first(when(...)). The naive
-    # two-join form computes the corpus-wide shingling twice.
-    sides = cands.select(
-        "id_a", "id_b", F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("doc_id")
-    )
-    per_pair = (
-        sh.join(F.broadcast(sides), "doc_id")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(F.when(F.col("doc_id") == F.col("id_a"), F.col("sh")), ignorenulls=True).alias("sh_a"),
-            F.first(F.when(F.col("doc_id") == F.col("id_b"), F.col("sh")), ignorenulls=True).alias("sh_b"),
-        )
-    )
+    per_pair = pair_shingle_sets(sh, F.broadcast(cands), "doc_id", "id_a", "id_b")
     return (
         per_pair.select(
             "id_a",
@@ -854,10 +866,23 @@ def dedup_minhash_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_canonical_selection",
-    _CLUSTERS_CTES
-    + r""",
+def cluster_members(spark: SparkSession, sf_dir: str, clusters: DataFrame) -> DataFrame:
+    """The members of each duplicate cluster with their token counts:
+    (doc_id, cluster_id, n_tokens) over the short (n_chars <= 200)
+    documents, n_tokens = whitespace splits of the trimmed text. The
+    canonical document of a cluster is its longest member, ties to the
+    larger doc_id — max_by over the (n_tokens, doc_id) struct in Spark,
+    the same argmax in the oracle, _CANONICAL_CTES (toks, member,
+    canon). Read by dedup_canonical_selection and
+    dedup_pipeline_summary."""
+    d = t(spark, sf_dir, "documents").filter(F.col("n_chars") <= 200)
+    toks = d.select(
+        "doc_id", F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens")
+    )
+    return clusters.join(toks, "doc_id")
+
+
+_CANONICAL_CTES = r""",
     toks AS (
         SELECT doc_id,
                CAST(LEN(STRING_SPLIT_REGEX(TRIM(text), '\s+')) AS BIGINT) AS n_tokens
@@ -872,7 +897,14 @@ def dedup_minhash_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
                FIRST(doc_id ORDER BY n_tokens DESC, doc_id DESC) AS canonical_doc_id,
                CAST(COUNT(*) AS BIGINT) AS cluster_size
         FROM member GROUP BY cluster_id
-    )
+    )"""
+
+
+@register(
+    "dedup_canonical_selection",
+    _CLUSTERS_CTES
+    + _CANONICAL_CTES
+    + """
     SELECT m.doc_id, m.cluster_id, c.cluster_size,
            m.doc_id = c.canonical_doc_id AS keep
     FROM member m JOIN canon c ON m.cluster_id = c.cluster_id
@@ -890,11 +922,7 @@ def dedup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_tokens, doc_id) argmax; keep/drop invariants also live in
     pytest."""
     clusters = dedup_clusters(spark, sf_dir)  # doc_id, cluster_id
-    d = t(spark, sf_dir, "documents").filter(F.col("n_chars") <= 200)
-    toks = d.select(
-        "doc_id", F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens")
-    )
-    member = clusters.join(toks, "doc_id")
+    member = cluster_members(spark, sf_dir, clusters)
     # max_by with a composite struct orders by (n_tokens, doc_id) — a
     # deterministic argmax even when token counts tie
     canon = member.groupBy("cluster_id").agg(
@@ -1112,22 +1140,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("n.id").alias("new_id"), F.col("c.id").alias("corpus_id"))
         .dropDuplicates()
     )
-    # exact-jaccard verification from the cached shingle relation; each
-    # side is picked out explicitly with first(when(id == ...)) — unlike
-    # first/last, this stays correct even if a group ever held a row
-    # count other than exactly two (e.g. a missing shingle row now
-    # yields NULL jaccard, not a silent 1.0)
-    sides = cands.select(
-        "new_id", "corpus_id", F.explode(F.array(F.col("new_id"), F.col("corpus_id"))).alias("id")
-    )
-    per_pair = (
-        sh_rel.join(F.broadcast(sides), "id")
-        .groupBy("new_id", "corpus_id")
-        .agg(
-            F.first(F.when(F.col("id") == F.col("new_id"), F.col("sh")), ignorenulls=True).alias("sh_a"),
-            F.first(F.when(F.col("id") == F.col("corpus_id"), F.col("sh")), ignorenulls=True).alias("sh_b"),
-        )
-    )
+    # exact-jaccard verification from the cached shingle relation
+    per_pair = pair_shingle_sets(sh_rel, F.broadcast(cands), "id", "new_id", "corpus_id")
     return (
         per_pair.select(
             "new_id",
@@ -1285,21 +1299,8 @@ def dedup_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_pipeline_summary",
     _CLUSTERS_CTES
-    + r""",
-    toks AS (
-        SELECT doc_id,
-               CAST(LEN(STRING_SPLIT_REGEX(TRIM(text), '\s+')) AS BIGINT) AS n_tokens
-        FROM documents WHERE n_chars <= 200
-    ),
-    member AS (
-        SELECT c.doc_id, c.cluster_id, t.n_tokens
-        FROM clusters c JOIN toks t ON c.doc_id = t.doc_id
-    ),
-    canon AS (
-        SELECT cluster_id,
-               FIRST(doc_id ORDER BY n_tokens DESC, doc_id DESC) AS canonical_doc_id
-        FROM member GROUP BY cluster_id
-    ),
+    + _CANONICAL_CTES
+    + """,
     universe AS (
         SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
         FROM documents d LEFT JOIN clusters c ON c.doc_id = d.doc_id
@@ -1344,10 +1345,7 @@ def dedup_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _dup_pairs(spark, sf_dir)
     clusters = _cluster_labels(spark, sf_dir)  # doc_id, cluster_id — ONCE per session (r15)
     # canonical stats: dedup_canonical_selection's expressions
-    toks = d.select(
-        "doc_id", F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens")
-    )
-    member = clusters.join(toks, "doc_id")
+    member = cluster_members(spark, sf_dir, clusters)
     canon = member.groupBy("cluster_id").agg(
         F.max_by("doc_id", F.struct("n_tokens", "doc_id")).alias("canonical_doc_id")
     )
@@ -1449,24 +1447,12 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("a.source") == F.col("b.source"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
     ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    # one-pass shingle lookup for the universe pairs (same idiom as the
-    # LSH verification stage: explode pair -> join shingles once)
-    sides = universe.select(
-        "id_a", "id_b", F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("doc_id")
-    )
     sh = sh_rel.select(F.col("id").alias("doc_id"), "sh")
-    # No broadcast hint: `sides` is the exploded (lang,source)-bucketed
-    # all-pairs universe, O(sum bucket^2) rows — a hot bucket would blow
-    # driver memory if materialized for broadcast. Let AQE pick the
-    # strategy; a shuffle join on doc_id is identical in result.
-    per_pair = (
-        sh.join(sides, "doc_id")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(F.when(F.col("doc_id") == F.col("id_a"), F.col("sh")), ignorenulls=True).alias("sh_a"),
-            F.first(F.when(F.col("doc_id") == F.col("id_b"), F.col("sh")), ignorenulls=True).alias("sh_b"),
-        )
-    )
+    # No broadcast hint: the exploded (lang,source)-bucketed all-pairs
+    # universe is O(sum bucket^2) rows — a hot bucket would blow driver
+    # memory if materialized for broadcast. Let AQE pick the strategy;
+    # a shuffle join on doc_id is identical in result.
+    per_pair = pair_shingle_sets(sh, universe, "doc_id", "id_a", "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     truth = per_pair.filter((union > 0) & (inter * 2 >= union)).select("id_a", "id_b")
@@ -1533,17 +1519,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_rel = cache_once(hashed_shingle_df(d, "doc_id", "text"))
     cands = minhash_lsh_candidates(d, "doc_id", "text", shingles=sh_rel)
     sh = sh_rel.select(F.col("id").alias("doc_id"), "sh")
-    sides = cands.select(
-        "id_a", "id_b", F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("doc_id")
-    )
-    per_pair = (
-        sh.join(F.broadcast(sides), "doc_id")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(F.when(F.col("doc_id") == F.col("id_a"), F.col("sh")), ignorenulls=True).alias("sh_a"),
-            F.first(F.when(F.col("doc_id") == F.col("id_b"), F.col("sh")), ignorenulls=True).alias("sh_b"),
-        )
-    )
+    per_pair = pair_shingle_sets(sh, F.broadcast(cands), "doc_id", "id_a", "id_b")
     scored = per_pair.select(
         F.size(F.array_intersect("sh_a", "sh_b")).alias("i"),
         F.size(F.array_union("sh_a", "sh_b")).alias("u"),

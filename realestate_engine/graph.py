@@ -803,17 +803,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap, and salting. The log2 bucket is computed EXACTLY by counting
     powers of two <= degree against a broadcast 32-row constant frame
     (float log2 flips on exact powers at the boundary; the popcount of
-    comparisons cannot). One groupBy for degrees, one for the
-    histogram, both partial-aggregated."""
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select((F.col("o_custkey") * 2).alias("c"), (F.col("l_suppkey") * 2 + 1).alias("s"))
-        .distinct()
-    )
-    nodes = pairs.select(F.col("c").alias("src")).unionAll(pairs.select(F.col("s").alias("src")))
-    deg = nodes.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    comparisons cannot). Node degrees come from trade_graph's d; one
+    groupBy bins them into the histogram."""
+    deg = trade_graph(spark, sf_dir).select("src", "d").distinct()
     pow2 = spark.range(0, 32).select(F.expr("shiftleft(1L, CAST(id AS INT))").alias("pw"))
     binned = (
         deg.crossJoin(F.broadcast(pow2))

@@ -44,7 +44,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -555,6 +555,20 @@ def mm_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def frame_offsets() -> Column:
+    """The byte offsets of the k = 4 'frames' of each 'video'
+    (documents.text): frame i starts at (i * len(text)) / 4, divided as
+    a double and truncated. The division is by a power of two, so the
+    oracles' integer floor-div gives the same offsets. Read by
+    mm_frame_sample, and through frame_hamming by mm_scene_cut and
+    mm_keyframe_select."""
+    n_frames = 4
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(n_frames - 1)),
+        lambda i: (i * F.length("text") / n_frames).cast("int"),
+    )
+
+
 @register(
     "mm_frame_sample",
     # (i·len)/4 truncated: Spark divides as double then casts (truncates);
@@ -575,13 +589,8 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     since round 4: the offsets are exact integer math (the /4 is a
     power-of-two division, so double-then-truncate equals floor-div)."""
     d = t(spark, sf_dir, "documents")
-    n_frames = 4
-    offsets = F.transform(
-        F.sequence(F.lit(0), F.lit(n_frames - 1)),
-        lambda i: (i * F.length("text") / n_frames).cast("int"),
-    )
     return (
-        d.select("doc_id", F.posexplode(offsets).alias("frame_idx", "byte_offset"))
+        d.select("doc_id", F.posexplode(frame_offsets()).alias("frame_idx", "byte_offset"))
         .orderBy("doc_id", "frame_idx")
     )
 
@@ -1105,93 +1114,36 @@ def mm_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cands.orderBy("id_a", "id_b")
 
 
-@register(
-    "mm_scene_cut",
-    r"""
-    WITH vids AS (
-        SELECT doc_id, HEX(ENCODE(text)) AS hx, LENGTH(text) AS nc FROM documents
-    ),
-    frames AS (
-        SELECT doc_id, f.i AS frame_idx,
-               SUBSTR(hx, CAST(((f.i * nc) // 4) * 2 + 1 AS INTEGER), 64) AS fhx
-        FROM vids, LATERAL (SELECT UNNEST(RANGE(4)) AS i) f
-    ),
-    fb AS (SELECT doc_id, frame_idx, fhx, LEN(fhx) // 2 AS n FROM frames),
-    unrolled AS (
-        SELECT doc_id, frame_idx, n,
-               CAST(('0x' || SUBSTR(fhx, CAST(i.i*2+1 AS INTEGER), 2)) AS INTEGER) AS byte
-        FROM fb, LATERAL (SELECT UNNEST(RANGE(n)) AS i) i
-    ),
-    means AS (
-        SELECT doc_id, frame_idx, SUM(byte)*1.0/ANY_VALUE(n) AS mean
-        FROM unrolled GROUP BY doc_id, frame_idx
-    ),
-    sampled AS (
-        SELECT fb.doc_id, fb.frame_idx, bit.i AS bit_i,
-               CAST(('0x' || SUBSTR(fb.fhx, CAST((bit.i * fb.n // 64)*2+1 AS INTEGER), 2)) AS INTEGER) AS sbyte
-        FROM fb, LATERAL (SELECT UNNEST(RANGE(64)) AS i) bit
-        WHERE fb.n > 0
-    ),
-    hashes AS (
-        SELECT s.doc_id, s.frame_idx,
-               CAST(SUM(CASE WHEN s.sbyte > m.mean
-                        THEN CASE WHEN s.bit_i = 63 THEN CAST(-9223372036854775808 AS BIGINT)
-                                  ELSE (CAST(1 AS BIGINT) << CAST(s.bit_i AS INTEGER)) END
-                        ELSE 0 END) AS BIGINT) AS ahash
-        FROM sampled s JOIN means m ON s.doc_id = m.doc_id AND s.frame_idx = m.frame_idx
-        GROUP BY s.doc_id, s.frame_idx
-        UNION ALL
-        SELECT doc_id, frame_idx, CAST(0 AS BIGINT) FROM fb WHERE n = 0
-    ),
-    dist AS (
-        SELECT doc_id,
-               BIT_COUNT(XOR(ahash, LAG(ahash) OVER (PARTITION BY doc_id ORDER BY frame_idx))) AS hamming
-        FROM hashes
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_transitions,
-           CAST(SUM(CASE WHEN hamming > 16 THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
-           CAST(SUM(hamming) AS BIGINT) AS total_hamming
-    FROM dist WHERE hamming IS NOT NULL
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MM7: scene-cut detection over the video modality — sample k
-    frames per 'video' (mm_frame_sample's fan-out), compute a 64-bit
-    average-hash per frame from the payload window at each offset
-    (same fake codec discipline as the image ops: the hash pipeline is
-    real, the decode is the stub), then flag a cut wherever the
-    hamming distance between CONSECUTIVE frame hashes exceeds the
-    threshold. The frame-to-frame comparison is a lag window
-    partitioned by video — bounded by frames-per-video, never a global
-    sort; per 100 TB of video the state is k hashes per key. Returns
-    per-video cut counts + mean consecutive hamming distance (exact
-    integers). Oracle-checked since round 4: the frame windows are
-    hex substrings of the same blob and the per-frame aHash is the
-    same shift-assembled integer math as mm_ahash_neardup's oracle;
-    tests also replay the pipeline exactly in Python."""
+def frame_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The consecutive-frame hash distances of each 'video':
+    (doc_id, frame_idx, hamming), one row per frame after the first.
+
+    Each frame's payload is the 32-byte window of the encoded text at
+    its frame_offsets offset (the decode is the stub; the hash pipeline
+    is real). Its 64-bit average hash is ahash_binary's, with the
+    (doc_id, frame_idx) pair packed into one key for the call.
+    hamming is the popcount of the XOR with the previous frame's hash:
+    a lag window partitioned by video, bounded by frames per video and
+    never a global sort. The oracle is _FRAME_DIST_CTES: the frame
+    windows are hex substrings of the same blob and the hash is the
+    same shift-assembled integer math as mm_ahash_neardup's oracle.
+    Read by mm_scene_cut and mm_keyframe_select."""
     from pyspark.sql.window import Window
 
     d = t(spark, sf_dir, "documents")
-    n_frames = 4
-    offsets = F.transform(
-        F.sequence(F.lit(0), F.lit(n_frames - 1)),
-        lambda i: (i * F.length("text") / n_frames).cast("int"),
-    )
     frames = d.select(
         "doc_id",
         F.encode("text", "utf-8").alias("payload"),
-        F.posexplode(offsets).alias("frame_idx", "byte_offset"),
+        F.posexplode(frame_offsets()).alias("frame_idx", "byte_offset"),
     ).select(
         "doc_id",
         "frame_idx",
-        # frame payload = 32-byte window at the offset (fake decode)
         F.expr("substring(payload, byte_offset + 1, 32)").alias("frame_bytes"),
     )
     hashed = ahash_binary(
         frames.select(
-            (F.col("doc_id") * 10 + F.col("frame_idx")).alias("doc_id"), F.col("frame_bytes").alias("payload")
+            (F.col("doc_id") * 10 + F.col("frame_idx")).alias("doc_id"),
+            F.col("frame_bytes").alias("payload"),
         )
     ).select(
         F.expr("doc_id div 10").alias("doc_id"),
@@ -1199,25 +1151,14 @@ def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ahash",
     )
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
-    dist = hashed.select(
+    return hashed.select(
         "doc_id",
         "frame_idx",
         F.bit_count(F.col("ahash").bitwiseXOR(F.lag("ahash").over(w))).alias("hamming"),
     ).where(F.col("hamming").isNotNull())
-    return (
-        dist.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_transitions"),
-            F.sum(F.when(F.col("hamming") > 16, 1).otherwise(0)).cast("bigint").alias("n_cuts"),
-            F.sum("hamming").cast("bigint").alias("total_hamming"),
-        )
-        .orderBy("doc_id")
-    )
 
 
-@register(
-    "mm_keyframe_select",
-    r"""
+_FRAME_DIST_CTES = r"""
     WITH vids AS (
         SELECT doc_id, HEX(ENCODE(text)) AS hx, LENGTH(text) AS nc FROM documents
     ),
@@ -1258,6 +1199,43 @@ def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
                BIT_COUNT(XOR(ahash, LAG(ahash) OVER (PARTITION BY doc_id ORDER BY frame_idx))) AS hamming
         FROM hashes
     )
+"""
+
+
+@register(
+    "mm_scene_cut",
+    _FRAME_DIST_CTES
+    + r"""
+    SELECT doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_transitions,
+           CAST(SUM(CASE WHEN hamming > 16 THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
+           CAST(SUM(hamming) AS BIGINT) AS total_hamming
+    FROM dist WHERE hamming IS NOT NULL
+    GROUP BY doc_id ORDER BY doc_id
+    """,
+)
+def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MM7: scene-cut detection over the video modality: flag a cut
+    wherever the hamming distance between consecutive frame hashes
+    (frame_hamming) exceeds the threshold. Returns per-video transition
+    and cut counts and the total consecutive hamming distance (exact
+    integers); tests also replay the pipeline exactly in Python."""
+    return (
+        frame_hamming(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_transitions"),
+            F.sum(F.when(F.col("hamming") > 16, 1).otherwise(0)).cast("bigint").alias("n_cuts"),
+            F.sum("hamming").cast("bigint").alias("total_hamming"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+@register(
+    "mm_keyframe_select",
+    _FRAME_DIST_CTES
+    + r"""
     SELECT doc_id,
            CAST(ARG_MIN(frame_idx, CAST(hamming AS BIGINT) * (-10) + frame_idx) AS BIGINT) AS keyframe_idx,
            CAST(MAX(hamming) AS BIGINT) AS transition_hamming
@@ -1270,47 +1248,15 @@ def mm_keyframe_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts the STRONGEST scene transition (argmax of consecutive
     frame-hash hamming distance, earliest frame on ties), the
     thumbnail/representative-frame step after mm_scene_cut's
-    detection. Same frame-hash machinery as the scene-cut oracle; the
-    argmax is a deterministic min_by over the packed integer key
+    detection, over the same frame_hamming distances. The argmax is
+    a deterministic min_by over the packed integer key
     -10*hamming + frame_idx (hamming <= 64, frame_idx <= 3, so the
     packing is collision-free) — DuckDB's ARG_MIN takes scalar keys
-    only, and the same key is used on both engines. Per video the state is k frame hashes;
-    the selection is one group-bounded aggregate."""
-    from pyspark.sql.window import Window
-
-    d = t(spark, sf_dir, "documents")
-    n_frames = 4
-    offsets = F.transform(
-        F.sequence(F.lit(0), F.lit(n_frames - 1)),
-        lambda i: (i * F.length("text") / n_frames).cast("int"),
-    )
-    frames = d.select(
-        "doc_id",
-        F.encode("text", "utf-8").alias("payload"),
-        F.posexplode(offsets).alias("frame_idx", "byte_offset"),
-    ).select(
-        "doc_id",
-        "frame_idx",
-        F.expr("substring(payload, byte_offset + 1, 32)").alias("frame_bytes"),
-    )
-    hashed = ahash_binary(
-        frames.select(
-            (F.col("doc_id") * 10 + F.col("frame_idx")).alias("doc_id"),
-            F.col("frame_bytes").alias("payload"),
-        )
-    ).select(
-        F.expr("doc_id div 10").alias("doc_id"),
-        (F.col("doc_id") % 10).alias("frame_idx"),
-        "ahash",
-    )
-    w = Window.partitionBy("doc_id").orderBy("frame_idx")
-    dist = hashed.select(
-        "doc_id",
-        "frame_idx",
-        F.bit_count(F.col("ahash").bitwiseXOR(F.lag("ahash").over(w))).alias("hamming"),
-    ).where(F.col("hamming").isNotNull())
+    only, and the same key is used on both engines. The selection is
+    one group-bounded aggregate."""
     return (
-        dist.groupBy("doc_id")
+        frame_hamming(spark, sf_dir)
+        .groupBy("doc_id")
         .agg(
             F.min_by("frame_idx", F.col("hamming") * -10 + F.col("frame_idx"))
             .cast("bigint")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from realestate_engine.queries_mleval import _NEWTON_D0, _NEWTON_D1
 from realestate_engine.registry import cache_once, register, t
 
 
@@ -284,12 +285,7 @@ def _platt_step_sql(prev: str, stats: str, nxt: str) -> str:
         CROSS JOIN {prev} bb
     ),
     {nxt} AS MATERIALIZED (
-        SELECT b + CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)
-               / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000)
-               AS BIGINT) AS b,
-               a + CAST(FLOOR((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)
-               / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000)
-               AS BIGINT) AS a
+        SELECT b + {_NEWTON_D0} AS b, a + {_NEWTON_D1} AS a
         FROM {stats}
     )"""
 
@@ -404,14 +400,8 @@ def m54_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h11"),
         )
         nxt = stats.select(
-            F.expr(
-                "a + CAST(FLOOR((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)"
-                " / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000) AS BIGINT)"
-            ).alias("a"),
-            F.expr(
-                "b + CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)"
-                " / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000) AS BIGINT)"
-            ).alias("b"),
+            F.expr(f"a + {_NEWTON_D1}").alias("a"),
+            F.expr(f"b + {_NEWTON_D0}").alias("b"),
             F.col("n_pos").alias("np_out"),
             F.col("n_neg").alias("nn_out"),
         )

@@ -481,18 +481,76 @@ def ev12_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Kaplan-Meier survival table ---------------------------------------------
 
 
-@register(
-    "ev13_kaplan_meier",
-    """
+def survival_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The order-fulfilment survival cohort: one (dur, ev, grp) row per
+    order. dur is the days from order placement to full delivery (the
+    last lineitem ship date); ev = 1 for finalized orders ('F'), and
+    orders not yet finalized ('O'/'P') are right-censored at their
+    observed duration; grp = 1 for URGENT/HIGH priority. dur is a
+    bounded order-to-ship day range (~130 values), so every consumer
+    collapses the subjects to a per-duration census before anything
+    quadratic. The oracle is _SURVIVAL_SUBJ_CTES (done, subj). Read by
+    ev13_kaplan_meier (dur, ev), and through survival_census by
+    ev27_logrank_test and ev32_cox_proportional_hazards."""
+    li = t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
+        F.max(F.col("l_shipdate").cast("date")).alias("done_date")
+    )
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate", "o_orderstatus", "o_orderpriority"
+    )
+    return o.join(li, o.o_orderkey == li.l_orderkey).select(
+        F.datediff("done_date", F.col("o_orderdate").cast("date")).alias("dur"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("ev"),
+        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
+        .otherwise(0)
+        .alias("grp"),
+    )
+
+
+def survival_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The two-group per-duration census of survival_subjects:
+    (dur, n, n_g1, d_all, d_g1) as exact BIGINTs — subjects, group-1
+    subjects, events and group-1 events per duration. At-risk suffix
+    counts come from a broadcast non-equi self-join over this
+    hundreds-row frame, never a subjects-sized sort. The oracle is
+    _SURVIVAL_SUBJ_CTES + _SURVIVAL_PER_CTE. Read by ev27_logrank_test
+    and ev32_cox_proportional_hazards."""
+    return survival_subjects(spark, sf_dir).groupBy("dur").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("grp").cast("bigint").alias("n_g1"),
+        F.sum("ev").cast("bigint").alias("d_all"),
+        F.sum(F.col("ev") * F.col("grp")).cast("bigint").alias("d_g1"),
+    )
+
+
+_SURVIVAL_SUBJ_CTES = """
     WITH done AS (
         SELECT l_orderkey, MAX(CAST(l_shipdate AS DATE)) AS done_date
         FROM lineitem GROUP BY 1
     ),
     subj AS (
         SELECT DATE_DIFF('day', CAST(o.o_orderdate AS DATE), d.done_date) AS dur,
-               CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS ev
+               CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS ev,
+               CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                    THEN 1 ELSE 0 END AS grp
         FROM orders o JOIN done d ON d.l_orderkey = o.o_orderkey
-    ),
+    )"""
+
+_SURVIVAL_PER_CTE = """,
+    per AS (
+        SELECT dur,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(grp) AS BIGINT) AS n_g1,
+               CAST(SUM(ev) AS BIGINT) AS d_all,
+               CAST(SUM(ev * grp) AS BIGINT) AS d_g1
+        FROM subj GROUP BY dur
+    )"""
+
+
+@register(
+    "ev13_kaplan_meier",
+    _SURVIVAL_SUBJ_CTES
+    + """,
     per AS (
         SELECT dur, COUNT(*) AS n, SUM(ev) AS d, COUNT(*) - SUM(ev) AS c
         FROM subj GROUP BY dur
@@ -522,12 +580,10 @@ def ev12_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ev13_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EV13: Kaplan-Meier survival table — the NONPARAMETRIC
-    complement to m24's parametric AFT fit. Study framing: time from
-    order placement to full delivery (last lineitem ship); orders
-    not yet finalized ('O'/'P') are right-censored at their observed
-    duration. Emits the classic KM table at each event time: number
-    at risk, events, censored, and the log survival curve as the
+    """EV13: Kaplan-Meier survival table over survival_subjects — the
+    NONPARAMETRIC complement to m24's parametric AFT fit. Emits the
+    classic KM table at each event time: number at risk, events,
+    censored, and the log survival curve as the
     cumulative sum of FLOOR-micro ln((n-d)/n) terms — the dq13 idiom
     that makes a product of fractions hash-comparable across engines
     (each ln is one IEEE double op, each term an integer, the sum
@@ -540,14 +596,7 @@ def ev13_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, never a subjects-sized sort. The d = n_at_risk boundary
     (everyone at risk dies at once: S hits exact 0, ln undefined)
     yields NULL by the same CASE on both engines."""
-    li = t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
-        F.max(F.col("l_shipdate").cast("date")).alias("done_date")
-    )
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderstatus")
-    subj = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        F.datediff("done_date", F.col("o_orderdate").cast("date")).alias("dur"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("ev"),
-    )
+    subj = survival_subjects(spark, sf_dir).select("dur", "ev")
 
     # r15 (guide §1.2): cache the ~130-row per-duration census and the
     # KM terms below — both feed broadcast non-equi SELF-joins, and
@@ -1551,9 +1600,30 @@ def ev20_sequence_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- EV21: two-proportion z-test (the A/B conversion staple) -------------------
 
 
+# The pooled two-proportion z-test over the four exact counts (n0, x0)
+# control and (n1, x1) treatment, as SQL text that the Spark queries
+# (F.expr) and the oracles embed verbatim: one fixed IEEE tree (two
+# divisions, one sqrt) FLOORed to micros, so both engines compute the
+# same doubles and the results hash-compare. _ZTEST_DIFF is the lift,
+# _ZTEST_SE2 the pooled variance of it. Read by ev21, and through
+# segment_ztests by ev23 and ev29.
+_ZTEST_DIFF = "(CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)"
+_ZTEST_SE2 = (
+    "((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
+    " * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
+    " * (1.0 / n0 + 1.0 / n1))"
+)
+_ZTEST_LIFT_MICRO = f"CAST(FLOOR({_ZTEST_DIFF} * 1000000) AS BIGINT)"
+_ZTEST_Z_MICRO = f"CAST(FLOOR({_ZTEST_DIFF} / SQRT{_ZTEST_SE2} * 1000000) AS BIGINT)"
+_ZTEST_SIGNIFICANT = f"ABS{_ZTEST_DIFF} > 1.959964 * SQRT{_ZTEST_SE2}"
+_ZTEST_Z2_MICRO = (
+    f"CAST(FLOOR(({_ZTEST_DIFF} * {_ZTEST_DIFF}) / {_ZTEST_SE2} * 1000000) AS BIGINT)"
+)
+
+
 @register(
     "ev21_two_proportion_ztest",
-    """
+    f"""
     WITH assign AS (
         SELECT user_id % 2 AS arm,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
@@ -1571,16 +1641,9 @@ def ev20_sequence_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(n0 AS BIGINT) AS n_control, CAST(x0 AS BIGINT) AS conv_control,
            CAST(n1 AS BIGINT) AS n_treat, CAST(x1 AS BIGINT) AS conv_treat,
-           CAST(FLOOR((CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0) * 1000000)
-                AS BIGINT) AS lift_micro,
-           CAST(FLOOR((CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)
-                / SQRT((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                       * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                       * (1.0 / n0 + 1.0 / n1)) * 1000000) AS BIGINT) AS z_micro,
-           ABS(CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)
-             > 1.959964 * SQRT((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                       * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                       * (1.0 / n0 + 1.0 / n1)) AS significant_5pct
+           {_ZTEST_LIFT_MICRO} AS lift_micro,
+           {_ZTEST_Z_MICRO} AS z_micro,
+           {_ZTEST_SIGNIFICANT} AS significant_5pct
     FROM w
     """,
 )
@@ -1589,11 +1652,10 @@ def ev21_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout (ev12's diff-in-diff and ev17's CUPED adjust it; this is
     the baseline it adjusts FROM): arms by user parity, conversions =
     purchase events, pooled-variance z statistic and the 5%
-    significance boolean. Everything flows from four exact integer
-    counts through one fixed IEEE tree (two divisions, one sqrt)
-    FLOORed to micros; the significance test is a float comparison of
-    the SAME two subtrees both engines build, so it hash-compares.
-    One hash-agg; at 100 TB the test is metadata after the count."""
+    significance boolean (the _ZTEST_* texts); the significance test
+    is a float comparison of the SAME two subtrees both engines build,
+    so it hash-compares. One hash-agg; at 100 TB the test is metadata
+    after the count."""
     ev = t(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("arm"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("conv"),
@@ -1605,20 +1667,14 @@ def ev21_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("arm") == 1, F.col("n"))).alias("n1"),
         F.max(F.when(F.col("arm") == 1, F.col("x"))).alias("x1"),
     )
-    se = (
-        "SQRT((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
-        " * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
-        " * (1.0 / n0 + 1.0 / n1))"
-    )
-    diff = "(CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)"
     return w.select(
         F.col("n0").cast("bigint").alias("n_control"),
         F.col("x0").cast("bigint").alias("conv_control"),
         F.col("n1").cast("bigint").alias("n_treat"),
         F.col("x1").cast("bigint").alias("conv_treat"),
-        F.expr(f"CAST(FLOOR({diff} * 1000000) AS BIGINT)").alias("lift_micro"),
-        F.expr(f"CAST(FLOOR({diff} / {se} * 1000000) AS BIGINT)").alias("z_micro"),
-        F.expr(f"ABS{diff} > 1.959964 * {se}").alias("significant_5pct"),
+        F.expr(_ZTEST_LIFT_MICRO).alias("lift_micro"),
+        F.expr(_ZTEST_Z_MICRO).alias("z_micro"),
+        F.expr(_ZTEST_SIGNIFICANT).alias("significant_5pct"),
     )
 
 
@@ -1675,19 +1731,16 @@ from statistics import NormalDist as _ND
 
 _HOLM_M = 5  # user_id%5 segments, arms by (user_id//5)%2: all cells populated even at sf0.001's 15 users
 _HOLM_CRIT2_MICRO = [
-    int(_ND().inv_cdf(1 - 0.05 / (2 * k)) ** 2 * 1_000_000) for k in range(1, _HOLM_M + 1)
-]  # index k-1 = critical z^2 (micro) when k tests remain
+    int(_ND().inv_cdf(1 - 0.05 / (2 * k)) ** 2 * 1_000_000) for k in range(_HOLM_M, 0, -1)
+]  # index rank-1 = critical z^2 (micro) at that rank, when k = m - rank + 1 tests remain
 
 
-def _holm_crit_values_sql() -> str:
-    return ", ".join(
-        f"({rank}, {_HOLM_CRIT2_MICRO[_HOLM_M - rank]})" for rank in range(1, _HOLM_M + 1)
-    )
-
-
-_EV23_ORACLE = f"""
+def segment_ztest_ctes(m: int, crit2_micro: list[int]) -> str:
+    """Oracle prelude of segment_ztests, ending in the `tested` CTE."""
+    crit_values = ", ".join(f"({rank}, {c})" for rank, c in enumerate(crit2_micro, 1))
+    return f"""
     WITH assign AS (
-        SELECT user_id % {_HOLM_M} AS seg, (user_id // {_HOLM_M}) % 2 AS arm,
+        SELECT user_id % {m} AS seg, (user_id // {m}) % 2 AS arm,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
         FROM events
     ),
@@ -1703,12 +1756,7 @@ _EV23_ORACLE = f"""
     ),
     z AS (
         SELECT seg, CAST(n0 + n1 AS BIGINT) AS n_total,
-               CAST(FLOOR(
-                   ((CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)
-                    * (CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0))
-                   / ((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                      * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                      * (1.0 / n0 + 1.0 / n1)) * 1000000) AS BIGINT) AS z2_micro
+               {_ZTEST_Z2_MICRO} AS z2_micro
         FROM arms
     ),
     ranked AS (
@@ -1718,40 +1766,40 @@ _EV23_ORACLE = f"""
                     AS BIGINT) AS rank
         FROM z a
     ),
-    crit(rank, crit2_micro) AS (VALUES {_holm_crit_values_sql()}),
+    crit(rank, crit2_micro) AS (VALUES {crit_values}),
     tested AS (
         SELECT r.seg, r.n_total, r.z2_micro, r.rank,
                r.z2_micro >= c.crit2_micro AS pass_own
         FROM ranked r JOIN crit c USING (rank)
-    )
-    SELECT a.seg, a.n_total, a.z2_micro, a.rank,
-           a.pass_own AS rejected_raw,
-           MIN(CASE WHEN b.pass_own THEN 1 ELSE 0 END) = 1 AS rejected_holm
-    FROM tested a JOIN tested b ON b.rank <= a.rank
-    GROUP BY a.seg, a.n_total, a.z2_micro, a.rank, a.pass_own
-    ORDER BY a.rank
-"""
+    )"""
 
 
-@register("ev23_holm_bonferroni", _EV23_ORACLE)
-def ev23_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EV23: Holm-Bonferroni step-down correction across m = 5
-    simultaneous conversion z-tests (user_id%5 segments, arms by
-    (user_id//5)%2 — populated on both arms at every SF) — the guard every multi-cell experiment readout
-    needs against alpha inflation. Each segment's pooled z^2 flows from
-    four exact counts through one fixed IEEE tree (the ev21 contract)
-    FLOORed to micros; critical chi-square values are stdlib-computed
-    constants embedded identically in query and oracle, so rejection
-    booleans are pure BIGINT comparisons. Ranking and the step-down
-    prefix-AND both use broadcast self-joins over the {m}-row frame —
-    the no-unpartitioned-window idiom (m11/q15 precedent) — so nothing
-    funnels at any scale; at 100 TB the correction is metadata after
-    one segment-keyed count."""
+def segment_ztests(
+    spark: SparkSession, sf_dir: str, m: int, crit2_micro: list[int]
+) -> DataFrame:
+    """m simultaneous conversion z-tests, one per user_id % m segment
+    with arms by (user_id // m) % 2, ranked and tested against a
+    critical ladder: (seg, n_total, z2_micro, rank, pass_own).
+
+    - **z^2.** Each segment's pooled z^2 flows from four exact counts
+      through _ZTEST_Z2_MICRO, FLOORed to micros.
+    - **Rank.** 1 = largest z^2, ties broken by the larger seg; a
+      broadcast self-join over the m-row frame (the
+      no-unpartitioned-window idiom, m11/q15 precedent), so nothing
+      funnels at any scale.
+    - **Ladder.** crit2_micro[rank - 1] is the critical z^2 (micro) at
+      that rank, stdlib-computed once and embedded as identical
+      literals in query and oracle; pass_own is a pure BIGINT
+      comparison.
+
+    The oracle is segment_ztest_ctes(m, crit2_micro). Read by
+    ev23_holm_bonferroni (step-down) and ev29_benjamini_hochberg
+    (step-up); the step joins stay with each query."""
     ev = t(spark, sf_dir, "events").select(
-        (F.col("user_id") % _HOLM_M).alias("seg"),
+        (F.col("user_id") % m).alias("seg"),
         # exact integer division (div), matching the oracle's // — a
         # double / would diverge past 2^53 (VERDICT r9 advice)
-        (F.expr(f"user_id div {_HOLM_M}") % 2).alias("arm"),
+        (F.expr(f"user_id div {m}") % 2).alias("arm"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("conv"),
     )
     arms = (
@@ -1765,18 +1813,10 @@ def ev23_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("arm") == 1, F.col("x"))).alias("x1"),
         )
     )
-    diff = "(CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)"
-    se2 = (
-        "((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
-        " * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
-        " * (1.0 / n0 + 1.0 / n1))"
-    )
     z = arms.select(
         "seg",
         (F.col("n0") + F.col("n1")).cast("bigint").alias("n_total"),
-        F.expr(f"CAST(FLOOR(({diff} * {diff}) / {se2} * 1000000) AS BIGINT)").alias(
-            "z2_micro"
-        ),
+        F.expr(_ZTEST_Z2_MICRO).alias("z2_micro"),
     )
     a, b = z.alias("a"), z.alias("b")
     worse = (F.col("b.z2_micro") > F.col("a.z2_micro")) | (
@@ -1786,18 +1826,36 @@ def ev23_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(F.broadcast(b), worse, "left")
         .groupBy("a.seg", "a.n_total", "a.z2_micro")
         .agg((F.count(F.col("b.seg")) + 1).cast("bigint").alias("rank"))
-        .select(
-            F.col("seg"), F.col("n_total"), F.col("z2_micro"), F.col("rank")
-        )
+        .select(F.col("seg"), F.col("n_total"), F.col("z2_micro"), F.col("rank"))
     )
     crit = spark.createDataFrame(
-        [(rank, _HOLM_CRIT2_MICRO[_HOLM_M - rank]) for rank in range(1, _HOLM_M + 1)],
-        "rank bigint, crit2_micro bigint",
+        list(enumerate(crit2_micro, 1)), "rank bigint, crit2_micro bigint"
     )
-    tested = ranked.join(F.broadcast(crit), "rank").select(
+    return ranked.join(F.broadcast(crit), "rank").select(
         "seg", "n_total", "z2_micro", "rank",
         (F.col("z2_micro") >= F.col("crit2_micro")).alias("pass_own"),
     )
+
+
+_EV23_ORACLE = segment_ztest_ctes(_HOLM_M, _HOLM_CRIT2_MICRO) + """
+    SELECT a.seg, a.n_total, a.z2_micro, a.rank,
+           a.pass_own AS rejected_raw,
+           MIN(CASE WHEN b.pass_own THEN 1 ELSE 0 END) = 1 AS rejected_holm
+    FROM tested a JOIN tested b ON b.rank <= a.rank
+    GROUP BY a.seg, a.n_total, a.z2_micro, a.rank, a.pass_own
+    ORDER BY a.rank
+"""
+
+
+@register("ev23_holm_bonferroni", _EV23_ORACLE)
+def ev23_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EV23: Holm-Bonferroni step-down correction across the m = 5
+    segment_ztests (populated on both arms at every SF) — the guard
+    every multi-cell experiment readout needs against alpha inflation.
+    The step-down prefix-AND is a broadcast self-join over the m-row
+    frame; at 100 TB the correction is metadata after one
+    segment-keyed count."""
+    tested = segment_ztests(spark, sf_dir, _HOLM_M, _HOLM_CRIT2_MICRO)
     ta, tb = tested.alias("ta"), tested.alias("tb")
     return (
         ta.join(F.broadcast(tb), F.col("tb.rank") <= F.col("ta.rank"))

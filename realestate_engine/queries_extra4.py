@@ -16,6 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from realestate_engine.queries_experiments import (
+    _SURVIVAL_PER_CTE,
+    _SURVIVAL_SUBJ_CTES,
+    segment_ztest_ctes,
+    segment_ztests,
+    survival_census,
+)
 from realestate_engine.registry import cache_once, register, t
 
 # --- EV26: Markov transition matrix + stationary distribution ----------------
@@ -444,26 +451,7 @@ _LOGRANK_CHI2_MICRO = (
     " / CAST(v_micro AS DOUBLE)) END AS BIGINT)"
 )
 
-_EV27_ORACLE = f"""
-    WITH done AS (
-        SELECT l_orderkey, MAX(CAST(l_shipdate AS DATE)) AS done_date
-        FROM lineitem GROUP BY 1
-    ),
-    subj AS (
-        SELECT DATE_DIFF('day', CAST(o.o_orderdate AS DATE), d.done_date) AS dur,
-               CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS ev,
-               CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END AS grp
-        FROM orders o JOIN done d ON d.l_orderkey = o.o_orderkey
-    ),
-    per AS (
-        SELECT dur,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(grp) AS BIGINT) AS n_g1,
-               CAST(SUM(ev) AS BIGINT) AS d_all,
-               CAST(SUM(ev * grp) AS BIGINT) AS d_g1
-        FROM subj GROUP BY dur
-    ),
+_EV27_ORACLE = _SURVIVAL_SUBJ_CTES + _SURVIVAL_PER_CTE + f""",
     at_risk AS (
         SELECT a.dur, a.d_all AS da, a.d_g1,
                CAST(SUM(b.n_g1) AS BIGINT) AS n1r,
@@ -509,34 +497,14 @@ def ev27_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     At each event time the observed group-1 events are compared to the
     hypergeometric expectation E1_t = d_t*n1_t/n_t with variance
     V_t = (n1 n2 / n^2) * d(n-d)/(n-1); chi^2 = (O1-E1)^2/V vs the
-    df=1 95% critical value. Exactness: subjects collapse to ONE
-    per-duration census (bounded ~130-value domain — the ev13 scale
-    shape), at-risk suffix counts come from the broadcast non-equi
-    self-join idiom, every per-time term is floored to micro BEFORE
+    df=1 95% critical value, over survival_census. Exactness: every
+    per-time term is floored to micro BEFORE
     the (order-free) integer sum, and the two overflow-prone squares
     run on doubles via shared SQL texts (_LOGRANK_V_MICRO /
     _LOGRANK_CHI2_MICRO — the integer forms cross 2^63 at ~30k
     subjects / ~3k events). One scan, two tiny-frame joins, 1-row
     output."""
-    li = t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
-        F.max(F.col("l_shipdate").cast("date")).alias("done_date")
-    )
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderstatus", "o_orderpriority"
-    )
-    subj = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        F.datediff("done_date", F.col("o_orderdate").cast("date")).alias("dur"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("ev"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-        .otherwise(0)
-        .alias("grp"),
-    )
-    per = subj.groupBy("dur").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("grp").cast("bigint").alias("n_g1"),
-        F.sum("ev").cast("bigint").alias("d_all"),
-        F.sum(F.col("ev") * F.col("grp")).cast("bigint").alias("d_g1"),
-    )
+    per = survival_census(spark, sf_dir)
     a, b = per.alias("a"), per.alias("b")
     at_risk = (
         a.join(F.broadcast(b), F.col("b.dur") >= F.col("a.dur"))
@@ -1286,59 +1254,15 @@ from statistics import NormalDist as _ND
 _BH_M = 5
 # BH critical z^2 ladder: reject rank i (z^2 DESCENDING) iff
 # z^2_(i) >= chi2_inv(1 - 0.05*i/m, 1); two-sided p = 2(1 - Phi(z)),
-# so the threshold is inv_cdf(1 - 0.025*i/m)^2. stdlib-computed ONCE,
-# embedded as identical literals on both sides (the ev23 contract).
+# so the threshold is inv_cdf(1 - 0.025*i/m)^2, stdlib-computed once
+# (segment_ztests embeds it as identical literals on both sides).
 _BH_CRIT2_MICRO = [
     int(_ND().inv_cdf(1 - 0.025 * i / _BH_M) ** 2 * 1_000_000)
     for i in range(1, _BH_M + 1)
 ]  # index i-1 = critical z^2 (micro) at rank i
 
 
-def _bh_crit_values_sql() -> str:
-    return ", ".join(
-        f"({i}, {_BH_CRIT2_MICRO[i - 1]})" for i in range(1, _BH_M + 1)
-    )
-
-
-_EV29_ORACLE = f"""
-    WITH assign AS (
-        SELECT user_id % {_BH_M} AS seg, (user_id // {_BH_M}) % 2 AS arm,
-               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
-        FROM events
-    ),
-    arms AS (
-        SELECT seg,
-               MAX(CASE WHEN arm = 0 THEN n END) AS n0,
-               MAX(CASE WHEN arm = 0 THEN x END) AS x0,
-               MAX(CASE WHEN arm = 1 THEN n END) AS n1,
-               MAX(CASE WHEN arm = 1 THEN x END) AS x1
-        FROM (SELECT seg, arm, COUNT(*) AS n, SUM(conv) AS x
-              FROM assign GROUP BY seg, arm)
-        GROUP BY seg
-    ),
-    z AS (
-        SELECT seg, CAST(n0 + n1 AS BIGINT) AS n_total,
-               CAST(FLOOR(
-                   ((CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)
-                    * (CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0))
-                   / ((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                      * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))
-                      * (1.0 / n0 + 1.0 / n1)) * 1000000) AS BIGINT) AS z2_micro
-        FROM arms
-    ),
-    ranked AS (
-        SELECT a.seg, a.n_total, a.z2_micro,
-               CAST(1 + (SELECT COUNT(*) FROM z b
-                         WHERE (b.z2_micro, b.seg) > (a.z2_micro, a.seg))
-                    AS BIGINT) AS rank
-        FROM z a
-    ),
-    crit(rank, crit2_micro) AS (VALUES {_bh_crit_values_sql()}),
-    tested AS (
-        SELECT r.seg, r.n_total, r.z2_micro, r.rank,
-               r.z2_micro >= c.crit2_micro AS pass_own
-        FROM ranked r JOIN crit c USING (rank)
-    )
+_EV29_ORACLE = segment_ztest_ctes(_BH_M, _BH_CRIT2_MICRO) + """
     SELECT a.seg, a.n_total, a.z2_micro, a.rank,
            a.pass_own AS rejected_raw,
            MAX(CASE WHEN b.pass_own THEN 1 ELSE 0 END) = 1 AS rejected_bh
@@ -1357,62 +1281,13 @@ def ev29_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     controls FWER), BH walks UP from the least significant and rejects
     EVERYTHING at or above the largest passing rank (suffix-OR,
     controls FDR — strictly more powerful, the industry default for
-    many-metric dashboards). The z^2 pipeline, ranking self-join, and
-    stdlib-literal critical ladder are the ev23 contract; only the
+    many-metric dashboards). Both read segment_ztests; only the
     ladder (1 - 0.025*i/m quantiles, DECREASING with rank) and the
     suffix-OR join direction differ — which is exactly the point: the
     registry now demonstrates both corrections on identical inputs, so
     their decisions can disagree visibly on the same data. Metadata
     after one segment-keyed count; 5-row frames throughout."""
-    ev = t(spark, sf_dir, "events").select(
-        (F.col("user_id") % _BH_M).alias("seg"),
-        # exact integer division (div), matching the oracle's // — a
-        # double / would diverge past 2^53 (VERDICT r9 advice)
-        (F.expr(f"user_id div {_BH_M}") % 2).alias("arm"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("conv"),
-    )
-    arms = (
-        ev.groupBy("seg", "arm")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("x"))
-        .groupBy("seg")
-        .agg(
-            F.max(F.when(F.col("arm") == 0, F.col("n"))).alias("n0"),
-            F.max(F.when(F.col("arm") == 0, F.col("x"))).alias("x0"),
-            F.max(F.when(F.col("arm") == 1, F.col("n"))).alias("n1"),
-            F.max(F.when(F.col("arm") == 1, F.col("x"))).alias("x1"),
-        )
-    )
-    diff = "(CAST(x1 AS DOUBLE) / n1 - CAST(x0 AS DOUBLE) / n0)"
-    se2 = (
-        "((CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
-        " * (1 - CAST(x0 + x1 AS DOUBLE) / (n0 + n1))"
-        " * (1.0 / n0 + 1.0 / n1))"
-    )
-    z = arms.select(
-        "seg",
-        (F.col("n0") + F.col("n1")).cast("bigint").alias("n_total"),
-        F.expr(f"CAST(FLOOR(({diff} * {diff}) / {se2} * 1000000) AS BIGINT)").alias(
-            "z2_micro"
-        ),
-    )
-    a, b = z.alias("a"), z.alias("b")
-    worse = (F.col("b.z2_micro") > F.col("a.z2_micro")) | (
-        (F.col("b.z2_micro") == F.col("a.z2_micro")) & (F.col("b.seg") > F.col("a.seg"))
-    )
-    ranked = (
-        a.join(F.broadcast(b), worse, "left")
-        .groupBy("a.seg", "a.n_total", "a.z2_micro")
-        .agg((F.count(F.col("b.seg")) + 1).cast("bigint").alias("rank"))
-        .select(F.col("seg"), F.col("n_total"), F.col("z2_micro"), F.col("rank"))
-    )
-    crit = spark.createDataFrame(
-        [(i, _BH_CRIT2_MICRO[i - 1]) for i in range(1, _BH_M + 1)],
-        "rank bigint, crit2_micro bigint",
-    )
-    tested = ranked.join(F.broadcast(crit), "rank").select(
-        "seg", "n_total", "z2_micro", "rank",
-        (F.col("z2_micro") >= F.col("crit2_micro")).alias("pass_own"),
-    )
+    tested = segment_ztests(spark, sf_dir, _BH_M, _BH_CRIT2_MICRO)
     ta, tb = tested.alias("ta"), tested.alias("tb")
     return (
         ta.join(F.broadcast(tb), F.col("tb.rank") >= F.col("ta.rank"))

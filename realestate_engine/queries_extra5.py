@@ -17,7 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realestate_engine.ordered import distributed_prefix_sum
+from realestate_engine.queries_experiments import (
+    _SURVIVAL_PER_CTE,
+    _SURVIVAL_SUBJ_CTES,
+    survival_census,
+)
 from realestate_engine.registry import cache_once, register, t
+from realestate_engine.timeseries import _DAILY_CTE, daily_milli_events
 
 # --- A54: Kruskal-Wallis H (k-group rank ANOVA, tie-corrected) ---------------
 
@@ -723,14 +729,9 @@ def _haar_level_sql(prev: str, k: int) -> str:
     )"""
 
 
-_TS20_ORACLE = f"""
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // 100000 AS x
-        FROM events GROUP BY 1
-    ),
+_TS20_ORACLE = _DAILY_CTE + f""",
     win AS (
-        SELECT day_idx, x, ROW_NUMBER() OVER (ORDER BY day_idx) - 1 AS o
+        SELECT day_idx, v // 100000 AS x, ROW_NUMBER() OVER (ORDER BY day_idx) - 1 AS o
         FROM daily QUALIFY o < 16
     ),
     lvl0 AS (SELECT o, x FROM win),
@@ -763,11 +764,7 @@ def ts20_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom (a 16-row frame earns no window, and an unpartitioned window
     is banned); levels are 4 chained 16->8->4->2-row aggregates. One
     events-sized groupBy; metadata after."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(
         F.expr("sum(v) div 100000").cast("bigint").alias("x")
     )
     win16 = daily.orderBy("day_idx").limit(16)
@@ -841,7 +838,35 @@ def _cohen(a: str, b: str, agree: str) -> str:
     )
 
 
-_DQ27_ORACLE = rf"""
+def rater_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The votes of three deterministic document-quality raters, one
+    (ra, rb, rc) row of 0/1 per document: ra = at least 50 tokens;
+    rb = type-token ratio >= 0.6, tested by integer
+    cross-multiplication; rc = no token longer than 15 chars. Tokens
+    are the non-empty whitespace splits of the trimmed, lower-cased
+    text. The oracle is _RATER_VOTES_CTES (feat, votes). Read by
+    dq27_rater_agreement and m62_dawid_skene."""
+    words = F.filter(
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
+        lambda x: F.length(x) > 0,
+    )
+    feat = t(spark, sf_dir, "documents").select(
+        F.size(words).cast("bigint").alias("n_tok"),
+        F.size(F.array_distinct(words)).cast("bigint").alias("n_dis"),
+        F.size(F.filter(words, lambda x: F.length(x) > 15))
+        .cast("bigint")
+        .alias("n_long"),
+    )
+    return feat.select(
+        F.when(F.col("n_tok") >= 50, 1).otherwise(0).alias("ra"),
+        F.when(F.col("n_dis") * 5 >= F.col("n_tok") * 3, 1)
+        .otherwise(0)
+        .alias("rb"),
+        F.when(F.col("n_long") == 0, 1).otherwise(0).alias("rc"),
+    )
+
+
+_RATER_VOTES_CTES = r"""
     WITH feat AS (
         SELECT CAST(LEN(LIST_FILTER(STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+'),
                                     x -> LEN(x) > 0)) AS BIGINT) AS n_tok,
@@ -857,7 +882,10 @@ _DQ27_ORACLE = rf"""
                CASE WHEN n_dis * 5 >= n_tok * 3 THEN 1 ELSE 0 END AS rb,
                CASE WHEN n_long = 0 THEN 1 ELSE 0 END AS rc
         FROM feat
-    ),
+    )"""
+
+
+_DQ27_ORACLE = _RATER_VOTES_CTES + f""",
     tal AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(ra) AS BIGINT) AS pa,
@@ -884,10 +912,8 @@ _DQ27_ORACLE = rf"""
 
 @register("dq27_rater_agreement", _DQ27_ORACLE)
 def dq27_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DQ27: inter-rater agreement — Fleiss' kappa across three
-    deterministic document-quality raters (length >= 50 tokens;
-    type-token ratio >= 0.6, tested by integer cross-multiplication;
-    no token longer than 15 chars) plus the three pairwise Cohen's
+    """DQ27: inter-rater agreement — Fleiss' kappa across the three
+    rater_votes quality raters plus the three pairwise Cohen's
     kappas. THE labeling-QA statistic for training-data pipelines:
     raters that agree no better than chance (kappa ~ 0) mean the
     rubric, not the corpus, is broken — and rule-based raters make the
@@ -898,24 +924,7 @@ def dq27_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized pass; each kappa is a single fixed IEEE chain from
     those integers (_FLEISS/_cohen). At 100 TB: one scan + one 1-row
     frame — agreement is metadata."""
-    words = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
-    feat = t(spark, sf_dir, "documents").select(
-        F.size(words).cast("bigint").alias("n_tok"),
-        F.size(F.array_distinct(words)).cast("bigint").alias("n_dis"),
-        F.size(F.filter(words, lambda x: F.length(x) > 15))
-        .cast("bigint")
-        .alias("n_long"),
-    )
-    votes = feat.select(
-        F.when(F.col("n_tok") >= 50, 1).otherwise(0).alias("ra"),
-        F.when(F.col("n_dis") * 5 >= F.col("n_tok") * 3, 1)
-        .otherwise(0)
-        .alias("rb"),
-        F.when(F.col("n_long") == 0, 1).otherwise(0).alias("rc"),
-    )
+    votes = rater_votes(spark, sf_dir)
     tal = votes.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("ra").cast("bigint").alias("pa"),
@@ -994,26 +1003,7 @@ _COX_STEP = (
     " + FLOOR(CAST(u_micro AS DOUBLE) / i_micro * 1000000) END AS BIGINT)"
 )
 
-_EV32_ORACLE = f"""
-    WITH done AS (
-        SELECT l_orderkey, MAX(CAST(l_shipdate AS DATE)) AS done_date
-        FROM lineitem GROUP BY 1
-    ),
-    subj AS (
-        SELECT DATE_DIFF('day', CAST(o.o_orderdate AS DATE), d.done_date) AS dur,
-               CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS ev,
-               CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END AS grp
-        FROM orders o JOIN done d ON d.l_orderkey = o.o_orderkey
-    ),
-    per AS (
-        SELECT dur,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(grp) AS BIGINT) AS n_g1,
-               CAST(SUM(ev) AS BIGINT) AS d_all,
-               CAST(SUM(ev * grp) AS BIGINT) AS d_g1
-        FROM subj GROUP BY dur
-    ),
+_EV32_ORACLE = _SURVIVAL_SUBJ_CTES + _SURVIVAL_PER_CTE + f""",
     at_risk AS MATERIALIZED (
         SELECT a.dur, a.d_all AS da, a.d_g1,
                CAST(SUM(b.n_g1) AS BIGINT) AS n1r,
@@ -1060,9 +1050,8 @@ def ev32_cox_proportional_hazards(spark: SparkSession, sf_dir: str) -> DataFrame
     tests them, m24 AFT fits a parametric model; Cox estimates the
     hazard RATIO semi-parametrically, and with a binary covariate its
     round-1 score IS the log-rank numerator (the classic identity —
-    pinned by the pytest). Same cohort as ev27 (order fulfillment,
-    URGENT/HIGH vs rest). Exactness: the per-duration census and
-    at-risk suffix counts are exact BIGINTs (the ev27 shape); each
+    pinned by the pytest). Reads survival_census, as ev27 does.
+    Exactness: the at-risk suffix counts are exact BIGINTs; each
     Newton round floors beta to micro (the m43/m54 fixed-point
     contract) so the next round's EXP sees the identical double on
     both engines — with the a53-class caveat that libm EXP is 1-ulp,
@@ -1070,25 +1059,7 @@ def ev32_cox_proportional_hazards(spark: SparkSession, sf_dir: str) -> DataFrame
     are per-time floored micros summed order-free. Plan: one scan, a
     days-bounded non-equi self-join, then two metadata-sized Newton
     passes over the cached risk ledger."""
-    li = t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
-        F.max(F.col("l_shipdate").cast("date")).alias("done_date")
-    )
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderstatus", "o_orderpriority"
-    )
-    subj = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        F.datediff("done_date", F.col("o_orderdate").cast("date")).alias("dur"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("ev"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-        .otherwise(0)
-        .alias("grp"),
-    )
-    per = subj.groupBy("dur").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("grp").cast("bigint").alias("n_g1"),
-        F.sum("ev").cast("bigint").alias("d_all"),
-        F.sum(F.col("ev") * F.col("grp")).cast("bigint").alias("d_g1"),
-    )
+    per = survival_census(spark, sf_dir)
 
     a, b = per.alias("a"), per.alias("b")
     at_risk = cache_once(
@@ -1201,23 +1172,7 @@ def _ds_e_step(pfr: str, mfr: str, out: str) -> str:
     )"""
 
 
-_M62_ORACLE = rf"""
-    WITH feat AS (
-        SELECT CAST(LEN(LIST_FILTER(STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+'),
-                                    x -> LEN(x) > 0)) AS BIGINT) AS n_tok,
-               CAST(LEN(LIST_DISTINCT(LIST_FILTER(
-                   STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+'),
-                   x -> LEN(x) > 0))) AS BIGINT) AS n_dis,
-               CAST(LEN(LIST_FILTER(STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+'),
-                                    x -> LEN(x) > 15)) AS BIGINT) AS n_long
-        FROM documents
-    ),
-    votes AS (
-        SELECT CASE WHEN n_tok >= 50 THEN 1 ELSE 0 END AS ra,
-               CASE WHEN n_dis * 5 >= n_tok * 3 THEN 1 ELSE 0 END AS rb,
-               CASE WHEN n_long = 0 THEN 1 ELSE 0 END AS rc
-        FROM feat
-    ),
+_M62_ORACLE = _RATER_VOTES_CTES + f""",
     pat0 AS (
         SELECT ra, rb, rc, CAST(COUNT(*) AS BIGINT) AS c,
                {_DS_P0} AS p
@@ -1244,8 +1199,8 @@ def m62_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds) — THE crowdsourcing/annotation-fusion algorithm: infer
     per-rater sensitivity/specificity and per-item posteriors jointly,
     so a rater that rubber-stamps everything gets down-weighted where
-    majority vote cannot tell. Raters are dq27's deterministic quality
-    rules, making the pair an annotation-QA suite: dq27 says whether
+    majority vote cannot tell. Raters are rater_votes, as in dq27,
+    making the pair an annotation-QA suite: dq27 says whether
     raters agree, m62 says WHO to trust and what the fused label is.
     THE scale story: docs collapse to the 8-row vote-pattern census
     after one scan, so both EM rounds run on metadata — at 100 TB the
@@ -1257,24 +1212,7 @@ def m62_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass -> 0.5, zero likelihood -> prior) pinned identically. The
     pytest replays both rounds exactly and checks the fused posterior
     ordering follows vote counts."""
-    words = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
-    feat = t(spark, sf_dir, "documents").select(
-        F.size(words).cast("bigint").alias("n_tok"),
-        F.size(F.array_distinct(words)).cast("bigint").alias("n_dis"),
-        F.size(F.filter(words, lambda x: F.length(x) > 15))
-        .cast("bigint")
-        .alias("n_long"),
-    )
-    votes = feat.select(
-        F.when(F.col("n_tok") >= 50, 1).otherwise(0).alias("ra"),
-        F.when(F.col("n_dis") * 5 >= F.col("n_tok") * 3, 1)
-        .otherwise(0)
-        .alias("rb"),
-        F.when(F.col("n_long") == 0, 1).otherwise(0).alias("rc"),
-    )
+    votes = rater_votes(spark, sf_dir)
     pat = (
         votes.groupBy("ra", "rb", "rc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))

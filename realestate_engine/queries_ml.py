@@ -420,6 +420,23 @@ def m15_text_featurization(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def als_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer-part purchase matrix as explicit ALS ratings:
+    (user = o_custkey, item = l_partkey, rating = summed order
+    quantity as float), int ids as MLlib's ALS requires. Read by
+    m16_als_recommend and m20_als_recall_eval."""
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy(
+            F.col("o_custkey").cast("int").alias("user"),
+            F.col("l_partkey").cast("int").alias("item"),
+        )
+        .agg(F.sum("l_quantity").cast("float").alias("rating"))
+    )
+
+
 @register("m16_als_recommend")  # iterative factorization → rows-only (invariants in tests)
 def m16_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M16: ALS collaborative filtering over the customer-part purchase
@@ -432,16 +449,7 @@ def m16_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration-order dependent, not SQL-expressible)."""
     from pyspark.ml.recommendation import ALS
 
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    ratings = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("int").alias("user"),
-            F.col("l_partkey").cast("int").alias("item"),
-        )
-        .agg(F.sum("l_quantity").cast("float").alias("rating"))
-    )
+    ratings = als_ratings(spark, sf_dir)
     als = ALS(
         rank=16, maxIter=5, regParam=0.1, seed=SEED,
         userCol="user", itemCol="item", ratingCol="rating",
@@ -702,16 +710,7 @@ def m20_als_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.recommendation import ALS
     from pyspark.sql import Window
 
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    ratings = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("int").alias("user"),
-            F.col("l_partkey").cast("int").alias("item"),
-        )
-        .agg(F.sum("l_quantity").cast("float").alias("rating"))
-    )
+    ratings = als_ratings(spark, sf_dir)
     w = Window.partitionBy("user").orderBy(F.desc("rating"), "item")
     ranked = ratings.withColumn("rn", F.row_number().over(w))
     holdout = ranked.where(F.col("rn") == 1).select("user", F.col("item").alias("held_item"))
@@ -1426,6 +1425,25 @@ _OLS_MOMENTS_SQL = """
 """
 
 
+def ols_moments(feats: DataFrame) -> DataFrame:
+    """The nine exact-BIGINT normal-equation moments of (x1, x2, y):
+    n, s1, s2, s11, s22, s12, sy, s1y, s2y — one partial-agg pass,
+    every product bounded well inside int64. The oracle is
+    _OLS_MOMENTS_SQL; _OLS_D0/_OLS_D1/_OLS_D2/_OLS_DETS solve over it.
+    Read by m26_ols_normal_equations and m37_linear_shap."""
+    return feats.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("x1").cast("bigint").alias("s1"),
+        F.sum("x2").cast("bigint").alias("s2"),
+        F.sum(F.col("x1") * F.col("x1")).cast("bigint").alias("s11"),
+        F.sum(F.col("x2") * F.col("x2")).cast("bigint").alias("s22"),
+        F.sum(F.col("x1") * F.col("x2")).cast("bigint").alias("s12"),
+        F.sum("y").cast("bigint").alias("sy"),
+        F.sum(F.col("x1") * F.col("y")).cast("bigint").alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).cast("bigint").alias("s2y"),
+    )
+
+
 @register(
     "m26_ols_normal_equations",
     f"""
@@ -1455,17 +1473,7 @@ def m26_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_discount") * 1000).cast("bigint").alias("x2"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("y"),
     )
-    m = li.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x1").cast("bigint").alias("s1"),
-        F.sum("x2").cast("bigint").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).cast("bigint").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("bigint").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("bigint").alias("s12"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).cast("bigint").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("bigint").alias("s2y"),
-    )
+    m = ols_moments(li)
     return m.selectExpr(
         "n",
         f"ROUND(({_OLS_D0}) / ({_OLS_DETS}), 4) AS beta0_cents",

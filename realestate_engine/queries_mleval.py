@@ -610,7 +610,13 @@ def m36_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # work is one multiply per feature. The efficiency axiom
 # base + Σ phi_i = prediction is emitted as data.
 
-from realestate_engine.queries_ml import _OLS_D1, _OLS_D2, _OLS_DETS, _OLS_MOMENTS_SQL
+from realestate_engine.queries_ml import (
+    _OLS_D1,
+    _OLS_D2,
+    _OLS_DETS,
+    _OLS_MOMENTS_SQL,
+    ols_moments,
+)
 
 
 @register(
@@ -668,17 +674,7 @@ def m37_linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select("l_orderkey", "l_linenumber", "x1", "x2", "y")
     )
-    m = feats.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x1").cast("bigint").alias("s1"),
-        F.sum("x2").cast("bigint").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).cast("bigint").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("bigint").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("bigint").alias("s12"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).cast("bigint").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("bigint").alias("s2y"),
-    )
+    m = ols_moments(feats)
     return (
         sample.crossJoin(F.broadcast(m))
         .selectExpr(
@@ -1191,6 +1187,24 @@ def m42_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both g_int and H_int carry the same 1e6 factor, so the natural-unit
 # Newton step is exactly solve(H_int, g_int) — no rescaling.
 
+# One Newton step of a 2-parameter GLM fit from its integer micro
+# sufficient statistics (gradient g0, g1 and Hessian h00, h01, h11):
+# the Cramer solve of the 2x2 system in DOUBLE (the Hessian products
+# cross 2^63) as one fixed IEEE expression tree, floored back to
+# integer micros. _NEWTON_D0 is the intercept delta, _NEWTON_D1 the
+# slope delta. The Spark fits (F.expr) and the oracles embed the same
+# text. Read by m43_logreg_newton, m50_poisson_newton and
+# m54_platt_scaling.
+_NEWTON_DET = "(CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)"
+_NEWTON_D0 = (
+    "CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)"
+    f" / {_NEWTON_DET} * 1000000) AS BIGINT)"
+)
+_NEWTON_D1 = (
+    "CAST(FLOOR((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)"
+    f" / {_NEWTON_DET} * 1000000) AS BIGINT)"
+)
+
 _LR_ROUNDS = 3
 
 _LR_P = (
@@ -1212,12 +1226,7 @@ def _lr_step_sql(feats: str, prev: str, stats: str, nxt: str) -> str:
         CROSS JOIN {prev} b
     ),
     {nxt} AS (
-        SELECT b0 + CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)
-               / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000)
-               AS BIGINT) AS b0,
-               b1 + CAST(FLOOR((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)
-               / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000)
-               AS BIGINT) AS b1
+        SELECT b0 + {_NEWTON_D0} AS b0, b1 + {_NEWTON_D1} AS b1
         FROM {stats}
     )"""
 
@@ -1279,14 +1288,8 @@ def m43_logreg_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("x") * F.col("x") * F.expr("p * (1000000 - p) div 1000000")).alias("h11"),
         )
         b = stats.select(
-            F.expr(
-                "b0 + CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)"
-                " / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000) AS BIGINT)"
-            ).alias("b0"),
-            F.expr(
-                "b1 + CAST(FLOOR((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)"
-                " / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000) AS BIGINT)"
-            ).alias("b1"),
+            F.expr(f"b0 + {_NEWTON_D0}").alias("b0"),
+            F.expr(f"b1 + {_NEWTON_D1}").alias("b1"),
         )
         params_rows.append(
             b.select(
@@ -1836,12 +1839,7 @@ def _pois_step_sql(feats: str, prev: str, stats: str, nxt: str) -> str:
         CROSS JOIN {prev} b
     ),
     {nxt} AS (
-        SELECT b0 + CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)
-               / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000)
-               AS BIGINT) AS b0,
-               b1 + CAST(FLOOR((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)
-               / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000)
-               AS BIGINT) AS b1
+        SELECT b0 + {_NEWTON_D0} AS b0, b1 + {_NEWTON_D1} AS b1
         FROM {stats}
     )"""
 
@@ -1914,14 +1912,8 @@ def m50_poisson_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("x") * F.col("x") * F.col("lam")).alias("h11"),
         )
         b = stats.select(
-            F.expr(
-                "b0 + CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)"
-                " / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000) AS BIGINT)"
-            ).alias("b0"),
-            F.expr(
-                "b1 + CAST(FLOOR((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)"
-                " / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01) * 1000000) AS BIGINT)"
-            ).alias("b1"),
+            F.expr(f"b0 + {_NEWTON_D0}").alias("b0"),
+            F.expr(f"b1 + {_NEWTON_D1}").alias("b1"),
         )
         out.append(
             b.select(

@@ -13,6 +13,7 @@ from pyspark.sql.window import Window
 
 from realestate_engine.queries_sources_sql import _interleave_bits_expr
 from realestate_engine.registry import cache_once, register, stable_tmp, t
+from realestate_engine.text import _DSIR_CTES, dsir_terms
 
 
 @register(
@@ -1487,39 +1488,11 @@ _FUNNEL_QUALITY_SQL = r"""
                ) = 1 AS is_canonical
         FROM quality WHERE q_pass
     ),
-    words AS (
-        SELECT d.doc_id, d.source,
-               (d.source IN ('src0', 'src1', 'src2')) AS is_target,
-               UNNEST(STRING_SPLIT_REGEX(LOWER(TRIM(d.text)), '\s+')) AS word
-        FROM documents d
-    ),
-    stats AS (
-        SELECT word,
-               CAST(SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-               CAST(SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS BIGINT) AS cr
-        FROM words GROUP BY word
-    ),
-    totals AS (
-        SELECT CAST(SUM(ct) AS BIGINT) AS nt, CAST(SUM(cr) AS BIGINT) AS nr,
-               CAST(COUNT(*) AS BIGINT) AS v
-        FROM stats
-    ),
-    weights AS (
-        SELECT word,
-               CAST(FLOOR(1000000.0 * (
-                   LN(CAST(ct + 1 AS DOUBLE)) - LN(CAST(nt + v AS DOUBLE))
-                   - LN(CAST(cr + 1 AS DOUBLE)) + LN(CAST(nr + v AS DOUBLE))
-               )) AS BIGINT) AS term_micro
-        FROM stats CROSS JOIN totals
-    ),
+    {_DSIR_CTES},
     doc_scores AS (
-        SELECT w.doc_id,
-               CAST(SUM(tf.tf * w2.term_micro) AS BIGINT) AS score
-        FROM (SELECT DISTINCT doc_id FROM words) w
-        JOIN (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-              FROM words GROUP BY doc_id, word) tf USING (doc_id)
-        JOIN weights w2 USING (word)
-        GROUP BY w.doc_id
+        SELECT doc_id, CAST(SUM(tf.tf * w.term_micro) AS BIGINT) AS score
+        FROM tf JOIN weights w USING (word)
+        GROUP BY doc_id
     ),
     funnel AS (
         SELECT q.source,
@@ -1546,7 +1519,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gate (the hot three rules of t29, array-native, zero
     shuffles), (2) exact dedup on the normalized-text md5 (canonical =
     smallest doc_id, one text-hash-keyed window), and (3) DSIR
-    target-likelihood selection (t28's integer log-ratio weights,
+    target-likelihood selection (the sum of t28's dsir_terms,
     keep score >= 0 = more target-like than raw), emitting the census
     n_raw -> n_pass_quality -> n_after_dedup -> n_selected plus the
     surviving token budget. This is the pipeline a 100 TB pretraining
@@ -1590,37 +1563,8 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("is_canonical", F.row_number().over(canon) == 1)
         .select("doc_id", "is_canonical")
     )
-    words = d.select(
-        "doc_id",
-        F.col("source").isin("src0", "src1", "src2").alias("is_target"),
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"),
-    )
-    stats = words.groupBy("word").agg(
-        F.sum(F.when(F.col("is_target"), 1).otherwise(0)).cast("bigint").alias("ct"),
-        F.sum(F.when(F.col("is_target"), 0).otherwise(1)).cast("bigint").alias("cr"),
-    )
-    totals = stats.agg(
-        F.sum("ct").cast("bigint").alias("nt"),
-        F.sum("cr").cast("bigint").alias("nr"),
-        F.count(F.lit(1)).cast("bigint").alias("v"),
-    )
-    weights = stats.crossJoin(F.broadcast(totals)).select(
-        "word",
-        F.floor(
-            1000000.0
-            * (
-                F.log((F.col("ct") + 1).cast("double"))
-                - F.log((F.col("nt") + F.col("v")).cast("double"))
-                - F.log((F.col("cr") + 1).cast("double"))
-                + F.log((F.col("nr") + F.col("v")).cast("double"))
-            )
-        )
-        .cast("bigint")
-        .alias("term_micro"),
-    )
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     scores = (
-        tf.join(F.broadcast(weights), "word")
+        dsir_terms(spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.sum(F.col("tf") * F.col("term_micro")).cast("bigint").alias("score"))
     )

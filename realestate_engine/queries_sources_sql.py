@@ -99,7 +99,7 @@ def s12_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s13_binaryfile_scan",
     # The driver compares at sf0.01, so the blob glob names that dir;
-    # tools/check_oracle.py rewrites the path for other --sf runs.
+    # tools/check_oracle.oracle_sql rewrites the path for other scales.
     r"""
     SELECT regexp_extract(filename, '([^/]+)\.parquet$', 1) AS table_name,
            CAST(size AS BIGINT) AS n_bytes,

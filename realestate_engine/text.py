@@ -1866,69 +1866,27 @@ def t24_weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_TARGET_SOURCES = ("src0", "src1", "src2")
 
 
-@register(
-    "t28_dsir_importance_weights",
-    r"""
-    WITH words AS (
-        SELECT d.doc_id, d.source,
-               (d.source IN ('src0', 'src1', 'src2')) AS is_target,
-               UNNEST(STRING_SPLIT_REGEX(LOWER(TRIM(d.text)), '\s+')) AS word
-        FROM documents d
-    ),
-    stats AS (
-        SELECT word,
-               CAST(SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-               CAST(SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS BIGINT) AS cr
-        FROM words GROUP BY word
-    ),
-    totals AS (
-        SELECT CAST(SUM(ct) AS BIGINT) AS nt, CAST(SUM(cr) AS BIGINT) AS nr,
-               CAST(COUNT(*) AS BIGINT) AS v
-        FROM stats
-    ),
-    weights AS (
-        SELECT word,
-               CAST(FLOOR(1000000.0 * (
-                   LN(CAST(ct + 1 AS DOUBLE)) - LN(CAST(nt + v AS DOUBLE))
-                   - LN(CAST(cr + 1 AS DOUBLE)) + LN(CAST(nr + v AS DOUBLE))
-               )) AS BIGINT) AS term_micro
-        FROM stats CROSS JOIN totals
-    ),
-    tf AS (
-        SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM words GROUP BY doc_id, word
-    ),
-    scored AS (
-        SELECT tf.doc_id, CAST(SUM(tf.tf * w.term_micro) AS BIGINT) AS dsir_logweight_micro
-        FROM tf JOIN weights w USING (word)
-        GROUP BY tf.doc_id
-    )
-    SELECT s.doc_id, d.source, s.dsir_logweight_micro
-    FROM scored s JOIN documents d USING (doc_id)
-    ORDER BY s.dsir_logweight_micro DESC, s.doc_id
-    LIMIT 50
-    """,
-)
-def t28_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance resampling weights (Xie et al. 2023,
-    "Data Selection for Language Models via Importance Resampling"):
-    score every raw document by the log-likelihood ratio of a
-    Laplace-smoothed unigram LM fit on a small TARGET slice (sources
-    src0-src2) vs the full raw remainder, then surface the top-50
-    most-target-like documents. The per-token log-ratio is computed
-    ONCE per vocabulary type and FLOOR-scaled to integer micros, so the
-    per-document sum Σ tf·term is exact BIGINT arithmetic — order-free
-    and bit-identical to the oracle (the ln() calls hit the same libm
-    on identical integer inputs in the same expression order).
+def dsir_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR importance-weight terms (Xie et al. 2023, "Data Selection
+    for Language Models via Importance Resampling"): one
+    (word, doc_id, tf, term_micro) row per distinct word of each
+    document. term_micro is the per-type log-likelihood ratio of a
+    Laplace-smoothed unigram LM fit on the TARGET slice
+    (_DSIR_TARGET_SOURCES) vs the raw remainder, computed ONCE per
+    vocabulary type and FLOOR-scaled to integer micros, so a
+    per-document sum of tf * term_micro is exact BIGINT arithmetic —
+    order-free and bit-identical to the oracle (the ln() calls hit the
+    same libm on identical integer inputs in the same expression
+    order). Tokens are the whitespace splits of the trimmed,
+    lower-cased text.
 
     Plan: one token explode feeding two hash aggregations (type stats,
     per-doc tf); the vocabulary-sized weight table is broadcast into
-    the tf join (vocabulary ≪ corpus at any scale — at 100 TB the tf
-    side shuffles on doc_id only for its own agg, never the corpus on
-    word); totals ride a 1-row broadcast cross join. Beyond-reference
-    north-star op (LLM training-data curation)."""
-    d = t(spark, sf_dir, "documents")
-    words = d.select(
+    the tf join (vocabulary ≪ corpus at any scale); totals ride a 1-row
+    broadcast cross join. The oracle is _DSIR_CTES (words, stats,
+    totals, weights, tf). Read by t28_dsir_importance_weights and
+    corpus_curation_funnel."""
+    words = t(spark, sf_dir, "documents").select(
         "doc_id",
         F.col("source").isin(*_DSIR_TARGET_SOURCES).alias("is_target"),
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"),
@@ -1957,8 +1915,64 @@ def t28_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("term_micro"),
     )
     tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    return tf.join(F.broadcast(weights), "word")
+
+
+_DSIR_CTES = r"""
+    words AS (
+        SELECT d.doc_id, d.source,
+               (d.source IN ('src0', 'src1', 'src2')) AS is_target,
+               UNNEST(STRING_SPLIT_REGEX(LOWER(TRIM(d.text)), '\s+')) AS word
+        FROM documents d
+    ),
+    stats AS (
+        SELECT word,
+               CAST(SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS BIGINT) AS ct,
+               CAST(SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS BIGINT) AS cr
+        FROM words GROUP BY word
+    ),
+    totals AS (
+        SELECT CAST(SUM(ct) AS BIGINT) AS nt, CAST(SUM(cr) AS BIGINT) AS nr,
+               CAST(COUNT(*) AS BIGINT) AS v
+        FROM stats
+    ),
+    weights AS (
+        SELECT word,
+               CAST(FLOOR(1000000.0 * (
+                   LN(CAST(ct + 1 AS DOUBLE)) - LN(CAST(nt + v AS DOUBLE))
+                   - LN(CAST(cr + 1 AS DOUBLE)) + LN(CAST(nr + v AS DOUBLE))
+               )) AS BIGINT) AS term_micro
+        FROM stats CROSS JOIN totals
+    ),
+    tf AS (
+        SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
+        FROM words GROUP BY doc_id, word
+    )"""
+
+
+@register(
+    "t28_dsir_importance_weights",
+    f"""
+    WITH {_DSIR_CTES},
+    scored AS (
+        SELECT tf.doc_id, CAST(SUM(tf.tf * w.term_micro) AS BIGINT) AS dsir_logweight_micro
+        FROM tf JOIN weights w USING (word)
+        GROUP BY tf.doc_id
+    )
+    SELECT s.doc_id, d.source, s.dsir_logweight_micro
+    FROM scored s JOIN documents d USING (doc_id)
+    ORDER BY s.dsir_logweight_micro DESC, s.doc_id
+    LIMIT 50
+    """,
+)
+def t28_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR-style importance resampling: score every raw document by
+    the sum of its dsir_terms (tf * term_micro), then surface the
+    top-50 most-target-like documents. Beyond-reference north-star op
+    (LLM training-data curation)."""
+    d = t(spark, sf_dir, "documents")
     scored = (
-        tf.join(F.broadcast(weights), "word")
+        dsir_terms(spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.sum(F.col("tf") * F.col("term_micro")).cast("bigint").alias("dsir_logweight_micro"))
     )

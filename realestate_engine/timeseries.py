@@ -525,21 +525,62 @@ def ts8_holt_winters_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-@register(
-    "ts9_seasonal_decompose",
-    """
+def daily_milli_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily event-value series before its aggregate: one
+    (day_idx, v) row per event, where day_idx counts days from
+    2024-01-01 (calendar-free) and v is the event value FLOOR-milli'd
+    BEFORE any summation — BIGINT sums are order-free where a double
+    sum is not, so every daily total is exact on both engines. Each
+    consumer keeps its own aggregate over it (sum, sum + count, or the
+    ts20 DIV 1e5 rescale); the raw scan collapses to one row per day
+    FIRST (a hash agg — at 100 TB the daily frame is O(years) ~ 1e3
+    rows), and everything after runs on that tiny frame.
+
+    The oracle is _DAILY_CTE: one `daily` CTE carrying the daily sum v
+    and event count n, which each oracle aliases as it needs. Read by
+    ts9-ts11, ts13-ts19 and ts20_haar_energy."""
+    return t(spark, sf_dir, "events").select(
+        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
+        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
+    )
+
+
+def centered_daily(daily: DataFrame) -> DataFrame:
+    """The daily series (day_idx, v) centered on its integer-floor
+    global mean: (day_idx, d = v - sum(v) div count). Centering BEFORE
+    any product keeps deviation products exact BIGINT at every SF (the
+    ev17 overflow lesson: the uncentered n*sxy - sx*sy form crosses
+    2^63 once daily totals reach ~1e10 milli). The oracle is
+    _CENTERED_CTES (mu, dev). Read by ts10, ts13, ts14 and ts19."""
+    mu = daily.agg(F.expr("sum(v) div count(*)").alias("m"))
+    return daily.crossJoin(F.broadcast(mu)).select(
+        "day_idx", (F.col("v") - F.col("m")).alias("d")
+    )
+
+
+_DAILY_CTE = """
     WITH daily AS (
         SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v_milli
+               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v,
+               CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY 1
-    ),
+    )"""
+
+_CENTERED_CTES = """,
+    mu AS (SELECT SUM(v) // COUNT(*) AS m FROM daily),
+    dev AS (SELECT day_idx, v - mu.m AS d FROM daily, mu)"""
+
+
+@register(
+    "ts9_seasonal_decompose",
+    _DAILY_CTE + """,
     trend AS (
-        SELECT a.day_idx, a.v_milli,
+        SELECT a.day_idx, a.v AS v_milli,
                CASE WHEN COUNT(b.day_idx) = 7
-                    THEN SUM(b.v_milli) // 7 END AS trend_milli
+                    THEN SUM(b.v) // 7 END AS trend_milli
         FROM daily a JOIN daily b
           ON b.day_idx BETWEEN a.day_idx - 3 AND a.day_idx + 3
-        GROUP BY a.day_idx, a.v_milli
+        GROUP BY a.day_idx, a.v
     ),
     detr AS (
         SELECT day_idx, day_idx % 7 AS dow, v_milli - trend_milli AS d_milli
@@ -564,20 +605,13 @@ def ts9_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-value series — centered 7-day moving-average trend (full
     windows only), detrend, weekly seasonal index per day-of-week
     (day_idx % 7, calendar-free), and the mean absolute remainder as
-    the decomposition-quality metric. Exactness: each event value is
-    FLOOR-milli'd BEFORE summation (BIGINT sums are order-free where
-    a double sum is not); the MA and both per-dow means are integer
-    divisions. Scale shape: the raw scan collapses to one row per day
-    FIRST (a hash agg — at 100 TB the daily frame is O(years) ~ 1e3
-    rows), then the +/-3-day band self-join runs on that tiny
-    broadcast frame — deliberately chosen over an unpartitioned
+    the decomposition-quality metric, over daily_milli_events. The MA
+    and both per-dow means are integer divisions; the +/-3-day band
+    self-join runs on the tiny broadcast daily frame — deliberately
+    chosen over an unpartitioned
     ordered window, which would funnel the series through one task
     (DESIGN.md no-global-window invariant)."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v_milli"),
-    )
-    daily = ev.groupBy("day_idx").agg(F.sum("v_milli").alias("v_milli"))
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v_milli"))
     a, b = daily.alias("a"), daily.alias("b")
     trend = (
         a.join(
@@ -622,14 +656,7 @@ def ts9_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts10_autocorrelation",
-    """
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v
-        FROM events GROUP BY 1
-    ),
-    mu AS (SELECT SUM(v) // COUNT(*) AS m FROM daily),
-    dev AS (SELECT day_idx, v - mu.m AS d FROM daily, mu),
+    _DAILY_CTE + _CENTERED_CTES + """,
     den AS (SELECT SUM(d * d) AS ss FROM dev),
     lags AS (SELECT UNNEST(RANGE(1, 8)) AS lag),
     num AS (
@@ -649,25 +676,16 @@ def ts9_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ts10_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TS10: sample autocorrelation of the daily event-value series at
     lags 1..7 — the diagnostic that motivates ts9's seasonal model
-    (weekly data shows an ACF peak at lag 7). The series is CENTERED
-    on the integer-floor global mean BEFORE any product (the ev17
-    overflow lesson: the uncentered n*sxy - sx*sy form crosses 2^63
-    once daily totals reach ~1e10 milli), so deviation products stay
-    exact BIGINT at every SF; the classical estimator
+    (weekly data shows an ACF peak at lag 7), over centered_daily, so
+    deviation products stay exact BIGINT at every SF; the classical
+    estimator
     r_k = sum(d_t d_{t+k}) / sum(d^2) is then ONE IEEE division
     FLOORed to micros. Lag pairs come from an EQUI-join (lag exploded
     onto one side, key = day_idx + lag) — no banded nested loop. At
     100 TB the raw scan collapses to O(days) rows first; everything
     after is arithmetic on a KB frame."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(F.sum("v").alias("v"))
-    mu = daily.agg(F.expr("sum(v) div count(*)").alias("m"))
-    dev = daily.crossJoin(F.broadcast(mu)).select(
-        "day_idx", (F.col("v") - F.col("m")).alias("d")
-    )
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
+    dev = centered_daily(daily)
     den = dev.agg(F.sum(F.col("d") * F.col("d")).alias("ss"))
     a = dev.withColumn("lag", F.explode(F.array(*[F.lit(k) for k in range(1, 8)])))
     b = dev.select(F.col("day_idx").alias("b_day"), F.col("d").alias("bd"))
@@ -691,12 +709,7 @@ def ts10_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts11_decomposition_strength",
-    """
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v
-        FROM events GROUP BY 1
-    ),
+    _DAILY_CTE + """,
     trend AS (
         SELECT a.day_idx, a.v,
                CASE WHEN COUNT(b.day_idx) = 7 THEN SUM(b.v) // 7 END AS tr
@@ -746,11 +759,7 @@ def ts11_decomposition_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic cross-engine. Same no-funnel band-join discipline
     as ts9; the whole statistic is metadata-sized after the daily
     collapse."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(F.sum("v").alias("v"))
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
     a, b = daily.alias("a"), daily.alias("b")
     trend = (
         a.join(
@@ -907,15 +916,8 @@ def _lb_crit_nano(col: str) -> str:
         " ELSE 14067140449 END"
     )
 
-_TS13_ORACLE = f"""
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v
-        FROM events GROUP BY 1
-    ),
+_TS13_ORACLE = _DAILY_CTE + _CENTERED_CTES + f""",
     nn AS (SELECT COUNT(*) AS n FROM daily),
-    mu AS (SELECT SUM(v) // COUNT(*) AS m FROM daily),
-    dev AS (SELECT day_idx, v - mu.m AS d FROM daily, mu),
     den AS (SELECT SUM(d * d) AS ss FROM dev),
     lags AS (SELECT UNNEST(RANGE(1, 8)) AS lag),
     num AS (
@@ -969,16 +971,9 @@ def ts13_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows in the first agg; everything after is arithmetic on a KB
     frame. Critical values are shared literal constants
     (_lb_crit_nano) on both engines."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(F.sum("v").alias("v"))
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
     nn = daily.agg(F.count(F.lit(1)).alias("n"))
-    mu = daily.agg(F.expr("sum(v) div count(*)").alias("m"))
-    dev = daily.crossJoin(F.broadcast(mu)).select(
-        "day_idx", (F.col("v") - F.col("m")).alias("d")
-    )
+    dev = centered_daily(daily)
     den = dev.agg(F.sum(F.col("d") * F.col("d")).alias("ss"))
     a = dev.withColumn("lag", F.explode(F.array(*[F.lit(k) for k in range(1, 8)])))
     b = dev.select(F.col("day_idx").alias("b_day"), F.col("d").alias("bd"))
@@ -1042,14 +1037,7 @@ _TS14_STRENGTH = (
     " / CAST(sst AS DOUBLE) * 1000000) AS BIGINT)"
 )
 
-_TS14_ORACLE = f"""
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v
-        FROM events GROUP BY 1
-    ),
-    mu AS (SELECT SUM(v) // COUNT(*) AS m FROM daily),
-    dev AS (SELECT day_idx, v - mu.m AS d FROM daily, mu),
+_TS14_ORACLE = _DAILY_CTE + _CENTERED_CTES + f""",
     tot AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
                CAST(SUM(d) AS BIGINT) AS s_tot,
@@ -1101,15 +1089,8 @@ def ts14_phase_folding_periodogram(spark: SparkSession, sf_dir: str) -> DataFram
     one BIGINT-overflowing square on doubles). Scale: the scan collapses to
     O(days) rows once; the 13-period fan-out multiplies a KB frame,
     never the corpus."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(F.sum("v").alias("v"))
-    mu = daily.agg(F.expr("sum(v) div count(*)").alias("m"))
-    dev = daily.crossJoin(F.broadcast(mu)).select(
-        "day_idx", (F.col("v") - F.col("m")).alias("d")
-    )
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
+    dev = centered_daily(daily)
     tot = dev.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         F.sum("d").cast("bigint").alias("s_tot"),
@@ -1162,12 +1143,7 @@ _TS15_Z = (
     " / SQRT(CAST(var18 AS DOUBLE) / 18) * 1000000) END AS BIGINT)"
 )
 
-_TS15_ORACLE = f"""
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v
-        FROM events GROUP BY 1
-    ),
+_TS15_ORACLE = _DAILY_CTE + f""",
     s AS (
         SELECT CAST(SUM(CASE WHEN b.v > a.v THEN 1
                              WHEN b.v < a.v THEN -1 ELSE 0 END) AS BIGINT)
@@ -1210,11 +1186,9 @@ def ts15_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(days^2) of a KB frame, never a subjects-sized product. Bound:
     var18 = n(n-1)(2n+5) crosses 2^63 at ~1.66M days (4500 years of
     daily data) — not a realistic ceiling."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
+    daily = cache_once(
+        daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
     )
-    daily = cache_once(ev.groupBy("day_idx").agg(F.sum("v").alias("v")))
     b = daily.select(F.col("day_idx").alias("b_day"), F.col("v").alias("b_v"))
     s = daily.join(F.broadcast(b), F.col("b_day") > F.col("day_idx")).agg(
         F.sum(
@@ -1319,15 +1293,9 @@ _G_F = (
     " * (n - 3) / rssn_u * 1000000) AS BIGINT)"
 )
 
-_TS16_ORACLE = f"""
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS y,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1
-    ),
+_TS16_ORACLE = _DAILY_CTE + f""",
     lagged AS (
-        SELECT a.y, b.y AS y1, b.x AS x1
+        SELECT a.v AS y, b.v AS y1, b.n AS x1
         FROM daily a JOIN daily b ON b.day_idx = a.day_idx - 1
     ),
     mu AS (
@@ -1375,11 +1343,7 @@ def ts16_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference is ~0). Plan: one events-sized groupBy, then a
     day-ledger self-join and two metadata-sized passes — at 100 TB
     everything after the first shuffle is O(days)."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(
         F.sum("v").alias("y"), F.count(F.lit(1)).cast("bigint").alias("x")
     )
     b = daily.select(
@@ -1434,18 +1398,12 @@ def ts16_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- TS17: lagged cross-correlation (value total vs event count) --------------
 
-_TS17_ORACLE = """
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS y,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1
-    ),
+_TS17_ORACLE = _DAILY_CTE + """,
     mu AS (
-        SELECT SUM(y) // COUNT(*) AS my, SUM(x) // COUNT(*) AS mx FROM daily
+        SELECT SUM(v) // COUNT(*) AS my, SUM(n) // COUNT(*) AS mx FROM daily
     ),
     dev AS (
-        SELECT day_idx, y - my AS dy, x - mx AS dx FROM daily, mu
+        SELECT day_idx, v - my AS dy, n - mx AS dx FROM daily, mu
     ),
     den AS (
         SELECT CAST(SUM(dy * dy) AS BIGINT) AS ssy,
@@ -1481,11 +1439,7 @@ def ts17_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     product crosses 2^63 first). Sign convention pinned by the shared
     text: xcf(l) correlates count_t with value_{t+l}. One events-sized
     groupBy; O(days) everything after."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(
         F.sum("v").alias("y"), F.count(F.lit(1)).cast("bigint").alias("x")
     )
     mu = daily.agg(
@@ -1532,15 +1486,10 @@ def ts17_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- TS18: maximum drawdown (running max via two-phase prefix) ----------------
 
-_TS18_ORACLE = """
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS y
-        FROM events GROUP BY 1
-    ),
+_TS18_ORACLE = _DAILY_CTE + """,
     runmax AS (
-        SELECT day_idx, y,
-               CAST(MAX(y) OVER (ORDER BY day_idx) AS BIGINT) AS peak
+        SELECT day_idx, v AS y,
+               CAST(MAX(v) OVER (ORDER BY day_idx) AS BIGINT) AS peak
         FROM daily
     ),
     dd AS (
@@ -1576,12 +1525,8 @@ def ts18_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     one TakeOrdered(1). All integers (milli value units); drawdown of
     a monotone-rising series is correctly 0. One events-sized groupBy;
     O(days) after."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
     daily = cache_once(
-        ev.groupBy("day_idx")
+        daily_milli_events(spark, sf_dir).groupBy("day_idx")
         .agg(F.sum("v").alias("y"))
         .repartitionByRange(8, "day_idx")
         .withColumn("_pid", F.spark_partition_id())
@@ -1670,14 +1615,7 @@ _DL_P44 = (
     f" FLOOR({_DL4_NUM} / {_DL4_DEN} * 1000000) END AS BIGINT)"
 )
 
-_TS19_ORACLE = f"""
-    WITH daily AS (
-        SELECT DATE_DIFF('day', DATE '2024-01-01', ts::DATE) AS day_idx,
-               SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS v
-        FROM events GROUP BY 1
-    ),
-    mu AS (SELECT SUM(v) // COUNT(*) AS m FROM daily),
-    dev AS (SELECT day_idx, v - mu.m AS d FROM daily, mu),
+_TS19_ORACLE = _DAILY_CTE + _CENTERED_CTES + f""",
     den AS (SELECT CAST(SUM(d * d) AS BIGINT) AS ss FROM dev),
     acf AS (
         SELECT l.lag,
@@ -1727,17 +1665,8 @@ def ts19_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels pin to 0. Plan: one events-sized groupBy, the ts10 lag
     join, then a 1-row scalar cascade. phi(1) = r(1) by construction;
     |pacf| <= 1e6 pytested."""
-    ev = t(spark, sf_dir, "events").select(
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day_idx"),
-        F.floor(F.col("value") * 1000).cast("bigint").alias("v"),
-    )
-    daily = ev.groupBy("day_idx").agg(F.sum("v").alias("v"))
-    mu = daily.agg(F.expr("sum(v) div count(*)").alias("m"))
-    dev = cache_once(
-        daily.crossJoin(F.broadcast(mu)).select(
-            "day_idx", (F.col("v") - F.col("m")).alias("d")
-        )
-    )
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
+    dev = cache_once(centered_daily(daily))
     den = dev.agg(F.sum(F.col("d") * F.col("d")).alias("ss"))
     a = dev.withColumn("lag", F.explode(F.array(*[F.lit(k) for k in range(1, 5)])))
     b = dev.select(F.col("day_idx").alias("b_day"), F.col("d").alias("bd"))

@@ -398,11 +398,63 @@ _WP_MAX_WLEN = 12
 _WP_MAX_TLEN = 4
 
 
-@register(
-    "t26_wordpiece_tokenize",
-    f"""
-    WITH RECURSIVE words AS (
-        SELECT word, COUNT(*) AS wcount
+def wp_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The WordPiece word census: (word, wcount) over the whitespace
+    splits of the trimmed, lower-cased text, keeping [a-z]+ words of
+    at most _WP_MAX_WLEN chars. The domain is distinct words
+    (Zipf-bounded), never the corpus. Oracle: words in _WP_BASE_CTES.
+    Read (and cached) by t26_wordpiece_tokenize and t31_unigram_viterbi."""
+    raw = t(spark, sf_dir, "documents").select("text").select(
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
+    )
+    return (
+        raw.where(
+            F.col("word").rlike("^[a-z]+$") & (F.length("word") <= _WP_MAX_WLEN)
+        )
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("wcount"))
+    )
+
+
+def wp_prefixes(spark: SparkSession, words: DataFrame) -> DataFrame:
+    """The corpus-derived half of the shared subword vocab: the top
+    _WP_TOP_PREFIXES 2.._WP_MAX_TLEN-char word prefixes by
+    occurrence-weighted count, tie-broken lexically, as (tok, cnt).
+    The full vocab adds the 26 single letters, so greedy and Viterbi
+    segmentation always progress. Oracle: prefixes in _WP_BASE_CTES."""
+    lens = spark.range(2, _WP_MAX_TLEN + 1).select(F.col("id").cast("int").alias("l"))
+    return (
+        words.join(F.broadcast(lens), F.length("word") >= F.col("l"))
+        .select(F.expr("substring(word, 1, l)").alias("tok"), "wcount")
+        .groupBy("tok")
+        .agg(F.sum("wcount").cast("bigint").alias("cnt"))
+        .orderBy(F.desc("cnt"), "tok")
+        .limit(_WP_TOP_PREFIXES)
+    )
+
+
+def wp_grid(spark: SparkSession, words: DataFrame) -> DataFrame:
+    """Every in-word substring of the census as (word, pos, l, sub):
+    1-based start pos <= _WP_MAX_WLEN, length l <= _WP_MAX_TLEN. One
+    equi-join of this grid against the broadcast vocab gives every
+    candidate token at every position. Oracle: grid in _WP_BASE_CTES."""
+    pos_l = (
+        spark.range(1, _WP_MAX_WLEN + 1)
+        .select(F.col("id").cast("int").alias("pos"))
+        .crossJoin(
+            spark.range(1, _WP_MAX_TLEN + 1).select(F.col("id").cast("int").alias("l"))
+        )
+    )
+    return words.join(
+        F.broadcast(pos_l),
+        (F.col("pos") <= F.length("word"))
+        & (F.col("pos") + F.col("l") - 1 <= F.length("word")),
+    ).select("word", "pos", "l", F.expr("substring(word, pos, l)").alias("sub"))
+
+
+_WP_BASE_CTES = f"""
+    words AS MATERIALIZED (
+        SELECT word, CAST(COUNT(*) AS BIGINT) AS wcount
         FROM (
             SELECT UNNEST(STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\\s+')) AS word
             FROM documents
@@ -410,18 +462,13 @@ _WP_MAX_TLEN = 4
         WHERE word ~ '^[a-z]+$' AND LEN(word) <= {_WP_MAX_WLEN}
         GROUP BY word
     ),
-    prefixes AS (
-        SELECT SUBSTR(word, 1, l.l) AS tok, SUM(wcount) AS cnt
+    prefixes AS MATERIALIZED (
+        SELECT SUBSTR(word, 1, l.l) AS tok, CAST(SUM(wcount) AS BIGINT) AS cnt
         FROM words JOIN (SELECT UNNEST(RANGE(2, {_WP_MAX_TLEN + 1})) AS l) l
           ON LEN(word) >= l.l
         GROUP BY 1
         ORDER BY cnt DESC, tok
         LIMIT {_WP_TOP_PREFIXES}
-    ),
-    vocab AS (
-        SELECT tok FROM prefixes
-        UNION ALL
-        SELECT CHR(CAST(97 + i AS INTEGER)) AS tok FROM (SELECT UNNEST(RANGE(0, 26)) AS i)
     ),
     grid AS (
         SELECT w.word, p.p AS pos, SUBSTR(w.word, p.p, l.l) AS sub, l.l
@@ -430,6 +477,17 @@ _WP_MAX_TLEN = 4
           ON p.p <= LEN(w.word)
         JOIN (SELECT UNNEST(RANGE(1, {_WP_MAX_TLEN + 1})) AS l) l
           ON p.p + l.l - 1 <= LEN(w.word)
+    )"""
+
+
+@register(
+    "t26_wordpiece_tokenize",
+    f"""
+    WITH RECURSIVE {_WP_BASE_CTES},
+    vocab AS (
+        SELECT tok FROM prefixes
+        UNION ALL
+        SELECT CHR(CAST(97 + i AS INTEGER)) AS tok FROM (SELECT UNNEST(RANGE(0, 26)) AS i)
     ),
     choice AS (
         SELECT word, pos, sub AS tok, pos + l AS next_pos
@@ -478,40 +536,11 @@ def t26_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB tokenizer is this exact plan with a bigger vocab
     table."""
 
-    d = t(spark, sf_dir, "documents").select("text")
-    raw = d.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
-    )
-    words = cache_once(
-        raw.where(
-            F.col("word").rlike("^[a-z]+$") & (F.length("word") <= _WP_MAX_WLEN)
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wcount"))
-    )
-    lens = spark.range(2, _WP_MAX_TLEN + 1).select(F.col("id").cast("int").alias("l"))
-    prefixes = (
-        words.join(F.broadcast(lens), F.length("word") >= F.col("l"))
-        .select(F.expr("substring(word, 1, l)").alias("tok"), "wcount")
-        .groupBy("tok")
-        .agg(F.sum("wcount").alias("cnt"))
-        .orderBy(F.desc("cnt"), "tok")
-        .limit(_WP_TOP_PREFIXES)
-    )
+    words = cache_once(wp_words(spark, sf_dir))
+    prefixes = wp_prefixes(spark, words)
     singles = spark.range(26).select(F.expr("char(97 + id)").alias("tok"))
     vocab = prefixes.select("tok").unionByName(singles)
-    pos_l = (
-        spark.range(1, _WP_MAX_WLEN + 1)
-        .select(F.col("id").cast("int").alias("pos"))
-        .crossJoin(
-            spark.range(1, _WP_MAX_TLEN + 1).select(F.col("id").cast("int").alias("l"))
-        )
-    )
-    grid = words.join(
-        F.broadcast(pos_l),
-        (F.col("pos") <= F.length("word"))
-        & (F.col("pos") + F.col("l") - 1 <= F.length("word")),
-    ).select("word", "pos", "l", F.expr("substring(word, pos, l)").alias("sub"))
+    grid = wp_grid(spark, words)
     w_choice = Window.partitionBy("word", "pos").orderBy(F.desc("l"))
     choice = cache_once(
         grid.join(F.broadcast(vocab), grid.sub == vocab.tok)
@@ -686,23 +715,7 @@ def _uv_oracle_sql() -> str:
     MATERIALIZED best-so-far CTEs (the label-propagation unroll), over
     the same vocab spec as t26 plus integer-micro unigram costs."""
     head = f"""
-    WITH words AS MATERIALIZED (
-        SELECT word, CAST(COUNT(*) AS BIGINT) AS wcount
-        FROM (
-            SELECT UNNEST(STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\\s+')) AS word
-            FROM documents
-        )
-        WHERE word ~ '^[a-z]+$' AND LEN(word) <= {_WP_MAX_WLEN}
-        GROUP BY word
-    ),
-    prefixes AS MATERIALIZED (
-        SELECT SUBSTR(word, 1, l.l) AS tok, CAST(SUM(wcount) AS BIGINT) AS cnt
-        FROM words JOIN (SELECT UNNEST(RANGE(2, {_WP_MAX_TLEN + 1})) AS l) l
-          ON LEN(word) >= l.l
-        GROUP BY 1
-        ORDER BY cnt DESC, tok
-        LIMIT {_WP_TOP_PREFIXES}
-    ),
+    WITH {_WP_BASE_CTES},
     chars AS MATERIALIZED (
         SELECT c AS tok, CAST(SUM(wcount) AS BIGINT) AS cnt
         FROM (SELECT UNNEST(STRING_SPLIT(word, '')) AS c, wcount FROM words)
@@ -727,14 +740,7 @@ def _uv_oracle_sql() -> str:
     ),
     edges AS MATERIALIZED (
         SELECT g.word, g.pos, g.pos + g.l AS next_pos, c.enc
-        FROM (
-            SELECT w.word, p.p AS pos, SUBSTR(w.word, p.p, l.l) AS sub, l.l
-            FROM words w
-            JOIN (SELECT UNNEST(RANGE(1, {_WP_MAX_WLEN + 1})) AS p) p
-              ON p.p <= LEN(w.word)
-            JOIN (SELECT UNNEST(RANGE(1, {_WP_MAX_TLEN + 1})) AS l) l
-              ON p.p + l.l - 1 <= LEN(w.word)
-        ) g JOIN costs c ON g.sub = c.tok
+        FROM grid g JOIN costs c ON g.sub = c.tok
     ),
     bs1 AS MATERIALIZED (SELECT word, 1 AS pos, CAST(0 AS BIGINT) AS acc FROM words)"""
     steps = []
@@ -794,26 +800,8 @@ def t31_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact plan. Cited reference behavior: none (the reference has no
     tokenizer; north-star surface)."""
 
-    d = t(spark, sf_dir, "documents").select("text")
-    raw = d.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
-    )
-    words = cache_once(
-        raw.where(
-            F.col("word").rlike("^[a-z]+$") & (F.length("word") <= _WP_MAX_WLEN)
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wcount"))
-    )
-    lens = spark.range(2, _WP_MAX_TLEN + 1).select(F.col("id").cast("int").alias("l"))
-    prefixes = (
-        words.join(F.broadcast(lens), F.length("word") >= F.col("l"))
-        .select(F.expr("substring(word, 1, l)").alias("tok"), "wcount")
-        .groupBy("tok")
-        .agg(F.sum("wcount").cast("bigint").alias("cnt"))
-        .orderBy(F.desc("cnt"), "tok")
-        .limit(_WP_TOP_PREFIXES)
-    )
+    words = cache_once(wp_words(spark, sf_dir))
+    prefixes = wp_prefixes(spark, words)
     chars = (
         words.select(
             F.explode(F.filter(F.split("word", "(?!^)"), lambda s: s != "")).alias(
@@ -841,18 +829,7 @@ def t31_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
             + 1
         ).alias("enc"),
     )
-    pos_l = (
-        spark.range(1, _WP_MAX_WLEN + 1)
-        .select(F.col("id").cast("int").alias("pos"))
-        .crossJoin(
-            spark.range(1, _WP_MAX_TLEN + 1).select(F.col("id").cast("int").alias("l"))
-        )
-    )
-    grid = words.join(
-        F.broadcast(pos_l),
-        (F.col("pos") <= F.length("word"))
-        & (F.col("pos") + F.col("l") - 1 <= F.length("word")),
-    ).select("word", "pos", "l", F.expr("substring(word, pos, l)").alias("sub"))
+    grid = wp_grid(spark, words)
     edges = cache_once(
         grid.join(F.broadcast(costs), grid.sub == costs.tok).select(
             "word", "pos", (F.col("pos") + F.col("l")).alias("next_pos"), "enc"

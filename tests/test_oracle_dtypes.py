@@ -22,12 +22,9 @@ import pyarrow as pa
 import pytest
 
 from realestate_engine.registry import ORACLES, load_all
+from tools.check_oracle import oracle_connection
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def _family_ok(t: pa.DataType) -> bool:
@@ -57,11 +54,7 @@ def _family_ok(t: pa.DataType) -> bool:
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for tb in TABLES:
-        c.execute(
-            f"CREATE VIEW {tb} AS SELECT * FROM read_parquet('{SF_DIR}/{tb}.parquet')"
-        )
+    c = oracle_connection(SF_DIR)
     load_all()
     return c
 

@@ -860,7 +860,7 @@ def _cache_builder(df):
 
 
 def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
-    """The fourteen trade-graph operators all read ONE cached
+    """The fifteen trade-graph operators all read ONE cached
     (src, dst, d) relation, trade_graph's, and none of them drops it
     (spark.sql's view binding in pagerank would, unguarded). ANF,
     k-core, Boruvka and matching checkpoint their rounds while they
@@ -885,7 +885,7 @@ def test_trade_graph_consumers_share_one_cached_edge_relation(spark, sf_dir):
         "graph_pagerank_trade", "graph_personalized_pagerank",
         "graph_label_propagation", "graph_modularity", "graph_link_prediction",
         "graph_bfs_hops", "graph_mis_luby", "graph_degree_assortativity",
-        "graph_rich_club", "graph_deterministic_walks",
+        "graph_rich_club", "graph_deterministic_walks", "graph_degree_distribution",
     ):
         qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
         assert shared in _cache_entries(qe.executedPlan(), jvm, set()), name

@@ -82,9 +82,10 @@ def test_grid_margins_and_aft_clamp_clearance(sf_dir):
     import sys
 
     sys.path.insert(0, ".")
-    from tools.grid_margin import MARGIN_MIN, RHO_FLOOR, _con, m17_margins, m21_margins, m24_margins
+    from tools.check_oracle import oracle_connection
+    from tools.grid_margin import MARGIN_MIN, RHO_FLOOR, m17_margins, m21_margins, m24_margins
 
-    con = _con(sf_dir)
+    con = oracle_connection(sf_dir)
     margins = m17_margins(con) + m21_margins(con)
     aft, rho = m24_margins(con)
     margins += aft

@@ -26,6 +26,26 @@ TABLES = [
 ]
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per engine table over the
+    parquet files in sf_dir: what every oracle SQL reads."""
+    con = duckdb.connect()
+    for tb in TABLES:
+        con.execute(f"CREATE VIEW {tb} AS SELECT * FROM read_parquet('{sf_dir}/{tb}.parquet')")
+    return con
+
+
+def oracle_sql(name: str, sf_dir: str) -> str | None:
+    """The oracle SQL of query `name` for the tables in sf_dir, or None
+    if it has none. Filesystem-fact oracles (s13 read_blob) name the
+    driver's fixed sf0.01 directory; this rewrites it to sf_dir, so a
+    run at another scale compares the files it actually reads."""
+    from realestate_engine.registry import ORACLES
+
+    sql = ORACLES.get(name)
+    return None if sql is None else sql.replace("/root/testdata/sf0.01", sf_dir)
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Canonicalize for order-insensitive comparison."""
     df = df.reindex(sorted(df.columns), axis=1).copy()
@@ -123,16 +143,14 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from realestate_engine.registry import QUERIES, ORACLES, load_all
+    from realestate_engine.registry import QUERIES, load_all
     from realestate_engine.session import create_session
 
     load_all()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = create_session("check_oracle", master=f"local[{cpus}]", shuffle_partitions=cpus)
 
-    con = duckdb.connect()
-    for tb in TABLES:
-        con.execute(f"CREATE VIEW {tb} AS SELECT * FROM read_parquet('{args.sf}/{tb}.parquet')")
+    con = oracle_connection(args.sf)
 
     names = args.names or sorted(QUERIES)
     n_pass = n_fail = n_rowsonly = 0
@@ -145,14 +163,12 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
             continue
-        if name not in ORACLES:
+        sql = oracle_sql(name, args.sf)
+        if sql is None:
             print(f"ROWS {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
             n_rowsonly += 1
             continue
         try:
-            # Filesystem-fact oracles (s13 read_blob) name the driver's
-            # fixed sf0.01 dir; rewrite for local multi-SF runs.
-            sql = ORACLES[name].replace("/root/testdata/sf0.01", args.sf)
             odf = con.execute(sql).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}")

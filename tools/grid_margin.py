@@ -21,9 +21,9 @@ from __future__ import annotations
 import argparse
 import sys
 
-import duckdb
-
 sys.path.insert(0, ".")
+
+from tools.check_oracle import oracle_connection  # noqa: E402
 
 # Minimum acceptable distance (in grid units) between a published
 # estimate and its nearest grid line, PER FAMILY: each oracle's
@@ -43,21 +43,6 @@ MARGIN_MIN = {"m17": 1e-8, "m21": 1e-5, "m24": 5e-3}
 # rho converging onto the 0.05 clamp means the published AFT point is
 # constrained, not the MLE; require strict clearance.
 RHO_FLOOR = 0.05
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(
-            f"CREATE VIEW {tbl} AS SELECT * FROM read_parquet('{sf_dir}/{tbl}.parquet')"
-        )
-    return con
-
 
 def _margin(scaled: float) -> float:
     frac = scaled % 1.0
@@ -119,7 +104,7 @@ def m24_margins(con) -> tuple[list[tuple[str, float]], float]:
 
 
 def run(sf_dir: str) -> int:
-    con = _con(sf_dir)
+    con = oracle_connection(sf_dir)
     margins = m17_margins(con) + m21_margins(con)
     aft, rho = m24_margins(con)
     margins += aft

@@ -21,16 +21,12 @@ import argparse
 import sys
 import time
 
-import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tools.check_oracle import oracle_connection, oracle_sql  # noqa: E402
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -122,22 +118,18 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from realestate_engine.registry import QUERIES, ORACLES, load_all
+    from realestate_engine.registry import QUERIES, load_all
     from realestate_engine.session import create_session
 
     load_all()
     spark = create_session()
-    con = duckdb.connect()
-    for tname in TABLES:
-        con.execute(
-            f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{args.sf}/{tname}.parquet')"
-        )
+    con = oracle_connection(args.sf)
 
     names = args.names or list(QUERIES)
     n_bad = 0
     t0 = time.time()
     for name in names:
-        sql = ORACLES.get(name)
+        sql = oracle_sql(name, args.sf)
         if sql is None and args.skip_rowsonly:
             continue
         try:
