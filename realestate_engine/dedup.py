@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import ORACLES, cache_once, register, shared, t
+from realestate_engine.registry import ORACLES, cache_once, iterate, register, shared, t
 
 # ---------------------------------------------------------------------------
 # Exact + keep-newest (SQL-checkable)
@@ -687,16 +687,12 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
     the old per-round localCheckpoint reported UnknownPartitioning, so
     every round re-shuffled the edges — VERDICT r14 #4). Each round is
     then ONE join + ONE aggregate: min(label over N(u) ∪ {u}) IS the
-    update rule, and the self-edge row carries u's own current label
-    through the same aggregate — both the new label and the old label
-    (for the convergence flag) fall out of one groupBy, so the r14
-    form's second per-round join (labels ⋈ neigh, an SMJ with two
-    ENSURE_REQUIREMENTS exchanges) is gone. Per-round labels are still
-    localCheckpoint'ed: the probe needs them materialized and the
-    lineage must not replay rounds 1..N-1. Output-identical: every
-    node is its own neighbor under a self-loop, so
-    min(N(u) ∪ {u}) == least(own, min neighbors) — the exact r14
-    update — and the flag compares the same two values."""
+    update rule, and the self-edge row makes u its own neighbor, so
+    min(N(u) ∪ {u}) == least(own, min neighbors) — the r14 update
+    without its second per-round join. Rounds run through ``iterate``;
+    its probe is the sum of labels: a label only ever falls (the min
+    step, then a jump to a smaller-or-equal id), so the sum repeats
+    exactly at the fixed point. DECIMAL(38,0) keeps it overflow-free."""
     half = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     mirrored = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -712,23 +708,16 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
     # growing with the data (edge partitions are bytes-derived at
     # scale). coalesce() is a narrow dependency — no extra shuffle.
     label_w = max(4, edges.rdd.getNumPartitions() // 8)
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame, r: int) -> DataFrame:
         stepped = (
             edges.join(
                 labels.select(F.col("id").alias("dst"), F.col("label").alias("nlabel")),
                 "dst",
             )
             .groupBy("src")
-            .agg(
-                F.min("nlabel").alias("label"),
-                # the (u, u) self-edge row carries u's current label
-                F.first(
-                    F.when(F.col("dst") == F.col("src"), F.col("nlabel")),
-                    ignorenulls=True,
-                ).alias("_old"),
-            )
-            .select(F.col("src").alias("id"), "label", "_old")
+            .agg(F.min("nlabel").alias("label"))
+            .select(F.col("src").alias("id"), "label")
         )
         # Pointer-doubling compression (Shiloach-Vishkin style): follow
         # one label indirection — label(u) is always itself a node id
@@ -736,32 +725,20 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
         # label(label(u)) ≤ label(u) stays inside u's component, so the
         # update is output-identical at the fixed point and cuts the
         # O(diameter) round count (measured 8 → 6 rounds, identical
-        # labels, at sf0.1). The convergence flag compares the FINAL
-        # label of the round against the round's starting label.
+        # labels, at sf0.1).
         l2 = stepped.select(F.col("id").alias("_lid"), F.col("label").alias("_llabel"))
-        new_labels = (
+        return (
             stepped.join(l2, stepped.label == F.col("_lid"))
-            .select(
-                "id",
-                F.col("_llabel").alias("label"),
-                (F.col("_llabel") != F.col("_old")).cast("int").alias("_chg"),
-            )
+            .select("id", F.col("_llabel").alias("label"))
             .coalesce(label_w)
-            .localCheckpoint()
         )
-        changed = new_labels.agg(F.sum("_chg")).first()[0]
-        labels = new_labels.drop("_chg")
-        if not changed:
-            break
-    else:
-        # fail loudly rather than return unconverged labels: a chain
-        # deeper than the budget assumed leaves some node still
-        # pointing past its component's min id
-        raise RuntimeError(
-            f"connected_components: no label fixed point after {max_iter} "
-            f"rounds; raise max_iter (the rounds needed grow with component "
-            f"depth) or use connected_components_twostar"
-        )
+
+    labels = iterate(
+        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id")),
+        step,
+        max_iter,
+        probe=lambda s: s.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0],
+    )[-1]
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -965,16 +942,14 @@ def connected_components_twostar(
       smallest known node (min(N(u) ∪ {u}));
     - small-star: every node links its smaller-or-self neighborhood
       to that neighborhood's min.
-    Convergence = edge-set fixed point, detected by an O(1) driver
-    checksum (count + order-independent hash sum), not a data collect;
-    localCheckpoint truncates per-round lineage. Returns (doc_id,
-    cluster_id = component min), same contract as
-    connected_components."""
+    Convergence = edge-set fixed point, detected by ``iterate``'s probe:
+    an O(1) driver checksum (count + order-independent hash sum), not a
+    data collect. Returns (doc_id, cluster_id = component min), same
+    contract as connected_components."""
     raw = pairs.select(
         F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v")
     )
     nodes = raw.select("u").union(raw.select(F.col("v").alias("u"))).distinct()
-    e = _mirror_distinct(raw).localCheckpoint()
 
     def checksum(edges: DataFrame):
         row = edges.agg(
@@ -984,9 +959,7 @@ def connected_components_twostar(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    prev = checksum(e)
-    converged = False
-    for _ in range(max_iter):
+    def step(e: DataFrame, r: int) -> DataFrame:
         # large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for v > u
         m = e.groupBy("u").agg(F.min("v").alias("mn")).select(
             "u", F.least("mn", F.col("u")).alias("m")
@@ -1005,22 +978,9 @@ def connected_components_twostar(
             F.when(F.col("v") == F.col("m"), F.col("u")).otherwise(F.col("v")).alias("u"),
             F.col("m").alias("v"),
         )
-        e = _mirror_distinct(ss).localCheckpoint()
-        cur = checksum(e)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # fail loudly rather than return possibly-wrong clusters: two-star
-        # converges in O(log n) rounds, so exhausting max_iter means the
-        # input is far larger than the budget assumed (or the checksum
-        # never reached a fixed point) — both are caller errors to surface
-        raise RuntimeError(
-            f"connected_components_twostar: no edge-set fixed point after "
-            f"{max_iter} rounds; raise max_iter (components of n nodes need "
-            f"~log2(n) rounds)"
-        )
+        return _mirror_distinct(ss)
+
+    e = iterate(_mirror_distinct(raw).localCheckpoint(), step, max_iter, probe=checksum)[-1]
     # converged: stars point every member at the component min
     labels = e.groupBy("u").agg(F.min("v").alias("mn")).select(
         "u", F.least("mn", F.col("u")).alias("label")

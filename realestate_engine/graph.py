@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.registry import cache_once, input_width, register, t
+from realestate_engine.registry import cache_once, input_width, iterate, register, t
 
 SCALE = 1_000_000_000_000  # 1e12 micro-rank units per unit of rank
 DAMPING_NUM, DAMPING_DEN = 85, 100  # 0.85 as an exact ratio
@@ -518,31 +518,21 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, n_rounds: int = KCORE_ROUNDS)
     Scale shape per round: one count agg on src (edges arrive mirrored,
     so src-degree IS node-degree) + two semi-join filters keyed on the
     same columns — all shuffles on node ids, state bounded by |nodes|.
-    localCheckpoint truncates the lineage so 8 rounds do not nest 8
-    join plans (the CC/two-star discipline, dedup.py).
+    Rounds run through ``iterate``, probed by the edge count: peeling
+    only ever REMOVES edges, so an equal count between rounds is the
+    fixpoint, and a budget that runs out before it raises. On the
+    testdata the peel converges in 2-3 of the 8 budgeted rounds."""
 
-    r14: rounds stop early once a peel removes no edges — peeling only
-    ever REMOVES edges, so an equal edge count between rounds is the
-    fixpoint and every remaining round is a no-op by definition (the
-    pytest convergence check has always asserted the fixpoint is
-    reached inside the budget). The count is an O(1) scalar on the
-    just-materialized checkpoint; on the testdata the peel converges
-    in 2-3 of the 8 budgeted rounds (5.6s -> 3.2s warm at sf0.1)."""
-    e = edges
-    n_edges = None
-    for _ in range(n_rounds):
+    def step(e: DataFrame, r: int) -> DataFrame:
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
-        e = (
+        return (
             e.join(keep, "src", "left_semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
             .select("src", "dst")
-            .localCheckpoint()
         )
-        n_after = e.count()
-        if n_after == n_edges:
-            break
-        n_edges = n_after
+
+    e = iterate(edges, step, n_rounds, probe=lambda s: s.count())[-1]
     return (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
@@ -1107,10 +1097,10 @@ def graph_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = F.least("src", "dst")
     hi = F.greatest("src", "dst")
     w = (lo * 1000003 + hi) % 2147483647
-    # Eager localCheckpoint, NOT cache_once: each pointer jump self-joins
-    # the previous frame, so a lazy plan doubles per jump (2^(rounds*jumps)
-    # analysis blow-up — the first attempt ran minutes at sf0.001 before
-    # this truncation). Same fix as dedup's connected components.
+    # Pinned eagerly (localCheckpoint, NOT cache_once), as iterate pins
+    # every round and pointer jump: each jump self-joins the previous
+    # frame, so a lazy chain doubles its plan per jump (2^(rounds*jumps)
+    # analysis blow-up — the first attempt ran minutes at sf0.001).
     ek = edges.select(
         "src",
         "dst",
@@ -1119,11 +1109,15 @@ def graph_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
         (w % _MST_WMOD).alias("wsmall"),
         ((w % _MST_WMOD) * 1099511627776 + lo * 1048576 + hi).alias("key"),
     ).localCheckpoint()
-    labels = ek.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    stats_rows = []
-    for r in range(_MST_ROUNDS):
+    by_round = []  # (round, chosen edges, contracted parents) per round
+
+    def jump_step(jump: DataFrame, r: int) -> DataFrame:
+        return jump.join(
+            jump.select(F.col("c").alias("p_c"), F.col("parent").alias("p_parent")),
+            F.col("p_c") == F.col("parent"),
+        ).select("c", F.col("p_parent").alias("parent"))
+
+    def round_step(labels: DataFrame, r: int) -> DataFrame:
         la = labels.select(F.col("node").alias("src"), F.col("label").alias("ca"))
         lb = labels.select(F.col("node").alias("dst"), F.col("label").alias("cb"))
         er = (
@@ -1151,18 +1145,19 @@ def graph_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        jump = parx
-        for _ in range(_MST_JUMPS):
-            nxt = jump.join(
-                jump.select(F.col("c").alias("p_c"), F.col("parent").alias("p_parent")),
-                F.col("p_c") == F.col("parent"),
-            ).select("c", F.col("p_parent").alias("parent"))
-            jump = nxt.localCheckpoint()
-        labels = (
+        jump = iterate(parx, jump_step, _MST_JUMPS)[-1]
+        by_round.append((r - 1, ch, jump))
+        return (
             labels.join(jump.select(F.col("c").alias("label"), "parent"), "label")
             .select("node", F.col("parent").alias("label"))
-            .localCheckpoint()
         )
+
+    labels0 = ek.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+    states = iterate(labels0, round_step, _MST_ROUNDS)
+    stats_rows = []
+    for (r, ch, jump), labels in zip(by_round, states[1:]):
         added = ch.select("elo", "ehi", "w").distinct().agg(
             F.count(F.lit(1)).alias("n_edges"),
             F.coalesce(F.sum("w"), F.lit(0)).alias("weight"),
@@ -1376,18 +1371,15 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: support is the standard triangle-enumeration join
     bounded by the min-support sparsifier (part_graph); each round is
-    edge-keyed shuffles only, and the edge frame is localCheckpoint()ed
-    per round so the iterative self-join lineage stays flat (the
-    Boruvka lesson, PLANS.md r7). part_graph's output is checkpointed
-    once before the loop too, so the rounds self-join a checkpoint
-    leaf rather than the cached relation's plan (measured warm at
-    sf0.1, local[4], 7 alternating pairs in one session: 2.36 -> 1.88 s
-    median). Each edge set is counted once: a round's n_edges_in is
-    the previous round's n_edges_out."""
-    edges = part_graph(spark, sf_dir, _MIN_SUPPORT).localCheckpoint()
-    n_in = edges.count()
-    census = []
-    for rnd in range(1, _KTRUSS_ROUNDS + 1):
+    edge-keyed shuffles only, and the rounds run through ``iterate``.
+    part_graph's output is checkpointed once before the loop too, so
+    the rounds self-join a checkpoint leaf rather than the cached
+    relation's plan (measured warm at sf0.1, local[4], 7 alternating
+    pairs in one session: 2.36 -> 1.88 s median). Each edge set is
+    counted once: a round's n_edges_in is the previous round's
+    n_edges_out."""
+
+    def step(edges: DataFrame, r: int) -> DataFrame:
         e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
         tris = (
             e1.join(e2, F.col("e2.u") == F.col("e1.v"))
@@ -1405,15 +1397,17 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(tris.select(F.col("a").alias("u"), F.col("c").alias("v")))
         )
         sup = roles.groupBy("u", "v").agg(F.count(F.lit(1)).cast("bigint").alias("support"))
-        edges = (
+        return (
             edges.join(sup, ["u", "v"])
             .filter(F.col("support") >= _KTRUSS_K - 2)
             .select("u", "v")
-            .localCheckpoint()
         )
-        n_out = edges.count()
-        census.append((rnd, n_in, n_out, n_in - n_out))
-        n_in = n_out
+
+    states = iterate(
+        part_graph(spark, sf_dir, _MIN_SUPPORT).localCheckpoint(), step, _KTRUSS_ROUNDS
+    )
+    n = [s.count() for s in states]
+    census = [(r, n[r - 1], n[r], n[r - 1] - n[r]) for r in range(1, len(n))]
     return spark.createDataFrame(
         census, "round int, n_edges_in bigint, n_edges_out bigint, n_removed bigint"
     ).orderBy("round")
@@ -1508,13 +1502,13 @@ def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     with both endpoints selected — computed, not assumed).
 
     Plan per round: two node-keyed equi-joins (undecided filter), one
-    groupBy(src) MAX, a left-anti removal, localCheckpoint to keep the
-    iterative lineage flat. Node-sized shuffles only; the edge list is
+    groupBy(src) MAX and a left-anti removal, the rounds run through
+    ``iterate``. Node-sized shuffles only; the edge list is
     partitioned once and reused — the Pregel posture. At 100 TB rounds
     stay O(E/p) with no skew beyond degree (cappable exactly like the
     link-prediction mid-degree guard)."""
     edges = trade_graph(spark, sf_dir)
-    und = cache_once(
+    und0 = cache_once(
         edges.select("src")
         .distinct()
         .select(
@@ -1530,9 +1524,9 @@ def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
     )
-    rounds = []
     mis_parts = []
-    for k in range(_MIS_ROUNDS):
+
+    def step(und: DataFrame, r: int) -> DataFrame:
         mx = (
             edges.join(und.select(F.col("node").alias("src")), "src")
             .join(und.select(F.col("node").alias("dst"), F.col("p").alias("pd")), "dst")
@@ -1546,14 +1540,15 @@ def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node")
             .localCheckpoint()
         )
+        mis_parts.append(winners)
         removed = winners.unionByName(
             edges.join(winners.select(F.col("node").alias("src")), "src").select(
                 F.col("dst").alias("node")
             )
         ).distinct()
-        und = und.join(removed, "node", "left_anti").localCheckpoint()
-        mis_parts.append(winners)
-        rounds.append((k + 1, winners, und))
+        return und.join(removed, "node", "left_anti")
+
+    undecided = iterate(und0, step, _MIS_ROUNDS)[1:]
     mis = mis_parts[0]
     for w in mis_parts[1:]:
         mis = mis.unionByName(w)
@@ -1567,7 +1562,7 @@ def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(mis.agg(F.count(F.lit(1)).cast("bigint").alias("mis_size"))))
     )
     spark_rounds = None
-    for k, winners, und_after in rounds:
+    for k, (winners, und_after) in enumerate(zip(mis_parts, undecided), 1):
         row = (
             winners.agg(F.count(F.lit(1)).cast("bigint").alias("n_selected"))
             .crossJoin(

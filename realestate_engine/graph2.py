@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realestate_engine.graph import _TRADE_EDGES_CTES, trade_graph
-from realestate_engine.registry import cache_once, register
+from realestate_engine.registry import cache_once, iterate, register
 
 _RICH_KS = [1, 2, 4, 8, 16, 32]
 
@@ -195,7 +195,7 @@ def graph_anf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     N(t) is monotone; on this bipartite customer<->supplier graph N(1)
     adds direct trade links, N(2) same-supplier co-buyers; the pytest
     pins monotonicity and N(0) = sampled-source count exactly.
-    Per-round localCheckpoint truncates the 3-round lineage.""".format(
+    The rounds run through ``iterate``.""".format(
         n=_ANF_ROUNDS, b=_ANF_WORD_BITS, m=_ANF_SAMPLE_MOD
     )
     edges = trade_graph(spark, sf_dir)
@@ -215,30 +215,24 @@ def graph_anf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     nsrc = state.agg(F.count(F.lit(1)).cast("bigint").alias("n_sources"))
-    counts = [
-        state.agg(
-            F.lit(0).cast("bigint").alias("t"),
-            F.sum(F.expr("BIT_COUNT(word)")).cast("bigint").alias("pairs_reached"),
-        )
-    ]
-    for i in range(_ANF_ROUNDS):
+
+    def step(state: DataFrame, r: int) -> DataFrame:
         nbr = edges.join(state, edges.src == state.node).select(
             F.col("dst").alias("node"), "widx", "word"
         )
-        state = (
+        return (
             nbr.unionByName(state.select("node", "widx", "word"))
             .groupBy("node", "widx")
             .agg(F.expr("CAST(BIT_OR(word) AS BIGINT)").alias("word"))
-            .localCheckpoint()
         )
-        counts.append(
-            state.agg(
-                F.lit(i + 1).cast("bigint").alias("t"),
-                F.sum(F.expr("BIT_COUNT(word)"))
-                .cast("bigint")
-                .alias("pairs_reached"),
-            )
+
+    counts = [
+        s.agg(
+            F.lit(i).cast("bigint").alias("t"),
+            F.sum(F.expr("BIT_COUNT(word)")).cast("bigint").alias("pairs_reached"),
         )
+        for i, s in enumerate(iterate(state, step, _ANF_ROUNDS))
+    ]
     out = counts[0]
     for c in counts[1:]:
         out = out.unionByName(c)
@@ -336,7 +330,7 @@ def graph_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     the selected-edge total. Plan: per round, one endpoint-keyed MAX
     agg + one equi-join back + two anti-joins — all 8-byte node-keyed
     shuffles off the cached canonical edge list (the MIS posture);
-    per-round localCheckpoint truncates lineage; oracle unrolls the
+    the rounds run through ``iterate``; the oracle unrolls the
     rounds as MATERIALIZED CTEs. Maximality within the horizon is
     reported honestly as n_alive_after (edges whose endpoints are all
     unmatched after round {n}).""".format(n=_MATCH_ROUNDS)
@@ -348,9 +342,9 @@ def graph_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"CAST({_MATCH_PRI_SPARK} AS BIGINT)").alias("pri"),
         )
     )
-    rounds = []
     sels = []
-    for r in range(1, _MATCH_ROUNDS + 1):
+
+    def step(alive: DataFrame, r: int) -> DataFrame:
         ep = alive.select(F.col("u").alias("node"), "pri").unionByName(
             alive.select(F.col("v").alias("node"), "pri")
         )
@@ -369,18 +363,18 @@ def graph_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(sel.select(F.col("v").alias("node")))
             .distinct()
         )
-        alive = (
+        return (
             alive.join(matched, alive.u == matched.node, "left_anti")
             .join(matched, alive.v == matched.node, "left_anti")
-            .localCheckpoint()
         )
-        rounds.append(
-            sel.agg(F.count(F.lit(1)).cast("bigint").alias("n_selected"))
-            .crossJoin(
-                alive.agg(F.count(F.lit(1)).cast("bigint").alias("n_alive_after"))
-            )
-            .select(F.lit(r).cast("bigint").alias("round"), "n_selected", "n_alive_after")
-        )
+
+    states = iterate(alive, step, _MATCH_ROUNDS)
+    rounds = [
+        sel.agg(F.count(F.lit(1)).cast("bigint").alias("n_selected"))
+        .crossJoin(alive.agg(F.count(F.lit(1)).cast("bigint").alias("n_alive_after")))
+        .select(F.lit(r).cast("bigint").alias("round"), "n_selected", "n_alive_after")
+        for r, (sel, alive) in enumerate(zip(sels, states[1:]), 1)
+    ]
     allsel = sels[0]
     for s in sels[1:]:
         allsel = allsel.unionByName(s)

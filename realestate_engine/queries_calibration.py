@@ -10,7 +10,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.queries_mleval import _NEWTON_D0, _NEWTON_D1
+from realestate_engine.queries_mleval import (
+    _IRLS_W,
+    _IRLS_W_SQL,
+    _NEWTON_D0,
+    _NEWTON_D1,
+    _newton_fit_sql,
+    newton_fit,
+)
 from realestate_engine.registry import cache_once, register, t
 
 
@@ -268,26 +275,15 @@ _PLATT_P = (
 )
 
 
-def _platt_step_sql(prev: str, stats: str, nxt: str) -> str:
-    """One Newton/IRLS step over (x, tm_micro) with SMOOTHED micro
-    targets tm instead of hard 0/1 labels — the actual Platt (1999)
-    detail that distinguishes this from a plain logistic fit."""
-    return f"""
-    {stats} AS MATERIALIZED (
-        SELECT ANY_VALUE(bb.a) AS a, ANY_VALUE(bb.b) AS b,
-               SUM(f.tm_micro - p) AS g0,
-               SUM(f.x * (f.tm_micro - p)) AS g1,
-               SUM(p * (1000000 - p) // 1000000) AS h00,
-               SUM(f.x * (p * (1000000 - p) // 1000000)) AS h01,
-               SUM(f.x * f.x * (p * (1000000 - p) // 1000000)) AS h11
-        FROM (SELECT x, tm_micro, {_PLATT_P} AS p
-              FROM feats f2 CROSS JOIN {prev} b2) f
-        CROSS JOIN {prev} bb
-    ),
-    {nxt} AS MATERIALIZED (
-        SELECT b + {_NEWTON_D0} AS b, a + {_NEWTON_D1} AS a
-        FROM {stats}
-    )"""
+# Newton/IRLS against SMOOTHED micro targets tm instead of hard 0/1
+# labels — the actual Platt (1999) detail that distinguishes this from
+# a plain logistic fit; the slope a is listed first.
+_PLATT_FIT = dict(
+    target="tm_micro",
+    term=("p", _PLATT_P),
+    params=(("a", _NEWTON_D1), ("b", _NEWTON_D0)),
+    rounds=_PLATT_ROUNDS,
+)
 
 
 _PLATT_ORACLE = f"""
@@ -308,17 +304,11 @@ _PLATT_ORACLE = f"""
         SELECT s.x, CASE WHEN s.y = 1 THEN g.tpos ELSE g.tneg END AS tm_micro
         FROM scored s CROSS JOIN tgt g
     ),
-    p0 AS (SELECT CAST(0 AS BIGINT) AS a, CAST(0 AS BIGINT) AS b),
-    {",".join(_platt_step_sql(f"p{i}", f"ps{i}", f"p{i + 1}") for i in range(_PLATT_ROUNDS))}
-    SELECT * FROM (
-        {" UNION ALL ".join(
-            f"SELECT CAST({i + 1} AS BIGINT) AS round, a AS a_micro, b AS b_micro,"
-            f" (SELECT n_pos FROM tgt) AS n_pos, (SELECT n_neg FROM tgt) AS n_neg"
-            f" FROM p{i + 1}"
-            for i in range(_PLATT_ROUNDS)
-        )}
-    ) ORDER BY round
-"""
+    {_newton_fit_sql(
+        weight=_IRLS_W_SQL,
+        carry=("(SELECT n_pos FROM tgt) AS n_pos", "(SELECT n_neg FROM tgt) AS n_neg"),
+        **_PLATT_FIT,
+    )}"""
 
 
 @register("m54_platt_scaling", _PLATT_ORACLE)
@@ -369,55 +359,4 @@ def m54_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_neg",
         )
     )
-    b = None
-    out_rows = []
-    for i in range(_PLATT_ROUNDS):
-        if b is None:
-            cur = feats.select(
-                "x",
-                "tm_micro",
-                "n_pos",
-                "n_neg",
-                F.lit(0).cast("bigint").alias("a"),
-                F.lit(0).cast("bigint").alias("b"),
-            )
-        else:
-            cur = feats.crossJoin(F.broadcast(b))
-        scored = cur.select(
-            "x", "tm_micro", "n_pos", "n_neg", "a", "b", F.expr(_PLATT_P).alias("p")
-        )
-        stats = scored.agg(
-            F.any_value("a").alias("a"),
-            F.any_value("b").alias("b"),
-            F.any_value("n_pos").alias("n_pos"),
-            F.any_value("n_neg").alias("n_neg"),
-            F.sum(F.col("tm_micro") - F.col("p")).alias("g0"),
-            F.sum(F.col("x") * (F.col("tm_micro") - F.col("p"))).alias("g1"),
-            F.sum(F.expr("p * (1000000 - p) div 1000000")).alias("h00"),
-            F.sum(F.col("x") * F.expr("p * (1000000 - p) div 1000000")).alias("h01"),
-            F.sum(
-                F.col("x") * F.col("x") * F.expr("p * (1000000 - p) div 1000000")
-            ).alias("h11"),
-        )
-        nxt = stats.select(
-            F.expr(f"a + {_NEWTON_D1}").alias("a"),
-            F.expr(f"b + {_NEWTON_D0}").alias("b"),
-            F.col("n_pos").alias("np_out"),
-            F.col("n_neg").alias("nn_out"),
-        )
-        out_rows.append(
-            nxt.select(
-                F.lit(i + 1).cast("bigint").alias("round"),
-                F.col("a").cast("bigint").alias("a_micro"),
-                F.col("b").cast("bigint").alias("b_micro"),
-                F.col("np_out").alias("n_pos"),
-                F.col("nn_out").alias("n_neg"),
-            )
-        )
-        # next iteration's params frame: (a, b) only — feats already
-        # carries n_pos/n_neg, so the cross-join must not duplicate them
-        b = nxt.select("a", "b")
-    res = out_rows[0]
-    for r_ in out_rows[1:]:
-        res = res.unionByName(r_)
-    return res.orderBy("round")
+    return newton_fit(feats, weight=_IRLS_W, carry=("n_pos", "n_neg"), **_PLATT_FIT)

@@ -22,7 +22,7 @@ from realestate_engine.queries_experiments import (
     _SURVIVAL_SUBJ_CTES,
     survival_census,
 )
-from realestate_engine.registry import cache_once, register, t
+from realestate_engine.registry import cache_once, iterate, register, t
 from realestate_engine.timeseries import _DAILY_CTE, daily_milli_events
 
 # --- A54: Kruskal-Wallis H (k-group rank ANOVA, tie-corrected) ---------------
@@ -673,12 +673,12 @@ def t34_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("src", "dst", "CAST(wgt * 1000000 DIV wsum AS BIGINT) AS p_micro")
         .localCheckpoint()
     )
-    pi = top.select("word", F.lit(1000000000).cast("bigint").alias("pi"))
-    for _ in range(_TR_ROUNDS):
+
+    def step(pi: DataFrame, r: int) -> DataFrame:
         contrib = pmat.join(pi, pi.word == pmat.src).selectExpr(
             "dst", "pi * p_micro DIV 1000000 * 85 DIV 100 AS term"
         )
-        pi = (
+        return (
             top.select("word")
             .join(
                 contrib.groupBy("dst").agg(F.sum("term").alias("s")),
@@ -691,8 +691,10 @@ def t34_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("pi"),
             )
-            .localCheckpoint()
         )
+
+    pi0 = top.select("word", F.lit(1000000000).cast("bigint").alias("pi"))
+    pi = iterate(pi0, step, _TR_ROUNDS)[-1]
     return (
         pi.join(top.select("word", "nx"), "word")
         .select(

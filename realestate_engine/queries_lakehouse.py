@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from realestate_engine.dedup import portable_hash32
-from realestate_engine.registry import cache_once, register, t
+from realestate_engine.registry import cache_once, iterate, register, t
 
 
 @register(
@@ -1226,7 +1226,7 @@ def x37_occ_conflict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     outcomes of txns < t (an aborted writer conflicts nobody), so this
     is a genuine recurrence: the oracle unrolls all 12 decisions as
     chained CTEs (the pagerank/Boruvka posture) and the Spark side
-    folds the same 12 rounds over a localCheckpointed decision frame
+    folds the same rounds over the decision frame through ``iterate``
     (protocol state is 12 rows — metadata-sized at any data scale; at
     100 TB the commit log is KBs while the table is TBs, exactly the
     x31/x36 split). Completes the lakehouse write path: x36 gates WHAT
@@ -1250,7 +1250,8 @@ def x37_occ_conflict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    for tid in range(1, _OCC_N_TXN):
+
+    def step(dec: DataFrame, tid: int) -> DataFrame:  # round r decides txn r
         cand = txns.where(F.col("txn_id") == tid)
         committed = dec.where(F.col("committed") == 1).select(
             F.col("txn_id").alias("c_txn"),
@@ -1276,7 +1277,9 @@ def x37_occ_conflict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("committed"),
             )
         )
-        dec = dec.unionByName(conflicts).localCheckpoint()
+        return dec.unionByName(conflicts)
+
+    dec = iterate(dec, step, _OCC_N_TXN - 1)[-1]
     w = Window.partitionBy("committed").orderBy("txn_id")
     return dec.select(
         "txn_id", "read_point", "p1", "p2", "n_conflicts", "committed",

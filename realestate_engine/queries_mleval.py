@@ -1192,9 +1192,8 @@ def m42_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the Cramer solve of the 2x2 system in DOUBLE (the Hessian products
 # cross 2^63) as one fixed IEEE expression tree, floored back to
 # integer micros. _NEWTON_D0 is the intercept delta, _NEWTON_D1 the
-# slope delta. The Spark fits (F.expr) and the oracles embed the same
-# text. Read by m43_logreg_newton, m50_poisson_newton and
-# m54_platt_scaling.
+# slope delta. newton_fit (F.expr) and _newton_fit_sql embed the same
+# text.
 _NEWTON_DET = "(CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)"
 _NEWTON_D0 = (
     "CAST(FLOOR((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)"
@@ -1205,6 +1204,105 @@ _NEWTON_D1 = (
     f" / {_NEWTON_DET} * 1000000) AS BIGINT)"
 )
 
+
+def newton_fit(
+    feats: DataFrame,
+    target: str,
+    term: tuple[str, str],
+    weight: str,
+    params: tuple[tuple[str, str], ...],
+    rounds: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Unrolled Newton fit of a 2-parameter GLM on ``feats`` (x, the
+    target's column and the ``carry`` columns), all parameters 0 at
+    start. Per round: a 1-row params frame crossJoin(broadcast) onto
+    feats, the per-row ``term`` = (name, SQL over x and the params),
+    ONE aggregate of the five sufficient statistics — gradient
+    against ``target`` (SQL, integer micros) and Hessian weight
+    ``weight`` (SQL) — and the step. ``params`` lists (name, delta)
+    in output order; the delta is _NEWTON_D0 for the intercept and
+    _NEWTON_D1 for the slope. Returns one row per round: round,
+    ``<name>_micro`` per parameter, then ``carry`` (constant per fit,
+    passed through any_value). The rounds stay one lazy plan (a union
+    of rounds); the oracle side is _newton_fit_sql. Read by
+    m43_logreg_newton, m50_poisson_newton and m54_platt_scaling."""
+    names = [n for n, _ in params]
+    w = F.expr(weight)
+    b = None
+    out = []
+    for i in range(rounds):
+        if b is None:
+            cur = feats.select(*feats.columns, *[F.lit(0).cast("bigint").alias(n) for n in names])
+        else:
+            cur = feats.crossJoin(F.broadcast(b))
+        scored = cur.select(*feats.columns, *names, F.expr(term[1]).alias(term[0]))
+        resid = F.expr(target) - F.col(term[0])
+        stats = scored.agg(
+            *[F.any_value(c).alias(c) for c in names + list(carry)],
+            F.sum(resid).alias("g0"),
+            F.sum(F.col("x") * resid).alias("g1"),
+            F.sum(w).alias("h00"),
+            F.sum(F.col("x") * w).alias("h01"),
+            F.sum(F.col("x") * F.col("x") * w).alias("h11"),
+        )
+        nxt = stats.select(*[F.expr(f"{n} + {d}").alias(n) for n, d in params], *carry)
+        out.append(
+            nxt.select(
+                F.lit(i + 1).cast("bigint").alias("round"),
+                *[F.col(n).cast("bigint").alias(f"{n}_micro") for n in names],
+                *[F.col(c).alias(c) for c in carry],
+            )
+        )
+        b = nxt.select(*names)
+    res = out[0]
+    for r_ in out[1:]:
+        res = res.unionByName(r_)
+    return res.orderBy("round")
+
+
+def _newton_fit_sql(
+    rounds: int,
+    target: str,
+    term: tuple[str, str],
+    weight: str,
+    params: tuple[tuple[str, str], ...],
+    carry: tuple[str, ...] = (),
+) -> str:
+    """The oracle side of newton_fit, to follow a ``feats`` CTE: the
+    rounds unrolled as MATERIALIZED CTEs nb0 (all parameters 0),
+    ns{i} (the statistics at nb{i}) and nb{i+1}, then the final SELECT
+    of one row per round. Arguments are newton_fit's in DuckDB syntax;
+    ``carry`` holds the SQL of the trailing output columns."""
+    tname, tsql = term
+    steps = [
+        "nb0 AS (SELECT " + ", ".join(f"CAST(0 AS BIGINT) AS {n}" for n, _ in params) + ")"
+    ]
+    for i in range(rounds):
+        steps.append(f"""
+    ns{i} AS MATERIALIZED (
+        SELECT {", ".join(f"ANY_VALUE({n}) AS {n}" for n, _ in params)},
+               SUM({target} - {tname}) AS g0,
+               SUM(x * ({target} - {tname})) AS g1,
+               SUM({weight}) AS h00,
+               SUM(x * ({weight})) AS h01,
+               SUM(x * x * ({weight})) AS h11
+        FROM (SELECT *, {tsql} AS {tname} FROM feats CROSS JOIN nb{i})
+    ),
+    nb{i + 1} AS MATERIALIZED (
+        SELECT {", ".join(f"{n} + {d} AS {n}" for n, d in params)} FROM ns{i}
+    )""")
+    cols = ", ".join([f"{n} AS {n}_micro" for n, _ in params] + list(carry))
+    return ",".join(steps) + f"""
+    SELECT * FROM (
+        {" UNION ALL ".join(
+            f"SELECT CAST({i} AS BIGINT) AS round, {cols} FROM nb{i}"
+            for i in range(1, rounds + 1)
+        )}
+    ) ORDER BY round
+"""
+
+
 _LR_ROUNDS = 3
 
 _LR_P = (
@@ -1213,23 +1311,17 @@ _LR_P = (
 )
 
 
-def _lr_step_sql(feats: str, prev: str, stats: str, nxt: str) -> str:
-    return f"""
-    {stats} AS (
-        SELECT ANY_VALUE(b.b0) AS b0, ANY_VALUE(b.b1) AS b1,
-               SUM(f.y * 1000000 - p) AS g0,
-               SUM(f.x * (f.y * 1000000 - p)) AS g1,
-               SUM(p * (1000000 - p) // 1000000) AS h00,
-               SUM(f.x * (p * (1000000 - p) // 1000000)) AS h01,
-               SUM(f.x * f.x * (p * (1000000 - p) // 1000000)) AS h11
-        FROM (SELECT x, y, {_LR_P} AS p FROM {feats} f2 CROSS JOIN {prev} b2) f
-        CROSS JOIN {prev} b
-    ),
-    {nxt} AS (
-        SELECT b0 + {_NEWTON_D0} AS b0, b1 + {_NEWTON_D1} AS b1
-        FROM {stats}
-    )"""
+# The logistic IRLS Hessian weight p(1 - p) in integer micros, per
+# engine (Spark's DIV is DuckDB's //); m43 and m54 weigh by it.
+_IRLS_W = "p * (1000000 - p) div 1000000"
+_IRLS_W_SQL = "p * (1000000 - p) // 1000000"
 
+_LR_FIT = dict(
+    target="y * 1000000",
+    term=("p", _LR_P),
+    params=(("b0", _NEWTON_D0), ("b1", _NEWTON_D1)),
+    rounds=_LR_ROUNDS,
+)
 
 _LR_ORACLE = f"""
     WITH feats AS MATERIALIZED (
@@ -1237,15 +1329,7 @@ _LR_ORACLE = f"""
                CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
         FROM lineitem
     ),
-    b0 AS (SELECT CAST(0 AS BIGINT) AS b0, CAST(0 AS BIGINT) AS b1),
-    {",".join(_lr_step_sql("feats", f"b{i}", f"st{i}", f"b{i + 1}") for i in range(_LR_ROUNDS))}
-    SELECT * FROM (
-        {" UNION ALL ".join(
-            f"SELECT CAST({i + 1} AS BIGINT) AS round, b0 AS b0_micro, b1 AS b1_micro FROM b{i + 1}"
-            for i in range(_LR_ROUNDS)
-        )}
-    ) ORDER BY round
-"""
+    {_newton_fit_sql(weight=_IRLS_W_SQL, **_LR_FIT)}"""
 
 
 @register("m43_logreg_newton", _LR_ORACLE)
@@ -1267,41 +1351,7 @@ def m43_logreg_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("x"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
     )
-    feats = cache_once(li)
-    b = None  # current params frame (1 row: b0, b1)
-    params_rows = []
-    for i in range(_LR_ROUNDS):
-        if b is None:
-            cur = feats.select(
-                "x", "y", F.lit(0).cast("bigint").alias("b0"), F.lit(0).cast("bigint").alias("b1")
-            )
-        else:
-            cur = feats.crossJoin(F.broadcast(b))
-        scored = cur.select("x", "y", "b0", "b1", F.expr(_LR_P).alias("p"))
-        stats = scored.agg(
-            F.any_value("b0").alias("b0"),
-            F.any_value("b1").alias("b1"),
-            F.sum(F.col("y") * 1000000 - F.col("p")).alias("g0"),
-            F.sum(F.col("x") * (F.col("y") * 1000000 - F.col("p"))).alias("g1"),
-            F.sum(F.expr("p * (1000000 - p) div 1000000")).alias("h00"),
-            F.sum(F.col("x") * F.expr("p * (1000000 - p) div 1000000")).alias("h01"),
-            F.sum(F.col("x") * F.col("x") * F.expr("p * (1000000 - p) div 1000000")).alias("h11"),
-        )
-        b = stats.select(
-            F.expr(f"b0 + {_NEWTON_D0}").alias("b0"),
-            F.expr(f"b1 + {_NEWTON_D1}").alias("b1"),
-        )
-        params_rows.append(
-            b.select(
-                F.lit(i + 1).cast("bigint").alias("round"),
-                F.col("b0").cast("bigint").alias("b0_micro"),
-                F.col("b1").cast("bigint").alias("b1_micro"),
-            )
-        )
-    res = params_rows[0]
-    for r_ in params_rows[1:]:
-        res = res.unionByName(r_)
-    return res.orderBy("round")
+    return newton_fit(cache_once(li), weight=_IRLS_W, **_LR_FIT)
 
 
 # --- M44: PCA leading component, closed form (2x2 eigenproblem) ---------------
@@ -1826,23 +1876,12 @@ _POIS_LAM = (
 )
 
 
-def _pois_step_sql(feats: str, prev: str, stats: str, nxt: str) -> str:
-    return f"""
-    {stats} AS (
-        SELECT ANY_VALUE(b.b0) AS b0, ANY_VALUE(b.b1) AS b1,
-               SUM(p.y * 1000000 - p.lam) AS g0,
-               SUM(p.x * (p.y * 1000000 - p.lam)) AS g1,
-               SUM(p.lam) AS h00,
-               SUM(p.x * p.lam) AS h01,
-               SUM(p.x * p.x * p.lam) AS h11
-        FROM (SELECT x, y, {_POIS_LAM} AS lam FROM {feats} f CROSS JOIN {prev} b2) p
-        CROSS JOIN {prev} b
-    ),
-    {nxt} AS (
-        SELECT b0 + {_NEWTON_D0} AS b0, b1 + {_NEWTON_D1} AS b1
-        FROM {stats}
-    )"""
-
+_POIS_FIT = dict(
+    target="y * 1000000",
+    term=("lam", _POIS_LAM),
+    params=(("b0", _NEWTON_D0), ("b1", _NEWTON_D1)),
+    rounds=_POIS_ROUNDS,
+)
 
 _POIS_ORACLE = f"""
     WITH feats AS MATERIALIZED (
@@ -1854,15 +1893,7 @@ _POIS_ORACLE = f"""
         JOIN (SELECT l_orderkey, COUNT(*) AS y FROM lineitem GROUP BY l_orderkey) c
           ON c.l_orderkey = o.o_orderkey
     ),
-    p0 AS (SELECT CAST(0 AS BIGINT) AS b0, CAST(0 AS BIGINT) AS b1),
-    {",".join(_pois_step_sql("feats", f"p{i}", f"ps{i}", f"p{i + 1}") for i in range(_POIS_ROUNDS))}
-    SELECT * FROM (
-        {" UNION ALL ".join(
-            f"SELECT CAST({i + 1} AS BIGINT) AS round, b0 AS b0_micro, b1 AS b1_micro FROM p{i + 1}"
-            for i in range(_POIS_ROUNDS)
-        )}
-    ) ORDER BY round
-"""
+    {_newton_fit_sql(weight="lam", **_POIS_FIT)}"""
 
 
 @register("m50_poisson_newton", _POIS_ORACLE)
@@ -1890,39 +1921,4 @@ def m50_poisson_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x"),
     )
     feats = cache_once(o.join(li, o.o_orderkey == li.l_orderkey).select("x", "y"))
-    b = None
-    out = []
-    for i in range(_POIS_ROUNDS):
-        if b is None:
-            cur = feats.select(
-                "x", "y",
-                F.lit(0).cast("bigint").alias("b0"),
-                F.lit(0).cast("bigint").alias("b1"),
-            )
-        else:
-            cur = feats.crossJoin(F.broadcast(b))
-        scored = cur.select("x", "y", "b0", "b1", F.expr(_POIS_LAM).alias("lam"))
-        stats = scored.agg(
-            F.any_value("b0").alias("b0"),
-            F.any_value("b1").alias("b1"),
-            F.sum(F.col("y") * 1000000 - F.col("lam")).alias("g0"),
-            F.sum(F.col("x") * (F.col("y") * 1000000 - F.col("lam"))).alias("g1"),
-            F.sum("lam").alias("h00"),
-            F.sum(F.col("x") * F.col("lam")).alias("h01"),
-            F.sum(F.col("x") * F.col("x") * F.col("lam")).alias("h11"),
-        )
-        b = stats.select(
-            F.expr(f"b0 + {_NEWTON_D0}").alias("b0"),
-            F.expr(f"b1 + {_NEWTON_D1}").alias("b1"),
-        )
-        out.append(
-            b.select(
-                F.lit(i + 1).cast("bigint").alias("round"),
-                F.col("b0").alias("b0_micro"),
-                F.col("b1").alias("b1_micro"),
-            )
-        )
-    res = out[0]
-    for r_ in out[1:]:
-        res = res.unionByName(r_)
-    return res.orderBy("round")
+    return newton_fit(feats, weight="lam", **_POIS_FIT)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realestate_engine.registry import register, t
+from realestate_engine.registry import iterate, register, t
 
 _BT_ROUNDS = 3
 _BT_INIT = 1_000_000  # strength micro-units; init = 1.0
@@ -141,10 +141,8 @@ def m55_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nij").alias("nji"),
         )
     ).localCheckpoint()
-    s = sym.select("i").distinct().select(
-        F.col("i").alias("item"), F.lit(_BT_INIT).cast("bigint").alias("s")
-    )
-    for _ in range(_BT_ROUNDS):
+
+    def step(s: DataFrame, r: int) -> DataFrame:
         upd = (
             sym.join(s.select(F.col("item").alias("i"), F.col("s").alias("si")), "i")
             .join(s.select(F.col("item").alias("j"), F.col("s").alias("sj")), "j")
@@ -163,14 +161,15 @@ def m55_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm = upd.agg(
             F.count(F.lit(1)).alias("k"), F.sum("s").alias("tot")
         )
-        s = (
-            upd.crossJoin(F.broadcast(norm))
-            .select(
-                "item",
-                F.expr(f"CAST(s * k * {_BT_INIT} div tot AS BIGINT)").alias("s"),
-            )
-            .localCheckpoint()
+        return upd.crossJoin(F.broadcast(norm)).select(
+            "item",
+            F.expr(f"CAST(s * k * {_BT_INIT} div tot AS BIGINT)").alias("s"),
         )
+
+    s0 = sym.select("i").distinct().select(
+        F.col("i").alias("item"), F.lit(_BT_INIT).cast("bigint").alias("s")
+    )
+    s = iterate(s0, step, _BT_ROUNDS)[-1]
     totals = sym.groupBy("i").agg(
         F.sum("nij").cast("bigint").alias("wins"),
         F.sum(F.col("nij") + F.col("nji")).cast("bigint").alias("games"),

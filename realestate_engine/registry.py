@@ -186,8 +186,8 @@ def shared(spark: SparkSession, key: tuple, build: Callable[[], DataFrame]) -> D
     (``t(...).alias("a")`` with ``F.col("a.x")``) or rename columns in
     a projection first.
 
-    Checkpoints. Iterative queries materialize their rounds with
-    ``localCheckpoint()``, and the memoized cluster labels are such a
+    Checkpoints. Iterative queries materialize their rounds through
+    ``iterate``, and the memoized cluster labels are such a
     checkpoint. Those blocks are not in the cache manager, so
     ``spark.catalog.clearCache()`` does not free them, and they have no
     lineage: on a cluster, losing the executor that holds them makes
@@ -208,6 +208,51 @@ def cache_once(df: DataFrame) -> DataFrame:
     entries live until ``reset`` (see ``shared``)."""
     lvl = df.storageLevel
     return df if (lvl.useMemory or lvl.useDisk) else df.cache()
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    probe: Callable[[DataFrame], object] | None = None,
+) -> list[DataFrame]:
+    """The round loop of every checkpointed iterative query: run
+    ``step(state, r)`` for r = 1, 2, ... and return every state, the
+    input first (census queries read per-round counts from the list;
+    the result is ``states[-1]``).
+
+    Materialization. Each round's state is ``localCheckpoint()``ed
+    once, here: the eager checkpoint truncates the lineage, so round r
+    plans against round r-1's blocks instead of nesting r copies of
+    the step — a step that self-joins its state doubles a lazy plan
+    per round (the Boruvka lesson, PLANS.md r7). The input is returned
+    as given; a caller whose step reads it twice pins it first.
+    By-products a step reads more than once (MIS winners, matching
+    selections) are checkpointed inside the step.
+
+    Stop rule. Without ``probe`` the loop runs exactly ``rounds``
+    rounds. A ``probe`` is a driver-side scalar of one round's state
+    that repeats only at the fixed point: the loop stops at the first
+    round whose value equals the previous round's (so it runs at least
+    two rounds), and raises RuntimeError when the ``rounds`` budget
+    runs out first — an unconverged state would be a silently wrong
+    answer. The checkpoints live until ``reset``."""
+    states = [state]
+    last = None
+    for r in range(1, rounds + 1):
+        state = step(state, r).localCheckpoint()
+        states.append(state)
+        if probe is not None:
+            cur = probe(state)
+            if r > 1 and cur == last:
+                return states
+            last = cur
+    if probe is not None:
+        name = step.__qualname__.split(".<locals>")[0]
+        raise RuntimeError(
+            f"{name}: no fixed point after {rounds} rounds; raise its round budget"
+        )
+    return states
 
 
 def reset(spark: SparkSession) -> None:

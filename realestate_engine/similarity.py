@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from realestate_engine.dedup import cosine_sim
-from realestate_engine.registry import cache_once, register, t
+from realestate_engine.registry import cache_once, iterate, register, t
 
 # Deterministic pseudo-random hyperplanes: plane b, component i has
 # sign +1 iff portable_hash32(f"{b}:{i}") is even (md5-prefix hash —
@@ -1625,9 +1625,8 @@ def sim_ivf_build_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the k x d centroid table into it (n·d·k partial rows combined
     map-side by (vec, cell) before the argmin window, which partitions
     by vec_id — thousands of vectors per task, no funnel); centroid
-    updates are (cell, dim)-keyed aggregates of k·d rows. Per-round
-    localCheckpoint keeps the iterative lineage flat (the Boruvka
-    lesson). This is the coarse-quantizer build that IVF-PQ
+    updates are (cell, dim)-keyed aggregates of k·d rows; the two
+    rounds run through ``iterate``. This is the coarse-quantizer build that IVF-PQ
     (sim_ivf_pq) consumes."""
     emb = t(spark, sf_dir, "embeddings")
     q = cache_once(
@@ -1655,21 +1654,17 @@ def sim_ivf_build_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "cell", "dist")
         )
 
-    def update(a: DataFrame, prev: DataFrame) -> DataFrame:
+    def update(prev: DataFrame, r: int) -> DataFrame:
         u = (
-            a.join(q, "vec_id")
+            assign(prev).join(q, "vec_id")
             .groupBy("cell", "dim")
             .agg(F.expr("CAST(SUM(qv) DIV COUNT(*) AS BIGINT)").alias("ucv"))
         )
-        return (
-            prev.join(u, ["cell", "dim"], "left")
-            .select("cell", "dim", F.coalesce("ucv", "cv").alias("cv"))
-            .localCheckpoint()
+        return prev.join(u, ["cell", "dim"], "left").select(
+            "cell", "dim", F.coalesce("ucv", "cv").alias("cv")
         )
 
-    for _ in range(2):
-        cents = update(assign(cents), cents)
-    final = assign(cents)
+    final = assign(iterate(cents, update, 2)[-1])
     return (
         final.groupBy("cell")
         .agg(

@@ -571,32 +571,66 @@ _CENTERED_CTES = """,
     dev AS (SELECT day_idx, v - mu.m AS d FROM daily, mu)"""
 
 
-@register(
-    "ts9_seasonal_decompose",
-    _DAILY_CTE + """,
+def seasonal_decomposition(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Classical additive decomposition of the daily series, shared by
+    ts9 and ts11: the daily totals (day_idx, v) over
+    daily_milli_events; the detrended days (day_idx, dow, v, tr, d)
+    where tr is the centered 7-day moving average (full windows only,
+    an integer division), dow = day_idx % 7 (calendar-free) and
+    d = v - tr; and the weekly seasonal index (dow, n_days, s), s the
+    integer mean of d per dow. The +/-3-day band self-join runs on the
+    tiny broadcast daily frame — deliberately chosen over an
+    unpartitioned ordered window, which would funnel the series
+    through one task (DESIGN.md no-global-window invariant). The
+    oracle is _DECOMPOSITION_CTES after _DAILY_CTE."""
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
+    a, b = daily.alias("a"), daily.alias("b")
+    trend = (
+        a.join(
+            F.broadcast(b),
+            (F.col("b.day_idx") >= F.col("a.day_idx") - 3)
+            & (F.col("b.day_idx") <= F.col("a.day_idx") + 3),
+        )
+        .groupBy(F.col("a.day_idx").alias("day_idx"), F.col("a.v").alias("v"))
+        .agg(F.when(F.count(F.col("b.day_idx")) == 7, F.expr("sum(b.v) div 7")).alias("tr"))
+    )
+    detr = trend.where(F.col("tr").isNotNull()).select(
+        "day_idx", (F.col("day_idx") % 7).alias("dow"), "v", "tr",
+        (F.col("v") - F.col("tr")).alias("d"),
+    )
+    seasonal = detr.groupBy("dow").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        F.expr("sum(d) div count(*)").alias("s"),
+    )
+    return daily, detr, seasonal
+
+
+_DECOMPOSITION_CTES = """,
     trend AS (
-        SELECT a.day_idx, a.v AS v_milli,
-               CASE WHEN COUNT(b.day_idx) = 7
-                    THEN SUM(b.v) // 7 END AS trend_milli
+        SELECT a.day_idx, a.v,
+               CASE WHEN COUNT(b.day_idx) = 7 THEN SUM(b.v) // 7 END AS tr
         FROM daily a JOIN daily b
           ON b.day_idx BETWEEN a.day_idx - 3 AND a.day_idx + 3
         GROUP BY a.day_idx, a.v
     ),
     detr AS (
-        SELECT day_idx, day_idx % 7 AS dow, v_milli - trend_milli AS d_milli
-        FROM trend WHERE trend_milli IS NOT NULL
+        SELECT day_idx, day_idx % 7 AS dow, v, tr, v - tr AS d
+        FROM trend WHERE tr IS NOT NULL
     ),
     seasonal AS (
-        SELECT dow, CAST(COUNT(*) AS BIGINT) AS n_days,
-               SUM(d_milli) // COUNT(*) AS seasonal_milli
+        SELECT dow, CAST(COUNT(*) AS BIGINT) AS n_days, SUM(d) // COUNT(*) AS s
         FROM detr GROUP BY dow
-    )
+    )"""
+
+
+@register(
+    "ts9_seasonal_decompose",
+    _DAILY_CTE + _DECOMPOSITION_CTES + """
     SELECT CAST(s.dow AS BIGINT) AS dow, s.n_days,
-           CAST(s.seasonal_milli AS BIGINT) AS seasonal_milli,
-           CAST(SUM(ABS(d.d_milli - s.seasonal_milli)) // s.n_days AS BIGINT)
-             AS mad_remainder_milli
+           CAST(s.s AS BIGINT) AS seasonal_milli,
+           CAST(SUM(ABS(d.d - s.s)) // s.n_days AS BIGINT) AS mad_remainder_milli
     FROM seasonal s JOIN detr d ON d.dow = s.dow
-    GROUP BY s.dow, s.n_days, s.seasonal_milli
+    GROUP BY s.dow, s.n_days, s.s
     ORDER BY s.dow
     """,
 )
@@ -605,49 +639,20 @@ def ts9_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-value series — centered 7-day moving-average trend (full
     windows only), detrend, weekly seasonal index per day-of-week
     (day_idx % 7, calendar-free), and the mean absolute remainder as
-    the decomposition-quality metric, over daily_milli_events. The MA
-    and both per-dow means are integer divisions; the +/-3-day band
-    self-join runs on the tiny broadcast daily frame — deliberately
-    chosen over an unpartitioned
-    ordered window, which would funnel the series through one task
-    (DESIGN.md no-global-window invariant)."""
-    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v_milli"))
-    a, b = daily.alias("a"), daily.alias("b")
-    trend = (
-        a.join(
-            F.broadcast(b),
-            (F.col("b.day_idx") >= F.col("a.day_idx") - 3)
-            & (F.col("b.day_idx") <= F.col("a.day_idx") + 3),
-        )
-        .groupBy(F.col("a.day_idx").alias("day_idx"), F.col("a.v_milli").alias("v_milli"))
-        .agg(
-            F.when(
-                F.count(F.col("b.day_idx")) == 7,
-                F.expr("sum(b.v_milli) div 7"),
-            ).alias("trend_milli")
-        )
-    )
-    detr = trend.where(F.col("trend_milli").isNotNull()).select(
-        "day_idx",
-        (F.col("day_idx") % 7).alias("dow"),
-        (F.col("v_milli") - F.col("trend_milli")).alias("d_milli"),
-    )
-    seasonal = detr.groupBy("dow").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.expr("sum(d_milli) div count(*)").alias("seasonal_milli"),
-    )
+    the decomposition-quality metric, over seasonal_decomposition."""
+    _, detr, seasonal = seasonal_decomposition(spark, sf_dir)
     return (
         detr.join(F.broadcast(seasonal), "dow")
-        .groupBy("dow", "n_days", F.col("seasonal_milli"))
+        .groupBy("dow", "n_days", F.col("s"))
         .agg(
-            F.expr("sum(abs(d_milli - seasonal_milli)) div n_days")
+            F.expr("sum(abs(d - s)) div n_days")
             .cast("bigint")
             .alias("mad_remainder_milli")
         )
         .select(
             F.col("dow").cast("bigint").alias("dow"),
             "n_days",
-            F.col("seasonal_milli").cast("bigint").alias("seasonal_milli"),
+            F.col("s").cast("bigint").alias("seasonal_milli"),
             "mad_remainder_milli",
         )
         .orderBy("dow")
@@ -709,21 +714,7 @@ def ts10_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts11_decomposition_strength",
-    _DAILY_CTE + """,
-    trend AS (
-        SELECT a.day_idx, a.v,
-               CASE WHEN COUNT(b.day_idx) = 7 THEN SUM(b.v) // 7 END AS tr
-        FROM daily a JOIN daily b
-          ON b.day_idx BETWEEN a.day_idx - 3 AND a.day_idx + 3
-        GROUP BY a.day_idx, a.v
-    ),
-    detr AS (
-        SELECT day_idx, day_idx % 7 AS dow, v, tr, v - tr AS d
-        FROM trend WHERE tr IS NOT NULL
-    ),
-    seasonal AS (
-        SELECT dow, SUM(d) // COUNT(*) AS s FROM detr GROUP BY dow
-    ),
+    _DAILY_CTE + _DECOMPOSITION_CTES + """,
     mu AS (SELECT SUM(v) // COUNT(*) AS m FROM daily),
     parts AS (
         SELECT d.d, d.d - se.s AS r,
@@ -759,22 +750,7 @@ def ts11_decomposition_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic cross-engine. Same no-funnel band-join discipline
     as ts9; the whole statistic is metadata-sized after the daily
     collapse."""
-    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(F.sum("v").alias("v"))
-    a, b = daily.alias("a"), daily.alias("b")
-    trend = (
-        a.join(
-            F.broadcast(b),
-            (F.col("b.day_idx") >= F.col("a.day_idx") - 3)
-            & (F.col("b.day_idx") <= F.col("a.day_idx") + 3),
-        )
-        .groupBy(F.col("a.day_idx").alias("day_idx"), F.col("a.v").alias("v"))
-        .agg(F.when(F.count(F.col("b.day_idx")) == 7, F.expr("sum(b.v) div 7")).alias("tr"))
-    )
-    detr = trend.where(F.col("tr").isNotNull()).select(
-        "day_idx", (F.col("day_idx") % 7).alias("dow"), "v", "tr",
-        (F.col("v") - F.col("tr")).alias("d"),
-    )
-    seasonal = detr.groupBy("dow").agg(F.expr("sum(d) div count(*)").alias("s"))
+    daily, detr, seasonal = seasonal_decomposition(spark, sf_dir)
     # center the seasonally-adjusted series on the global daily mean
     # BEFORE the moment pass (the ts10/ev17 overflow rule: full-
     # magnitude daily totals squared cross 2^63 at sf0.1; variance is

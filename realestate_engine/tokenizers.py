@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import cache_once, register, t
+from realestate_engine.registry import cache_once, iterate, register, t
 
 def _bpe_pair_counts(vocab: DataFrame) -> DataFrame:
     """Adjacent-symbol pair counts over a (sym array<string>, freq)
@@ -42,8 +42,8 @@ def _bpe_learn(spark: SparkSession, sf_dir: str, rounds: int) -> tuple[list, Dat
     vocabulary, split into symbols, goes through ``rounds`` merge
     rounds: one pair-count aggregate (_bpe_pair_counts) and a 1-row
     argmax pull to the driver (lexicographic tie-break), then the
-    merge applied corpus-wide as a space-joined regexp rewrite, with
-    a localCheckpoint per round. Returns the merges as (round, left,
+    merge applied corpus-wide as a space-joined regexp rewrite; the
+    rounds run through ``iterate``. Returns the merges as (round, left,
     right, pair_count) tuples and the final (word, sym, freq)
     vocabulary."""
     d = t(spark, sf_dir, "documents")
@@ -67,16 +67,17 @@ def _bpe_learn(spark: SparkSession, sf_dir: str, rounds: int) -> tuple[list, Dat
         .localCheckpoint()
     )
     merges = []
-    for rnd in range(rounds):
+
+    def step(vocab: DataFrame, r: int) -> DataFrame:
         top = (
             _bpe_pair_counts(vocab)
             .orderBy(F.desc("cnt"), "l", "r")
             .limit(1)
             .collect()[0]
         )
-        merges.append((rnd + 1, top["l"], top["r"], int(top["cnt"])))
+        merges.append((r, top["l"], top["r"], int(top["cnt"])))
         pat = "(?<= )\\Q" + top["l"] + "\\E \\Q" + top["r"] + "\\E(?= )"
-        vocab = vocab.select(
+        return vocab.select(
             "word",
             F.split(
                 F.trim(
@@ -89,7 +90,9 @@ def _bpe_learn(spark: SparkSession, sf_dir: str, rounds: int) -> tuple[list, Dat
                 " ",
             ).alias("sym"),
             "freq",
-        ).localCheckpoint()
+        )
+
+    vocab = iterate(vocab, step, rounds)[-1]
     return merges, vocab
 
 

@@ -110,18 +110,73 @@ def test_connected_components_match_union_find(spark, pairs):
         assert got == want, cc.__name__
 
 
-def test_connected_components_raises_when_rounds_run_out(spark):
-    """A chain too deep for the round budget raises instead of
-    returning unconverged labels; the default budget still matches
-    union-find on the same chain."""
-    from realestate_engine.dedup import connected_components
+def _path(n: int) -> list[tuple[int, int]]:
+    return [(i, i + 1) for i in range(n - 1)]
 
-    chain = [(i, i + 1) for i in range(32)]
-    df = spark.createDataFrame(chain, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="no label fixed point after 2 rounds"):
-        connected_components(df, max_iter=2)
-    got = {r.doc_id: r.cluster_id for r in connected_components(df).collect()}
-    assert got == _union_find_labels(chain)
+
+# (loop, input builder, raising budget, converging budget, exact answer)
+_PROBE_LOOPS = {
+    "connected_components": (
+        lambda spark: spark.createDataFrame(_path(33), "id_a long, id_b long"),
+        {"max_iter": 2},
+        {},
+        lambda got: {r.doc_id: r.cluster_id for r in got}
+        == _union_find_labels(_path(33)),
+    ),
+    "connected_components_twostar": (
+        lambda spark: spark.createDataFrame(_path(33), "id_a long, id_b long"),
+        {"max_iter": 2},
+        {},
+        lambda got: {r.doc_id: r.cluster_id for r in got}
+        == _union_find_labels(_path(33)),
+    ),
+    # a path has no 2-core: each synchronous round peels one edge off
+    # either end, so 21 nodes need 10 peels plus the round that repeats
+    "kcore_peel": (
+        lambda spark: spark.createDataFrame(
+            [e for a, b in _path(21) for e in ((a, b), (b, a))], "src long, dst long"
+        ),
+        {"k": 2, "n_rounds": 2},
+        {"k": 2, "n_rounds": 11},
+        lambda got: got == [],
+    ),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_PROBE_LOOPS))
+def test_connected_components_raises_when_rounds_run_out(spark, loop):
+    """A fixed-point loop whose round budget runs out raises instead of
+    returning an unconverged state (connected components, two-star and
+    k-core share iterate's one stop rule); a large enough budget gives
+    the exact answer on the same input."""
+    from realestate_engine import dedup, graph
+
+    fn = getattr(dedup, loop, None) or getattr(graph, loop)
+    build, short, enough, exact = _PROBE_LOOPS[loop]
+    df = build(spark)
+    with pytest.raises(RuntimeError, match=f"{loop}: no fixed point after 2 rounds"):
+        fn(df, **short).collect()
+    assert exact(fn(df, **enough).collect())
+
+
+def test_iterate_checkpoints_every_round(spark):
+    """Without a probe, iterate runs exactly ``rounds`` rounds and returns
+    rounds + 1 states, each a checkpoint: its plan is a leaf that reads
+    no join, however many self-joins the rounds stacked."""
+    from realestate_engine.registry import iterate
+
+    def step(s, r):
+        other = s.select(F.col("id").alias("id2"), (F.col("x") + r).alias("x2"))
+        return s.join(other, s.id == other.id2).select("id", (F.col("x") + F.col("x2")).alias("x"))
+
+    s0 = spark.range(8).select("id", F.col("id").alias("x")).localCheckpoint()
+    states = iterate(s0, step, 3)
+    assert len(states) == 4
+    for s in states:
+        plan = s._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in plan and "Join" not in plan, plan
+    # x_r = 2 * x_{r-1} + r from x_0 = id: 2id + 1, 4id + 4, 8id + 11
+    assert sorted(tuple(r) for r in states[-1].collect()) == [(i, 8 * i + 11) for i in range(8)]
 
 
 def test_portable_hash_pipeline_matches_duckdb(spark):

@@ -31,7 +31,7 @@ SHARED_RELATION_QUERIES = [
     "dq27_rater_agreement", "m62_dawid_skene",
     # dsir_terms
     "t28_dsir_importance_weights", "corpus_curation_funnel",
-    # daily_milli_events / centered_daily
+    # daily_milli_events / centered_daily / seasonal_decomposition
     "ts9_seasonal_decompose", "ts10_autocorrelation", "ts11_decomposition_strength",
     "ts13_ljung_box", "ts14_phase_folding_periodogram",
     "ts15_mann_kendall", "ts16_granger_causality", "ts17_cross_correlation",
@@ -41,7 +41,7 @@ SHARED_RELATION_QUERIES = [
     # pair_shingle_sets / cluster_members
     "dedup_minhash_lsh", "dedup_lsh_recall_report", "dedup_threshold_sweep",
     "dedup_minhash_incremental", "dedup_canonical_selection", "dedup_pipeline_summary",
-    # _NEWTON_D0/_NEWTON_D1, ols_moments, als_ratings
+    # newton_fit, ols_moments, als_ratings
     "m43_logreg_newton", "m50_poisson_newton", "m54_platt_scaling",
     "m26_ols_normal_equations", "m37_linear_shap",
     "m16_als_recommend", "m20_als_recall_eval",

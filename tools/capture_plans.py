@@ -5,9 +5,9 @@ Usage: python tools/capture_plans.py <tag> <suffix> [name ...]
   suffix  "before" or "after"
   names   query names; default = bench.py HEADLINE list
 
-The judge cannot run Spark; these files are the plan-shape evidence
-for OPTIMIZATION_r{N}.md claims (guide §1: capture the plan before and
-after every substantive change).
+The dumps are for local before/after diffs of a change (capture the
+plan before and after every substantive change); plans/ is not
+committed. tools/plan_audit.py is the per-query plan-shape summary.
 """
 
 from __future__ import annotations
