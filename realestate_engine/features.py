@@ -37,13 +37,23 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
+from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
+from pyspark.ml.feature import (
+    OneHotEncoder,
+    OneHotEncoderModel,
+    StringIndexer,
+    StringIndexerModel,
+    VectorAssembler,
+)
+from pyspark.ml.linalg import Vector, Vectors
 
-from realestate_engine.queries_functions import EIFFEL_LAT, EIFFEL_LON, haversine_km
+from realestate_engine.queries_functions import EARTH_RADIUS_KM, EIFFEL_LAT, EIFFEL_LON, haversine_km
 
 CATEGORICAL_FEATURES = ["property_type", "energy_performance_category", "ghg_category", "exposition"]
 NUMERIC_FEATURES = [
@@ -64,9 +74,8 @@ NUMERIC_FEATURES = [
 DERIVED_FEATURES = ["distance_to_eiffel", "rooms_per_m2", "is_house", "log_size", "log_land_size"]
 CAPPED_COLUMNS = ["size", "land_size", "nb_rooms", "nb_bedrooms", "nb_bathrooms", "floor", "nb_photos"]
 
-# Imputation defaults (reference :49-67): strict mode fills numerics
-# with 0 and categoricals with 'missing'; permissive (inference) mode
-# additionally tolerates unseen categories via handleInvalid='keep'.
+# Imputation defaults (reference :49-67), the same in both modes:
+# numerics fill with 0 and categoricals with 'missing'.
 _NUMERIC_FILL = 0.0
 _CATEGORICAL_FILL = "missing"
 
@@ -96,6 +105,30 @@ def add_derived_features(df: DataFrame) -> DataFrame:
     )
 
 
+def derived_row(r: dict[str, Any]) -> dict[str, float]:
+    """``add_derived_features`` for one imputed row in plain Python: the
+    same expressions in the same order. NumPy's sin/cos/sqrt/arcsin give
+    NaN where Spark's do (infinite or out-of-range coordinates); ``math``'s
+    would raise."""
+    lat, lon = r["approximate_latitude"], r["approximate_longitude"]
+    size, land = r["size"], r["land_size"]
+    dlat = np.radians(EIFFEL_LAT - lat)
+    dlon = np.radians(EIFFEL_LON - lon)
+    with np.errstate(invalid="ignore"):
+        a = (
+            np.sin(dlat / 2) ** 2
+            + np.cos(np.radians(lat)) * np.cos(np.radians(EIFFEL_LAT)) * np.sin(dlon / 2) ** 2
+        )
+        distance = 2 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
+    return {
+        "distance_to_eiffel": float(distance),
+        "rooms_per_m2": r["nb_rooms"] / size if size > 0 else 0.0,
+        "is_house": 1.0 if r["property_type"] in ("house", "villa", "maison") else 0.0,
+        "log_size": float(np.log(size)) if size > 0 else 0.0,
+        "log_land_size": float(np.log(land)) if land > 0 else 0.0,
+    }
+
+
 def add_price_per_m2(df: DataFrame) -> DataFrame:
     """Train-only analytics column (deviation B2 — intended but never
     built in the reference, notebooks/02:111)."""
@@ -106,9 +139,14 @@ def add_price_per_m2(df: DataFrame) -> DataFrame:
 class FeatureEngineering:
     """Fit/transform feature pipeline with persisted fit state.
 
-    strict_mode=True  → training: unseen categories error-skip.
-    strict_mode=False → inference: unseen categories kept (reference
-    src/models/train.py:210 reconstructs in permissive mode).
+    strict_mode=True  → training: the StringIndexers skip (drop) rows
+    with an unseen category.
+    strict_mode=False → inference (reference src/models/train.py:210
+    reconstructs in permissive mode). A pipeline fitted here would keep
+    unseen categories as an extra index, but served artifacts are fitted
+    strict and keep their 'skip' stages; ``PredictionService`` clamps
+    unseen and null categories to the fitted labels before this runs
+    (serving.py, ``_clamp_unseen``).
     """
 
     def __init__(self, strict_mode: bool = True):
@@ -175,6 +213,60 @@ class FeatureEngineering:
         df = add_derived_features(df)
         df = self.apply_capping(df)
         return self.pipeline_model.transform(df)
+
+    def row_encoder(self) -> Callable[[dict[str, Any]], Vector]:
+        """``transform`` for one record on the driver, in plain Python:
+        impute → derive (on the uncapped values) → cap, then each input of
+        the fitted VectorAssembler in its order, a categorical as its
+        StringIndexer index one-hot encoded the way its OneHotEncoder
+        does, and the vector in the assembler's dense or sparse form
+        (Spark's ``Vector.compressed``), so a model sees the same bits on
+        both paths. The encoder raises ValueError on a category its
+        indexer has not seen, where the Spark path's 'skip' drops the row.
+        Pinned to ``transform`` by tests/test_serving.py."""
+        if self.pipeline_model is None:
+            raise RuntimeError("FeatureEngineering is not fitted; call fit_transform first")
+        stages = self.pipeline_model.stages
+        index = {  # indexed column -> (categorical, {label: index})
+            s.getOutputCol(): (s.getInputCol(), {label: i for i, label in enumerate(s.labels)})
+            for s in stages
+            if isinstance(s, StringIndexerModel)
+        }
+        onehot = {}  # encoded column -> (categorical, {label: index}, width)
+        for s in stages:
+            if isinstance(s, OneHotEncoderModel):
+                (src,), (dst,), (n,) = s.getInputCols(), s.getOutputCols(), s.categorySizes
+                width = n - s.getDropLast() + (s.getHandleInvalid() == "keep")
+                onehot[dst] = (*index[src], width)
+        assembled = next(s for s in stages if isinstance(s, VectorAssembler)).getInputCols()
+        caps = self.capping_values
+
+        def encode(rec: dict[str, Any]) -> Vector:
+            r = {}
+            for c in NUMERIC_FEATURES:
+                v = rec.get(c)
+                r[c] = _NUMERIC_FILL if v is None or v != v else v  # na.fill also fills NaN
+            for c in CATEGORICAL_FEATURES:
+                r[c] = _CATEGORICAL_FILL if rec.get(c) is None else rec[c]
+            r.update(derived_row(r))
+            for c, (lo, hi) in caps.items():
+                r[c] = min(max(r[c], lo), hi)
+            vec = []
+            for c in assembled:
+                if c not in onehot:
+                    vec.append(float(r[c]))
+                    continue
+                src, labels, width = onehot[c]
+                i = labels.get(r[src])
+                if i is None:
+                    raise ValueError(f"unseen {src} category {r[src]!r}")
+                vec.extend(1.0 if j == i else 0.0 for j in range(width))
+            nonzero = {i: v for i, v in enumerate(vec) if v != 0.0}
+            if 1.5 * (len(nonzero) + 1.0) < len(vec):
+                return Vectors.sparse(len(vec), nonzero)
+            return Vectors.dense(vec)
+
+        return encode
 
     # -- persistence (reference :295-340) ----------------------------------
     def save(self, path: str) -> None:

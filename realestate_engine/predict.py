@@ -1,18 +1,25 @@
-"""Batch and single-row inference (SURVEY.md §2.9 M13; reference:
+"""Batch inference (SURVEY.md §2.9 M13; reference:
 src/inference/predict.py:14-62, src/webapp/app.py:68-112).
 
 Composition: FeatureEngineering.transform (permissive mode) → model
-transform → smearing inverse → (id, predicted price). Single-row
-prediction reuses the exact same path via a 1-row DataFrame with the
-explicit 27-field schema — no separate code path to drift."""
+transform → smearing inverse → (id, predicted price).
+
+Single-record prediction does not build a 1-row DataFrame (the
+reference's src/inference/predict.py:62 shape, two Spark jobs per
+record): ``PredictionService.single`` (serving.py) scores on the driver
+with the row scorer, i.e. ``FeatureEngineering.row_encoder``, one
+``model.predict`` call and ``TargetTransformer.inverse_value``. That is
+a second code path; ``test_single_matches_batch_path`` in
+tests/test_serving.py pins it to this one to the cent for rf, lr and
+gbt, on generated listings and on null, unseen, zero, NaN and
+out-of-range inputs."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from realestate_engine.features import FeatureEngineering
-from realestate_engine.schemas import LISTINGS_SCHEMA
 from realestate_engine.target import TargetTransformer
 from realestate_engine.train import ModelTrainer
 
@@ -32,16 +39,3 @@ def predict_batch(
     out = tt.inverse_transform(preds, prediction_col="prediction")
     return out.select(F.col(id_col), F.col("prediction_price").alias("predicted_price"))
 
-
-def predict_single(
-    spark: SparkSession,
-    record: dict,
-    fe: FeatureEngineering,
-    trainer: ModelTrainer,
-    tt: TargetTransformer,
-) -> DataFrame:
-    """Single-row prediction through the batch path (reference:
-    src/inference/predict.py:62 createDataFrame([dict], schema))."""
-    row = tuple(record.get(f.name) for f in LISTINGS_SCHEMA.fields)
-    df = spark.createDataFrame([row], LISTINGS_SCHEMA)
-    return predict_batch(df, fe, trainer, tt)

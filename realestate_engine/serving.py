@@ -13,18 +13,30 @@ module provides the same two operations behind:
   from any UI or notebook;
 - ``serve()`` — a zero-dependency ``http.server`` JSON API
   (GET /health, POST /predict, POST /predict_batch) for the
-  container-without-streamlit case. One request = one Spark job; the
-  SparkSession, fitted features, target stats and model are loaded
-  once per process, exactly like the reference's ``@st.cache_resource``
-  ``init_resources`` (app.py:28-45).
+  container-without-streamlit case. The SparkSession, fitted features,
+  target stats and model are loaded once per process, exactly like the
+  reference's ``@st.cache_resource`` ``init_resources`` (app.py:28-45).
+
+Two paths, one answer:
+- POST /predict scores its one listing on the driver and launches no
+  Spark job: the type check ``createDataFrame`` would run, then the
+  fitted features as plain Python (``FeatureEngineering.row_encoder``),
+  one py4j ``model.predict`` call and the smearing inverse. The
+  reference built a 1-row DataFrame per request (src/webapp/app.py:51),
+  which cost two Spark jobs per listing.
+- POST /predict_batch and ``batch_df`` stay one lazy DataFrame plan
+  (the 100 TB shape), and they are the reference the driver path is
+  held to: tests/test_serving.py::test_single_matches_batch_path
+  checks ``single()`` against ``batch_df`` to the cent, for rf, lr and
+  gbt, on generated listings and on null, unseen and out-of-range
+  inputs.
 
 Fidelity notes vs the reference webapp:
 - the batch-mode data-quality report (app.py:74-101) ran ONE count()
   job per column in a Python loop; ``batch_audit`` computes the same
   numbers in a single aggregate pass (the 100 TB shape);
-- predictions come back smearing-corrected in price space via the
-  same inverse-transform path as the CLI/batch entry points — there
-  is no webapp-only code path to drift.
+- predictions come back smearing-corrected in price space, as from the
+  CLI/batch entry points.
 """
 
 from __future__ import annotations
@@ -32,15 +44,22 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
+import time
 from typing import Any
 
+from pyspark.ml.feature import StringIndexerModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, _make_type_verifier
 
-from realestate_engine.features import FeatureEngineering
+from realestate_engine.features import _CATEGORICAL_FILL, FeatureEngineering
 from realestate_engine.predict import predict_batch
+from realestate_engine.schemas import LISTINGS_SCHEMA
 from realestate_engine.target import TargetTransformer
 from realestate_engine.train import ModelTrainer
+
+_DOUBLE_FIELDS = {f.name for f in LISTINGS_SCHEMA.fields if isinstance(f.dataType, DoubleType)}
 
 
 class PredictionService:
@@ -65,6 +84,19 @@ class PredictionService:
         self.fe = fe
         self.trainer = trainer
         self.tt = tt
+        # Everything the driver-side scorer reads, built here once: the
+        # HTTP handlers call single() from concurrent threads.
+        self._verify = _make_type_verifier(LISTINGS_SCHEMA)  # createDataFrame's check
+        self._encode = fe.row_encoder()
+        # categorical -> (fitted labels, the label unseen and null values
+        # are served as); both paths clamp with it. Empty in strict mode.
+        self._vocab = {}
+        if not fe.strict_mode:
+            for stage in fe.pipeline_model.stages:
+                if isinstance(stage, StringIndexerModel):
+                    labels = list(stage.labels)
+                    fallback = _CATEGORICAL_FILL if _CATEGORICAL_FILL in labels else labels[0]
+                    self._vocab[stage.getInputCol()] = (labels, fallback)
 
     @classmethod
     def load(cls, spark: SparkSession, artifact_dir: str) -> "PredictionService":
@@ -80,26 +112,15 @@ class PredictionService:
         """Serve-time guard (round-6 fix): the fitted StringIndexers
         carry handleInvalid='skip' from strict training, which silently
         DROPS any request row holding an unseen category — a form
-        submission would vanish and .first() return None. Switching the
+        submission would get no price. Switching the
         fitted stages to 'keep' is not an option either: it grows the
         one-hot width past what the model was trained on. So clamp each
         categorical to the fitted vocabulary instead — unseen or null
         values map to the imputation fill if it was fitted, else the
         most frequent label (index 0) — and every request yields a
         prediction, which is the reference webapp's contract."""
-        from pyspark.ml.feature import StringIndexerModel
-
-        from realestate_engine.features import _CATEGORICAL_FILL
-
-        if self.fe.strict_mode or self.fe.pipeline_model is None:
-            return df
-        for stage in self.fe.pipeline_model.stages:
-            if isinstance(stage, StringIndexerModel):
-                col = stage.getInputCol().removesuffix("_indexed")
-                if col not in df.columns:
-                    continue
-                labels = list(stage.labels)
-                fallback = _CATEGORICAL_FILL if _CATEGORICAL_FILL in labels else labels[0]
+        for col, (labels, fallback) in self._vocab.items():
+            if col in df.columns:
                 df = df.withColumn(
                     col,
                     F.when(F.col(col).isin(labels), F.col(col)).otherwise(F.lit(fallback)),
@@ -109,17 +130,22 @@ class PredictionService:
     # -- single prediction (app.py predict_single, :52-66) --------------
 
     def single(self, record: dict[str, Any]) -> dict[str, Any]:
-        from realestate_engine.schemas import LISTINGS_SCHEMA
-
-        row_df = self.spark.createDataFrame(
-            [tuple(record.get(f.name) for f in LISTINGS_SCHEMA.fields)], LISTINGS_SCHEMA
-        )
-        row = self.batch_df(row_df).first()
-        if row is None:
-            raise ValueError("prediction pipeline produced no row for this record")
+        """One listing, scored on the driver with no Spark job. It accepts
+        and rejects what ``createDataFrame(..., LISTINGS_SCHEMA)`` would,
+        except that a JSON integer in a double field is taken as a float
+        (browsers send ``JSON.stringify(50.0)`` as ``50``)."""
+        rec = {f.name: record.get(f.name) for f in LISTINGS_SCHEMA.fields}
+        for name in _DOUBLE_FIELDS:
+            if type(rec[name]) is int:  # not bool, which the verifier rejects
+                rec[name] = float(rec[name])
+        self._verify(tuple(rec.values()))
+        for col, (labels, fallback) in self._vocab.items():
+            if rec[col] not in labels:
+                rec[col] = fallback
+        prediction = self.trainer.model.predict(self._encode(rec))
         return {
-            "id_annonce": row["id_annonce"],
-            "predicted_price": round(float(row["predicted_price"]), 2),
+            "id_annonce": rec["id_annonce"],
+            "predicted_price": round(self.tt.inverse_value(prediction), 2),
         }
 
     # -- batch prediction + audit (app.py predict_batch, :68-112) -------
@@ -141,8 +167,6 @@ class PredictionService:
 
     def batch_csv(self, csv_path: str) -> tuple[list[dict[str, Any]], dict[str, Any]]:
         """CSV in → (predictions, audit), the full upload flow."""
-        from realestate_engine.schemas import LISTINGS_SCHEMA
-
         listings = self.spark.read.schema(LISTINGS_SCHEMA).option("header", "true").csv(csv_path)
         audit = self.batch_audit(listings)
         preds = [
@@ -152,12 +176,38 @@ class PredictionService:
         return preds, audit
 
 
+class RouteStats:
+    """Per-route request count, error count (status >= 400) and total
+    handler seconds, updated by concurrent handler threads under one
+    lock."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._routes: dict[str, dict[str, float]] = {}
+
+    def record(self, route: str, status: int, seconds: float) -> None:
+        with self._lock:
+            r = self._routes.setdefault(route, {"requests": 0, "errors": 0, "seconds": 0.0})
+            r["requests"] += 1
+            r["errors"] += status >= 400
+            r["seconds"] += seconds
+
+    def snapshot(self) -> dict[str, dict[str, float]]:
+        with self._lock:
+            return {route: dict(r) for route, r in self._routes.items()}
+
+
+_ROUTES = {"/", "/form", "/health", "/predict", "/predict_batch"}
+
+
 def serve(service: PredictionService, host: str = "127.0.0.1", port: int = 0):
     """Zero-dependency HTTP JSON API over a PredictionService.
 
     Routes:
     - ``GET  /`` (or /form)    → the interactive HTML form UI
-    - ``GET  /health``         → {"status": "ok"}
+    - ``GET  /health``         → {"status": "ok", "routes": {route:
+      {"requests", "errors", "seconds"}}}, counted since the server
+      started (unknown paths count under "other")
     - ``POST /predict``        → body: one listing as a JSON object
     - ``POST /predict_batch``  → body: CSV text (same columns as
       X_test.csv, header row required) → {"predictions": [...],
@@ -169,11 +219,16 @@ def serve(service: PredictionService, host: str = "127.0.0.1", port: int = 0):
     """
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+    stats = RouteStats()
+
     class Handler(BaseHTTPRequestHandler):
         def _send(self, code: int, payload: dict) -> None:
-            body = json.dumps(payload).encode()
+            self._reply(code, "application/json", json.dumps(payload).encode())
+
+        def _reply(self, code: int, content_type: str, body: bytes) -> None:
+            self._status = code
             self.send_response(code)
-            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Type", content_type)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
@@ -181,20 +236,30 @@ def serve(service: PredictionService, host: str = "127.0.0.1", port: int = 0):
         def log_message(self, *args) -> None:  # quiet test logs
             pass
 
+        def _timed(self, handle) -> None:
+            self._status = 500  # unless a reply is sent
+            t0 = time.perf_counter()
+            try:
+                handle()
+            finally:
+                route = self.path if self.path in _ROUTES else "other"
+                stats.record(route, self._status, time.perf_counter() - t0)
+
         def do_GET(self) -> None:
+            self._timed(self._get)
+
+        def do_POST(self) -> None:
+            self._timed(self._post)
+
+        def _get(self) -> None:
             if self.path == "/health":
-                self._send(200, {"status": "ok"})
+                self._send(200, {"status": "ok", "routes": stats.snapshot()})
             elif self.path in ("/", "/form"):
-                body = render_form_page().encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "text/html; charset=utf-8")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._reply(200, "text/html; charset=utf-8", render_form_page().encode())
             else:
                 self._send(404, {"error": f"no route {self.path}"})
 
-        def do_POST(self) -> None:
+        def _post(self) -> None:
             length = int(self.headers.get("Content-Length", 0))
             raw = self.rfile.read(length)
             try:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,12 +46,20 @@ class TargetTransformer:
     def inverse_transform(self, df: DataFrame, prediction_col: str = "prediction") -> DataFrame:
         """exp(pred) with the smearing factor exp(σ²/2): E[price] for a
         log-normal, not just the median."""
+        return df.withColumn(
+            f"{prediction_col}_price", F.exp(F.col(prediction_col)) * F.exp(F.lit(self._correction()))
+        )
+
+    def inverse_value(self, prediction: float) -> float:
+        """``inverse_transform`` of one prediction on the driver. NumPy's
+        exp overflows to inf as Spark's does; ``math.exp`` would raise."""
+        with np.errstate(over="ignore"):
+            return float(np.exp(prediction) * np.exp(self._correction()))
+
+    def _correction(self) -> float:
         if self.stats is None:
             raise RuntimeError("TargetTransformer is not fitted")
-        correction = float(self.stats["log_std"]) ** 2 / 2.0
-        return df.withColumn(
-            f"{prediction_col}_price", F.exp(F.col(prediction_col)) * F.exp(F.lit(correction))
-        )
+        return float(self.stats["log_std"]) ** 2 / 2.0
 
     def save(self, path: str) -> None:
         if self.stats is None:

@@ -13,8 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from realestate_engine.features import FeatureEngineering, add_price_per_m2
-from realestate_engine.predict import predict_batch, predict_single
+from realestate_engine.predict import predict_batch
 from realestate_engine.schemas import LISTINGS_SCHEMA
+from realestate_engine.serving import PredictionService
 from realestate_engine.target import TargetTransformer
 from realestate_engine.train import ModelTrainer
 
@@ -112,12 +113,12 @@ def test_ep2_ep3_train_persist_reload_predict(listings_and_prices, tmp_path):
     assert all(p.predicted_price is not None and math.isfinite(p.predicted_price) for p in preds)
     assert all(50000.0 < p.predicted_price < 5e6 for p in preds)
 
-    # EP3 single-row: same path, same answer as the batch row
+    # EP3 single-row: scored on the driver, the batch row's price to the cent
     rng = random.Random(7)
     rec = {f.name: v for f, v in zip(LISTINGS_SCHEMA.fields, _listing(0, rng))}
-    single = predict_single(x.sparkSession, rec, fe2, trainer2, tt2).first()
+    single = PredictionService(x.sparkSession, fe2, trainer2, tt2).single(rec)
     batch_row = next(p for p in preds if p.id_annonce == 0)
-    assert single.predicted_price == pytest.approx(batch_row.predicted_price, rel=1e-9)
+    assert single["predicted_price"] == round(batch_row.predicted_price, 2)
 
 
 def test_model_quality_story_heldout_and_stability(listings_and_prices):

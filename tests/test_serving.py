@@ -1,12 +1,16 @@
 """The webapp-analogue serving surface (serving.py): artifact load →
-single + batch prediction over a stdlib HTTP JSON API, asserted
-against the direct batch path so the served numbers cannot drift."""
+single + batch prediction over a stdlib HTTP JSON API. The driver-side
+single-listing scorer is asserted against the Spark batch path, to
+the cent, so the served numbers cannot drift."""
 
 from __future__ import annotations
 
 import json
+import math
 import random
+import sys
 import threading
+import urllib.error
 import urllib.request
 
 import pytest
@@ -14,9 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from realestate_engine.features import FeatureEngineering
-from realestate_engine.predict import predict_batch
 from realestate_engine.schemas import LISTINGS_SCHEMA
-from realestate_engine.serving import PredictionService, serve
+from realestate_engine.serving import PredictionService, RouteStats, serve
 from realestate_engine.target import TargetTransformer
 from realestate_engine.train import ModelTrainer
 
@@ -58,8 +61,9 @@ def _listing(i: int, rng: random.Random) -> tuple:
     return tuple(rec.get(f.name) for f in LISTINGS_SCHEMA.fields)
 
 
-@pytest.fixture(scope="module")
-def service(spark, tmp_path_factory):
+def _train_service(spark, root, model_type: str):
+    """Fit features, target and a ``model_type`` model on 300 generated
+    listings, save the artifacts under ``root`` and load them back."""
     rng = random.Random(11)
     x = spark.createDataFrame([_listing(i, rng) for i in range(300)], LISTINGS_SCHEMA)
     y = x.select(
@@ -70,23 +74,82 @@ def service(spark, tmp_path_factory):
     fe = FeatureEngineering(strict_mode=True)
     feats = fe.fit_transform(joined)
     tt = TargetTransformer().fit(feats)
-    trainer = ModelTrainer(model_type="rf", label_col="log_price").train(tt.transform(feats))
-    root = tmp_path_factory.mktemp("artifacts")
+    trainer = ModelTrainer(model_type=model_type, label_col="log_price").train(tt.transform(feats))
     fe.save(str(root / "fe"))
     tt.save(str(root / "tt.json"))
     trainer.save(str(root / "model"))
     return PredictionService.load(spark, str(root)), x
 
 
-def test_single_matches_batch_path(service):
-    svc, x = service
-    rec = x.filter(F.col("id_annonce") == 3).first().asDict()
-    got = svc.single(rec)
-    direct = predict_batch(
-        x.filter(F.col("id_annonce") == 3), svc.fe, svc.trainer, svc.tt
-    ).first()
-    assert got["id_annonce"] == 3
-    assert got["predicted_price"] == pytest.approx(round(direct["predicted_price"], 2))
+@pytest.fixture(scope="module")
+def service(spark, tmp_path_factory):
+    return _train_service(spark, tmp_path_factory.mktemp("artifacts"), "rf")
+
+
+@pytest.fixture(scope="module", params=["rf", "lr", "gbt"])
+def model_service(request, spark, tmp_path_factory):
+    return _train_service(spark, tmp_path_factory.mktemp(request.param), request.param)
+
+
+def _edge_cases(rng: random.Random) -> list[dict]:
+    """Listings that exercise every fill, clamp and guard of the feature
+    path: null and unseen categoricals, size 0 or NaN, null land_size,
+    null coordinates and rooms, and coordinates or values whose derived
+    features or prediction are NaN or infinite on the Spark side."""
+    changes = [
+        {"property_type": None},
+        {"exposition": "Nord", "energy_performance_category": "Unknown"},
+        {"property_type": "maison", "ghg_category": None},
+        {"size": 0.0},
+        {"size": float("nan")},
+        {"land_size": None},
+        {"approximate_latitude": None, "approximate_longitude": None},
+        {"nb_rooms": None},
+        {"approximate_latitude": 130.0, "approximate_longitude": -177.7},
+        {"approximate_latitude": float("inf")},
+        {"energy_performance_value": 1e300},
+    ]
+    base = [dict(zip(LISTINGS_SCHEMA.fieldNames(), _listing(i, rng))) for i in range(len(changes))]
+    return [{**rec, **change, "id_annonce": -1 - i} for i, (rec, change) in enumerate(zip(base, changes))]
+
+
+def _cents(price: float):
+    return "nan" if math.isnan(price) else round(price, 2)
+
+
+def test_single_matches_batch_path(model_service):
+    """The drift guard for the driver-side scorer: every single() price
+    equals batch_df's on the same listing, to the cent, on 240
+    unseen generated listings and on every edge case."""
+    svc, _x = model_service
+    rng = random.Random(23)
+    recs = [dict(zip(LISTINGS_SCHEMA.fieldNames(), _listing(i, rng))) for i in range(1000, 1240)]
+    recs += _edge_cases(rng)
+    df = svc.spark.createDataFrame(
+        [tuple(r[f] for f in LISTINGS_SCHEMA.fieldNames()) for r in recs], LISTINGS_SCHEMA
+    )
+    want = {r["id_annonce"]: _cents(r["predicted_price"]) for r in svc.batch_df(df).collect()}
+    got = {}
+    for rec in recs:
+        out = svc.single(rec)
+        got[out["id_annonce"]] = _cents(out["predicted_price"])
+    assert len(want) == len(recs)
+    assert got == want
+
+
+def test_single_launches_no_spark_job(service):
+    svc, _x = service
+    sc = svc.spark.sparkContext
+    rng = random.Random(5)
+    tag = "test.single.no_job"
+    sc.setJobGroup(tag, "single() on the driver")
+    try:
+        for i in range(5):
+            svc.single(dict(zip(LISTINGS_SCHEMA.fieldNames(), _listing(2000 + i, rng))))
+        svc.single(_edge_cases(rng)[0])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(tag)) == []
 
 
 def test_batch_audit_single_pass(service):
@@ -107,7 +170,7 @@ def test_http_api_end_to_end(service, tmp_path):
     try:
         base = f"http://127.0.0.1:{port}"
         with urllib.request.urlopen(f"{base}/health", timeout=30) as r:
-            assert json.load(r) == {"status": "ok"}
+            assert json.load(r)["status"] == "ok"
 
         rng = random.Random(11)
         rec = {f.name: v for f, v in zip(LISTINGS_SCHEMA.fields, _listing(0, rng))}
@@ -133,11 +196,23 @@ def test_http_api_end_to_end(service, tmp_path):
         assert {p["id_annonce"] for p in batch["predictions"]} == set(range(20))
         assert all(p["predicted_price"] > 0 for p in batch["predictions"])
 
-        # malformed request → HTTP 400, server stays alive
-        bad = urllib.request.Request(f"{base}/predict", data=b"not json")
-        with pytest.raises(urllib.error.HTTPError) as ei:
-            urllib.request.urlopen(bad, timeout=30)
-        assert ei.value.code == 400
+        # malformed request, or a value the listing schema does not accept
+        # → HTTP 400, server stays alive
+        bad_bodies = [b"not json", b"[1, 2]"] + [
+            json.dumps({**rec, **change}).encode()
+            for change in (
+                {"floor": 2.5},
+                {"size": "abc"},
+                {"nb_rooms": True},
+                {"size": True},
+                {"id_annonce": 2**31},
+            )
+        ]
+        for body in bad_bodies:
+            bad = urllib.request.Request(f"{base}/predict", data=body)
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(bad, timeout=30)
+            assert ei.value.code == 400, body
         with urllib.request.urlopen(f"{base}/health", timeout=30) as r:
             assert json.load(r)["status"] == "ok"
     finally:
@@ -145,10 +220,18 @@ def test_http_api_end_to_end(service, tmp_path):
         server.server_close()
 
 
+def _js_json(payload: dict) -> bytes:
+    """``JSON.stringify`` of ``payload``: a whole-number float such as
+    50.0 goes over the wire as ``50``."""
+    return json.dumps(
+        {k: int(v) if isinstance(v, float) and v.is_integer() else v for k, v in payload.items()}
+    ).encode()
+
+
 def test_form_page_serves_and_default_submission_predicts(service):
     """GET / returns the interactive form with the reference webapp's
-    exact fields and option lists; POSTing the form's default payload
-    (what the inline JS assembles) yields a prediction."""
+    exact fields and option lists; POSTing the form's default payload,
+    serialized as the inline JS serializes it, yields a prediction."""
     from realestate_engine.serving import _CATS, _NUMS, render_form_page
 
     svc, _x = service
@@ -175,12 +258,70 @@ def test_form_page_serves_and_default_submission_predicts(service):
         }
         for name, _label, default, _step in _NUMS:
             payload[name] = default
-        req = urllib.request.Request(f"{base}/predict", data=json.dumps(payload).encode())
+        body = _js_json(payload)
+        assert b'"size": 50,' in body and b'"land_size": 0,' in body
+        req = urllib.request.Request(f"{base}/predict", data=body)
         with urllib.request.urlopen(req, timeout=120) as r:
             out = json.load(r)
         assert out["predicted_price"] > 0
+        assert out == svc.single(payload)
     finally:
         server.shutdown()
+        server.server_close()
+
+
+def test_health_reports_per_route_counts(service):
+    """GET /health reports each route's request count, error count and
+    total seconds since the server started."""
+    svc, _x = service
+    server = serve(svc, port=0)
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    try:
+        base = f"http://127.0.0.1:{server.server_address[1]}"
+        rng = random.Random(3)
+        for i in range(3):
+            rec = dict(zip(LISTINGS_SCHEMA.fieldNames(), _listing(i, rng)))
+            with urllib.request.urlopen(
+                urllib.request.Request(f"{base}/predict", data=json.dumps(rec).encode()), timeout=30
+            ):
+                pass
+        for url, data in ((f"{base}/predict", b"{\"floor\": 2.5}"), (f"{base}/nowhere", None)):
+            with pytest.raises(urllib.error.HTTPError):
+                urllib.request.urlopen(urllib.request.Request(url, data=data), timeout=30)
+        with urllib.request.urlopen(f"{base}/health", timeout=30) as r:
+            health = json.load(r)
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert health["status"] == "ok"
+    routes = health["routes"]
+    assert set(routes) == {"/predict", "other"}
+    assert routes["/predict"]["requests"] == 4 and routes["/predict"]["errors"] == 1
+    assert routes["other"]["requests"] == 1 and routes["other"]["errors"] == 1
+    assert 0 < routes["/predict"]["seconds"] < 30
+
+
+def test_route_stats_counts_every_concurrent_request():
+    """16 threads recording at once lose no update."""
+    stats = RouteStats()
+
+    def hammer() -> None:
+        for i in range(2000):
+            stats.record("/predict", 400 if i % 4 == 0 else 200, 0.5)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert stats.snapshot() == {"/predict": {"requests": 32000, "errors": 8000, "seconds": 16000.0}}
 
 
 def test_eda_report_distributed_figures(service, tmp_path):
