@@ -26,7 +26,9 @@ clustering coefficient, k-truss and Adamic-Adar read part_graph; the
 two BPE queries share _bpe_learn), then the nine queries newly on a
 shared loop or fit (the four iterate callers not listed above, the
 three Newton fits on newton_fit, ts9 and ts11 on
-seasonal_decomposition), then the 15 stalest ledger names.
+seasonal_decomposition), then the 15 media round-trip and probe
+queries that run through the one per-document Python stage,
+multimodal.doc_rows.
 """
 
 from __future__ import annotations
@@ -64,15 +66,13 @@ _WINDOW = [
     "m55_bradley_terry", "t34_textrank_keywords", "sim_ivf_build_exact",
     "x37_occ_conflict_audit", "m43_logreg_newton", "m50_poisson_newton",
     "m54_platt_scaling", "ts9_seasonal_decompose", "ts11_decomposition_strength",
-    # --- the 15 stalest ledger names outside the above, per
-    #     `python tools/ledger.py stale --exclude-window` after folding
-    #     CORRECTNESS_r13..r15 into COVERAGE.md
-    "dq8_id_gap_islands", "dq9_referential_integrity", "f16_mom_growth",
-    "m23_roc_auc_ranksum", "mm_ahash_neardup", "mm_scene_cut",
-    "p14_dense_reid", "pack_documents_greedy",
-    "range_join_clicks_before_purchase", "s22_csv_malformed_modes",
-    "s24_bucketed_join_no_shuffle", "scd2_intervals", "sim_lsh_ann",
-    "st_stateful_running_totals", "text_contamination_ngrams",
+    # --- one per-document media stage: the 15 callers of doc_rows
+    #     (multimodal.py, queries_media_probes.py)
+    "mm_jpeg_roundtrip", "mm_jpeg_progressive", "mm_jpeg_lossless",
+    "mm_flac_roundtrip", "mm_wav_roundtrip", "mm_gif_roundtrip", "mm_mjpeg_avi",
+    "mm_tiff_probe", "mm_png_crc_audit", "mm_flac_crc_audit",
+    "mm_mp4_probe", "mm_ogg_probe", "mm_mp3_probe", "mm_ogg_crc_audit",
+    "mm_bmp_roundtrip",
 ]
 assert len(_WINDOW) == 50, len(_WINDOW)
 assert len(set(_WINDOW)) == 50

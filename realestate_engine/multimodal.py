@@ -53,10 +53,11 @@ from realestate_engine.registry import cache_once, input_width, register, t
 
 def _decode_width(spark: SparkSession, sf_dir: str) -> int:
     """Partition width for the Python-codec mapInPandas stages (encode/
-    decode of PNG/JPEG/WAV/FLAC/... payloads keyed by doc_id). r15,
-    guide §2 / VERDICT r14 #3: this replaces a hard-coded
-    ``repartition(8, "doc_id")`` at every decode site — a local-mode
-    constant that would cap a 100 TB media table at 8-way parallelism.
+    decode of PNG/JPEG/WAV/FLAC/... payloads keyed by doc_id): the
+    ``doc_rows`` stage and the two stages that keep their own loop,
+    ``mm_png_decode`` and ``mm_phash_dct``. It replaced a hard-coded
+    ``repartition(8, "doc_id")`` — a local-mode constant that would cap
+    a 100 TB media table at 8-way parallelism.
     Width derives from the documents table's bytes at one partition
     per 64 KB — the pure-Python codecs cost ~10^3-10^4 CPU cycles per
     source byte, so a "partition" of codec work saturates a core at a
@@ -70,6 +71,32 @@ def _decode_width(spark: SparkSession, sf_dir: str) -> int:
     $SPARK_GRAFT_BATCH_PARTS overrides for production tuning."""
     return input_width(
         spark, sf_dir, "documents", mb_per_part=0.0625, python_floor=True
+    )
+
+
+def doc_rows(
+    spark: SparkSession, sf_dir: str, n_docs: int, row, schema: str, *cols: str
+) -> DataFrame:
+    """The one per-document Python stage of the media round-trip and
+    probe queries: the documents with ``doc_id < n_docs`` (plus any
+    ``cols``), hash-partitioned on doc_id at ``_decode_width``, one
+    ``row(doc_id, *cols)`` call per document inside an Arrow-batched
+    mapInPandas, sorted by doc_id. ``row`` returns the columns after
+    doc_id as a tuple in ``schema`` order; the stage puts doc_id first.
+    Frames are built positionally (Spark assigns integer-labelled
+    columns by position), so ``schema`` is the only statement of the
+    output columns."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            docs = zip(map(int, pdf["doc_id"]), *(pdf[c] for c in cols))
+            yield pd.DataFrame([(d, *row(d, *vals)) for d, *vals in docs])
+
+    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < n_docs).select("doc_id", *cols)
+    return (
+        d.repartition(_decode_width(spark, sf_dir), "doc_id")
+        .mapInPandas(batches, schema)
+        .orderBy("doc_id")
     )
 
 
@@ -228,19 +255,26 @@ def decode_image_stub(payload: bytes) -> dict:
     }
 
 
-def extract_image_features(binary_df: DataFrame) -> DataFrame:
+def payload_features(binary_df: DataFrame, decode, schema: T.StructType) -> DataFrame:
     """Arrow-batched feature extraction over a binary column via
-    mapInPandas — the pattern for any per-media Python stage. Input
-    schema: (doc_id long, payload binary)."""
+    mapInPandas — the stage for any media payload that arrives as data.
+    Input schema: (doc_id long, payload binary); ``decode(payload)``
+    returns one feature dict per payload, keyed by the names of
+    ``schema``'s columns after doc_id."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = [decode_image_stub(bytes(p)) for p in pdf["payload"]]
-            out = pd.DataFrame(feats)
+            out = pd.DataFrame([decode(bytes(p)) for p in pdf["payload"]])
             out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
-    return binary_df.mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
+    return binary_df.mapInPandas(batches, schema)
+
+
+def extract_image_features(binary_df: DataFrame) -> DataFrame:
+    """Image features of (doc_id, payload) rows: decode_image_stub over
+    payload_features."""
+    return payload_features(binary_df, decode_image_stub, IMAGE_FEATURES_SCHEMA)
 
 
 @register(
@@ -351,52 +385,36 @@ def mm_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w, h = _JPEG_W, _JPEG_H
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                rgb = bytes(
-                    v
-                    for y in range(h)
-                    for x in range(w)
-                    for v in (
-                        (x * 255) // (w - 1),
-                        (y * 255) // (h - 1),
-                        (d * 37) % 256,
-                    )
-                )
-                payload = encode_jpeg(
-                    w, h, rgb, quality=85,
-                    subsample=(d % 2 == 1),
-                    restart_interval=(2 if d % 3 == 0 else 0),
-                )
-                out = decode_jpeg(payload)
-                dec = out["rgb"]
-                errs = [abs(dec[i] - rgb[i]) for i in range(len(rgb))]
-                rows.append(
-                    (
-                        d,
-                        out["width"],
-                        out["height"],
-                        out["channels"],
-                        sum(errs) / len(errs) <= 6.0,
-                        max(errs) <= 32,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "mae_ok", "max_err_ok"],
+    def row(d):
+        rgb = bytes(
+            v
+            for y in range(h)
+            for x in range(w)
+            for v in (
+                (x * 255) // (w - 1),
+                (y * 255) // (h - 1),
+                (d * 37) % 256,
             )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 48).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, channels int, mae_ok boolean, max_err_ok boolean",
         )
-        .orderBy("doc_id")
+        payload = encode_jpeg(
+            w, h, rgb, quality=85,
+            subsample=(d % 2 == 1),
+            restart_interval=(2 if d % 3 == 0 else 0),
+        )
+        out = decode_jpeg(payload)
+        dec = out["rgb"]
+        errs = [abs(dec[i] - rgb[i]) for i in range(len(rgb))]
+        return (
+            out["width"],
+            out["height"],
+            out["channels"],
+            sum(errs) / len(errs) <= 6.0,
+            max(errs) <= 32,
+        )
+
+    return doc_rows(
+        spark, sf_dir, 48, row,
+        "doc_id long, width int, height int, channels int, mae_ok boolean, max_err_ok boolean",
     )
 
 
@@ -432,51 +450,35 @@ def mm_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w, h = _JPEG_W, _JPEG_H
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                rgb = bytes(
-                    v
-                    for y in range(h)
-                    for x in range(w)
-                    for v in (
-                        (x * 255) // (w - 1),
-                        (y * 255) // (h - 1),
-                        (d * 37) % 256,
-                    )
-                )
-                base = decode_jpeg(encode_jpeg(w, h, rgb, quality=85, subsample=(d % 2 == 1)))
-                prog = decode_jpeg(
-                    encode_jpeg_progressive(w, h, rgb, quality=85, subsample=(d % 2 == 1))
-                )
-                dec = prog["rgb"]
-                errs = [abs(dec[i] - rgb[i]) for i in range(len(rgb))]
-                rows.append(
-                    (
-                        d,
-                        prog["width"],
-                        prog["height"],
-                        prog["channels"],
-                        dec == base["rgb"],
-                        sum(errs) / len(errs) <= 6.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "identical_to_baseline", "mae_ok"],
+    def row(d):
+        rgb = bytes(
+            v
+            for y in range(h)
+            for x in range(w)
+            for v in (
+                (x * 255) // (w - 1),
+                (y * 255) // (h - 1),
+                (d * 37) % 256,
             )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 48).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, channels int, "
-            "identical_to_baseline boolean, mae_ok boolean",
         )
-        .orderBy("doc_id")
+        base = decode_jpeg(encode_jpeg(w, h, rgb, quality=85, subsample=(d % 2 == 1)))
+        prog = decode_jpeg(
+            encode_jpeg_progressive(w, h, rgb, quality=85, subsample=(d % 2 == 1))
+        )
+        dec = prog["rgb"]
+        errs = [abs(dec[i] - rgb[i]) for i in range(len(rgb))]
+        return (
+            prog["width"],
+            prog["height"],
+            prog["channels"],
+            dec == base["rgb"],
+            sum(errs) / len(errs) <= 6.0,
+        )
+
+    return doc_rows(
+        spark, sf_dir, 48, row,
+        "doc_id long, width int, height int, channels int, "
+        "identical_to_baseline boolean, mae_ok boolean",
     )
 
 
@@ -517,41 +519,26 @@ def mm_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips a hash-compared value."""
     from realestate_engine.jpeg import decode_jpeg, encode_jpeg_lossless
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d, txt in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                # empty docs: plant a zero raster (oracle mirrors via
-                # COALESCE(NULLIF(hx,''),'00') / GREATEST(n,1))
-                b = txt.encode("utf-8") or b"\x00"
-                img = [b[(i * len(b)) // 256] for i in range(256)]
-                dec = decode_jpeg(encode_jpeg_lossless(16, 16, img, predictor=1 + d % 7))
-                rows.append(
-                    (
-                        d,
-                        dec["width"],
-                        dec["height"],
-                        dec["channels"],
-                        dec["samples"] == img,
-                        sum(dec["samples"]),
-                        sum(v * v for v in dec["samples"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "channels", "lossless", "sum_px", "sum_sq"],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 48).select("doc_id", "text")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, channels int, "
-            "lossless boolean, sum_px bigint, sum_sq bigint",
+    def row(d, txt):
+        # empty docs: plant a zero raster (oracle mirrors via
+        # COALESCE(NULLIF(hx,''),'00') / GREATEST(n,1))
+        b = txt.encode("utf-8") or b"\x00"
+        img = [b[(i * len(b)) // 256] for i in range(256)]
+        dec = decode_jpeg(encode_jpeg_lossless(16, 16, img, predictor=1 + d % 7))
+        return (
+            dec["width"],
+            dec["height"],
+            dec["channels"],
+            dec["samples"] == img,
+            sum(dec["samples"]),
+            sum(v * v for v in dec["samples"]),
         )
-        .orderBy("doc_id")
+
+    return doc_rows(
+        spark, sf_dir, 48, row,
+        "doc_id long, width int, height int, channels int, "
+        "lossless boolean, sum_px bigint, sum_sq bigint",
+        "text",
     )
 
 
@@ -657,17 +644,9 @@ def decode_audio_stub(payload: bytes) -> dict:
 
 
 def extract_audio_features(binary_df: DataFrame) -> DataFrame:
-    """Arrow-batched audio feature extraction via mapInPandas. Input
-    schema: (doc_id long, payload binary)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_audio_stub(bytes(p)) for p in pdf["payload"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return binary_df.mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
+    """Audio features of (doc_id, payload) rows: decode_audio_stub over
+    payload_features."""
+    return payload_features(binary_df, decode_audio_stub, AUDIO_FEATURES_SCHEMA)
 
 
 @register(
@@ -736,52 +715,33 @@ def mm_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     their containers probe for real (mm_ogg_probe / mm_mp3_probe)."""
     from realestate_engine.flac import decode_flac, encode_flac
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                channels = 2 if d % 5 == 0 else 1
-                sample_rate = (8000, 16000, 44100)[d % 3]
-                n_frames = 256 + (d % 4) * 64
-                samples = [
-                    ((d * 31 + i * 7 + c * 13) % 4096) - 2048
-                    for i in range(n_frames)
-                    for c in range(channels)
-                ]
-                payload = encode_flac(sample_rate, channels, samples, blocksize=256)
-                dec = decode_flac(payload)
-                rows.append(
-                    (
-                        d,
-                        dec["sample_rate"],
-                        dec["channels"],
-                        dec["n_frames"],
-                        dec["n_frames"] * 1000 // dec["sample_rate"],
-                        dec["samples"] == samples,
-                        len(payload) < 2 * len(samples) + 128,
-                        sum(abs(v) for v in dec["samples"]),
-                        sum(dec["samples"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "n_frames",
-                    "duration_ms", "lossless", "compressed", "sum_abs", "sum_val",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, sample_rate int, channels int, n_frames long, "
-            "duration_ms long, lossless boolean, compressed boolean, "
-            "sum_abs bigint, sum_val bigint",
+    def row(d):
+        channels = 2 if d % 5 == 0 else 1
+        sample_rate = (8000, 16000, 44100)[d % 3]
+        n_frames = 256 + (d % 4) * 64
+        samples = [
+            ((d * 31 + i * 7 + c * 13) % 4096) - 2048
+            for i in range(n_frames)
+            for c in range(channels)
+        ]
+        payload = encode_flac(sample_rate, channels, samples, blocksize=256)
+        dec = decode_flac(payload)
+        return (
+            dec["sample_rate"],
+            dec["channels"],
+            dec["n_frames"],
+            dec["n_frames"] * 1000 // dec["sample_rate"],
+            dec["samples"] == samples,
+            len(payload) < 2 * len(samples) + 128,
+            sum(abs(v) for v in dec["samples"]),
+            sum(dec["samples"]),
         )
-        .orderBy("doc_id")
+
+    return doc_rows(
+        spark, sf_dir, 60, row,
+        "doc_id long, sample_rate int, channels int, n_frames long, "
+        "duration_ms long, lossless boolean, compressed boolean, "
+        "sum_abs bigint, sum_val bigint",
     )
 
 
@@ -832,57 +792,38 @@ def mm_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm_png_decode / mm_jpeg_roundtrip."""
     from realestate_engine.wav import decode_wav, encode_wav
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bits = 8 if d % 2 == 0 else 16
-                channels = 2 if d % 5 == 0 else 1
-                rate = (8000, 16000, 44100)[d % 3]
-                n_frames = 256 + (d % 4) * 64
-                mod, base = (256, 128) if bits == 8 else (4096, 2048)
-                samples = [
-                    (d * 31 + i * 7 + c * 13) % mod - base
-                    for i in range(n_frames)
-                    for c in range(channels)
-                ]
-                info = (
-                    [(b"LIST", b"INFOIART" + b"\x07\x00\x00\x00graft\x00!")]
-                    if d % 3 == 0
-                    else None
-                )
-                out = decode_wav(encode_wav(rate, channels, bits, samples, info))
-                dec = out["samples"]
-                rows.append(
-                    (
-                        d,
-                        out["sample_rate"],
-                        out["channels"],
-                        out["bits"],
-                        out["n_frames"],
-                        out["n_frames"] * 1000 // out["sample_rate"],
-                        sum(abs(s) for s in dec),
-                        sum(dec),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "bits",
-                    "n_frames", "duration_ms", "sum_abs", "sum_val",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, sample_rate int, channels int, bits int, "
-            "n_frames long, duration_ms long, sum_abs long, sum_val long",
+    def row(d):
+        bits = 8 if d % 2 == 0 else 16
+        channels = 2 if d % 5 == 0 else 1
+        rate = (8000, 16000, 44100)[d % 3]
+        n_frames = 256 + (d % 4) * 64
+        mod, base = (256, 128) if bits == 8 else (4096, 2048)
+        samples = [
+            (d * 31 + i * 7 + c * 13) % mod - base
+            for i in range(n_frames)
+            for c in range(channels)
+        ]
+        info = (
+            [(b"LIST", b"INFOIART" + b"\x07\x00\x00\x00graft\x00!")]
+            if d % 3 == 0
+            else None
         )
-        .orderBy("doc_id")
+        out = decode_wav(encode_wav(rate, channels, bits, samples, info))
+        dec = out["samples"]
+        return (
+            out["sample_rate"],
+            out["channels"],
+            out["bits"],
+            out["n_frames"],
+            out["n_frames"] * 1000 // out["sample_rate"],
+            sum(abs(s) for s in dec),
+            sum(dec),
+        )
+
+    return doc_rows(
+        spark, sf_dir, 60, row,
+        "doc_id long, sample_rate int, channels int, bits int, "
+        "n_frames long, duration_ms long, sum_abs long, sum_val long",
     )
 
 
@@ -1474,57 +1415,38 @@ def mm_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard multimodal decode posture."""
     from realestate_engine.gif import decode_gif, encode_gif
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w = 8 + (d % 5) * 6
-                h = 6 + (d % 4) * 7
-                n = 1 << (1 + (d % 4))
-                interlace = d % 2 == 1
-                gif89 = d % 3 == 0
-                pal = [((i * 37) % 256, (i * 11) % 256, (i * 91) % 256) for i in range(n)]
-                px = [(d * 7 + x * 3 + y * 5) % n for y in range(h) for x in range(w)]
-                dec = decode_gif(
-                    encode_gif(w, h, pal, px, interlace=interlace, gif89=gif89)
-                )
-                got = dec["pixels"]
-                rows.append(
-                    (
-                        d,
-                        dec["width"],
-                        dec["height"],
-                        len(dec["palette"]),
-                        dec["interlaced"],
-                        dec["gif89"],
-                        dec["has_gce"],
-                        got == px and dec["palette"] == pal,
-                        sum(got),
-                        sum(
-                            v * (1 + (x * 31 + y * 17) % 97)
-                            for y in range(dec["height"])
-                            for x, v in enumerate(got[y * dec["width"] : (y + 1) * dec["width"]])
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_colors", "interlaced",
-                    "gif89", "has_gce", "lossless", "sum_idx", "moment",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 48).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, n_colors int, interlaced boolean, "
-            "gif89 boolean, has_gce boolean, lossless boolean, sum_idx bigint, moment bigint",
+    def row(d):
+        w = 8 + (d % 5) * 6
+        h = 6 + (d % 4) * 7
+        n = 1 << (1 + (d % 4))
+        interlace = d % 2 == 1
+        gif89 = d % 3 == 0
+        pal = [((i * 37) % 256, (i * 11) % 256, (i * 91) % 256) for i in range(n)]
+        px = [(d * 7 + x * 3 + y * 5) % n for y in range(h) for x in range(w)]
+        dec = decode_gif(
+            encode_gif(w, h, pal, px, interlace=interlace, gif89=gif89)
         )
-        .orderBy("doc_id")
+        got = dec["pixels"]
+        return (
+            dec["width"],
+            dec["height"],
+            len(dec["palette"]),
+            dec["interlaced"],
+            dec["gif89"],
+            dec["has_gce"],
+            got == px and dec["palette"] == pal,
+            sum(got),
+            sum(
+                v * (1 + (x * 31 + y * 17) % 97)
+                for y in range(dec["height"])
+                for x, v in enumerate(got[y * dec["width"] : (y + 1) * dec["width"]])
+            ),
+        )
+
+    return doc_rows(
+        spark, sf_dir, 48, row,
+        "doc_id long, width int, height int, n_colors int, interlaced boolean, "
+        "gif89 boolean, has_gce boolean, lossless boolean, sum_idx bigint, moment bigint",
     )
 
 
@@ -1571,66 +1493,47 @@ def mm_mjpeg_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w, h = _JPEG_W, _JPEG_H
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                fps = 10 + (d % 3) * 5
-                n_frames = 3 + d % 3
-                rasters = [
-                    bytes(
-                        v
-                        for y in range(h)
-                        for x in range(w)
-                        for v in (
-                            (x * 255) // (w - 1),
-                            (y * 255) // (h - 1),
-                            (d * 37 + f * 11) % 256,
-                        )
-                    )
-                    for f in range(n_frames)
-                ]
-                frames = [
-                    encode_jpeg(w, h, r, quality=85, subsample=(d % 2 == 1))
-                    for r in rasters
-                ]
-                out = decode_avi_mjpeg(encode_avi_mjpeg(w, h, fps, frames))
-                mae_ok = True
-                for fr, raster in zip(out["frames"], rasters):
-                    dec = decode_jpeg(fr)["rgb"]
-                    errs = [abs(dec[i] - raster[i]) for i in range(len(raster))]
-                    mae_ok = mae_ok and sum(errs) / len(errs) <= 6.0 and max(errs) <= 32
-                rows.append(
-                    (
-                        d,
-                        out["width"],
-                        out["height"],
-                        out["n_frames"],
-                        out["fps"],
-                        out["n_frames"] * out["us_per_frame"] // 1000,
-                        out["idx_consistent"],
-                        out["frames"] == frames,
-                        mae_ok,
-                    )
+    def row(d):
+        fps = 10 + (d % 3) * 5
+        n_frames = 3 + d % 3
+        rasters = [
+            bytes(
+                v
+                for y in range(h)
+                for x in range(w)
+                for v in (
+                    (x * 255) // (w - 1),
+                    (y * 255) // (h - 1),
+                    (d * 37 + f * 11) % 256,
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_frames", "fps",
-                    "duration_ms", "idx_consistent", "container_bit_exact", "all_mae_ok",
-                ],
             )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 48).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, n_frames long, fps long, duration_ms long, "
-            "idx_consistent boolean, container_bit_exact boolean, all_mae_ok boolean",
+            for f in range(n_frames)
+        ]
+        frames = [
+            encode_jpeg(w, h, r, quality=85, subsample=(d % 2 == 1))
+            for r in rasters
+        ]
+        out = decode_avi_mjpeg(encode_avi_mjpeg(w, h, fps, frames))
+        mae_ok = True
+        for fr, raster in zip(out["frames"], rasters):
+            dec = decode_jpeg(fr)["rgb"]
+            errs = [abs(dec[i] - raster[i]) for i in range(len(raster))]
+            mae_ok = mae_ok and sum(errs) / len(errs) <= 6.0 and max(errs) <= 32
+        return (
+            out["width"],
+            out["height"],
+            out["n_frames"],
+            out["fps"],
+            out["n_frames"] * out["us_per_frame"] // 1000,
+            out["idx_consistent"],
+            out["frames"] == frames,
+            mae_ok,
         )
-        .orderBy("doc_id")
+
+    return doc_rows(
+        spark, sf_dir, 48, row,
+        "doc_id long, width int, height int, n_frames long, fps long, duration_ms long, "
+        "idx_consistent boolean, container_bit_exact boolean, all_mae_ok boolean",
     )
 
 
@@ -1684,52 +1587,33 @@ def mm_tiff_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel."""
     from realestate_engine.tiff import decode_tiff, encode_tiff
 
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w = 8 + (d % 5) * 4
-                h = 4 + (d % 3) * 6
-                orient = 1 + (d % 8)
-                px = bytes((d * 11 + i * 7) % 256 for i in range(w * h))
-                out = decode_tiff(
-                    encode_tiff(
-                        w, h, px,
-                        orientation=orient,
-                        make=f"cam-{d % 4}",
-                        big_endian=(d % 2 == 1),
-                    )
-                )
-                rows.append(
-                    (
-                        d,
-                        out["width"],
-                        out["height"],
-                        out["orientation"],
-                        out["big_endian"],
-                        out["make"],
-                        out["n_ifd_entries"],
-                        sum(out["pixels"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "orientation",
-                    "big_endian", "make", "n_ifd_entries", "strip_sum",
-                ],
+    def row(d):
+        w = 8 + (d % 5) * 4
+        h = 4 + (d % 3) * 6
+        orient = 1 + (d % 8)
+        px = bytes((d * 11 + i * 7) % 256 for i in range(w * h))
+        out = decode_tiff(
+            encode_tiff(
+                w, h, px,
+                orientation=orient,
+                make=f"cam-{d % 4}",
+                big_endian=(d % 2 == 1),
             )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 48).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            probe,
-            "doc_id long, width int, height int, orientation int, big_endian boolean, "
-            "make string, n_ifd_entries int, strip_sum bigint",
         )
-        .orderBy("doc_id")
+        return (
+            out["width"],
+            out["height"],
+            out["orientation"],
+            out["big_endian"],
+            out["make"],
+            out["n_ifd_entries"],
+            sum(out["pixels"]),
+        )
+
+    return doc_rows(
+        spark, sf_dir, 48, row,
+        "doc_id long, width int, height int, orientation int, big_endian boolean, "
+        "make string, n_ifd_entries int, strip_sum bigint",
     )
 
 
@@ -1793,40 +1677,27 @@ def mm_png_crc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated and audited inside one Arrow batch — the corrupt-blob
     quarantine pass that precedes any pixel decode at 100 TB."""
 
-    def audit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 4 + 2 * (d % 3), 3 + d % 2
-                rgb = bytes(
-                    (x * 37 + y * 11 + d) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for _ in range(3)
-                )
-                blob = encode_png(w, h, rgb)
-                if d % 7 == 3:
-                    b = bytearray(blob)
-                    idat_at = blob.index(b"IDAT")
-                    b[idat_at + 6] ^= 0x2A  # flip one IDAT body byte
-                    blob = bytes(b)
-                chunks = audit_png_chunks(blob)
-                bad = [c["ctype"] for c in chunks if not c["crc_ok"]]
-                rows.append((d, len(chunks), len(bad), bad[0] if bad else "", w))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_chunks", "n_crc_bad", "first_bad_chunk", "width"],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 70).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            audit,
-            "doc_id long, n_chunks long, n_crc_bad long, first_bad_chunk string, width long",
+    def row(d):
+        w, h = 4 + 2 * (d % 3), 3 + d % 2
+        rgb = bytes(
+            (x * 37 + y * 11 + d) % 256
+            for y in range(h)
+            for x in range(w)
+            for _ in range(3)
         )
-        .orderBy("doc_id")
+        blob = encode_png(w, h, rgb)
+        if d % 7 == 3:
+            b = bytearray(blob)
+            idat_at = blob.index(b"IDAT")
+            b[idat_at + 6] ^= 0x2A  # flip one IDAT body byte
+            blob = bytes(b)
+        chunks = audit_png_chunks(blob)
+        bad = [c["ctype"] for c in chunks if not c["crc_ok"]]
+        return (len(chunks), len(bad), bad[0] if bad else "", w)
+
+    return doc_rows(
+        spark, sf_dir, 70, row,
+        "doc_id long, n_chunks long, n_crc_bad long, first_bad_chunk string, width long",
     )
 
 
@@ -1865,47 +1736,28 @@ def mm_flac_crc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     processing at 100 TB."""
     from realestate_engine.flac import audit_flac_frames, encode_flac
 
-    def audit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                ch = 1 + d % 2
-                nspc = 64 * (2 + d % 4)
-                samples = [((i * 37 + d) % 200) - 100 for i in range(ch * nspc)]
-                blob = bytearray(encode_flac(8000, ch, samples, blocksize=64))
-                if d % 11 == 4:
-                    blob[blob.index(b"\xff\xf8") + 7] ^= 0x55  # frame-0 CRC-8
-                if d % 7 == 2:
-                    blob[-1] ^= 0xFF  # last frame's stored CRC-16
-                if d % 5 == 1:
-                    blob[30] ^= 0x01  # one STREAMINFO MD5 byte
-                a = audit_flac_frames(bytes(blob))
-                rows.append(
-                    (
-                        d,
-                        len(a["frames"]),
-                        sum(not f["crc8_ok"] for f in a["frames"]),
-                        sum(not f["crc16_ok"] for f in a["frames"]),
-                        a["md5_ok"],
-                        sum(f["blocksize"] for f in a["frames"]) * a["channels"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "n_crc8_bad", "n_crc16_bad",
-                    "md5_ok", "n_samples",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 70).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            audit,
-            "doc_id long, n_frames long, n_crc8_bad long, n_crc16_bad long, "
-            "md5_ok boolean, n_samples long",
+    def row(d):
+        ch = 1 + d % 2
+        nspc = 64 * (2 + d % 4)
+        samples = [((i * 37 + d) % 200) - 100 for i in range(ch * nspc)]
+        blob = bytearray(encode_flac(8000, ch, samples, blocksize=64))
+        if d % 11 == 4:
+            blob[blob.index(b"\xff\xf8") + 7] ^= 0x55  # frame-0 CRC-8
+        if d % 7 == 2:
+            blob[-1] ^= 0xFF  # last frame's stored CRC-16
+        if d % 5 == 1:
+            blob[30] ^= 0x01  # one STREAMINFO MD5 byte
+        a = audit_flac_frames(bytes(blob))
+        return (
+            len(a["frames"]),
+            sum(not f["crc8_ok"] for f in a["frames"]),
+            sum(not f["crc16_ok"] for f in a["frames"]),
+            a["md5_ok"],
+            sum(f["blocksize"] for f in a["frames"]) * a["channels"],
         )
-        .orderBy("doc_id")
+
+    return doc_rows(
+        spark, sf_dir, 70, row,
+        "doc_id long, n_frames long, n_crc8_bad long, n_crc16_bad long, "
+        "md5_ok boolean, n_samples long",
     )

@@ -12,14 +12,10 @@ the hash. The only shuffle moves doc ids.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from realestate_engine.registry import register, t
-from realestate_engine.multimodal import _decode_width
+from realestate_engine.multimodal import doc_rows
+from realestate_engine.registry import register
 
 
 @register(
@@ -50,47 +46,28 @@ def mm_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters, and dedups raw video blobs before any codec spins up."""
     from realestate_engine.mp4 import encode_minimal_mp4, parse_mp4_boxes
 
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                blob = encode_minimal_mp4(
-                    timescale=(600, 1000, 90000)[d % 3],
-                    duration=1000 + d * 37,
-                    mdat_payload=bytes((d * 31 + i) % 256 for i in range(100 + d % 50)),
-                    mvhd_version=d % 2,
-                    extended_mdat=(d % 5 == 0),
-                )
-                p = parse_mp4_boxes(blob)
-                rows.append(
-                    (
-                        d,
-                        p["brand"],
-                        p["n_boxes"],
-                        p["timescale"],
-                        p["duration"],
-                        p["duration"] * 1000 // p["timescale"],
-                        p["mdat_bytes"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "brand", "n_boxes", "timescale",
-                    "duration", "duration_ms", "mdat_bytes",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            probe,
-            "doc_id long, brand string, n_boxes long, timescale int, "
-            "duration long, duration_ms long, mdat_bytes long",
+    def row(d):
+        blob = encode_minimal_mp4(
+            timescale=(600, 1000, 90000)[d % 3],
+            duration=1000 + d * 37,
+            mdat_payload=bytes((d * 31 + i) % 256 for i in range(100 + d % 50)),
+            mvhd_version=d % 2,
+            extended_mdat=(d % 5 == 0),
         )
-        .orderBy("doc_id")
+        p = parse_mp4_boxes(blob)
+        return (
+            p["brand"],
+            p["n_boxes"],
+            p["timescale"],
+            p["duration"],
+            p["duration"] * 1000 // p["timescale"],
+            p["mdat_bytes"],
+        )
+
+    return doc_rows(
+        spark, sf_dir, 60, row,
+        "doc_id long, brand string, n_boxes long, timescale int, "
+        "duration long, duration_ms long, mdat_bytes long",
     )
 
 
@@ -130,49 +107,30 @@ def mm_ogg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     any psychoacoustic decode spins up."""
     from realestate_engine.ogg import encode_minimal_ogg_vorbis, parse_ogg
 
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sr = (8000, 22050, 44100, 48000)[d % 4]
-                blob = encode_minimal_ogg_vorbis(
-                    sample_rate=sr,
-                    channels=1 + d % 2,
-                    comments=[("TITLE", f"doc-{d}"), ("SOURCE", "testdata")],
-                    serial=100 + d,
-                    granule=(d + 1) * sr // 2,
-                )
-                p = parse_ogg(blob)
-                rows.append(
-                    (
-                        d,
-                        p["serial"],
-                        p["n_pages"],
-                        p["sample_rate"],
-                        p["channels"],
-                        p["n_comments"],
-                        p["comments"]["TITLE"],
-                        p["duration_ms"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "serial", "n_pages", "sample_rate",
-                    "channels", "n_comments", "title", "duration_ms",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            probe,
-            "doc_id long, serial long, n_pages long, sample_rate int, "
-            "channels int, n_comments long, title string, duration_ms long",
+    def row(d):
+        sr = (8000, 22050, 44100, 48000)[d % 4]
+        blob = encode_minimal_ogg_vorbis(
+            sample_rate=sr,
+            channels=1 + d % 2,
+            comments=[("TITLE", f"doc-{d}"), ("SOURCE", "testdata")],
+            serial=100 + d,
+            granule=(d + 1) * sr // 2,
         )
-        .orderBy("doc_id")
+        p = parse_ogg(blob)
+        return (
+            p["serial"],
+            p["n_pages"],
+            p["sample_rate"],
+            p["channels"],
+            p["n_comments"],
+            p["comments"]["TITLE"],
+            p["duration_ms"],
+        )
+
+    return doc_rows(
+        spark, sf_dir, 60, row,
+        "doc_id long, serial long, n_pages long, sample_rate int, "
+        "channels int, n_comments long, title string, duration_ms long",
     )
 
 
@@ -215,50 +173,31 @@ def mm_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     _BR_IDX = {128: 9, 192: 11, 320: 14}
     _SR_IDX = {44100: 0, 48000: 1, 32000: 2}
 
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                br = (128, 192, 320)[d % 3]
-                sr = (44100, 48000, 32000)[(d // 3) % 3]
-                blob = encode_minimal_mp3(
-                    _BR_IDX[br],
-                    _SR_IDX[sr],
-                    n_frames=3 + d % 5,
-                    id3v2_payload=b"m" * (11 + d) if d % 2 == 0 else b"",
-                    id3v1=(d % 3 == 0),
-                )
-                p = parse_mp3(blob)
-                rows.append(
-                    (
-                        d,
-                        p["n_frames"],
-                        p["bitrate_kbps"],
-                        p["sample_rate"],
-                        p["duration_ms"],
-                        p["has_id3v2"],
-                        p["has_id3v1"],
-                        p["audio_bytes"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "bitrate_kbps", "sample_rate",
-                    "duration_ms", "has_id3v2", "has_id3v1", "audio_bytes",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            probe,
-            "doc_id long, n_frames long, bitrate_kbps int, sample_rate int, "
-            "duration_ms long, has_id3v2 boolean, has_id3v1 boolean, audio_bytes long",
+    def row(d):
+        br = (128, 192, 320)[d % 3]
+        sr = (44100, 48000, 32000)[(d // 3) % 3]
+        blob = encode_minimal_mp3(
+            _BR_IDX[br],
+            _SR_IDX[sr],
+            n_frames=3 + d % 5,
+            id3v2_payload=b"m" * (11 + d) if d % 2 == 0 else b"",
+            id3v1=(d % 3 == 0),
         )
-        .orderBy("doc_id")
+        p = parse_mp3(blob)
+        return (
+            p["n_frames"],
+            p["bitrate_kbps"],
+            p["sample_rate"],
+            p["duration_ms"],
+            p["has_id3v2"],
+            p["has_id3v1"],
+            p["audio_bytes"],
+        )
+
+    return doc_rows(
+        spark, sf_dir, 60, row,
+        "doc_id long, n_frames long, bitrate_kbps int, sample_rate int, "
+        "duration_ms long, has_id3v2 boolean, has_id3v1 boolean, audio_bytes long",
     )
 
 
@@ -292,48 +231,32 @@ def mm_ogg_crc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     first pass over raw audio, long before any sample decode."""
     from realestate_engine.ogg import audit_ogg_pages, encode_minimal_ogg_vorbis
 
-    def audit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                blob = encode_minimal_ogg_vorbis(
-                    sample_rate=44100,
-                    channels=1 + d % 2,
-                    comments=[("TITLE", f"doc-{d}")],
-                    serial=100 + d,
-                    granule=(d + 1) * 4410,
-                )
-                if d % 5 == 2:
-                    b = bytearray(blob)
-                    at = blob.index(b"OggS", 4)  # page 1 start
-                    nseg = b[at + 26]
-                    b[at + 27 + nseg + 10] ^= 0x5A  # flip one body byte
-                    blob = bytes(b)
-                pages = audit_ogg_pages(blob)
-                bad = [p["seq"] for p in pages if not p["crc_ok"]]
-                rows.append(
-                    (
-                        d,
-                        len(pages),
-                        len(bad),
-                        bad[0] if bad else -1,
-                        max(p["granule"] for p in pages),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_pages", "n_crc_bad", "first_bad_page", "granule"],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 80).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            audit,
-            "doc_id long, n_pages long, n_crc_bad long, first_bad_page long, granule long",
+    def row(d):
+        blob = encode_minimal_ogg_vorbis(
+            sample_rate=44100,
+            channels=1 + d % 2,
+            comments=[("TITLE", f"doc-{d}")],
+            serial=100 + d,
+            granule=(d + 1) * 4410,
         )
-        .orderBy("doc_id")
+        if d % 5 == 2:
+            b = bytearray(blob)
+            at = blob.index(b"OggS", 4)  # page 1 start
+            nseg = b[at + 26]
+            b[at + 27 + nseg + 10] ^= 0x5A  # flip one body byte
+            blob = bytes(b)
+        pages = audit_ogg_pages(blob)
+        bad = [p["seq"] for p in pages if not p["crc_ok"]]
+        return (
+            len(pages),
+            len(bad),
+            bad[0] if bad else -1,
+            max(p["granule"] for p in pages),
+        )
+
+    return doc_rows(
+        spark, sf_dir, 80, row,
+        "doc_id long, n_pages long, n_crc_bad long, first_bad_page long, granule long",
     )
 
 
@@ -395,69 +318,49 @@ def mm_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel work is Arrow-batched Python (the mm_wav posture)."""
     from realestate_engine.bmp import decode_bmp, encode_bmp
 
-    def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h, mode = 13 + d % 12, 9 + d % 7, d % 3
-                if mode == 0:
-                    pal = [
-                        ((i * 37 + d) % 256, (i * 59 + 2 * d) % 256, (i * 83 + 3 * d) % 256)
-                        for i in range(16)
-                    ]
-                    idx = [
-                        (d + (x // 4) * 5 + y * 13) % 16
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                    blob = encode_bmp(w, h, idx, palette=pal, rle8=True)
-                    expected = [pal[i] for i in idx]
-                else:
-                    expected = [
-                        (
-                            (d * 17 + x * 3 + y * 11) % 256,
-                            (d * 23 + x * 7 + y * 5) % 256,
-                            (d * 29 + x * 13 + y * 3) % 256,
-                        )
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                    blob = encode_bmp(w, h, expected, topdown=(mode == 2))
-                dec = decode_bmp(blob)
-                pix = dec["pixels"]
-                rows.append(
-                    (
-                        d,
-                        dec["width"],
-                        dec["height"],
-                        dec["bpp"],
-                        1 if dec["topdown"] else 0,
-                        1 if dec["compression"] == 1 else 0,
-                        dec["n_palette"],
-                        1 if pix == expected else 0,
-                        sum(p[0] for p in pix),
-                        sum(p[1] for p in pix),
-                        sum(p[2] for p in pix),
-                    )
+    def row(d):
+        w, h, mode = 13 + d % 12, 9 + d % 7, d % 3
+        if mode == 0:
+            pal = [
+                ((i * 37 + d) % 256, (i * 59 + 2 * d) % 256, (i * 83 + 3 * d) % 256)
+                for i in range(16)
+            ]
+            idx = [
+                (d + (x // 4) * 5 + y * 13) % 16
+                for y in range(h)
+                for x in range(w)
+            ]
+            blob = encode_bmp(w, h, idx, palette=pal, rle8=True)
+            expected = [pal[i] for i in idx]
+        else:
+            expected = [
+                (
+                    (d * 17 + x * 3 + y * 11) % 256,
+                    (d * 23 + x * 7 + y * 5) % 256,
+                    (d * 29 + x * 13 + y * 3) % 256,
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "bpp", "topdown",
-                    "rle_compressed", "n_palette", "lossless",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select("doc_id")
-    return (
-        d.repartition(_decode_width(spark, sf_dir), "doc_id")
-        .mapInPandas(
-            roundtrip,
-            "doc_id long, width int, height int, bpp int, topdown bigint, "
-            "rle_compressed bigint, n_palette int, lossless bigint, "
-            "sum_r bigint, sum_g bigint, sum_b bigint",
+                for y in range(h)
+                for x in range(w)
+            ]
+            blob = encode_bmp(w, h, expected, topdown=(mode == 2))
+        dec = decode_bmp(blob)
+        pix = dec["pixels"]
+        return (
+            dec["width"],
+            dec["height"],
+            dec["bpp"],
+            1 if dec["topdown"] else 0,
+            1 if dec["compression"] == 1 else 0,
+            dec["n_palette"],
+            1 if pix == expected else 0,
+            sum(p[0] for p in pix),
+            sum(p[1] for p in pix),
+            sum(p[2] for p in pix),
         )
-        .orderBy("doc_id")
+
+    return doc_rows(
+        spark, sf_dir, 60, row,
+        "doc_id long, width int, height int, bpp int, topdown bigint, "
+        "rle_compressed bigint, n_palette int, lossless bigint, "
+        "sum_r bigint, sum_g bigint, sum_b bigint",
     )

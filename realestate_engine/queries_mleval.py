@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from realestate_engine.dedup import portable_hash32
-from realestate_engine.registry import cache_once, input_width, register, t
+from realestate_engine.registry import cache_once, register, t
 
 
 @register(
@@ -804,6 +804,7 @@ def m38_viterbi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _user_recurrence_map(
         ev,
+        sf_dir,
         fold=fold,
         emit=emit,
         schema=(
@@ -812,7 +813,6 @@ def m38_viterbi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         value_col="obs",
         to_v=int,
-        width=input_width(spark, sf_dir, "events", python_floor=True),
     ).orderBy("user_id")
 
 

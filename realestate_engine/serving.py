@@ -260,9 +260,11 @@ def serve(service: PredictionService, host: str = "127.0.0.1", port: int = 0):
                 self._send(404, {"error": f"no route {self.path}"})
 
         def _post(self) -> None:
-            length = int(self.headers.get("Content-Length", 0))
-            raw = self.rfile.read(length)
             try:
+                length = int(self.headers.get("Content-Length", 0))
+                if length < 0:
+                    raise ValueError(f"negative Content-Length {length}")
+                raw = self.rfile.read(length)
                 if self.path == "/predict":
                     self._send(200, service.single(json.loads(raw)))
                 elif self.path == "/predict_batch":

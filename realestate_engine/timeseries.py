@@ -29,12 +29,12 @@ from realestate_engine.registry import cache_once, input_width, register, t
 
 def _user_recurrence_map(
     ev: DataFrame,
+    sf_dir: str,
     fold,
     emit,
     schema: str,
     value_col: str = "value",
     to_v=None,
-    width: int | None = None,
 ) -> DataFrame:
     """Order-dependent per-user integer recurrences (EWMA / Holt /
     Holt-Winters) as a partition-streaming mapInPandas — the
@@ -92,12 +92,11 @@ def _user_recurrence_map(
                 columns=cols,
             )
 
-    # r15: callers pass a bytes-derived width with the cores/4 Python
-    # floor (registry.input_width) — the custom_running_total sweep
-    # showed full core-count width only adds near-empty tasks for the
-    # per-batch-call form; defaultParallelism stays the fallback for
-    # direct callers.
-    n_part = width or ev.sparkSession.sparkContext.defaultParallelism
+    # a bytes-derived width with the cores/4 Python floor
+    # (registry.input_width): the custom_running_total sweep showed
+    # full core-count width only adds near-empty tasks for the
+    # per-batch-call form
+    n_part = input_width(ev.sparkSession, sf_dir, "events", python_floor=True)
     return (
         ev.repartition(n_part, "user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
@@ -367,10 +366,10 @@ def ts_ewma_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
     return _user_recurrence_map(
         ev,
+        sf_dir,
         fold=lambda st, v, rn: v if st is None else (st + v) // 2,
         emit=lambda u, n, st: (u, n, st),
         schema="user_id long, n_events long, ewma_milli long",
-        width=input_width(spark, sf_dir, "events", python_floor=True),
     ).orderBy("user_id")
 
 
@@ -426,10 +425,10 @@ def ts_holt_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _user_recurrence_map(
         ev,
+        sf_dir,
         fold=fold,
         emit=lambda u, n, st: (u, n, st[0], st[1], st[0] + st[1]),
         schema="user_id long, n_events long, level_milli long, trend_milli long, forecast_milli long",
-        width=input_width(spark, sf_dir, "events", python_floor=True),
     ).orderBy("user_id")
 
 
@@ -518,10 +517,10 @@ def ts8_holt_winters_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _user_recurrence_map(
         ev,
+        sf_dir,
         fold=fold,
         emit=emit,
         schema="user_id long, n_events long, level_milli long, trend_milli long, forecast_milli long",
-        width=input_width(spark, sf_dir, "events", python_floor=True),
     ).orderBy("user_id")
 
 

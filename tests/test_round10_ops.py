@@ -7,26 +7,11 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import pytest
 from pyspark.sql import functions as F
 
 from realestate_engine.registry import QUERIES, load_all, t
 
 load_all()
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from realestate_engine.session import create_session
-
-    return create_session()
-
-
-@pytest.fixture(scope="module")
-def sf_dir():
-    return SF_DIR
 
 
 def test_kruskal_wallis_matches_exact_python_replay(spark, sf_dir):

@@ -8,20 +8,6 @@ from realestate_engine.registry import QUERIES, load_all
 
 load_all()
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from realestate_engine.session import create_session
-
-    return create_session()
-
-
-@pytest.fixture(scope="module")
-def sf_dir():
-    return SF_DIR
-
 
 def test_flac_audit_plants_are_independent_and_exact(spark, sf_dir):
     rows = QUERIES["mm_flac_crc_audit"](spark, sf_dir).collect()

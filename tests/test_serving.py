@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import math
 import random
+import socket
 import sys
 import threading
 import urllib.error
@@ -213,6 +214,15 @@ def test_http_api_end_to_end(service, tmp_path):
             with pytest.raises(urllib.error.HTTPError) as ei:
                 urllib.request.urlopen(bad, timeout=30)
             assert ei.value.code == 400, body
+        # a Content-Length that is no length (urllib always sends a
+        # valid one, so these go over a raw socket, with no body)
+        for length in (b"abc", b"-1"):
+            with socket.create_connection(("127.0.0.1", port), timeout=30) as sock:
+                sock.sendall(b"POST /predict HTTP/1.0\r\nContent-Length: " + length + b"\r\n\r\n")
+                reply = b""
+                while chunk := sock.recv(4096):
+                    reply += chunk
+            assert reply.split(b" ", 2)[1:2] == [b"400"], (length, reply)
         with urllib.request.urlopen(f"{base}/health", timeout=30) as r:
             assert json.load(r)["status"] == "ok"
     finally:

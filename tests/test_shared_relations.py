@@ -2,9 +2,10 @@
 
 Each derived relation below has one Spark builder and one oracle CTE
 text (DESIGN.md, "Shared derived relations"). This pins every
-consumer, plus the trade-graph degree distribution, against its
-DuckDB oracle at the test scale, through the same compare the oracle
-checker uses. The ALS pair has no oracle (its factor math is
+consumer, plus the trade-graph degree distribution and the queries
+on the shared media stages (``doc_rows``, ``payload_features``),
+against its DuckDB oracle at the test scale, through the same compare
+the oracle checker uses. The ALS pair has no oracle (its factor math is
 iteration-order dependent), so it only has to return rows.
 """
 
@@ -47,6 +48,13 @@ SHARED_RELATION_QUERIES = [
     "m16_als_recommend", "m20_als_recall_eval",
     # trade_graph
     "graph_degree_distribution",
+    # doc_rows: the one per-document media stage
+    "mm_jpeg_roundtrip", "mm_jpeg_progressive", "mm_jpeg_lossless",
+    "mm_flac_roundtrip", "mm_wav_roundtrip", "mm_gif_roundtrip", "mm_mjpeg_avi",
+    "mm_tiff_probe", "mm_png_crc_audit", "mm_flac_crc_audit",
+    "mm_mp4_probe", "mm_ogg_probe", "mm_mp3_probe", "mm_ogg_crc_audit", "mm_bmp_roundtrip",
+    # payload_features
+    "mm_image_features", "mm_audio_features",
 ]
 
 
