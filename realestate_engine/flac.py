@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
+from collections.abc import Iterator
 
 _CRC8_TABLE = []
 for _b in range(256):
@@ -395,11 +396,22 @@ def encode_flac(
     return bytes(out)
 
 
-def decode_flac(payload: bytes) -> dict:
-    """Decode a FLAC stream into params + interleaved signed samples
-    (same dict shape as decode_wav). Verifies frame-header CRC-8,
-    frame CRC-16 and the STREAMINFO audio MD5 — a flipped bit anywhere
-    raises ValueError instead of returning wrong samples."""
+def _walk(payload: bytes) -> Iterator:
+    """The one FLAC stream walk behind decode_flac and
+    audit_flac_frames: metadata blocks, STREAMINFO, then every frame's
+    header, subframes and stereo decorrelation.
+
+    It first yields the stream dict — sample_rate, channels, bits and
+    total from STREAMINFO, plus a ``frames`` list — which it fills in
+    as it goes: one ``{"blocksize", "crc8_ok", "crc16_ok"}`` entry per
+    frame, then ``n_frames``, the interleaved ``samples`` and
+    ``md5_ok``. After that it yields one ``(message, ok)`` pair per
+    integrity check, in stream order: each frame's header CRC-8 (before
+    its subframes are read) and CRC-16, the frame count against
+    STREAMINFO, and the audio MD5. The stored checksums are read but
+    are not inputs to the bit-level parse, so a mismatch does not stop
+    the walk. Structural faults (bad magic, no STREAMINFO, lost sync,
+    reserved codes, truncation) raise ValueError from the walk."""
     if payload[:4] != b"fLaC":
         raise ValueError("not a FLAC stream")
     pos = 4
@@ -409,9 +421,8 @@ def decode_flac(payload: bytes) -> dict:
         last = bool(hdr & 0x80)
         btype = hdr & 0x7F
         (blen,) = struct.unpack(">I", b"\x00" + payload[pos + 1 : pos + 4])
-        body = payload[pos + 4 : pos + 4 + blen]
         if btype == 0:
-            streaminfo = body
+            streaminfo = payload[pos + 4 : pos + 4 + blen]
         pos += 4 + blen
         if last:
             break
@@ -427,13 +438,20 @@ def decode_flac(payload: bytes) -> dict:
     bps = r.bits(5) + 1
     total = r.bits(36)
     md5_expect = streaminfo[18:34]
+    stream = {
+        "sample_rate": sample_rate,
+        "channels": channels,
+        "bits": bps,
+        "total": total,
+        "frames": [],
+    }
+    yield stream
 
     out: list[list[int]] = [[] for _ in range(channels)]
     while pos < len(payload):
         frame_start = pos
         r = _BitReader(payload, pos)
-        sync = r.bits(14)
-        if sync != 0b11111111111110:
+        if r.bits(14) != 0b11111111111110:
             raise ValueError("lost frame sync")
         r.bits(1)  # reserved
         r.bits(1)  # blocking strategy
@@ -461,14 +479,13 @@ def decode_flac(payload: bytes) -> dict:
             r.bits(16)
         frame_bps = {0b100: 16, 0b001: 8, 0b010: 12, 0b101: 20, 0b110: 24}.get(ss_code, bps)
         r.align()
-        header_end = r.pos
-        if _crc8(payload[frame_start:header_end]) != payload[header_end]:
-            raise ValueError("frame header CRC-8 mismatch")
-        r.bits(8)  # consume CRC byte
+        header_crc = _crc8(payload[frame_start : r.pos])
+        frame = {"blocksize": nb, "crc8_ok": r.bits(8) == header_crc}
+        stream["frames"].append(frame)
+        yield "frame header CRC-8 mismatch", frame["crc8_ok"]
 
         if assignment <= 7:
-            nch = assignment + 1
-            planes = [_read_subframe(r, nb, frame_bps) for _ in range(nch)]
+            planes = [_read_subframe(r, nb, frame_bps) for _ in range(assignment + 1)]
         elif assignment == 8:  # left/side
             left = _read_subframe(r, nb, frame_bps)
             side = _read_subframe(r, nb, frame_bps + 1)
@@ -490,35 +507,51 @@ def decode_flac(payload: bytes) -> dict:
         if len(planes) != channels:
             raise ValueError("frame channel count != STREAMINFO")
         r.align()
-        crc = struct.unpack(">H", payload[r.pos : r.pos + 2])[0]
-        if _crc16(payload[frame_start : r.pos]) != crc:
-            raise ValueError("frame CRC-16 mismatch")
-        pos = r.pos + 2
+        frame_crc = _crc16(payload[frame_start : r.pos])
+        frame["crc16_ok"] = r.bits(16) == frame_crc
+        pos = r.pos
         for c in range(channels):
             out[c].extend(planes[c])
+        yield "frame CRC-16 mismatch", frame["crc16_ok"]
 
     n_frames = min(len(p) for p in out) if out else 0
-    if total and n_frames != total:
-        raise ValueError("decoded frame count != STREAMINFO total")
-    samples = [out[c][i] for i in range(n_frames) for c in range(channels)]
-    if bps == 16:
-        got = hashlib.md5(struct.pack(f"<{len(samples)}h", *samples)).digest()
-        if got != md5_expect and md5_expect != b"\x00" * 16:
-            raise ValueError("audio MD5 mismatch")
-    return {
-        "sample_rate": sample_rate,
-        "channels": channels,
-        "bits": bps,
-        "n_frames": n_frames,
-        "samples": samples,
-    }
+    stream["n_frames"] = n_frames
+    stream["samples"] = samples = [out[c][i] for i in range(n_frames) for c in range(channels)]
+    yield "decoded frame count != STREAMINFO total", not total or n_frames == total
+    stream["md5_ok"] = (
+        bps != 16 or md5_expect == b"\x00" * 16 or _pcm16_md5(samples) == md5_expect
+    )
+    yield "audio MD5 mismatch", stream["md5_ok"]
+
+
+def _pcm16_md5(samples: list[int]) -> bytes | None:
+    """MD5 of the samples as little-endian 16-bit PCM, or None when a
+    sample does not fit 16 bits (then it cannot be the encoded audio)."""
+    try:
+        return hashlib.md5(struct.pack(f"<{len(samples)}h", *samples)).digest()
+    except struct.error:
+        return None
+
+
+def decode_flac(payload: bytes) -> dict:
+    """Decode a FLAC stream into params + interleaved signed samples
+    (same dict shape as decode_wav). Verifies frame-header CRC-8,
+    frame CRC-16, the STREAMINFO frame count and the audio MD5, and
+    raises ValueError at the first failed check in stream order — a
+    flipped bit anywhere raises instead of returning wrong samples."""
+    walk = _walk(payload)
+    stream = next(walk)
+    for message, ok in walk:
+        if not ok:
+            raise ValueError(message)
+    return {k: stream[k] for k in ("sample_rate", "channels", "bits", "n_frames", "samples")}
 
 
 def audit_flac_frames(payload: bytes) -> dict:
     """Frame walk that RECORDS integrity (per-frame header CRC-8 and
     frame CRC-16, plus the STREAMINFO audio MD5 over the decoded
     samples) instead of raising — the audio-codec counterpart of
-    png.audit_png_chunks / ogg.audit_ogg_pages. Structural errors
+    multimodal.audit_png_chunks / ogg.audit_ogg_pages. Structural errors
     (bad magic, lost sync, truncation) still raise: a stream the
     walker cannot even traverse is quarantine-on-sight, while a
     checksum mismatch is exactly what the audit exists to report.
@@ -529,110 +562,8 @@ def audit_flac_frames(payload: bytes) -> dict:
     bit-level parse — unlike a residual bit flip, which would desync
     the Rice decoder; callers planting corruption must target the
     checksum bytes or the STREAMINFO MD5 (see mm_flac_crc_audit)."""
-    if payload[:4] != b"fLaC":
-        raise ValueError("not a FLAC stream")
-    pos = 4
-    streaminfo = None
-    while pos + 4 <= len(payload):
-        hdr = payload[pos]
-        last = bool(hdr & 0x80)
-        btype = hdr & 0x7F
-        (blen,) = struct.unpack(">I", b"\x00" + payload[pos + 1 : pos + 4])
-        if btype == 0:
-            streaminfo = payload[pos + 4 : pos + 4 + blen]
-        pos += 4 + blen
-        if last:
-            break
-    if streaminfo is None or len(streaminfo) < 34:
-        raise ValueError("missing STREAMINFO")
-    r = _BitReader(streaminfo)
-    r.bits(16), r.bits(16), r.bits(24), r.bits(24)
-    sample_rate = r.bits(20)
-    channels = r.bits(3) + 1
-    bps = r.bits(5) + 1
-    total = r.bits(36)
-    md5_expect = streaminfo[18:34]
-
-    out: list[list[int]] = [[] for _ in range(channels)]
-    frames: list[dict] = []
-    while pos < len(payload):
-        frame_start = pos
-        r = _BitReader(payload, pos)
-        if r.bits(14) != 0b11111111111110:
-            raise ValueError("lost frame sync")
-        r.bits(1), r.bits(1)
-        bs_code = r.bits(4)
-        sr_code = r.bits(4)
-        assignment = r.bits(4)
-        ss_code = r.bits(3)
-        r.bits(1)
-        _read_utf8_number(r)
-        if bs_code == 0b0110:
-            nb = r.bits(8) + 1
-        elif bs_code == 0b0111:
-            nb = r.bits(16) + 1
-        elif bs_code == 0b0001:
-            nb = 192
-        elif 0b0010 <= bs_code <= 0b0101:
-            nb = 576 << (bs_code - 2)
-        elif bs_code >= 0b1000:
-            nb = 256 << (bs_code - 8)
-        else:
-            raise ValueError("reserved blocksize code")
-        if sr_code in (0b1100,):
-            r.bits(8)
-        elif sr_code in (0b1101, 0b1110):
-            r.bits(16)
-        frame_bps = {0b100: 16, 0b001: 8, 0b010: 12, 0b101: 20, 0b110: 24}.get(ss_code, bps)
-        r.align()
-        header_end = r.pos
-        crc8_ok = _crc8(payload[frame_start:header_end]) == payload[header_end]
-        r.bits(8)  # consume stored CRC-8 regardless of validity
-
-        if assignment <= 7:
-            planes = [_read_subframe(r, nb, frame_bps) for _ in range(assignment + 1)]
-        elif assignment == 8:
-            left = _read_subframe(r, nb, frame_bps)
-            side = _read_subframe(r, nb, frame_bps + 1)
-            planes = [left, [left[i] - side[i] for i in range(nb)]]
-        elif assignment == 9:
-            side = _read_subframe(r, nb, frame_bps + 1)
-            right = _read_subframe(r, nb, frame_bps)
-            planes = [[right[i] + side[i] for i in range(nb)], right]
-        elif assignment == 10:
-            mid = _read_subframe(r, nb, frame_bps)
-            side = _read_subframe(r, nb, frame_bps + 1)
-            planes = [[0] * nb, [0] * nb]
-            for i in range(nb):
-                m = (mid[i] << 1) | (side[i] & 1)
-                planes[0][i] = (m + side[i]) >> 1
-                planes[1][i] = (m - side[i]) >> 1
-        else:
-            raise ValueError(f"reserved channel assignment {assignment}")
-        if len(planes) != channels:
-            raise ValueError("frame channel count != STREAMINFO")
-        r.align()
-        (crc,) = struct.unpack(">H", payload[r.pos : r.pos + 2])
-        crc16_ok = _crc16(payload[frame_start : r.pos]) == crc
-        pos = r.pos + 2
-        for c in range(channels):
-            out[c].extend(planes[c])
-        frames.append(
-            {"blocksize": nb, "crc8_ok": crc8_ok, "crc16_ok": crc16_ok}
-        )
-
-    n = min(len(p) for p in out) if out else 0
-    samples = [out[c][i] for i in range(n) for c in range(channels)]
-    md5_ok = True
-    if bps == 16 and md5_expect != b"\x00" * 16:
-        md5_ok = (
-            hashlib.md5(struct.pack(f"<{len(samples)}h", *samples)).digest()
-            == md5_expect
-        )
-    return {
-        "sample_rate": sample_rate,
-        "channels": channels,
-        "total": total,
-        "frames": frames,
-        "md5_ok": md5_ok,
-    }
+    walk = _walk(payload)
+    stream = next(walk)
+    for _check in walk:
+        pass
+    return {k: stream[k] for k in ("sample_rate", "channels", "total", "frames", "md5_ok")}

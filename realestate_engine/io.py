@@ -9,7 +9,8 @@ Reference semantics re-expressed scale-first:
 - S2/S3 Parquet scan/sink (reference: notebooks/00_prepare_data.py:91,
   src/features/feature_engineering.py:401-423) — ours adds
   ``partitionBy`` and bucketing options for scale.
-- S4 local-row source (reference: src/inference/predict.py:62).
+- S4 local-row source (reference: src/inference/predict.py:62) is
+  ``spark.createDataFrame`` with an explicit schema (queries_core.s4_local_rows).
 - S6 CSV sink — native ``df.write.csv``; the reference detoured through
   pandas (src/webapp/app.py:153), a driver-memory bottleneck at scale.
 """
@@ -44,11 +45,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -67,11 +63,6 @@ def write_parquet(
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
     """Native distributed CSV sink (no pandas detour)."""
     df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def from_rows(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
-    """Local-row source for single-record inference paths."""
-    return spark.createDataFrame([tuple(r.get(f.name) for f in schema.fields) for r in rows], schema)
 
 
 def write_bucketed(

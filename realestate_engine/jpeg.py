@@ -381,6 +381,60 @@ def _jpeg_comps(width: int, height: int, rgb: bytes, subsample: bool) -> list[di
     return comps
 
 
+def _segment(marker: int, payload: bytes) -> bytes:
+    """One marker segment: 0xFF, the marker, the big-endian length
+    (payload + the 2 length bytes), the payload."""
+    return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+
+def _dct_setup(
+    width: int, height: int, rgb: bytes, quality: int, subsample: bool
+) -> tuple[list[dict], int, int]:
+    """The setup the baseline and progressive encoders share: the YCbCr
+    components and the MCU grid (mcus_x, mcus_y). Each component
+    carries its quality-scaled quant table ``q``, its Huffman code
+    tables ``dc`` and ``ac``, its padded block grid ``bw`` x ``bh`` and
+    its true block grid ``tbw`` x ``tbh``."""
+    quant = [_scaled_quant(QUANT_LUM, quality), _scaled_quant(QUANT_CHROM, quality)]
+    enc_dc = [_build_codes(DC_LUM_BITS, DC_LUM_VALS), _build_codes(DC_CHROM_BITS, DC_CHROM_VALS)]
+    enc_ac = [_build_codes(AC_LUM_BITS, AC_LUM_VALS), _build_codes(AC_CHROM_BITS, AC_CHROM_VALS)]
+    comps = _jpeg_comps(width, height, rgb, subsample)
+    max_h = max(c["h"] for c in comps)
+    max_v = max(c["v"] for c in comps)
+    mcus_x = -(-width // (8 * max_h))
+    mcus_y = -(-height // (8 * max_v))
+    for c in comps:
+        ti = 0 if c["lum"] else 1
+        c["q"], c["dc"], c["ac"] = quant[ti], enc_dc[ti], enc_ac[ti]
+        c["bw"], c["bh"] = mcus_x * c["h"], mcus_y * c["v"]
+        cw = -(-width * c["h"] // max_h)
+        chh = -(-height * c["v"] // max_v)
+        c["tbw"], c["tbh"] = -(-cw // 8), -(-chh // 8)
+    return comps, mcus_x, mcus_y
+
+
+def _dct_header(sof_marker: int, width: int, height: int, comps: list[dict]) -> bytearray:
+    """SOI, the JFIF APP0, both quant tables, the frame header (SOF0
+    baseline or SOF2 progressive) and the four Annex K Huffman
+    tables."""
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += _segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    for table_id, c in enumerate(comps[:2]):  # Y holds table 0; Cb (and Cr) table 1
+        out += _segment(0xDB, bytes([table_id]) + bytes(c["q"]))
+    sof = struct.pack(">BHHB", 8, height, width, len(comps))
+    for i, c in enumerate(comps):
+        sof += bytes([i + 1, (c["h"] << 4) | c["v"], 0 if c["lum"] else 1])
+    out += _segment(sof_marker, sof)
+    for cls_id, bits, vals in (
+        (0x00, DC_LUM_BITS, DC_LUM_VALS),
+        (0x10, AC_LUM_BITS, AC_LUM_VALS),
+        (0x01, DC_CHROM_BITS, DC_CHROM_VALS),
+        (0x11, AC_CHROM_BITS, AC_CHROM_VALS),
+    ):
+        out += _segment(0xC4, bytes([cls_id]) + bytes(bits) + bytes(vals))
+    return out
+
+
 def encode_jpeg(
     width: int,
     height: int,
@@ -393,16 +447,7 @@ def encode_jpeg(
     ``subsample`` — box-averaged chroma), quality-scaled Annex K quant
     tables, standard Huffman tables, optional DRI/RSTn restart markers.
     Edge-replicates to block boundaries."""
-    qy = _scaled_quant(QUANT_LUM, quality)
-    qc = _scaled_quant(QUANT_CHROM, quality)
-    comps = _jpeg_comps(width, height, rgb, subsample)
-    max_h = max(c["h"] for c in comps)
-    max_v = max(c["v"] for c in comps)
-    mcus_x = -(-width // (8 * max_h))
-    mcus_y = -(-height // (8 * max_v))
-
-    enc_dc = [_build_codes(DC_LUM_BITS, DC_LUM_VALS), _build_codes(DC_CHROM_BITS, DC_CHROM_VALS)]
-    enc_ac = [_build_codes(AC_LUM_BITS, AC_LUM_VALS), _build_codes(AC_CHROM_BITS, AC_CHROM_VALS)]
+    comps, mcus_x, mcus_y = _dct_setup(width, height, rgb, quality, subsample)
     writer = _BitWriter()
     pred = [0, 0, 0]
     mcu_count = 0
@@ -416,8 +461,6 @@ def encode_jpeg(
                 pred = [0, 0, 0]
             mcu_count += 1
             for ci, c in enumerate(comps):
-                q = qy if c["lum"] else qc
-                ti = 0 if c["lum"] else 1
                 for vy in range(c["v"]):
                     for vx in range(c["h"]):
                         pred[ci] = _encode_block(
@@ -427,35 +470,18 @@ def encode_jpeg(
                             c["ph"],
                             (mx * c["h"] + vx) * 8,
                             (my * c["v"] + vy) * 8,
-                            q,
-                            enc_dc[ti],
-                            enc_ac[ti],
+                            c["q"],
+                            c["dc"],
+                            c["ac"],
                             pred[ci],
                         )
     writer.flush()
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + bytes(qy))
-    out += seg(0xDB, b"\x01" + bytes(qc))
-    sof = struct.pack(">BHHB", 8, height, width, 3)
-    for i, c in enumerate(comps):
-        sof += bytes([i + 1, (c["h"] << 4) | c["v"], 0 if c["lum"] else 1])
-    out += seg(0xC0, sof)
-    for cls_id, bits, vals in (
-        (0x00, DC_LUM_BITS, DC_LUM_VALS),
-        (0x10, AC_LUM_BITS, AC_LUM_VALS),
-        (0x01, DC_CHROM_BITS, DC_CHROM_VALS),
-        (0x11, AC_CHROM_BITS, AC_CHROM_VALS),
-    ):
-        out += seg(0xC4, bytes([cls_id]) + bytes(bits) + bytes(vals))
+    out = _dct_header(0xC0, width, height, comps)
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
     sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    out += seg(0xDA, sos)
+    out += _segment(0xDA, sos)
     out += writer.buf
     out += b"\xff\xd9"  # EOI
     return bytes(out)
@@ -915,25 +941,10 @@ def encode_jpeg_progressive(
     round-trip tests pin. Reuses the baseline's quantization, Huffman
     tables, bit writer and FDCT; EOBs are always EOB0 so the standard
     Annex K AC tables suffice (EOBn for n>0 would need custom DHTs)."""
-    qy = _scaled_quant(QUANT_LUM, quality)
-    qc = _scaled_quant(QUANT_CHROM, quality)
-    comps = _jpeg_comps(width, height, rgb, subsample)
-    max_h = max(c["h"] for c in comps)
-    max_v = max(c["v"] for c in comps)
-    mcus_x = -(-width // (8 * max_h))
-    mcus_y = -(-height // (8 * max_v))
-
-    enc_dc = [_build_codes(DC_LUM_BITS, DC_LUM_VALS), _build_codes(DC_CHROM_BITS, DC_CHROM_VALS)]
-    enc_ac = [_build_codes(AC_LUM_BITS, AC_LUM_VALS), _build_codes(AC_CHROM_BITS, AC_CHROM_VALS)]
-
+    comps, mcus_x, mcus_y = _dct_setup(width, height, rgb, quality, subsample)
     for c in comps:
-        q = qy if c["lum"] else qc
-        c["bw"], c["bh"] = mcus_x * c["h"], mcus_y * c["v"]
-        cw = -(-width * c["h"] // max_h)
-        chh = -(-height * c["v"] // max_v)
-        c["tbw"], c["tbh"] = -(-cw // 8), -(-chh // 8)
         c["blocks"] = [
-            _quant_block(c["plane"], c["pw"], c["ph"], bx * 8, by * 8, q)
+            _quant_block(c["plane"], c["pw"], c["ph"], bx * 8, by * 8, c["q"])
             for by in range(c["bh"])
             for bx in range(c["bw"])
         ]
@@ -955,7 +966,7 @@ def encode_jpeg_progressive(
     for ci, c, b in mcu_blocks():
         v = b[0] >> 1
         s, bits_v = _magnitude(v - pred[ci])
-        code, ln = enc_dc[0 if c["lum"] else 1][s]
+        code, ln = c["dc"][s]
         w.put(code, ln)
         if s:
             w.put(bits_v, s)
@@ -979,10 +990,9 @@ def encode_jpeg_progressive(
     # scans 3..5: AC first pass per component (non-interleaved, Al=1)
     for ci, c in enumerate(comps):
         w = _BitWriter()
-        ac = enc_ac[0 if c["lum"] else 1]
         for by in range(c["tbh"]):
             for bx in range(c["tbw"]):
-                _enc_ac_first(w, ac, c["blocks"][by * c["bw"] + bx], 1, 63, 1)
+                _enc_ac_first(w, c["ac"], c["blocks"][by * c["bw"] + bx], 1, 63, 1)
         w.flush()
         hdr = bytes([1, ci + 1, (0 if c["lum"] else 1)]) + bytes([1, 63, 0x01])
         scans.append((hdr, bytes(w.buf)))
@@ -990,34 +1000,16 @@ def encode_jpeg_progressive(
     # scans 6..8: AC refinement per component (Ah=1 -> Al=0)
     for ci, c in enumerate(comps):
         w = _BitWriter()
-        ac = enc_ac[0 if c["lum"] else 1]
         for by in range(c["tbh"]):
             for bx in range(c["tbw"]):
-                _enc_ac_refine(w, ac, c["blocks"][by * c["bw"] + bx], 1, 63, 1, 0)
+                _enc_ac_refine(w, c["ac"], c["blocks"][by * c["bw"] + bx], 1, 63, 1, 0)
         w.flush()
         hdr = bytes([1, ci + 1, (0 if c["lum"] else 1)]) + bytes([1, 63, 0x10])
         scans.append((hdr, bytes(w.buf)))
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + bytes(qy))
-    out += seg(0xDB, b"\x01" + bytes(qc))
-    sof = struct.pack(">BHHB", 8, height, width, len(comps))
-    for i, c in enumerate(comps):
-        sof += bytes([i + 1, (c["h"] << 4) | c["v"], 0 if c["lum"] else 1])
-    out += seg(0xC2, sof)  # SOF2: progressive DCT
-    for cls_id, bits, vals in (
-        (0x00, DC_LUM_BITS, DC_LUM_VALS),
-        (0x10, AC_LUM_BITS, AC_LUM_VALS),
-        (0x01, DC_CHROM_BITS, DC_CHROM_VALS),
-        (0x11, AC_CHROM_BITS, AC_CHROM_VALS),
-    ):
-        out += seg(0xC4, bytes([cls_id]) + bytes(bits) + bytes(vals))
+    out = _dct_header(0xC2, width, height, comps)  # SOF2: progressive DCT
     for hdr, entropy in scans:
-        out += seg(0xDA, hdr)
+        out += _segment(0xDA, hdr)
         out += entropy
     out += b"\xff\xd9"
     return bytes(out)
@@ -1148,14 +1140,11 @@ def encode_jpeg_lossless(
                 w.put(bits_v, s)
     w.flush()
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
     out = bytearray(b"\xff\xd8")
     sof = struct.pack(">BHHB", precision, height, width, 1) + bytes([1, 0x11, 0])
-    out += seg(0xC3, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(LOSSLESS_BITS) + bytes(LOSSLESS_VALS))
-    out += seg(0xDA, bytes([1, 1, 0x00, predictor, 0, 0]))
+    out += _segment(0xC3, sof)
+    out += _segment(0xC4, bytes([0x00]) + bytes(LOSSLESS_BITS) + bytes(LOSSLESS_VALS))
+    out += _segment(0xDA, bytes([1, 1, 0x00, predictor, 0, 0]))
     out += bytes(w.buf)
     out += b"\xff\xd9"
     return bytes(out)

@@ -355,6 +355,17 @@ def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JPEG_W, _JPEG_H = 24, 16
 
 
+def _gradient_rgb(w: int, h: int, blue: int) -> bytes:
+    """The JPEG test raster: red rises along x, green along y, blue is
+    constant; RGB-interleaved bytes, row-major."""
+    return bytes(
+        v
+        for y in range(h)
+        for x in range(w)
+        for v in ((x * 255) // (w - 1), (y * 255) // (h - 1), blue)
+    )
+
+
 @register(
     "mm_jpeg_roundtrip",
     f"""
@@ -386,16 +397,7 @@ def mm_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     w, h = _JPEG_W, _JPEG_H
 
     def row(d):
-        rgb = bytes(
-            v
-            for y in range(h)
-            for x in range(w)
-            for v in (
-                (x * 255) // (w - 1),
-                (y * 255) // (h - 1),
-                (d * 37) % 256,
-            )
-        )
+        rgb = _gradient_rgb(w, h, (d * 37) % 256)
         payload = encode_jpeg(
             w, h, rgb, quality=85,
             subsample=(d % 2 == 1),
@@ -451,16 +453,7 @@ def mm_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     w, h = _JPEG_W, _JPEG_H
 
     def row(d):
-        rgb = bytes(
-            v
-            for y in range(h)
-            for x in range(w)
-            for v in (
-                (x * 255) // (w - 1),
-                (y * 255) // (h - 1),
-                (d * 37) % 256,
-            )
-        )
+        rgb = _gradient_rgb(w, h, (d * 37) % 256)
         base = decode_jpeg(encode_jpeg(w, h, rgb, quality=85, subsample=(d % 2 == 1)))
         prog = decode_jpeg(
             encode_jpeg_progressive(w, h, rgb, quality=85, subsample=(d % 2 == 1))
@@ -1496,19 +1489,7 @@ def mm_mjpeg_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     def row(d):
         fps = 10 + (d % 3) * 5
         n_frames = 3 + d % 3
-        rasters = [
-            bytes(
-                v
-                for y in range(h)
-                for x in range(w)
-                for v in (
-                    (x * 255) // (w - 1),
-                    (y * 255) // (h - 1),
-                    (d * 37 + f * 11) % 256,
-                )
-            )
-            for f in range(n_frames)
-        ]
+        rasters = [_gradient_rgb(w, h, (d * 37 + f * 11) % 256) for f in range(n_frames)]
         frames = [
             encode_jpeg(w, h, r, quality=85, subsample=(d % 2 == 1))
             for r in rasters

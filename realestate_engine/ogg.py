@@ -28,6 +28,7 @@ surface at all — this is pure 100 TB corpus machinery).
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 
 _CRC_TABLE: list[int] = []
 for _i in range(256):
@@ -101,52 +102,73 @@ def encode_minimal_ogg_vorbis(
     )
 
 
-def parse_ogg(payload: bytes) -> dict:
-    """Walk an Ogg physical stream, verifying every page CRC; parse the
-    Vorbis identification + comment headers. Returns ``{"serial",
-    "n_pages", "sample_rate", "channels", "vendor", "n_comments",
-    "comments", "granule", "duration_ms"}``."""
+def _pages(payload: bytes) -> Iterator[dict]:
+    """The one Ogg page walk behind parse_ogg and audit_ogg_pages: yields
+    one dict per page — {"version", "header_type", "granule", "serial",
+    "seq", "lacing", "body", "crc_ok"} — with the CRC recomputed over
+    the page (its CRC field zeroed). A CRC mismatch is recorded, not
+    raised; structure errors (no capture pattern, lost sync,
+    truncation) raise ValueError, because a stream whose lacing walk is
+    broken has no well-defined page sequence."""
     if payload[:4] != b"OggS":
         raise ValueError("not an Ogg stream (no OggS capture pattern)")
-    pos, n_pages, serial = 0, 0, None
-    granule = 0
-    packets: list[bytes] = []
-    partial = b""
+    pos = 0
     while pos < len(payload):
         if payload[pos : pos + 4] != b"OggS":
             raise ValueError(f"lost page sync at byte {pos}")
         if pos + 27 > len(payload):
             raise ValueError("truncated page header")
-        version, htype, gpos, pserial, _seq, crc = struct.unpack_from("<BBqIII", payload, pos + 4)
-        if version != 0:
-            raise ValueError(f"Ogg stream structure version {version} unknown")
+        version, htype, gpos, serial, seq, crc = struct.unpack_from("<BBqIII", payload, pos + 4)
         nseg = payload[pos + 26]
         lacing = payload[pos + 27 : pos + 27 + nseg]
         if len(lacing) < nseg:
             raise ValueError("truncated lacing table")
         body_at = pos + 27 + nseg
-        body_len = sum(lacing)
-        page_end = body_at + body_len
+        page_end = body_at + sum(lacing)
         if page_end > len(payload):
             raise ValueError("page body overruns stream")
         check = bytearray(payload[pos:page_end])
         check[22:26] = b"\x00\x00\x00\x00"
-        if ogg_crc(bytes(check)) != crc:
+        yield {
+            "version": version,
+            "header_type": htype,
+            "granule": gpos,
+            "serial": serial,
+            "seq": seq,
+            "lacing": lacing,
+            "body": payload[body_at:page_end],
+            "crc_ok": ogg_crc(bytes(check)) == crc,
+        }
+        pos = page_end
+
+
+def parse_ogg(payload: bytes) -> dict:
+    """Walk an Ogg physical stream, verifying every page CRC; parse the
+    Vorbis identification + comment headers. Returns ``{"serial",
+    "n_pages", "sample_rate", "channels", "vendor", "n_comments",
+    "comments", "granule", "duration_ms"}``."""
+    n_pages, serial = 0, None
+    granule = 0
+    packets: list[bytes] = []
+    partial = b""
+    for page in _pages(payload):
+        if page["version"] != 0:
+            raise ValueError(f"Ogg stream structure version {page['version']} unknown")
+        if not page["crc_ok"]:
             raise ValueError(f"page {n_pages} CRC mismatch")
-        serial = pserial if serial is None else serial
-        if pserial != serial:
+        serial = page["serial"] if serial is None else serial
+        if page["serial"] != serial:
             raise ValueError("multiplexed streams not supported")
-        if gpos >= 0:
-            granule = gpos
-        at = body_at
-        for lv in lacing:
-            partial += payload[at : at + lv]
+        if page["granule"] >= 0:
+            granule = page["granule"]
+        at = 0
+        for lv in page["lacing"]:
+            partial += page["body"][at : at + lv]
             at += lv
             if lv < 255:  # packet terminates
                 packets.append(partial)
                 partial = b""
         n_pages += 1
-        pos = page_end
     if partial:
         raise ValueError("stream ends mid-packet")
     if not packets or packets[0][:7] != b"\x01vorbis":
@@ -199,34 +221,13 @@ def audit_ogg_pages(payload: bytes) -> list[dict]:
     Structure errors (lost sync, truncation) still raise: a stream
     whose lacing walk is broken has no well-defined page census, while
     a bit-flipped body is exactly what the CRC exists to catch."""
-    if payload[:4] != b"OggS":
-        raise ValueError("not an Ogg stream (no OggS capture pattern)")
-    pos, out = 0, []
-    while pos < len(payload):
-        if payload[pos : pos + 4] != b"OggS":
-            raise ValueError(f"lost page sync at byte {pos}")
-        if pos + 27 > len(payload):
-            raise ValueError("truncated page header")
-        _v, htype, gpos, _serial, seq, crc = struct.unpack_from("<BBqIII", payload, pos + 4)
-        nseg = payload[pos + 26]
-        lacing = payload[pos + 27 : pos + 27 + nseg]
-        if len(lacing) < nseg:
-            raise ValueError("truncated lacing table")
-        body_at = pos + 27 + nseg
-        body_len = sum(lacing)
-        page_end = body_at + body_len
-        if page_end > len(payload):
-            raise ValueError("page body overruns stream")
-        check = bytearray(payload[pos:page_end])
-        check[22:26] = b"\x00\x00\x00\x00"
-        out.append(
-            {
-                "seq": seq,
-                "header_type": htype,
-                "granule": gpos,
-                "body_bytes": body_len,
-                "crc_ok": ogg_crc(bytes(check)) == crc,
-            }
-        )
-        pos = page_end
-    return out
+    return [
+        {
+            "seq": page["seq"],
+            "header_type": page["header_type"],
+            "granule": page["granule"],
+            "body_bytes": len(page["body"]),
+            "crc_ok": page["crc_ok"],
+        }
+        for page in _pages(payload)
+    ]

@@ -194,6 +194,49 @@ def _stream_state_partitions(
     return min(need, width)
 
 
+def _drain_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    query_name: str,
+    output_mode: str,
+    ckpt_name: str,
+    src_dirs: tuple[str, ...],
+    *,
+    python_state: bool,
+) -> DataFrame:
+    """Run ``stream`` to completion into a memory sink and return the
+    sink table: one availableNow drain from a fresh checkpoint (a
+    reused one would mark the input as already processed and yield an
+    empty second run). The state-store partition count is baked into
+    the checkpoint at stream START from spark.sql.shuffle.partitions,
+    so the drain sets it from the source snapshot (see
+    _stream_state_partitions): a plain driver session neither spreads
+    tiny state over 200 partitions nor pays 32 state-store commits per
+    micro-batch for a ~MB drain. The setting is restored afterwards."""
+    import shutil
+
+    ckpt = stable_tmp(ckpt_name)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    key = "spark.sql.shuffle.partitions"
+    old_parts = spark.conf.get(key)
+    try:
+        spark.conf.set(
+            key, str(_stream_state_partitions(spark, *src_dirs, python_state=python_state))
+        )
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set(key, old_parts)
+    return spark.table(query_name)
+
+
 def stateful_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful streaming operator via applyInPandasWithState:
     per-user running (n_events, total_value) maintained across
@@ -250,15 +293,11 @@ def st_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     The checkpoint is recreated per invocation (committed offsets
     would otherwise mark the input as already processed and yield an
     empty second run); the input snapshot overwrites one stable dir."""
-    import shutil
-
     ev = t(spark, sf_dir, "events").select(
         "user_id", "ts", F.round(F.col("value") * 100).cast("long").alias("value_cents")
     )
     src = stable_tmp("st3_events")
     ev.write.mode("overwrite").parquet(src)
-    ckpt = stable_tmp("st3_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -281,28 +320,9 @@ def st_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # the state-store partition count is baked into the checkpoint at
-    # stream START from spark.sql.shuffle.partitions — size it from the
-    # source snapshot (see _stream_state_partitions) so a plain driver
-    # session neither spreads tiny state over 200 partitions nor pays
-    # 32 state-store commits per micro-batch for a ~MB drain;
-    # restored after the stream finishes (it runs to completion here)
-    key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(key)
-    try:
-        spark.conf.set(key, str(_stream_state_partitions(spark, src, python_state=True)))
-        q = (
-            updates.writeStream.format("memory")
-            .queryName("re_st3_totals")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, old_parts)
-    sink = spark.table("re_st3_totals")
+    sink = _drain_to_memory(
+        spark, updates, "re_st3_totals", "update", "st3_ckpt", (src,), python_state=True
+    )
     return (
         sink.groupBy("user_id")
         .agg(
@@ -502,7 +522,6 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2h + 1h of events), the property that lets a 100 TB/day
     stream-stream join run indefinitely."""
     import os
-    import shutil
 
     ev = t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     # r14 (guide §1.2): ONE partitioned write instead of two separately
@@ -523,33 +542,17 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases_src = os.path.join(both_src, "event_type=purchase")
     os.makedirs(clicks_src, exist_ok=True)
     os.makedirs(purchases_src, exist_ok=True)
-    ckpt = stable_tmp("st6_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     schema = ev.drop("event_type").schema
     joined = stream_stream_click_purchase_join(
         streamify(spark, clicks_src, schema), streamify(spark, purchases_src, schema)
     )
-    key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(key)
-    try:
-        spark.conf.set(
-            key, str(_stream_state_partitions(spark, clicks_src, purchases_src))
-        )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("re_st6_pairs")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, old_parts)
+    pairs = _drain_to_memory(
+        spark, joined, "re_st6_pairs", "append", "st6_ckpt", (clicks_src, purchases_src),
+        python_state=False,
+    )
     return (
-        spark.table("re_st6_pairs")
-        .select(
+        pairs.select(
             F.col("p_id").alias("purchase_id"),
             F.col("c_id").alias("click_id"),
             F.col("p_user").alias("user_id"),
@@ -688,8 +691,6 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the SAME oracle, so the two state APIs are pinned to agree
     with each other and with the relational aggregate. State: one
     (long, long) ValueState per user, bounded by |users| at 100 TB."""
-    import shutil
-
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -701,8 +702,6 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = stable_tmp("st9_events")
     ev.write.mode("overwrite").parquet(src)
-    ckpt = stable_tmp("st9_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     class RunningTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -728,22 +727,9 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(key)
-    try:
-        spark.conf.set(key, str(_stream_state_partitions(spark, src, python_state=True)))
-        q = (
-            updates.writeStream.format("memory")
-            .queryName("re_st9_totals")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, old_parts)
-    sink = spark.table("re_st9_totals")
+    sink = _drain_to_memory(
+        spark, updates, "re_st9_totals", "update", "st9_ckpt", (src,), python_state=True
+    )
     return (
         sink.groupBy("user_id")
         .agg(
@@ -899,8 +885,6 @@ def st_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             mt = 1_000_000_000 + i * 1000 + j
             os.utime(dst, (mt, mt))
     shutil.rmtree(build, ignore_errors=True)
-    ckpt = stable_tmp("st_cusum_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -934,22 +918,9 @@ def st_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(key)
-    try:
-        spark.conf.set(key, str(_stream_state_partitions(spark, src, python_state=True)))
-        q = (
-            updates.writeStream.format("memory")
-            .queryName("re_st_cusum")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, old_parts)
-    sink = spark.table("re_st_cusum")
+    sink = _drain_to_memory(
+        spark, updates, "re_st_cusum", "update", "st_cusum_ckpt", (src,), python_state=True
+    )
     return (
         sink.groupBy("user_id")
         .agg(

@@ -4,6 +4,9 @@ counterexample shrinks to a minimal failing case."""
 
 from __future__ import annotations
 
+import hashlib
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -273,3 +276,92 @@ def test_bmp_rle8_hostile_streams_raise_valueerror():
     grid = _decode_rle8(bytes([0x04, 9, 0x00, 0x00, 0x04, 8, 0x00, 0x01]), 4, 2)
     assert [len(r) for r in grid] == [4, 4]
     assert grid[0] == [9, 9, 9, 9] and grid[1] == [8, 8, 8, 8]
+
+
+def _byte_flips(blob: bytes):
+    """Every copy of ``blob`` with one byte inverted, lowest bit flipped
+    or highest bit flipped."""
+    for i in range(len(blob)):
+        for mask in (0xFF, 0x01, 0x80):
+            b = bytearray(blob)
+            b[i] ^= mask
+            yield bytes(b)
+
+
+def test_flac_byte_flips_raise_or_decode_exactly():
+    """A corrupted FLAC stream either raises ValueError or (the flip
+    hit a field the samples do not depend on, e.g. the sample rate)
+    decodes to the original samples; the audit either raises ValueError
+    or returns its record. No other exception escapes either walk."""
+    from realestate_engine.flac import audit_flac_frames
+
+    mono = [(i * 37) % 3001 - 1500 for i in range(300)]
+    stereo = [(i * i) % 4001 - 2000 for i in range(400)]
+    for channels, samples, blocksize in ((1, mono, 128), (2, stereo, 64)):
+        for b in _byte_flips(encode_flac(8000, channels, samples, blocksize=blocksize)):
+            try:
+                assert decode_flac(b)["samples"] == samples
+            except ValueError:
+                pass
+            try:
+                audit_flac_frames(b)
+            except ValueError:
+                pass
+
+
+def test_ogg_byte_flips_raise():
+    """Every page is CRC-protected, so parse_ogg rejects any single-byte
+    corruption with ValueError."""
+    import pytest as _pytest
+
+    from realestate_engine.ogg import encode_minimal_ogg_vorbis, parse_ogg
+
+    blob = encode_minimal_ogg_vorbis(44100, 2, [("TITLE", "x"), ("ARTIST", "yy")], granule=1234)
+    for b in _byte_flips(blob):
+        with _pytest.raises(ValueError):
+            parse_ogg(b)
+
+
+def _pin_raster(w: int, h: int) -> bytes:
+    return bytes(
+        (x * 31 + y * 17 + c * 90 + (x * y) % 13) % 256
+        for y in range(h)
+        for x in range(w)
+        for c in range(3)
+    )
+
+
+def _pin_gray(w: int, h: int, scale: int) -> list[int]:
+    return [((x * 29 + y * 11 + (x ^ y)) % 256) * scale for y in range(h) for x in range(w)]
+
+
+# sha256 of the encoders' bytes, recorded before the baseline and
+# progressive encoders shared their setup and header writer
+_JPEG_PINS = [
+    ("baseline-444-q85", lambda: encode_jpeg(24, 16, _pin_raster(24, 16), 85),
+     "e8f52ba218e26d27bc70d50bfd2b0b9fbb77a46ba3fa53beb33be4b90e59d9fd"),
+    ("baseline-420-q50", lambda: encode_jpeg(24, 16, _pin_raster(24, 16), 50, subsample=True),
+     "46e611ec319bb5c364d335f1b883081e5c6a384ac967645d3f7ac87b14ec1763"),
+    ("baseline-420-q85-rst2",
+     lambda: encode_jpeg(17, 13, _pin_raster(17, 13), 85, subsample=True, restart_interval=2),
+     "49629602c5ea589d5c033eedfa9839013574bf52ef27fc47a447e0be10ceb64d"),
+    ("baseline-444-q10-rst1", lambda: encode_jpeg(9, 7, _pin_raster(9, 7), 10, restart_interval=1),
+     "782945901fffe60a5d2589b2a0e9e62fae635ba36142e22ef4d3200cde43cec1"),
+    ("progressive-444-q85", lambda: encode_jpeg_progressive(24, 16, _pin_raster(24, 16), 85),
+     "a76b50a280fb64d5173f90ae41b5a3fe5d7a9366b774fabfaa0a862d155c4dd1"),
+    ("progressive-420-q50",
+     lambda: encode_jpeg_progressive(17, 13, _pin_raster(17, 13), 50, subsample=True),
+     "8ded2ff1ac107bb9a0b8630b7ca193316889604f9f056ad16b5fa87887a202e6"),
+    ("lossless-8bit", lambda: encode_jpeg_lossless(16, 16, _pin_gray(16, 16, 1)),
+     "cc34fac08f047d14755534c3bb4ae7e8581106c1723fc25d605ca6401820fa3f"),
+    ("lossless-12bit-pred7",
+     lambda: encode_jpeg_lossless(13, 9, _pin_gray(13, 9, 16), precision=12, predictor=7),
+     "bc2b925568a66ad4c6cf544d0b7a6ebe144d7a76e6c7efe34de2e9a494301634"),
+]
+
+
+@pytest.mark.parametrize(
+    "encode, digest", [pytest.param(e, d, id=name) for name, e, d in _JPEG_PINS]
+)
+def test_jpeg_encoder_bytes_pinned(encode, digest):
+    assert hashlib.sha256(encode()).hexdigest() == digest
