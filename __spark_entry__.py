@@ -15,20 +15,23 @@ The full per-round rotation history lives in COVERAGE.md's
 "Driver-window ledger" section, kept by ``tools/ledger.py`` (append
 each CORRECTNESS file, then ``stale`` for the next window's names).
 
-The current window: flagship, then the ten trade-graph consumers
-(graph.py/graph2.py), which read the one cached trade_graph relation,
-then the six queries on the session store's paths (the four readers
-of the memoized dedup cluster labels, two-star clustering over the
-same near-dup edges, and the walks, which now read trade_graph), then
-the nine queries whose edges or merge loop now have one definition
-(k-core, Boruvka and matching read trade_graph; triangle count,
-clustering coefficient, k-truss and Adamic-Adar read part_graph; the
-two BPE queries share _bpe_learn), then the nine queries newly on a
-shared loop or fit (the four iterate callers not listed above, the
-three Newton fits on newton_fit, ts9 and ts11 on
+The current window: the ten trade-graph consumers (graph.py), which
+read the one cached trade_graph relation, then three queries on the
+session store's paths (two readers of the memoized dedup cluster
+labels, and the walks, which read trade_graph), then the nine queries
+whose edges or merge loop have one definition (k-core, Boruvka and
+matching read trade_graph; triangle count, clustering coefficient,
+k-truss and Adamic-Adar read part_graph; the two BPE queries share
+_bpe_learn), then seven queries on a shared loop or fit (the four
+iterate callers not listed above, m43 on newton_fit, ts9 and ts11 on
 seasonal_decomposition), then the 15 media round-trip and probe
 queries that run through the one per-document Python stage,
-multimodal.doc_rows.
+multimodal.doc_rows, then the six queries on the relations the
+module-per-family layout merged: the two drift scores on
+period_bucket_counts and the four sketches and audits on
+dedup.lane_hash and its prime. The six names they replaced
+(flagship, three dedup cluster readers, m50 and m54) were the window's
+most recently verified ones.
 """
 
 from __future__ import annotations
@@ -43,7 +46,6 @@ from realestate_engine.queries_core import flagship_revenue_by_nation
 registry.load_all()
 
 _WINDOW = [
-    "flagship_revenue_by_nation",
     # --- the ten trade-graph consumers, which now all read the one
     #     cached trade_graph relation (graph.py) and, for pagerank and
     #     personalized pagerank, one recurrence
@@ -53,8 +55,7 @@ _WINDOW = [
     "graph_rich_club", "graph_anf_neighborhood",
     # --- the session store's paths: memoized cluster labels
     #     (registry.shared) and the walks on trade_graph
-    "dedup_clusters", "dedup_clusters_twostar", "dedup_canonical_selection",
-    "dedup_leakage_safe_split", "dedup_pipeline_summary",
+    "dedup_canonical_selection", "dedup_pipeline_summary",
     "graph_deterministic_walks",
     # --- one definition per graph and one BPE merge loop: the rest of
     #     trade_graph's readers, part_graph's four readers, _bpe_learn's two
@@ -62,10 +63,10 @@ _WINDOW = [
     "graph_triangle_count", "graph_clustering_coefficient", "graph_ktruss",
     "graph_adamic_adar", "text_bpe_merge_rounds", "t30_bpe_encode",
     # --- one round loop and one Newton fit: the rest of iterate's
-    #     callers, newton_fit's three, seasonal_decomposition's two
+    #     callers, one of newton_fit's three, seasonal_decomposition's two
     "m55_bradley_terry", "t34_textrank_keywords", "sim_ivf_build_exact",
-    "x37_occ_conflict_audit", "m43_logreg_newton", "m50_poisson_newton",
-    "m54_platt_scaling", "ts9_seasonal_decompose", "ts11_decomposition_strength",
+    "x37_occ_conflict_audit", "m43_logreg_newton",
+    "ts9_seasonal_decompose", "ts11_decomposition_strength",
     # --- one per-document media stage: the 15 callers of doc_rows
     #     (multimodal.py, queries_media_probes.py)
     "mm_jpeg_roundtrip", "mm_jpeg_progressive", "mm_jpeg_lossless",
@@ -73,6 +74,11 @@ _WINDOW = [
     "mm_tiff_probe", "mm_png_crc_audit", "mm_flac_crc_audit",
     "mm_mp4_probe", "mm_ogg_probe", "mm_mp3_probe", "mm_ogg_crc_audit",
     "mm_bmp_roundtrip",
+    # --- merged by the module-per-family layout: period_bucket_counts
+    #     (queries_quality.py) and dedup.lane_hash with its prime
+    "dq_drift_audit", "dq13_psi_drift",
+    "j10_bloom_join_prune", "a39_selfjoin_size_sketch", "dq14_skipping_audit",
+    "a22_count_min_sketch",
 ]
 assert len(_WINDOW) == 50, len(_WINDOW)
 assert len(set(_WINDOW)) == 50

@@ -98,6 +98,38 @@ def portable_hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
+# The Mersenne prime 2^31 - 1: the modulus of every affine hash here
+# (minhash permutations, shingle and band polynomials, lanes).
+_MINHASH_PRIME = 2147483647
+_LANE_A = (769, 1543, 3079)
+_LANE_B = (12289, 24593, 49157)
+
+
+def lane_hash(h: Column, i: int, width: int) -> Column:
+    """Lane ``i`` (0-2) of an integer hash ``h``: the affine transform
+    ((h*A[i] + B[i]) mod 2^31-1) mod width. Several cheap lanes of ONE
+    portable_hash32 stand in for independent hashes (double hashing):
+    the Bloom bits of j10, the count-min cells of a39 and the point
+    spread of dq14. Integer math only; ``lane_hash_sql`` is the DuckDB
+    twin, so both engines land every key in the same lane."""
+    return ((h * _LANE_A[i] + _LANE_B[i]) % _MINHASH_PRIME) % width
+
+
+def lane_hash_sql(hexpr: str, i: int, width: int) -> str:
+    return f"(({hexpr} * {_LANE_A[i]} + {_LANE_B[i]}) % {_MINHASH_PRIME}) % {width}"
+
+
+def bit_sql(expr: str) -> str:
+    """1 << (expr) as BIGINT in DuckDB, the twin of Spark's
+    shiftleft(1L, expr) for bit-packed BIGINT lanes; bit 63 is spelled
+    as the min-BIGINT literal because DuckDB raises on the overflowing
+    shift (Spark's shiftleft wraps)."""
+    return (
+        f"CASE WHEN ({expr}) = 63 THEN (-9223372036854775807 - 1) "
+        f"ELSE (1::BIGINT << ({expr})) END"
+    )
+
+
 def shingle_hashes(text_col: Column, n: int = 3) -> Column:
     """Distinct word n-gram HASHES as array<long> — the allocation-free
     sibling of word_shingles for pipelines that only hash the shingles
@@ -122,8 +154,6 @@ def shingle_hashes(text_col: Column, n: int = 3) -> Column:
     return F.array_distinct(F.filter(acc, lambda x: x.isNotNull()))
 
 
-# Large primes for the (a*x + b) mod p family of minhash permutations.
-_MINHASH_PRIME = 2147483647  # 2^31 - 1
 _POLY = 1000003  # rolling-polynomial base shared by shingle + band hashing
 
 

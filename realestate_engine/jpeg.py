@@ -219,6 +219,9 @@ class _BitReader:
         self.nbits = 0
 
     def _fill(self) -> None:
+        end = len(self.data)
+        if self.pos >= end or (self.data[self.pos] == 0xFF and self.pos + 1 == end):
+            raise ValueError("JPEG entropy data runs past the end of the payload")
         b = self.data[self.pos]
         if b == 0xFF:
             nxt = self.data[self.pos + 1]
@@ -241,7 +244,9 @@ class _BitReader:
         self.acc &= (1 << self.nbits) - 1
         return v
 
-    def huff(self, table: dict[tuple[int, int], int]) -> int:
+    def huff(self, table: dict[tuple[int, int], int] | None) -> int:
+        if table is None:
+            raise ValueError("scan uses an undefined Huffman table")
         code = 0
         for length in range(1, 17):
             code = (code << 1) | self.bits(1)
@@ -253,9 +258,12 @@ class _BitReader:
         """Consume the pending RSTn marker and realign to a byte."""
         self.acc = 0
         self.nbits = 0
-        while self.data[self.pos] != 0xFF or not (0xD0 <= self.data[self.pos + 1] <= 0xD7):
-            self.pos += 1
-        self.pos += 2
+        data, p = self.data, self.pos
+        while p + 1 < len(data) and not (data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7):
+            p += 1
+        if p + 1 >= len(data):
+            raise ValueError("missing JPEG restart marker")
+        self.pos = p + 2
 
 
 class _RestartMarker(Exception):
@@ -532,6 +540,8 @@ def _decode_scan(
                     continue
                 break  # EOB
             k += r
+            if k > 63:
+                raise ValueError("AC run past the end of the block")
             coef[base + k] = _extend(reader.bits(s2), s2)
             k += 1
 
@@ -563,6 +573,8 @@ def _decode_scan(
                 k += 16
                 continue
             k += r
+            if k > se:
+                raise ValueError("AC run past the end of the band")
             # point transform: value scales by 2^Al (arithmetic shift
             # keeps the sign-magnitude semantics for negatives)
             coef[base + k] = _extend(reader.bits(s2), s2) << al
@@ -657,6 +669,14 @@ def _decode_scan(
     return p
 
 
+def _unpack(fmt: str, data: bytes, off: int = 0) -> tuple:
+    """struct.unpack_from that raises ValueError when ``data`` is too
+    short for ``fmt`` (a corrupt length or count field)."""
+    if off + struct.calcsize(fmt) > len(data):
+        raise ValueError("truncated JPEG segment")
+    return struct.unpack_from(fmt, data, off)
+
+
 def decode_jpeg(payload: bytes) -> dict:
     """DCT decoder for baseline sequential (SOF0/SOF1) AND progressive
     (SOF2) JPEG: DQT/SOF/DHT/DRI parsing, multi-scan coefficient
@@ -664,7 +684,9 @@ def decode_jpeg(payload: bytes) -> dict:
     generic sampling factors with nearest-neighbor chroma upsampling,
     restart markers, byte unstuffing. Returns the same feature dict
     shape as decode_png (mean_intensity over the decoded RGB raster,
-    or over the gray raster for 1-component images)."""
+    or over the gray raster for 1-component images). Corrupt input
+    raises ValueError; a valid lossless frame with chroma subsampling
+    raises NotImplementedError."""
     if payload[:3] != b"\xff\xd8\xff":
         raise ValueError("not a JPEG payload")
     pos = 2
@@ -683,48 +705,49 @@ def decode_jpeg(payload: bytes) -> dict:
         if payload[pos] != 0xFF:
             pos += 1
             continue
+        if pos + 1 == len(payload):
+            raise ValueError("truncated JPEG marker")
         marker = payload[pos + 1]
         pos += 2
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             continue
         if marker == 0xD9:
             break
-        (seglen,) = struct.unpack(">H", payload[pos : pos + 2])
+        (seglen,) = _unpack(">H", payload, pos)
+        if seglen < 2 or pos + seglen > len(payload):
+            raise ValueError("JPEG segment runs past the end of the payload")
         data = payload[pos + 2 : pos + seglen]
         if marker == 0xDB:
             p = 0
             while p < len(data):
                 pq, tq = data[p] >> 4, data[p] & 0x0F
-                p += 1
-                if pq == 0:
-                    quant[tq] = list(data[p : p + 64])
-                    p += 64
-                else:
-                    quant[tq] = [
-                        struct.unpack(">H", data[p + 2 * i : p + 2 * i + 2])[0]
-                        for i in range(64)
-                    ]
-                    p += 128
+                fmt = ">64B" if pq == 0 else ">64H"
+                quant[tq] = list(_unpack(fmt, data, p + 1))
+                p += 1 + struct.calcsize(fmt)
         elif marker in (0xC0, 0xC1, 0xC2, 0xC3):  # seq. / progressive / lossless
+            if geom is not None:
+                raise ValueError("JPEG frame header after the first scan")
             progressive = marker == 0xC2
             lossless = marker == 0xC3
-            precision, height, width, ncomp = struct.unpack(">BHHB", data[:6])
+            precision, height, width, ncomp = _unpack(">BHHB", data)
             comps = []
             for i in range(ncomp):
-                cid, hv, tq = data[6 + 3 * i : 9 + 3 * i]
+                cid, hv, tq = _unpack(">3B", data, 6 + 3 * i)
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0x0F <= 4):
+                    raise ValueError("JPEG sampling factor outside 1-4")
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
         elif marker == 0xC4:
             p = 0
             while p < len(data):
                 tc, th = data[p] >> 4, data[p] & 0x0F
-                bits = list(data[p + 1 : p + 17])
+                bits = list(_unpack(">16B", data, p + 1))
                 n = sum(bits)
-                vals = list(data[p + 17 : p + 17 + n])
+                vals = list(_unpack(f">{n}B", data, p + 17))
                 table = _build_decoder(bits, vals)
                 (huff_dc if tc == 0 else huff_ac)[th] = table
                 p += 17 + n
         elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", data[:2])
+            (restart_interval,) = _unpack(">H", data)
         elif marker == 0xDA:
             if not comps or width == 0:
                 raise ValueError("SOS before SOF")
@@ -748,15 +771,19 @@ def decode_jpeg(payload: bytes) -> dict:
                     c["tbh"] = -(-chh // 8)
                     c["coef"] = [0] * (c["bw"] * c["bh"] * 64)
                 geom = (max_h, max_v, mcus_x, mcus_y)
-            ns = data[0]
+            (ns,) = _unpack(">B", data)
             scan_comps = []
             for i in range(ns):
-                cs, tables = data[1 + 2 * i], data[2 + 2 * i]
-                comp = next(c for c in comps if c["id"] == cs)
+                cs, tables = _unpack(">2B", data, 1 + 2 * i)
+                comp = next((c for c in comps if c["id"] == cs), None)
+                if comp is None:
+                    raise ValueError(f"scan names unknown component {cs}")
                 comp["dc"] = huff_dc.get(tables >> 4)
                 comp["ac"] = huff_ac.get(tables & 0x0F)
                 scan_comps.append(comp)
-            sstart, send, ahal = data[1 + 2 * ns], data[2 + 2 * ns], data[3 + 2 * ns]
+            sstart, send, ahal = _unpack(">3B", data, 1 + 2 * ns)
+            if not lossless and not sstart <= send <= 63:
+                raise ValueError("illegal scan: spectral band outside 0-63")
             pos += seglen
             if lossless:
                 pos = _decode_lossless_scan(
@@ -802,7 +829,9 @@ def decode_jpeg(payload: bytes) -> dict:
 
     # dequantize + IDCT every block into per-component pixel planes
     for c in comps:
-        q = quant[c["tq"]]
+        q = quant.get(c["tq"])
+        if q is None:
+            raise ValueError(f"undefined quantization table {c['tq']}")
         c["plane"] = [0.0] * (c["bw"] * 8 * c["bh"] * 8)
         stride = c["bw"] * 8
         for by in range(c["bh"]):

@@ -4,7 +4,7 @@ A ``SUM() OVER (ORDER BY ...)`` with no PARTITION BY funnels every row
 through one task. This module provides the scalable replacement — the
 two-phase distributed prefix sum — and the operators built on it.
 See DESIGN.md "Global-order work without global funnels";
-corpus_token_budget (text.py) and p14_dense_reid (queries_extra.py)
+corpus_token_budget (text.py) and p14_dense_reid (queries_core.py)
 are the same shape.
 """
 

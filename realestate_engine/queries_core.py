@@ -1,5 +1,6 @@
 """Core relational operators: scans/sinks, projections, filters, joins,
-aggregations, windows, sorts, set operations (SURVEY.md §2.1-2.7).
+windows, sorts, set operations (SURVEY.md §2.1-2.3, §2.5-2.7); the
+aggregations (§2.4) are in queries_aggregates.py.
 
 Each query is the Spark-first re-expression of a reference operator
 (file:line cited per query); the paired oracle SQL is what DuckDB runs
@@ -17,16 +18,15 @@ Scale notes honored throughout:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import register, stable_tmp, t
+from realestate_engine.dedup import bit_sql, lane_hash, lane_hash_sql, portable_hash32
+from realestate_engine.ordered import exclusive_prefix_offsets
+from realestate_engine.registry import cache_once, register, stable_tmp, t
 from realestate_engine.schemas import TESTDATA_SCHEMAS
-
 # ---------------------------------------------------------------------------
 # Flagship (entry()): revenue by nation = J1 + A2 + O1 analogue
 # (reference: notebooks/00_prepare_data.py:57 join; notebooks/01:163-166
@@ -318,6 +318,455 @@ def p9_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "p11_try_cast_safe_parse",
+    """
+    SELECT event_id,
+           TRY_CAST(JSON_EXTRACT_STRING(props, '$.k') AS BIGINT) AS k_num,
+           TRY_CAST(event_type AS BIGINT) AS type_as_num,
+           TRY_CAST(JSON_EXTRACT_STRING(props, '$.k') AS BIGINT) IS NOT NULL AS k_parses
+    FROM events
+    ORDER BY event_id
+    """,
+)
+def p11_try_cast_safe_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P11: ANSI-safe parsing with try_cast — Spark 4 runs ANSI mode by
+    default, where a bare CAST of junk ('signup' → BIGINT) throws and
+    kills the job; try_cast yields NULL instead. The dirty-input
+    survival pattern every large-scale ingest needs: parse what parses,
+    flag what doesn't."""
+    ev = t(spark, sf_dir, "events")
+    k_str = F.get_json_object("props", "$.k")
+    return ev.select(
+        "event_id",
+        k_str.try_cast("bigint").alias("k_num"),
+        F.col("event_type").try_cast("bigint").alias("type_as_num"),
+        k_str.try_cast("bigint").isNotNull().alias("k_parses"),
+    ).orderBy("event_id")
+
+
+@register(
+    "p13_hash_split",
+    """
+    WITH tagged AS (
+        SELECT o_orderkey,
+               CASE WHEN SUBSTR(MD5(CAST(o_orderkey AS VARCHAR)), 1, 1) < 'c' THEN 'train'
+                    WHEN SUBSTR(MD5(CAST(o_orderkey AS VARCHAR)), 1, 1) < 'e' THEN 'val'
+                    ELSE 'test' END AS split
+        FROM orders
+    )
+    SELECT split,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
+           CAST(MAX(o_orderkey) AS BIGINT) AS max_key
+    FROM tagged GROUP BY split ORDER BY split
+    """,
+)
+def p13_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P13: content-hash train/val/test split — the reproducible
+    alternative to seeded randomSplit (p11). Split membership is a pure
+    function of the row key (first hex nibble of md5: 12/16 train,
+    2/16 val, 2/16 test), so it is stable across engines, reruns,
+    cluster sizes, and data re-partitioning — the property a 100 TB
+    pipeline needs so that adding rows tomorrow never reshuffles
+    yesterday's assignments (randomSplit re-deals everything). Narrow,
+    no shuffle until the audit agg."""
+    tagged = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.when(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1) < "c", "train")
+        .when(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1) < "e", "val")
+        .otherwise("test")
+        .alias("split"),
+    )
+    return (
+        tagged.groupBy("split")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.min("o_orderkey").cast("bigint").alias("min_key"),
+            F.max("o_orderkey").cast("bigint").alias("max_key"),
+        )
+        .orderBy("split")
+    )
+
+
+@register(
+    "p14_dense_reid",
+    """
+    SELECT doc_id,
+           CAST(ROW_NUMBER() OVER (ORDER BY doc_id) AS BIGINT) AS new_id
+    FROM documents
+    ORDER BY doc_id
+    """,
+)
+def p14_dense_reid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P14: dense global re-enumeration (assign contiguous ids 1..N in
+    key order) WITHOUT the single-partition global window that a naive
+    ROW_NUMBER() OVER (ORDER BY ...) plans — the classic zipWithIndex
+    problem, solved relationally: range-partition by the key, count
+    rows per partition (tiny agg), turn counts into per-partition base
+    offsets with a broadcast self-join over the 32-row partition table,
+    broadcast the offsets back, and add a within-partition row_number. Every
+    stage is distributed; the only serial structure is the 32-row
+    offset ledger. The oracle states the semantics with the plain
+    global window DuckDB can afford."""
+    from pyspark.sql import Window
+
+    d = (
+        t(spark, sf_dir, "documents")
+        .select("doc_id")
+        .repartitionByRange(32, "doc_id")
+        .withColumn("pid", F.spark_partition_id())
+        .localCheckpoint()  # pin partition assignment: both branches below must see identical pids
+    )
+    counts = d.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
+    # 32-row ledger: broadcast non-equi self-join prefix sum (see
+    # ordered.exclusive_prefix_offsets) — no unpartitioned WindowExec
+    offsets = exclusive_prefix_offsets(counts, "pid", "cnt", "base")
+    w_in = Window.partitionBy("pid").orderBy("doc_id")
+    return (
+        d.join(F.broadcast(offsets), "pid")
+        .select(
+            "doc_id",
+            (F.col("base") + F.row_number().over(w_in)).cast("bigint").alias("new_id"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+@register(
+    "p16_hash_priority_sample",
+    """
+    WITH ranked AS (
+        SELECT o_orderpriority, o_orderkey,
+               ROW_NUMBER() OVER (
+                   PARTITION BY o_orderpriority
+                   ORDER BY MD5(CAST(o_orderkey AS VARCHAR)), o_orderkey
+               ) AS rn
+        FROM orders
+    )
+    SELECT o_orderpriority, CAST(o_orderkey AS BIGINT) AS o_orderkey, CAST(rn AS BIGINT) AS rn
+    FROM ranked WHERE rn <= 5
+    ORDER BY o_orderpriority, rn
+    """,
+)
+def p16_hash_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P16: deterministic per-group uniform sample via hash priorities
+    — rank each row within its group by the md5 of its key and keep the
+    top 5: a uniform-without-replacement sample (hash order is
+    pseudo-random w.r.t. any data attribute) that is REPRODUCIBLE
+    across engines, reruns, and cluster sizes, and composable (the
+    same row set survives re-sampling a superset — the property behind
+    consistent bottom-k sketches). rand()-based sampling has none of
+    these. One window pass per group key; at 100 TB swap row_number for
+    a min-k aggregate to avoid materializing full group sorts."""
+    from pyspark.sql import Window
+
+    o = t(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_orderpriority").orderBy(
+        F.md5(F.col("o_orderkey").cast("string")), "o_orderkey"
+    )
+    return (
+        o.select(
+            "o_orderpriority",
+            F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
+            F.row_number().over(w).alias("rn"),
+        )
+        .where(F.col("rn") <= 5)
+        .select("o_orderpriority", "o_orderkey", F.col("rn").cast("bigint").alias("rn"))
+        .orderBy("o_orderpriority", "rn")
+    )
+
+
+@register(
+    "p17_try_arithmetic",
+    """
+    SELECT l_orderkey, l_linenumber,
+           CASE WHEN (l_linenumber - 4) = 0 THEN NULL
+                ELSE l_extendedprice / (l_linenumber - 4) END AS price_ratio,
+           CAST(CASE WHEN (l_linenumber - 4) = 0 THEN 1 ELSE 0 END AS BIGINT) AS div_by_zero
+    FROM lineitem
+    WHERE l_orderkey < 200
+    ORDER BY l_orderkey, l_linenumber
+    """,
+)
+def p17_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P17: ANSI-safe arithmetic — Spark 4 runs in ANSI mode by
+    default, so a plain division by zero THROWS mid-job (at 100 TB:
+    after hours of progress). try_divide is the total-function form:
+    NULL on the poison row, job completes, and the audit column counts
+    the rows that would have killed the legacy pipeline. The divisor
+    (l_linenumber - 4) plants real zeros. The oracle states the
+    equivalent CASE guard — bitwise-identical doubles on the non-null
+    rows (one IEEE division)."""
+    li = t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 200)
+    div = F.col("l_linenumber") - 4
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.try_divide(F.col("l_extendedprice"), div).alias("price_ratio"),
+        F.when(div == 0, 1).otherwise(0).cast("bigint").alias("div_by_zero"),
+    ).orderBy("l_orderkey", "l_linenumber")
+
+
+@register(
+    "p18_rare_category_collapse",
+    """
+    WITH counts AS (
+        SELECT c_mktsegment, COUNT(*) AS n FROM customer GROUP BY c_mktsegment
+    ),
+    tot AS (SELECT SUM(n) AS total FROM counts),
+    mapped AS (
+        SELECT c.c_custkey,
+               CASE WHEN ct.n * 100 >= tot.total * 20 THEN c.c_mktsegment
+                    ELSE '__rare__' END AS segment
+        FROM customer c
+        JOIN counts ct ON ct.c_mktsegment = c.c_mktsegment
+        CROSS JOIN tot
+    )
+    SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_rows
+    FROM mapped GROUP BY segment ORDER BY segment
+    """,
+)
+def p18_rare_category_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P18: rare-category collapsing — fold categories whose share
+    falls below a threshold into one '__rare__' bucket before
+    encoding. The reference PERSISTS this threshold
+    (RARE_CATEGORY_THRESHOLD=0.05, src/features/feature_engineering.py
+    :43,308) but never implements the collapse (SURVEY §8 Q2); this is
+    the op it intended. Keeps one-hot widths bounded as category
+    cardinality grows with data volume — the 100 TB failure mode is a
+    million-column encoder from long-tail categories. The share test
+    is cross-multiplied to integers (n·100 >= total·threshold%), so
+    both engines agree exactly. The threshold (20%) is chosen to split
+    the testdata's 5 roughly-equal segments into kept + collapsed,
+    exercising both branches."""
+    c = t(spark, sf_dir, "customer")
+    counts = c.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n"))
+    tot = counts.agg(F.sum("n").alias("total"))
+    mapped = (
+        c.join(counts, "c_mktsegment")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            F.when(F.col("n") * 100 >= F.col("total") * 20, F.col("c_mktsegment"))
+            .otherwise("__rare__")
+            .alias("segment")
+        )
+    )
+    return (
+        mapped.groupBy("segment")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
+        .orderBy("segment")
+    )
+
+
+@register(
+    "p19_schema_drift_audit",
+    """
+    SELECT 'o_orderkey' AS column_name, 'bigint' AS v1_type, 'int' AS v2_type,
+           'type_changed' AS change
+    UNION ALL
+    SELECT 'o_orderpriority', 'string', NULL, 'removed'
+    UNION ALL
+    SELECT 'o_orderstatus', NULL, 'string', 'added'
+    UNION ALL
+    SELECT 'o_totalprice', 'double', 'double', 'unchanged'
+    ORDER BY column_name
+    """,
+)
+def p19_schema_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P19: schema-drift audit — diff the ACTUAL schemas of two written
+    table versions (the upstream-contract check that runs before any
+    data comparison makes sense): v2 narrows a key type, drops a
+    column, and adds another; the audit reads both parquet footers and
+    reports per-column added/removed/type_changed/unchanged. The
+    result frame is O(columns) driver metadata (like m10's CV params —
+    an allowlisted local frame); the oracle states the expected
+    contract literally, so a silent writer-side schema change flips
+    the hash. At 100 TB this is a footer-metadata operation — no data
+    pages are read."""
+    o = t(spark, sf_dir, "orders")
+    v1_dir, v2_dir = stable_tmp("p19_v1"), stable_tmp("p19_v2")
+    o.select("o_orderkey", "o_totalprice", "o_orderpriority").write.mode(
+        "overwrite"
+    ).parquet(v1_dir)
+    o.select(
+        F.col("o_orderkey").cast("int").alias("o_orderkey"),
+        "o_totalprice",
+        "o_orderstatus",
+    ).write.mode("overwrite").parquet(v2_dir)
+    s1 = dict(spark.read.parquet(v1_dir).dtypes)
+    s2 = dict(spark.read.parquet(v2_dir).dtypes)
+    rows = []
+    for col in sorted(set(s1) | set(s2)):
+        t1, t2 = s1.get(col), s2.get(col)
+        change = (
+            "added" if t1 is None
+            else "removed" if t2 is None
+            else "type_changed" if t1 != t2
+            else "unchanged"
+        )
+        rows.append((col, t1, t2, change))
+    return spark.createDataFrame(
+        rows, "column_name string, v1_type string, v2_type string, change string"
+    ).orderBy("column_name")
+
+
+@register(
+    "p22_survivorship_golden_record",
+    """
+    WITH ranked AS (
+        SELECT o_custkey, o_orderkey,
+               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+               o_orderstatus, o_orderdate,
+               ROW_NUMBER() OVER (
+                   PARTITION BY o_custkey
+                   ORDER BY CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END DESC,
+                            o_orderdate DESC,
+                            CAST(ROUND(o_totalprice * 100) AS BIGINT) DESC,
+                            o_orderkey ASC
+               ) AS rn
+        FROM orders
+    )
+    SELECT o_custkey,
+           o_orderkey AS golden_orderkey,
+           o_orderstatus AS golden_status,
+           o_orderdate AS golden_date,
+           cents AS golden_cents
+    FROM ranked WHERE rn = 1
+    ORDER BY o_custkey
+    """,
+)
+def p22_survivorship_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P22: survivorship (golden record) selection — the MDM rule
+    cascade that picks ONE surviving record per entity: prefer
+    finalized status, then the newest date, then the highest amount,
+    then the lowest key as the deterministic last resort. The engine
+    expresses the whole cascade as a single max_by over a packed
+    comparison struct — ONE partial-aggregated groupBy, no window and
+    no self-join (the oracle's ROW_NUMBER form is the spec; a window
+    would sort every group's rows where the aggregate keeps one
+    running champion per group map-side). The key tiebreak is negated
+    inside the struct so lexicographic struct max implements 'lowest
+    key wins'."""
+    o = t(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    pref = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
+    champ = F.max(
+        F.struct(
+            pref.alias("p"),
+            F.col("o_orderdate").alias("d"),
+            cents.alias("c"),
+            (-F.col("o_orderkey")).alias("nk"),
+            F.col("o_orderkey").alias("k"),
+            F.col("o_orderstatus").alias("st"),
+        )
+    ).alias("g")
+    return (
+        o.groupBy("o_custkey")
+        .agg(champ)
+        .select(
+            "o_custkey",
+            F.col("g.k").alias("golden_orderkey"),
+            F.col("g.st").alias("golden_status"),
+            F.col("g.d").alias("golden_date"),
+            F.col("g.c").alias("golden_cents"),
+        )
+        .orderBy("o_custkey")
+    )
+
+
+@register(
+    "p23_pseudonymize_join_audit",
+    """
+    WITH c_tok AS (
+        SELECT ('0x' || SUBSTR(MD5('pepper-' || CAST(c_custkey AS VARCHAR)), 1, 12))::BIGINT AS c_tok,
+               c_nationkey
+        FROM customer
+    ),
+    o_tok AS (
+        SELECT ('0x' || SUBSTR(MD5('pepper-' || CAST(o_custkey AS VARCHAR)), 1, 12))::BIGINT AS o_tok,
+               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+        FROM orders
+    ),
+    joined AS (
+        SELECT c.c_nationkey AS nation, o.cents
+        FROM o_tok o JOIN c_tok c ON o.o_tok = c.c_tok
+    ),
+    direct AS (
+        SELECT c.c_nationkey AS nation, CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents
+        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    ),
+    collisions AS (
+        SELECT COUNT(*) - COUNT(DISTINCT c_tok) AS n FROM c_tok
+    )
+    SELECT j.nation,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(SUM(j.cents) AS BIGINT) AS revenue_cents,
+           CAST(CASE WHEN COUNT(*) = (SELECT COUNT(*) FROM direct d WHERE d.nation = j.nation)
+                      AND SUM(j.cents) = (SELECT SUM(d.cents) FROM direct d WHERE d.nation = j.nation)
+                THEN 1 ELSE 0 END AS BIGINT) AS join_preserved,
+           CAST((SELECT n FROM collisions) AS BIGINT) AS token_collisions
+    FROM joined j GROUP BY j.nation ORDER BY j.nation
+    """,
+)
+def p23_pseudonymize_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P23: join-preserving pseudonymization — the GDPR-compliance
+    counterpart of t14_pii_redaction: the natural key (custkey) is
+    replaced on BOTH tables with a keyed-hash surrogate (48-bit md5
+    token with a pepper, the portable-hash family), and the audit
+    proves analytics survive tokenization: per nation, the
+    surrogate-key join reproduces the direct join's row count and
+    revenue exactly (join_preserved), and the token space is
+    collision-free on this population (token_collisions = 0 — at
+    100 TB the token widens, same 5-character change as every hash in
+    this repo).
+
+    Plan shape: tokenization is a per-row codegen'd expression (no
+    lookup-table shuffle — deterministic keyed hashing is exactly what
+    makes pseudonymized joins scale); the audit joins are ordinary
+    shuffle joins; the collision census is one distinct-agg broadcast
+    onto the group frame."""
+    c = t(spark, sf_dir, "customer")
+    o = t(spark, sf_dir, "orders")
+
+    def tok(col):
+        return F.conv(F.substring(F.md5(F.concat(F.lit("pepper-"), col.cast("string"))), 1, 12), 16, 10).cast("long")
+
+    c_tok = c.select(tok(F.col("c_custkey")).alias("c_tok"), "c_nationkey")
+    o_tok = o.select(
+        tok(F.col("o_custkey")).alias("o_tok"),
+        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("cents"),
+    )
+    joined = (
+        o_tok.join(c_tok, o_tok.o_tok == c_tok.c_tok)
+        .groupBy(F.col("c_nationkey").alias("nation"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_orders"), F.sum("cents").cast("long").alias("revenue_cents"))
+    )
+    direct = (
+        o.join(F.broadcast(c.select("c_custkey", "c_nationkey")), o.o_custkey == F.col("c_custkey"))
+        .groupBy(F.col("c_nationkey").alias("nation"))
+        .agg(F.count(F.lit(1)).cast("long").alias("d_n"), F.expr("CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)").alias("d_rev"))
+    )
+    collisions = c_tok.agg(
+        (F.count(F.lit(1)) - F.countDistinct("c_tok")).cast("long").alias("token_collisions")
+    )
+    return (
+        joined.join(direct, "nation")
+        .crossJoin(F.broadcast(collisions))
+        .select(
+            "nation",
+            "n_orders",
+            "revenue_cents",
+            F.when((F.col("n_orders") == F.col("d_n")) & (F.col("revenue_cents") == F.col("d_rev")), 1)
+            .otherwise(0)
+            .cast("long")
+            .alias("join_preserved"),
+            "token_collisions",
+        )
+        .orderBy("nation")
+    )
+
+
 # ---------------------------------------------------------------------------
 # J — joins (SURVEY §2.3): the reference uses a single inner equi-join
 # (notebooks/00_prepare_data.py:57) + a count-based integrity audit
@@ -434,277 +883,451 @@ def j3_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# A — aggregations (SURVEY §2.4)
-# ---------------------------------------------------------------------------
-
-
 @register(
-    "a1_groupby_count_sort",
+    "j4_null_safe_join",
     """
-    SELECT p_brand, COUNT(*) AS count FROM part
-    GROUP BY p_brand ORDER BY count DESC, p_brand
+    WITH keyed AS (
+        SELECT o_orderkey, NULLIF(o_orderstatus, 'O') AS status_key FROM orders
+    ),
+    dim(status_key, label) AS (
+        VALUES ('F', 'finished'), ('P', 'partial'), (NULL, 'open')
+    )
+    SELECT o_orderkey, d.label
+    FROM keyed k JOIN dim d ON k.status_key IS NOT DISTINCT FROM d.status_key
+    ORDER BY o_orderkey
     """,
 )
-def a1_groupby_count_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 (reference: notebooks/00_prepare_data.py:114, notebooks/01:149-152)."""
+def j4_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J4: null-safe equi-join (<=> / IS NOT DISTINCT FROM): NULL keys
+    match NULL dim rows instead of dropping out — the dimension-decode
+    pattern where 'unknown' is itself a category. eqNullSafe keeps the
+    join a broadcast hash join (null-safe equality is still an
+    equi-key), not a nested loop."""
+    keyed = t(spark, sf_dir, "orders").select(
+        "o_orderkey", F.nullif(F.col("o_orderstatus"), F.lit("O")).alias("status_key")
+    )
+    dim = spark.createDataFrame(
+        [("F", "finished"), ("P", "partial"), (None, "open")],
+        T.StructType(
+            [
+                T.StructField("status_key", T.StringType(), True),
+                T.StructField("label", T.StringType(), True),
+            ]
+        ),
+    )
     return (
-        t(spark, sf_dir, "part")
-        .groupBy("p_brand")
-        .count()
-        .orderBy(F.col("count").desc(), F.col("p_brand"))
+        keyed.join(F.broadcast(dim), keyed.status_key.eqNullSafe(dim.status_key))
+        .select("o_orderkey", "label")
+        .orderBy("o_orderkey")
     )
 
 
 @register(
-    "a2_groupby_avg",
+    "j5_fuzzy_levenshtein_join",
     """
-    SELECT c_mktsegment, ROUND(AVG(c_acctbal), 4) AS avg_acctbal
-    FROM customer GROUP BY c_mktsegment ORDER BY avg_acctbal DESC
+    WITH canonical AS (
+        SELECT DISTINCT source FROM documents
+    ),
+    dirty AS (
+        -- deterministic 'typo feed': capitalized + trailing junk
+        SELECT UPPER(SUBSTRING(source, 1, 1)) || SUBSTRING(source, 2) || 'x' AS dirty_name,
+               source AS true_source
+        FROM canonical
+    )
+    SELECT d.dirty_name, c.source AS matched_source,
+           CAST(LEVENSHTEIN(LOWER(d.dirty_name), c.source) AS INTEGER) AS edit_dist,
+           (c.source = d.true_source) AS correct_match
+    FROM dirty d
+    JOIN canonical c
+      ON REGEXP_EXTRACT(d.dirty_name, '([0-9]+)', 1) = REGEXP_EXTRACT(c.source, '([0-9]+)', 1)
+     AND LEVENSHTEIN(LOWER(d.dirty_name), c.source) <= 2
+    ORDER BY dirty_name, matched_source
     """,
 )
-def a2_groupby_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 (reference: notebooks/01:163-166 groupBy avg price + sort)."""
+def j5_fuzzy_levenshtein_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J5: entity resolution as a BLOCKED fuzzy join — equi-join on a
+    cheap normalized blocking key (the numeric suffix), residual
+    levenshtein ≤ 2 inside each block. The blocking key keeps the plan
+    a hash join with a residual filter; an unblocked fuzzy join is a
+    cartesian O(n·m) levenshtein sweep, which is exactly what this
+    operator exists to avoid at 100 TB (block on soundex/prefix/
+    normalized keys, compare only within blocks)."""
+    canonical = t(spark, sf_dir, "documents").select("source").distinct()
+    dirty = canonical.select(
+        F.concat(
+            F.upper(F.substring("source", 1, 1)),
+            F.expr("substring(source, 2)"),
+            F.lit("x"),
+        ).alias("dirty_name"),
+        F.col("source").alias("true_source"),
+    )
+    c = canonical.alias("c")
+    d = dirty.alias("d")
+    block = F.regexp_extract(F.col("d.dirty_name"), "([0-9]+)", 1) == F.regexp_extract(
+        F.col("c.source"), "([0-9]+)", 1
+    )
+    dist = F.levenshtein(F.lower(F.col("d.dirty_name")), F.col("c.source"))
     return (
-        t(spark, sf_dir, "customer")
-        .groupBy("c_mktsegment")
-        .agg(F.round(F.avg("c_acctbal"), 4).alias("avg_acctbal"))
-        .orderBy(F.col("avg_acctbal").desc())
+        d.join(c, block & (dist <= 2))
+        .select(
+            F.col("d.dirty_name").alias("dirty_name"),
+            F.col("c.source").alias("matched_source"),
+            dist.cast("int").alias("edit_dist"),
+            (F.col("c.source") == F.col("d.true_source")).alias("correct_match"),
+        )
+        .orderBy("dirty_name", "matched_source")
     )
 
 
 @register(
-    "a3_count_star_alias",
-    "SELECT event_type, COUNT(*) AS count FROM events GROUP BY event_type",
-)
-def a3_count_star_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 (reference: notebooks/02_feature_engineering.py:140-143)."""
-    return t(spark, sf_dir, "events").groupBy("event_type").agg(F.count(F.lit(1)).alias("count"))
-
-
-@register(
-    "a4_global_multiagg",
+    "j6_spatial_grid_join",
     """
-    SELECT ROUND(AVG(l_quantity), 4) AS qty_mean,
-           ROUND(STDDEV_SAMP(l_quantity), 4) AS qty_std,
-           MIN(l_quantity) AS qty_min,
-           MAX(l_quantity) AS qty_max,
-           ROUND(AVG(l_extendedprice), 4) AS price_mean,
-           ROUND(STDDEV_SAMP(l_extendedprice), 4) AS price_std,
-           MIN(l_extendedprice) AS price_min,
-           MAX(l_extendedprice) AS price_max,
-           ROUND(AVG(l_discount), 6) AS disc_mean,
-           COUNT(*) AS n_rows
-    FROM lineitem
+    WITH c AS (
+        SELECT c_custkey,
+               -30.0 + (c_custkey * 7919 % 60000) / 1000.0 AS lat,
+               -60.0 + (c_custkey * 104729 % 120000) / 1000.0 AS lon
+        FROM customer
+    ),
+    s AS (
+        SELECT s_suppkey,
+               -30.0 + (s_suppkey * 7919 % 60000) / 1000.0 AS lat,
+               -60.0 + (s_suppkey * 104729 % 120000) / 1000.0 AS lon
+        FROM supplier
+    )
+    SELECT c.c_custkey, s.s_suppkey,
+           (c.lat - s.lat) * (c.lat - s.lat) + (c.lon - s.lon) * (c.lon - s.lon) AS dist2
+    FROM c, s
+    WHERE (c.lat - s.lat) * (c.lat - s.lat) + (c.lon - s.lon) * (c.lon - s.lon) <= 4.0
+    ORDER BY c.c_custkey, s.s_suppkey
     """,
 )
-def a4_global_multiagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: all summary stats in ONE pass (reference computed 4×11
-    aggregates in one select, notebooks/01:125-130 — kept; never one job
-    per column)."""
-    li = t(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.round(F.avg("l_quantity"), 4).alias("qty_mean"),
-        F.round(F.stddev_samp("l_quantity"), 4).alias("qty_std"),
-        F.min("l_quantity").alias("qty_min"),
-        F.max("l_quantity").alias("qty_max"),
-        F.round(F.avg("l_extendedprice"), 4).alias("price_mean"),
-        F.round(F.stddev_samp("l_extendedprice"), 4).alias("price_std"),
-        F.min("l_extendedprice").alias("price_min"),
-        F.max("l_extendedprice").alias("price_max"),
-        F.round(F.avg("l_discount"), 6).alias("disc_mean"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-@register(
-    "a5_summary_profile",
-    """
-    SELECT COUNT(o_totalprice) AS count,
-           ROUND(AVG(o_totalprice), 4) AS mean,
-           ROUND(STDDEV_SAMP(o_totalprice), 4) AS stddev,
-           MIN(o_totalprice) AS min,
-           ROUND(QUANTILE_CONT(o_totalprice, 0.5), 4) AS median,
-           MAX(o_totalprice) AS max
-    FROM orders
-    """,
-)
-def a5_summary_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5: summary() profile semantics with an EXACT interpolated median
-    (both engines use linear interpolation) (reference:
-    notebooks/00:111, src/features/target_transformer.py:34,43)."""
-    o = t(spark, sf_dir, "orders")
-    return o.agg(
-        F.count("o_totalprice").alias("count"),
-        F.round(F.avg("o_totalprice"), 4).alias("mean"),
-        F.round(F.stddev_samp("o_totalprice"), 4).alias("stddev"),
-        F.min("o_totalprice").alias("min"),
-        F.round(F.expr("percentile(o_totalprice, 0.5)"), 4).alias("median"),
-        F.max("o_totalprice").alias("max"),
-    )
-
-
-@register(
-    "a6_approx_quantile",
-    """
-    SELECT quantile_disc(l_quantity, 0.01) AS qty_q01,
-           quantile_disc(l_quantity, 0.5) AS qty_q50,
-           quantile_disc(l_quantity, 0.99) AS qty_q99,
-           quantile_disc(l_extendedprice, 0.01) AS price_q01,
-           quantile_disc(l_extendedprice, 0.5) AS price_q50,
-           quantile_disc(l_extendedprice, 0.99) AS price_q99,
-           quantile_disc(l_discount, 0.01) AS disc_q01,
-           quantile_disc(l_discount, 0.5) AS disc_q50,
-           quantile_disc(l_discount, 0.99) AS disc_q99
-    FROM lineitem
-    """,
-)
-def a6_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6: Greenwald-Khanna approximate quantiles, ONE call for all
-    columns (the reference runs 11 sequential per-column jobs,
-    src/features/feature_engineering.py:217-220 — a driver-loop
-    anti-pattern at scale). Output is flattened to scalar columns —
-    array-typed result columns break order-insensitive comparison
-    (pandas cannot sort list cells).
-
-    Oracle-checkable because GK with accuracy > n has rank error < 1
-    row, i.e. it returns the exact discrete quantile element, which is
-    DuckDB's quantile_disc (verified identical at sf0.001/sf0.01). In
-    production the accuracy knob IS the approximation: the default 1e4
-    bounds sketch memory to O(accuracy·log n) regardless of data size —
-    that sketch path is what a9_approx_count_distinct/a22_count_min
-    cover for cardinality/frequency."""
-    li = t(spark, sf_dir, "lineitem")
-    exact_gk = 10_000_000  # > any driver SF's row count -> exact element
-    agged = li.agg(
-        F.percentile_approx("l_quantity", [0.01, 0.5, 0.99], exact_gk).alias("qty_q"),
-        F.percentile_approx("l_extendedprice", [0.01, 0.5, 0.99], exact_gk).alias("price_q"),
-        F.percentile_approx("l_discount", [0.01, 0.5, 0.99], exact_gk).alias("disc_q"),
-    )
-    return agged.select(
-        F.col("qty_q")[0].alias("qty_q01"),
-        F.col("qty_q")[1].alias("qty_q50"),
-        F.col("qty_q")[2].alias("qty_q99"),
-        F.col("price_q")[0].alias("price_q01"),
-        F.col("price_q")[1].alias("price_q50"),
-        F.col("price_q")[2].alias("price_q99"),
-        F.col("disc_q")[0].alias("disc_q01"),
-        F.col("disc_q")[1].alias("disc_q50"),
-        F.col("disc_q")[2].alias("disc_q99"),
-    )
-
-
-@register("a7_count_scalar", "SELECT COUNT(*) AS n_rows FROM lineitem")
-def a7_count_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 (reference: count() scalars everywhere, e.g. notebooks/00:94)."""
-    return t(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("n_rows"))
-
-
-@register(
-    "a8_corr_distributed",
-    """
-    SELECT ROUND(CORR(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-           ROUND(CORR(l_extendedprice, l_discount), 6) AS corr_price_disc
-    FROM lineitem
-    """,
-)
-def a8_corr_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8: DISTRIBUTED Pearson correlation — the reference collects to
-    pandas first (notebooks/01:253-254), a driver OOM at scale."""
-    li = t(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-        F.round(F.corr("l_extendedprice", "l_discount"), 6).alias("corr_price_disc"),
-    )
-
-
-@register(
-    "a9_count_distinct",
-    """
-    SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-           CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers
-    FROM lineitem
-    """,
-)
-def a9_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9: exact distinct counts (expand+two-phase agg under AQE)."""
-    li = t(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("n_parts"),
-        F.countDistinct("l_suppkey").cast("long").alias("n_suppliers"),
-    )
-
-
-@register(
-    "a9_approx_count_distinct",
-    """
-    SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-           CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
-           TRUE AS parts_within_10pct,
-           TRUE AS orders_within_10pct
-    FROM lineitem
-    """,
-)
-def a9_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9b: HyperLogLog++ cardinality. At 100 TB the sketch alone is
-    the query (no exact shuffle of distinct values); here the exact
-    counts ride along so the driver can hash-compare something
-    deterministic — the HLL estimate itself is engine-specific, so it
-    is reported as a WITHIN-10%-of-exact boolean (the oracle states
-    TRUE; a drifting sketch flips it and fails the hash)."""
-    li = t(spark, sf_dir, "lineitem")
-    # rsd 3% (vs the 5% default): the 10%-of-exact gate then sits at
-    # >3 standard errors while the sketch stays in the cheap register
-    # regime (rsd <= 0.02 switches to a dense high-precision layout
-    # that costs 3x the wall time for accuracy the gate doesn't need)
-    agg = li.agg(
-        F.approx_count_distinct("l_partkey", 0.03).alias("ap"),
-        F.approx_count_distinct("l_orderkey", 0.03).alias("ao"),
-        F.count_distinct("l_partkey").cast("bigint").alias("exact_parts"),
-        F.count_distinct("l_orderkey").cast("bigint").alias("exact_orders"),
-    )
-
-    def ok(approx: str, exact: str):
-        return F.abs(F.col(approx) - F.col(exact)) <= F.greatest(
-            F.lit(2), F.col(exact).cast("double") * 0.10
+def j6_spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J6: distributed spatial proximity join via grid binning — bin
+    both sides into 2-degree cells (cell size >= radius), explode the
+    SMALL side into its 3x3 neighbor cells, broadcast-equi-join on the
+    cell key, then apply the exact distance predicate as a residual
+    filter. This turns an O(n*m) cross product into an equi-join that
+    only compares points in adjacent cells — the standard shape for
+    point-radius joins at 100 TB (the oracle IS the brute-force cross
+    join, proving the grid loses no pairs). Coordinates derive from
+    keys by pure integer modular arithmetic and distance is squared
+    euclidean (add/mul only) — bit-identical cross-engine with no
+    trig/libm variance; the reference's haversine (F3) composes on top
+    for true great-circle radii."""
+    cell = 2.0
+    def with_coords(df: DataFrame, key: str) -> DataFrame:
+        return df.select(
+            key,
+            (F.lit(-30.0) + (F.col(key) * 7919 % 60000) / 1000.0).alias("lat"),
+            (F.lit(-60.0) + (F.col(key) * 104729 % 120000) / 1000.0).alias("lon"),
+        ).withColumns(
+            {"cx": F.floor(F.col("lat") / cell), "cy": F.floor(F.col("lon") / cell)}
         )
 
-    return agg.select(
-        "exact_parts",
-        "exact_orders",
-        ok("ap", "exact_parts").alias("parts_within_10pct"),
-        ok("ao", "exact_orders").alias("orders_within_10pct"),
+    c = with_coords(t(spark, sf_dir, "customer"), "c_custkey")
+    s = with_coords(t(spark, sf_dir, "supplier"), "s_suppkey")
+    offsets = F.expr("explode(flatten(transform(sequence(-1,1), dx -> transform(sequence(-1,1), dy -> struct(dx, dy)))))")
+    s9 = s.select("s_suppkey", F.col("lat").alias("s_lat"), F.col("lon").alias("s_lon"),
+                  "cx", "cy", offsets.alias("o")).select(
+        "s_suppkey", "s_lat", "s_lon",
+        (F.col("cx") + F.col("o.dx")).alias("cx"),
+        (F.col("cy") + F.col("o.dy")).alias("cy"),
+    )
+    dist2 = (F.col("lat") - F.col("s_lat")) ** 2 + (F.col("lon") - F.col("s_lon")) ** 2
+    return (
+        c.join(F.broadcast(s9), ["cx", "cy"])
+        .select("c_custkey", "s_suppkey", dist2.alias("dist2"))
+        .filter(F.col("dist2") <= cell * cell)
+        .orderBy("c_custkey", "s_suppkey")
+    )
+
+
+_SQL_LATERAL_TOPK = """
+    SELECT n_name, t.c_name, t.c_acctbal
+    FROM {nation},
+    LATERAL (
+        SELECT c_name, c_acctbal
+        FROM {customer}
+        WHERE c_nationkey = n_nationkey
+        ORDER BY c_acctbal DESC, c_name
+        LIMIT 2
+    ) t
+    ORDER BY n_name, c_acctbal DESC, c_name
+"""
+
+
+@register(
+    "j7_lateral_topk",
+    _SQL_LATERAL_TOPK.format(nation="nation", customer="customer"),
+)
+def j7_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J7: correlated LATERAL subquery join (top-2 customers per
+    nation) — the SQL-standard per-row subquery surface (Spark >= 3.2,
+    DuckDB native; identical text both engines). Catalyst rewrites the
+    correlated limit into a ranked window under the hood, so the
+    physical plan is the same distributed top-k-per-group as o3, not
+    25 sequential probes — which is why the form survives scale-up."""
+    t(spark, sf_dir, "nation").createOrReplaceTempView("_sql_lat_nation")
+    t(spark, sf_dir, "customer").createOrReplaceTempView("_sql_lat_customer")
+    return spark.sql(
+        _SQL_LATERAL_TOPK.format(nation="_sql_lat_nation", customer="_sql_lat_customer")
     )
 
 
 @register(
-    "a10_rollup",
+    "j8_or_join_rewrite",
     """
-    SELECT l_returnflag, l_linestatus,
-           ROUND(SUM(l_quantity), 2) AS sum_qty, COUNT(*) AS n
-    FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+    WITH pairs AS (
+        SELECT DISTINCT c.c_custkey, s.s_suppkey
+        FROM customer c JOIN supplier s
+          ON c.c_nationkey = s.s_nationkey
+          OR CAST(FLOOR(c.c_acctbal / 500) AS BIGINT) = CAST(FLOOR(s.s_acctbal / 500) AS BIGINT)
+        WHERE c.c_custkey < 100
+    )
+    SELECT c_custkey, CAST(COUNT(*) AS BIGINT) AS n_related
+    FROM pairs GROUP BY c_custkey ORDER BY c_custkey
     """,
 )
-def a10_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10: rollup grouping sets (SURVEY §2.4 commitment)."""
-    li = t(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count(F.lit(1)).alias("n")
+def j8_or_join_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J8: disjunctive-predicate join, rewritten — `ON a = b OR c = d`
+    cannot hash-partition (no single key), so engines fall back to a
+    nested-loop scan: O(n*m) and a guaranteed 100 TB outage. The
+    standard rewrite: UNION of the two equi-joins (each
+    hash-partitionable) + DISTINCT to kill the rows matching both arms.
+    The oracle states the naive OR join (DuckDB can afford it at
+    sf0.01); the Spark side runs the rewrite — identical results,
+    scalable plan."""
+    c = t(spark, sf_dir, "customer").where(F.col("c_custkey") < 100).select(
+        "c_custkey", "c_nationkey", F.floor(F.col("c_acctbal") / 500).cast("bigint").alias("c_bal")
+    )
+    s = t(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_nationkey", F.floor(F.col("s_acctbal") / 500).cast("bigint").alias("s_bal")
+    )
+    arm1 = c.join(s, c.c_nationkey == s.s_nationkey).select("c_custkey", "s_suppkey")
+    arm2 = c.join(s, c.c_bal == s.s_bal).select("c_custkey", "s_suppkey")
+    pairs = arm1.unionAll(arm2).distinct()
+    return (
+        pairs.groupBy("c_custkey")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_related"))
+        .orderBy("c_custkey")
     )
 
 
+# --- Bloom-filter semi-join pruning ----------------------------------------
+#
+# The 100 TB pattern Spark's own runtime row-group filtering implements
+# (spark.sql.optimizer.runtime.bloomFilter.enabled): build a compact
+# Bloom filter over the small side's join keys, broadcast it, and drop
+# non-matching fact rows BEFORE the shuffle. Here the filter is built
+# with engine-portable arithmetic (two affine md5-prefix hashes over
+# 2^16 bits packed into 1024 BIGINT lanes via bit_or), so DuckDB
+# replays the exact same bit array and the false-positive accounting
+# hash-compares. Both bit indexes are lanes of ONE md5-prefix hash
+# (dedup.lane_hash): the md5 is computed once per key. reference has
+# no analogue; this is pure scale machinery the engine needs at 100 TB.
+
+_BLOOM_BITS = 1 << 16
+_BLOOM_H_SQL = "(('0x' || SUBSTR(MD5(CAST({e} AS VARCHAR)), 1, 8))::BIGINT)"
+
+
 @register(
-    "a10_cube",
-    """
-    SELECT l_returnflag, l_linestatus,
-           ROUND(SUM(l_extendedprice), 2) AS sum_price, COUNT(*) AS n
-    FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+    "j10_bloom_join_prune",
+    f"""
+    WITH keys AS (
+        SELECT DISTINCT o_orderkey AS k
+        FROM orders WHERE o_orderpriority = '1-URGENT'
+    ),
+    keyh AS (
+        SELECT {_BLOOM_H_SQL.format(e='k')} AS h FROM keys
+    ),
+    bits AS (
+        SELECT {lane_hash_sql('h', 0, _BLOOM_BITS)} AS b FROM keyh
+        UNION ALL
+        SELECT {lane_hash_sql('h', 1, _BLOOM_BITS)} AS b FROM keyh
+    ),
+    bloom AS (
+        SELECT b // 64 AS lane, BIT_OR({bit_sql('b % 64')}) AS lanebits
+        FROM bits GROUP BY 1
+    ),
+    probes AS (
+        SELECT l_orderkey,
+               {lane_hash_sql('h', 0, _BLOOM_BITS)} AS b0,
+               {lane_hash_sql('h', 1, _BLOOM_BITS)} AS b1
+        FROM (SELECT l_orderkey, {_BLOOM_H_SQL.format(e='l_orderkey')} AS h FROM lineitem)
+    ),
+    candidates AS (
+        SELECT p.l_orderkey
+        FROM probes p
+        JOIN bloom m0 ON m0.lane = p.b0 // 64
+        JOIN bloom m1 ON m1.lane = p.b1 // 64
+        WHERE (m0.lanebits & ({bit_sql('p.b0 % 64')})) <> 0
+          AND (m1.lanebits & ({bit_sql('p.b1 % 64')})) <> 0
+    ),
+    stats AS (
+        SELECT CAST((SELECT COUNT(*) FROM keys) AS BIGINT) AS n_keys,
+               CAST((SELECT COUNT(*) FROM lineitem) AS BIGINT) AS n_probes,
+               CAST((SELECT COUNT(*) FROM candidates) AS BIGINT) AS n_candidates,
+               CAST((SELECT COUNT(*) FROM candidates c JOIN keys ON keys.k = c.l_orderkey)
+                    AS BIGINT) AS n_matched
+    )
+    SELECT n_keys, n_probes, n_candidates, n_matched,
+           n_candidates - n_matched AS n_false_pos,
+           CAST(FLOOR((n_candidates - n_matched) * 1e6 /
+                      GREATEST(n_probes - n_matched, 1)) AS BIGINT) AS fp_rate_micro
+    FROM stats
     """,
 )
-def a10_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+def j10_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J10: Bloom-filter semi-join pruning — build a 2^16-bit Bloom
+    filter (two affine md5-prefix hashes, bits packed into 1024 BIGINT
+    lanes by bit_or) over the urgent orders' keys, broadcast it, and
+    pre-filter lineitem before the real join would shuffle it. Reports
+    the pruning ledger: probe count, Bloom-passed candidates, exact
+    matches, false positives, and the realized FP rate in micros.
+
+    Scale shape: the filter is <= 1024 rows regardless of key count —
+    a broadcast, never a shuffle; each probe joins the broadcast lane
+    table twice (BroadcastHashJoin) and the fact table is reduced
+    BEFORE any wide operation. This is the manual form of Spark's
+    runtime bloomFilter rewrite, with portable math so the oracle can
+    replay the exact bit array."""
+    o = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"), F.count(F.lit(1)).alias("n")
+    # the key set feeds the filter build, the exact-match flag AND the
+    # ledger count — cache it once (bounded, see cache_once contract)
+    keys = cache_once(
+        o.filter(F.col("o_orderpriority") == "1-URGENT")
+        .select(F.col("o_orderkey").alias("k"))
+        .distinct()
+    )
+    keyh = keys.select(portable_hash32(F.col("k").cast("string")).alias("h"))
+    bits = keyh.select(lane_hash(F.col("h"), 0, _BLOOM_BITS).alias("b")).unionAll(
+        keyh.select(lane_hash(F.col("h"), 1, _BLOOM_BITS).alias("b"))
+    )
+    bloom = bits.groupBy((F.col("b") / 64).cast("long").alias("lane")).agg(
+        F.bit_or(F.expr("shiftleft(1L, CAST(b % 64 AS INT))")).alias("lanebits")
+    )
+    probes = li.select(
+        "l_orderkey", portable_hash32(F.col("l_orderkey").cast("string")).alias("h")
+    ).select(
+        "l_orderkey",
+        lane_hash(F.col("h"), 0, _BLOOM_BITS).alias("b0"),
+        lane_hash(F.col("h"), 1, _BLOOM_BITS).alias("b1"),
+    )
+    m0 = bloom.select(F.col("lane").alias("lane0"), F.col("lanebits").alias("bits0"))
+    m1 = bloom.select(F.col("lane").alias("lane1"), F.col("lanebits").alias("bits1"))
+    candidates = (
+        probes.join(F.broadcast(m0), (F.col("b0") / 64).cast("long") == F.col("lane0"))
+        .join(F.broadcast(m1), (F.col("b1") / 64).cast("long") == F.col("lane1"))
+        .filter(
+            (F.col("bits0").bitwiseAND(F.expr("shiftleft(1L, CAST(b0 % 64 AS INT))")) != 0)
+            & (F.col("bits1").bitwiseAND(F.expr("shiftleft(1L, CAST(b1 % 64 AS INT))")) != 0)
+        )
+        .select("l_orderkey")
+    )
+    n_keys = keys.agg(F.count(F.lit(1)).cast("bigint").alias("n_keys"))
+    n_probes = li.agg(F.count(F.lit(1)).cast("bigint").alias("n_probes"))
+    # one pass over the candidate set yields BOTH ledger counts: flag
+    # each candidate against the key set and aggregate, instead of
+    # counting candidates twice. No forced broadcast here — the key
+    # set grows with the dim side, so Catalyst/AQE picks broadcast vs
+    # shuffle by its actual size (only the <=1024-row lane table is
+    # unconditionally broadcast-able)
+    cand_stats = (
+        candidates.join(
+            keys.withColumn("m", F.lit(1)),
+            candidates.l_orderkey == F.col("k"),
+            "left",
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
+            F.sum(F.when(F.col("m") == 1, 1).otherwise(0)).cast("bigint").alias("n_matched"),
+        )
+    )
+    out = n_keys.crossJoin(F.broadcast(n_probes)).crossJoin(F.broadcast(cand_stats))
+    return out.select(
+        "n_keys",
+        "n_probes",
+        "n_candidates",
+        "n_matched",
+        (F.col("n_candidates") - F.col("n_matched")).alias("n_false_pos"),
+        F.floor(
+            (F.col("n_candidates") - F.col("n_matched"))
+            * 1e6
+            / F.greatest(F.col("n_probes") - F.col("n_matched"), F.lit(1))
+        )
+        .cast("bigint")
+        .alias("fp_rate_micro"),
+    )
+
+
+_ALLEN_CASE = """
+    CASE
+        WHEN ae < bs THEN 'before'
+        WHEN as_ > be THEN 'after'
+        WHEN as_ = bs AND ae = be THEN 'equals'
+        WHEN ae = bs THEN 'meets'
+        WHEN as_ = be THEN 'met_by'
+        WHEN as_ = bs AND ae < be THEN 'starts'
+        WHEN as_ = bs AND ae > be THEN 'started_by'
+        WHEN ae = be AND as_ > bs THEN 'finishes'
+        WHEN ae = be AND as_ < bs THEN 'finished_by'
+        WHEN as_ > bs AND ae < be THEN 'during'
+        WHEN as_ < bs AND ae > be THEN 'contains'
+        WHEN as_ < bs AND ae > bs AND ae < be THEN 'overlaps'
+        ELSE 'overlapped_by'
+    END
+"""
+
+
+@register(
+    "j13_allen_interval_algebra",
+    f"""
+    WITH iv AS (
+        SELECT user_id, event_type,
+               EPOCH_US(MIN(ts)) AS s, EPOCH_US(MAX(ts)) AS e
+        FROM events GROUP BY user_id, event_type
+    ),
+    pairs AS (
+        SELECT a.event_type AS type_a, b.event_type AS type_b,
+               a.s AS as_, a.e AS ae, b.s AS bs, b.e AS be
+        FROM iv a JOIN iv b
+          ON a.user_id = b.user_id AND a.event_type < b.event_type
+    )
+    SELECT type_a, type_b, {_ALLEN_CASE} AS relation,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs
+    FROM pairs GROUP BY type_a, type_b, relation
+    ORDER BY type_a, type_b, relation
+    """,
+)
+def j13_allen_interval_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J13: Allen's interval algebra — the COMPLETE temporal-relation
+    classification (all 13 relations: before/meets/overlaps/starts/
+    during/finishes, inverses, equals) that the asof/range/interval
+    joins (j9/j12/temporal.py) each hard-code one slice of. Per user,
+    each event type's activity span [min ts, max ts] is an interval;
+    every type pair is classified with ONE branch-ordered CASE over
+    exact epoch-microsecond integers (the SAME SQL text runs on both
+    engines — equality cases are decided before containment, so the
+    cascade is total and unambiguous), then the corpus rolls up to
+    (type_a, type_b, relation) counts — the temporal-profile
+    fingerprint of the event stream.
+
+    Plan: one (user, type) agg, one per-user self-join (bounded: 5
+    types -> 10 pairs per user), one rollup — all partial-agg
+    shuffles keyed by user then by the 75-value rollup key."""
+    ev = t(spark, sf_dir, "events")
+    iv = ev.groupBy("user_id", "event_type").agg(
+        F.unix_micros(F.min("ts")).alias("s"), F.unix_micros(F.max("ts")).alias("e")
+    )
+    a = iv.select(F.col("user_id"), F.col("event_type").alias("type_a"), F.col("s").alias("as_"), F.col("e").alias("ae"))
+    b = iv.select(F.col("user_id").alias("ub"), F.col("event_type").alias("type_b"), F.col("s").alias("bs"), F.col("e").alias("be"))
+    pairs = a.join(b, (a.user_id == b.ub) & (F.col("type_a") < F.col("type_b")))
+    return (
+        pairs.select("type_a", "type_b", F.expr(_ALLEN_CASE).alias("relation"))
+        .groupBy("type_a", "type_b", "relation")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
+        .orderBy("type_a", "type_b", "relation")
     )
 
 
@@ -790,6 +1413,84 @@ def w3_frame_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         F.round(F.sum("l_quantity").over(wrun), 2).alias("running_qty"),
         F.round(F.avg("l_extendedprice").over(wmov), 4).alias("moving_avg_price"),
+    )
+
+
+@register(
+    "w4_value_windows",
+    """
+    SELECT o_orderkey, o_custkey,
+           FIRST_VALUE(o_totalprice) OVER w AS first_price,
+           NTH_VALUE(o_totalprice, 2) OVER w AS second_price,
+           ROUND(CUME_DIST() OVER (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey), 6) AS price_cume_dist
+    FROM orders
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+    ORDER BY o_orderkey
+    """,
+)
+def w4_value_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W4: value-addressing window functions (first_value/nth_value
+    over an explicit full frame, cume_dist) completing the W1-W3
+    ranking/analytic/frame families. o_orderkey tiebreaks make every
+    value deterministic."""
+    from pyspark.sql.window import Window
+
+    o = t(spark, sf_dir, "orders")
+    wf = (
+        Window.partitionBy("o_custkey")
+        .orderBy("o_totalprice", "o_orderkey")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    wo = Window.partitionBy("o_custkey").orderBy("o_totalprice", "o_orderkey")
+    return o.select(
+        "o_orderkey",
+        "o_custkey",
+        F.first("o_totalprice").over(wf).alias("first_price"),
+        F.nth_value("o_totalprice", 2).over(wf).alias("second_price"),
+        F.round(F.cume_dist().over(wo), 6).alias("price_cume_dist"),
+    ).orderBy("o_orderkey")
+
+
+@register(
+    "w5_distribution_ranks",
+    """
+    SELECT c_custkey, c_nationkey,
+           CAST(ROUND(c_acctbal * 100) AS BIGINT) AS bal_cents,
+           CAST(NTILE(4) OVER w AS INTEGER) AS quartile,
+           CAST(FLOOR(PERCENT_RANK() OVER w * 1000000) AS BIGINT) AS pct_rank_micro,
+           CAST(FLOOR(CUME_DIST() OVER w * 1000000) AS BIGINT) AS cume_micro
+    FROM customer
+    WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)
+    ORDER BY c_custkey
+    """,
+)
+def w5_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W5: distribution-rank window functions — ntile (equal-count
+    buckets), percent_rank ((rank-1)/(n-1)) and cume_dist (fraction of
+    peers at-or-below) per nation over account balance. These are the
+    ranking functions a16/a23's histogram queries approximate
+    globally, here in their windowed per-group form (customer scoring,
+    per-segment percentile features). The order key carries a
+    c_custkey tiebreak so every rank is total and deterministic; the
+    two fractional ranks are single IEEE divisions of exact integers —
+    bit-identical across engines — reported as FLOOR-scaled micro
+    units, because ROUND(x, 6) differs between engines exactly at
+    half-boundaries like 41/640 = .0640625 (bitten at sf0.1) while
+    FLOOR of the identical double cannot. One shuffle on the partition key,
+    group-size-bounded state — the standard scalable window."""
+    w = Window.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
+    return (
+        t(spark, sf_dir, "customer")
+        .select(
+            "c_custkey",
+            "c_nationkey",
+            F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
+            F.ntile(4).over(w).cast("int").alias("quartile"),
+            F.floor(F.percent_rank().over(w) * 1000000).cast("bigint").alias("pct_rank_micro"),
+            F.floor(F.cume_dist().over(w) * 1000000).cast("bigint").alias("cume_micro"),
+        )
+        .orderBy("c_custkey")
     )
 
 
@@ -925,45 +1626,41 @@ def set_drop_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "a11_pivot",
+    "set_intersect_all",
     """
-    SELECT n_name,
-           CAST(SUM(CASE WHEN YEAR(o_orderdate) = 1996 THEN CAST(ROUND(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS y1996_cents,
-           CAST(SUM(CASE WHEN YEAR(o_orderdate) = 1997 THEN CAST(ROUND(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS y1997_cents,
-           CAST(SUM(CASE WHEN YEAR(o_orderdate) = 1998 THEN CAST(ROUND(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS y1998_cents
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    WHERE YEAR(o_orderdate) BETWEEN 1996 AND 1998
-    GROUP BY n_name
-    ORDER BY n_name
+    SELECT l_suppkey AS suppkey FROM lineitem WHERE l_returnflag = 'R'
+    INTERSECT ALL
+    SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'A'
+    ORDER BY suppkey
     """,
 )
-def a11_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A11: groupBy().pivot() — wide reshaping. The pivot values are
-    pinned explicitly (without them Spark runs an extra distinct job to
-    discover columns — never do that at 100 TB). Sums are integer cents
-    so the oracle's conditional-aggregation formulation is bit-exact."""
-    o = t(spark, sf_dir, "orders").filter(F.year("o_orderdate").between(1996, 1998))
-    c = t(spark, sf_dir, "customer")
-    n = t(spark, sf_dir, "nation")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    base = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select("n_name", F.year("o_orderdate").alias("yr"), cents.alias("cents"))
-    )
-    pivoted = (
-        base.groupBy("n_name")
-        .pivot("yr", [1996, 1997, 1998])
-        .agg(F.coalesce(F.sum("cents"), F.lit(0)).alias("c"))
-    )
-    return pivoted.select(
-        "n_name",
-        F.coalesce(F.col("1996"), F.lit(0)).alias("y1996_cents"),
-        F.coalesce(F.col("1997"), F.lit(0)).alias("y1997_cents"),
-        F.coalesce(F.col("1998"), F.lit(0)).alias("y1998_cents"),
-    ).orderBy("n_name")
+def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SET2: multiset intersection — keeps min(multiplicity) copies per
+    value, unlike the distinct-only intersect already covered. Planned
+    as a single hash aggregate over both branches (count per side),
+    not a join."""
+    li = t(spark, sf_dir, "lineitem")
+    r = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("suppkey"))
+    a = li.filter(F.col("l_returnflag") == "A").select(F.col("l_suppkey").alias("suppkey"))
+    return r.intersectAll(a).orderBy("suppkey")
+
+
+@register(
+    "set_except_all",
+    """
+    SELECT l_suppkey AS suppkey FROM lineitem WHERE l_returnflag = 'R'
+    EXCEPT ALL
+    SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'A'
+    ORDER BY suppkey
+    """,
+)
+def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SET3: multiset difference — subtracts per-value multiplicities
+    (max(count_left - count_right, 0) copies survive)."""
+    li = t(spark, sf_dir, "lineitem")
+    r = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("suppkey"))
+    a = li.filter(F.col("l_returnflag") == "A").select(F.col("l_suppkey").alias("suppkey"))
+    return r.exceptAll(a).orderBy("suppkey")
 
 
 @register(
@@ -997,45 +1694,6 @@ def f11_pandas_udaf_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_returnflag")
         .agg(F.round(weighted_avg("l_extendedprice", "l_quantity"), 4).alias("weighted_avg_price"))
         .orderBy("l_returnflag")
-    )
-
-
-@register(
-    "a12_grouping_sets",
-    """
-    SELECT n_name, o_orderstatus,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    GROUP BY GROUPING SETS ((n_name), (o_orderstatus), (n_name, o_orderstatus))
-    ORDER BY n_name NULLS FIRST, o_orderstatus NULLS FIRST
-    """,
-)
-def a12_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12: GROUPING SETS — the third member of the cube/rollup family,
-    with explicit set selection (computes only the requested grouping
-    combinations in one Expand + one shuffle, where chained unions would
-    re-scan per set)."""
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    n = t(spark, sf_dir, "nation")
-    joined = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select("n_name", "o_orderstatus", F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"))
-    )
-    joined.createOrReplaceTempView("_gs_orders")
-    return joined.sparkSession.sql(
-        """
-        SELECT n_name, o_orderstatus,
-               COUNT(*) AS n_orders,
-               SUM(cents) AS total_cents
-        FROM _gs_orders
-        GROUP BY GROUPING SETS ((n_name), (o_orderstatus), (n_name, o_orderstatus))
-        ORDER BY n_name NULLS FIRST, o_orderstatus NULLS FIRST
-        """
     )
 
 
@@ -1215,3 +1873,40 @@ def j16_max_concurrent_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id")
     )
+
+
+@register(
+    "ps1_pandas_api_groupby",
+    """
+    SELECT o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+    FROM orders
+    GROUP BY o_orderpriority
+    ORDER BY o_orderpriority
+    """,
+)
+def ps1_pandas_api_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PS1: the pandas API on Spark (pyspark.pandas) — the third query
+    surface next to the DataFrame DSL and SQL: pandas syntax
+    (df.groupby().agg()) compiled onto the SAME distributed engine. A
+    pandas-fluent user writes this; Catalyst plans it identically to
+    a2/a4 (hash agg with partials — no driver materialization; the
+    ps.DataFrame wraps the distributed frame lazily). Money in integer
+    cents as everywhere."""
+    import pyspark.pandas as ps
+
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+    )
+    psdf = o.pandas_api()
+    agg = psdf.groupby("o_orderpriority").agg(n=("cents", "count"), sum_cents=("cents", "sum"))
+    # index_col materializes the group key from the ps index directly —
+    # no reset_index + default-index warning on the to_spark boundary
+    out = agg.to_spark(index_col="o_orderpriority")
+    return out.select(
+        "o_orderpriority",
+        F.col("n").cast("bigint").alias("n"),
+        F.col("sum_cents").cast("bigint").alias("sum_cents"),
+    ).orderBy("o_orderpriority")

@@ -1491,3 +1491,201 @@ def f30_luhn_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("luhn_valid")
     )
+
+
+@register(
+    "f13_map_functions",
+    """
+    SELECT event_id,
+           'k' AS prop_keys,
+           CAST(JSON_EXTRACT(props, '$.k') AS VARCHAR) AS prop_values,
+           CAST(1 AS BIGINT) AS n_props
+    FROM events
+    ORDER BY event_id
+    """,
+)
+def f13_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F13: map-typed columns — parse the JSON props into
+    map<string,bigint> once, then map_keys/map_values/size. The map
+    type is the schema-on-read landing zone for ragged key sets (vs
+    the fixed-struct parse in f12). Keys/values are serialized to
+    comma-joined strings for the compare (array result columns break
+    the driver's canonicalization); the testdata carries a single key
+    so the oracle states the joined form directly."""
+    ev = t(spark, sf_dir, "events")
+    m = F.from_json(F.col("props"), "map<string,bigint>")
+    return ev.select(
+        "event_id",
+        F.array_join(F.map_keys(m), ",").alias("prop_keys"),
+        F.array_join(F.transform(F.map_values(m), lambda v: v.cast("string")), ",").alias(
+            "prop_values"
+        ),
+        F.size(m).cast("bigint").alias("n_props"),
+    ).orderBy("event_id")
+
+
+@register(
+    "f14_array_hof_topn",
+    """
+    SELECT o_custkey,
+           SUM(CAST(ROUND(p * 100) AS BIGINT)) FILTER (WHERE rnk <= 3) / 100.0 AS top3_total,
+           CAST(COUNT(*) AS BIGINT) AS n_orders
+    FROM (
+        SELECT o_custkey, o_totalprice AS p,
+               ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) AS rnk
+        FROM orders
+    )
+    GROUP BY o_custkey
+    ORDER BY o_custkey
+    """,
+)
+def f14_array_hof_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F14: per-key top-N-of-collection via array higher-order
+    functions: collect_list → sort_array desc → slice(3) → aggregate
+    in exact cents. One shuffle (the groupBy); the HOF chain runs on
+    each grouped array without a second window pass. The oracle states
+    the same semantics with a ROW_NUMBER + filtered sum (DuckDB lacks
+    Spark's aggregate() lambda)."""
+    o = t(spark, sf_dir, "orders")
+    top3 = F.slice(F.sort_array(F.collect_list("o_totalprice"), asc=False), 1, 3)
+    cents = F.transform(top3, lambda p: F.round(p * 100).cast("bigint"))
+    return (
+        o.groupBy("o_custkey")
+        .agg(
+            (
+                F.aggregate(cents, F.lit(0).cast("bigint"), lambda a, x: a + x) / 100.0
+            ).alias("top3_total"),
+            F.count(F.lit(1)).alias("n_orders"),
+        )
+        .orderBy("o_custkey")
+    )
+
+
+@register(
+    "f15_explode_outer",
+    """
+    WITH arr AS (
+        SELECT doc_id,
+               CASE WHEN lang = 'en' THEN string_split(text, ' ')[1:3] ELSE [] END AS first_words
+        FROM documents
+    )
+    SELECT doc_id, u.w AS word
+    FROM arr LEFT JOIN LATERAL UNNEST(first_words) AS u(w) ON TRUE
+    ORDER BY doc_id, word
+    """,
+)
+def f15_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F15: null-preserving explode (explode_outer) — rows with empty
+    arrays survive as (doc_id, NULL) instead of vanishing, so the
+    fan-out keeps the document universe intact (an inner explode
+    silently drops docs and corrupts downstream coverage stats)."""
+    d = t(spark, sf_dir, "documents")
+    arr = d.select(
+        "doc_id",
+        F.when(
+            F.col("lang") == "en", F.slice(F.split(F.col("text"), " "), 1, 3)
+        )
+        .otherwise(F.array().cast("array<string>"))
+        .alias("first_words"),
+    )
+    return arr.select(
+        "doc_id", F.explode_outer("first_words").alias("word")
+    ).orderBy("doc_id", "word")
+
+
+@register(
+    "f17_variant_extract",
+    """
+    SELECT CAST(CAST(JSON_EXTRACT_STRING(props, '$.k') AS BIGINT) % 10 AS BIGINT) AS k_bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(CAST(JSON_EXTRACT_STRING(props, '$.k') AS BIGINT)) AS BIGINT) AS k_total
+    FROM events
+    GROUP BY k_bucket
+    ORDER BY k_bucket
+    """,
+)
+def f17_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F17: VARIANT semi-structured type (Spark 4) — parse the events
+    props JSON into VARIANT once and extract typed paths with
+    variant_get, the open-schema path for JSON columns whose shape
+    drifts (vs F12's from_json, which needs the struct declared up
+    front). VARIANT keeps a parsed binary form, so repeated path
+    extraction doesn't re-parse the string. Oracle states the same
+    extraction with DuckDB's JSON operators."""
+    ev = t(spark, sf_dir, "events")
+    k = F.expr("variant_get(parse_json(props), '$.k', 'bigint')")
+    return (
+        ev.select((k % 10).alias("k_bucket"), k.alias("k"))
+        .groupBy("k_bucket")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum("k").cast("bigint").alias("k_total"),
+        )
+        .orderBy("k_bucket")
+    )
+
+
+@register(
+    "f26_snowflake_ids",
+    """
+    WITH ordered AS (
+        SELECT event_id, EPOCH_MS(ts) AS ts_ms,
+               CAST(user_id % 32 AS BIGINT) AS worker,
+               ROW_NUMBER() OVER (
+                   PARTITION BY user_id % 32, EPOCH_MS(ts)
+                   ORDER BY event_id) - 1 AS seq
+        FROM events
+    ),
+    ids AS (
+        SELECT event_id, worker,
+               ts_ms * 131072 + worker * 4096 + seq AS snowflake_id
+        FROM ordered WHERE seq < 4096
+    )
+    SELECT CAST(worker AS BIGINT) AS worker,
+           CAST(COUNT(*) AS BIGINT) AS n_ids,
+           CAST(COUNT(DISTINCT snowflake_id) AS BIGINT) AS n_distinct,
+           CAST(MIN(snowflake_id) AS BIGINT) AS min_id,
+           CAST(MAX(snowflake_id) AS BIGINT) AS max_id
+    FROM ids GROUP BY worker ORDER BY worker
+    """,
+)
+def f26_snowflake_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F26: Snowflake-style distributed ID generation — the
+    coordination-free unique-id scheme every large ingest pipeline
+    uses: id = timestamp_ms << 17 | worker << 12 | sequence (5 worker
+    bits, 12 sequence bits here). The sequence is a ROW_NUMBER
+    partitioned by (worker, millisecond) with a deterministic
+    tiebreak, so ids are unique BY CONSTRUCTION without any global
+    counter — exactly why the scheme scales: each worker mints ids
+    from local state only. The audit reports per-worker id counts,
+    distinct counts (uniqueness evidence the test pins globally) and
+    id ranges (time-ordering evidence: ids sort by timestamp across
+    workers).
+
+    Plan: one partitioned ranking window + one hash-agg; the window
+    key (worker, ms) is tiny per partition — no global funnel."""
+    from pyspark.sql.window import Window
+
+    ev = t(spark, sf_dir, "events")
+    w = Window.partitionBy(F.expr("user_id % 32"), F.expr("unix_millis(ts)")).orderBy("event_id")
+    ordered = ev.select(
+        "event_id",
+        F.expr("unix_millis(ts)").alias("ts_ms"),
+        F.expr("CAST(user_id % 32 AS BIGINT)").alias("worker"),
+        (F.row_number().over(w) - 1).alias("seq"),
+    )
+    ids = ordered.filter(F.col("seq") < 4096).select(
+        "event_id",
+        "worker",
+        (F.col("ts_ms") * 131072 + F.col("worker") * 4096 + F.col("seq")).alias("snowflake_id"),
+    )
+    return (
+        ids.groupBy(F.col("worker").cast("long").alias("worker"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_ids"),
+            F.countDistinct("snowflake_id").cast("long").alias("n_distinct"),
+            F.min("snowflake_id").cast("long").alias("min_id"),
+            F.max("snowflake_id").cast("long").alias("max_id"),
+        )
+        .orderBy("worker")
+    )

@@ -1,7 +1,8 @@
-"""Lakehouse-maintenance operators, split out of queries_extra3.py
-(round 7, mechanical move — no semantic change): retraction IVM, CDC
-extract, bitemporal as-of, late-dimension replay, compaction
-planning, Z-order clustering audit, rendezvous sharding.
+"""Lakehouse-maintenance operators, the ``x*`` queries: retraction
+IVM, CDC extract and apply, bitemporal as-of and SCD2 lookups,
+late-dimension replay, compaction planning, Z-order clustering audit,
+rendezvous sharding, salted skew joins, time-weighted averages and
+largest-remainder allocation.
 
 Engine-portable integer idioms throughout (md5-prefix hashes, integer
 cents, FLOOR-scaled micros) so every value hash-compares vs DuckDB.
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from realestate_engine.dedup import portable_hash32
-from realestate_engine.registry import cache_once, iterate, register, t
+from realestate_engine.registry import iterate, register, t
 
 
 @register(
@@ -1287,3 +1288,342 @@ def x37_occ_conflict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("commit_version"),
     ).orderBy("txn_id")
+
+
+@register(
+    "x12_salted_join",
+    """
+    WITH direct AS (
+        SELECT l_suppkey,
+               SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS cents,
+               COUNT(*) AS n
+        FROM lineitem JOIN supplier ON s_suppkey = l_suppkey
+        GROUP BY l_suppkey
+    )
+    SELECT l_suppkey,
+           CAST(n AS BIGINT) AS n_items,
+           CAST(cents AS BIGINT) AS rev_cents,
+           TRUE AS matches_direct
+    FROM direct
+    ORDER BY rev_cents DESC, l_suppkey
+    LIMIT 25
+    """,
+)
+def x12_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X12: salted skew join — the join-side counterpart of x4's salted
+    aggregation. A hot join key (one supplier on 10% of a 100 TB fact
+    table) funnels its whole fanout through one task; salting spreads
+    it: the fact side appends salt = pmod(hash(row), S), the dim side
+    replicates each row S times (dim × salt range — S·|dim| rows, still
+    tiny), and the join runs on (key, salt) — S-way parallel for every
+    key. The query joins BOTH ways and proves in-plan (matches_direct)
+    that per-key aggregates agree; the oracle states the plain join."""
+    S = 8
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_suppkey", F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents")
+    )
+    sup = t(spark, sf_dir, "supplier").select("s_suppkey")
+    salted_fact = li.withColumn("salt", F.pmod(F.hash("l_suppkey", "cents"), F.lit(S)))
+    salted_dim = sup.crossJoin(
+        F.broadcast(li.sparkSession.range(S).select(F.col("id").cast("int").alias("salt")))
+    )
+    salted = (
+        salted_fact.join(
+            salted_dim,
+            (F.col("l_suppkey") == F.col("s_suppkey")) & (salted_fact.salt == salted_dim.salt),
+        )
+        .groupBy("l_suppkey")
+        .agg(F.sum("cents").alias("s_cents"), F.count(F.lit(1)).alias("s_n"))
+    )
+    direct = (
+        li.join(sup, li.l_suppkey == sup.s_suppkey)
+        .groupBy("l_suppkey")
+        .agg(F.sum("cents").alias("d_cents"), F.count(F.lit(1)).alias("d_n"))
+    )
+    return (
+        salted.join(direct, "l_suppkey")
+        .select(
+            "l_suppkey",
+            F.col("s_n").cast("bigint").alias("n_items"),
+            F.col("s_cents").cast("bigint").alias("rev_cents"),
+            ((F.col("s_cents") == F.col("d_cents")) & (F.col("s_n") == F.col("d_n"))).alias(
+                "matches_direct"
+            ),
+        )
+        .orderBy(F.desc("rev_cents"), "l_suppkey")
+        .limit(25)
+    )
+
+
+@register(
+    "x13_scd2_lookup",
+    """
+    WITH versions AS (
+        SELECT o_custkey, o_orderkey, o_orderdate AS valid_from,
+               LEAD(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+                   AS valid_to
+        FROM orders
+    ),
+    lookups AS (
+        SELECT f.o_orderkey AS fact_key, f.o_custkey, f.o_orderdate AS ts,
+               v.o_orderkey AS version_key
+        FROM orders f
+        JOIN versions v
+          ON v.o_custkey = f.o_custkey
+         AND v.valid_from <= f.o_orderdate
+         AND (v.valid_to IS NULL OR f.o_orderdate < v.valid_to)
+    )
+    SELECT o_custkey,
+           CAST(COUNT(*) AS BIGINT) AS n_lookups,
+           CAST(SUM(CASE WHEN fact_key = version_key THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_self_matched
+    FROM lookups
+    WHERE o_custkey < 100
+    GROUP BY o_custkey
+    ORDER BY o_custkey
+    """,
+)
+def x13_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X13: point-in-time dimension lookup against SCD2 validity
+    intervals — the consumer side of scd2_intervals: given a fact
+    timestamp, find the ONE version row whose [valid_from, valid_to)
+    interval covers it. Joins are equi on the entity key with the
+    interval residual as a filter — hash-partitionable, never a
+    nested loop (the key equi-join bounds candidates to one entity's
+    version history). The audit sums self-matches: each fact resolves
+    to its own version EXCEPT when two versions share a timestamp —
+    the [closed, open) interval gives the earlier tied version a
+    zero-length validity, so its fact resolves to the later one.
+    n_lookups - n_self_matched therefore counts exactly the timestamp
+    collisions: the interval semantics are observable in the output,
+    and both engines agree on them bit-for-bit."""
+    from pyspark.sql import Window
+
+    o = t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderdate")
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    versions = o.select(
+        F.col("o_custkey").alias("v_cust"),
+        F.col("o_orderkey").alias("version_key"),
+        F.col("o_orderdate").alias("valid_from"),
+        F.lead("o_orderdate").over(w).alias("valid_to"),
+    )
+    lookups = o.join(
+        versions,
+        (F.col("o_custkey") == F.col("v_cust"))
+        & (F.col("valid_from") <= F.col("o_orderdate"))
+        & (F.col("valid_to").isNull() | (F.col("o_orderdate") < F.col("valid_to"))),
+    )
+    return (
+        lookups.where(F.col("o_custkey") < 100)
+        .groupBy("o_custkey")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_lookups"),
+            F.sum(F.when(F.col("o_orderkey") == F.col("version_key"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_self_matched"),
+        )
+        .orderBy("o_custkey")
+    )
+
+
+@register(
+    "x14_time_weighted_avg",
+    """
+    WITH iv AS (
+        SELECT user_id,
+               CAST(FLOOR(value * 1000) AS BIGINT) AS value_milli,
+               (LEAD(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                - epoch_us(ts)) // 1000000 AS dur_s
+        FROM events
+    )
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n_intervals,
+           CAST(SUM(dur_s) AS BIGINT) AS total_s,
+           CAST(SUM(value_milli * dur_s) AS DOUBLE)
+             / CAST(NULLIF(SUM(dur_s), 0) AS DOUBLE) / 1000.0 AS twa_value
+    FROM iv
+    WHERE dur_s IS NOT NULL
+    GROUP BY user_id
+    ORDER BY user_id
+    """,
+)
+def x14_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X14: time-weighted average (interval-weighted aggregation) — the
+    sensor/billing semantics where a reading holds until the next one,
+    so a value held for an hour counts 3600x a value held a second.
+    Plain AVG over irregular samples is biased; TWA weights each value
+    by its holding duration.
+
+    Determinism: value -> exact milli-units, duration -> whole seconds
+    (integer division of epoch micros), so the weighted numerator and
+    denominator are exact BIGINT group sums (order-independent); ONE
+    double division at the end. The lead window is user-partitioned —
+    scales out on the user key with no global ordering."""
+    ev = t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    iv = ev.select(
+        "user_id",
+        F.floor(F.col("value") * 1000).alias("value_milli"),
+        (
+            (F.lead(F.unix_micros("ts")).over(w) - F.unix_micros("ts"))
+            / F.lit(1_000_000)
+        )
+        .cast("bigint")
+        .alias("dur_s"),
+    ).where(F.col("dur_s").isNotNull())
+    return (
+        iv.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_intervals"),
+            F.sum("dur_s").cast("bigint").alias("total_s"),
+            (
+                F.sum(F.col("value_milli") * F.col("dur_s")).cast("double")
+                / F.nullif(F.sum("dur_s"), F.lit(0)).cast("double")
+                / F.lit(1000.0)
+            ).alias("twa_value"),
+        )
+        .orderBy("user_id")
+    )
+
+
+@register(
+    "x15_largest_remainder_allocation",
+    """
+    WITH base AS (
+        SELECT l.l_orderkey, l.l_linenumber,
+               CAST(FLOOR(o.o_totalprice * 100) AS BIGINT) AS total_cents,
+               CAST(l.l_quantity AS BIGINT) AS q
+        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    ),
+    sh AS (
+        SELECT *,
+               SUM(q) OVER (PARTITION BY l_orderkey) AS big_q,
+               (total_cents * q) // SUM(q) OVER (PARTITION BY l_orderkey) AS floor_cents,
+               (total_cents * q) % SUM(q) OVER (PARTITION BY l_orderkey) AS rem
+        FROM base
+    ),
+    rk AS (
+        SELECT *,
+               total_cents - SUM(floor_cents) OVER (PARTITION BY l_orderkey) AS leftover,
+               ROW_NUMBER() OVER (PARTITION BY l_orderkey
+                                  ORDER BY rem DESC, l_linenumber) AS rn
+        FROM sh
+    )
+    SELECT l_orderkey, l_linenumber,
+           CAST(floor_cents + CASE WHEN rn <= leftover THEN 1 ELSE 0 END AS BIGINT)
+             AS alloc_cents
+    FROM rk
+    ORDER BY l_orderkey, l_linenumber
+    """,
+)
+def x15_largest_remainder_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X15: exact proportional allocation (largest-remainder method) —
+    split each order's total across its line items proportional to
+    quantity so the parts sum back to the whole EXACTLY. Naive
+    ROUND(total * q/Q) drifts by cents; largest-remainder gives each
+    row FLOOR(total*q/Q) and hands the leftover cents to the rows with
+    the biggest remainders (l_linenumber tiebreak → deterministic).
+    The billing/revenue-recognition primitive.
+
+    All windows share one l_orderkey partitioning → a single shuffle;
+    integer arithmetic throughout (max product ~5e7*50 << 2^63)."""
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    base = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "l_orderkey",
+        "l_linenumber",
+        F.floor(F.col("o_totalprice") * 100).alias("total_cents"),
+        F.col("l_quantity").cast("bigint").alias("q"),
+    )
+    wp = Window.partitionBy("l_orderkey")
+    sh = base.select(
+        "l_orderkey",
+        "l_linenumber",
+        "total_cents",
+        F.expr("total_cents * q div sum(q) over (partition by l_orderkey)").alias(
+            "floor_cents"
+        ),
+        (F.col("total_cents") * F.col("q") % F.sum("q").over(wp)).alias("rem"),
+    )
+    rk = sh.select(
+        "l_orderkey",
+        "l_linenumber",
+        "floor_cents",
+        (F.col("total_cents") - F.sum("floor_cents").over(wp)).alias("leftover"),
+        F.row_number()
+        .over(Window.partitionBy("l_orderkey").orderBy(F.desc("rem"), "l_linenumber"))
+        .alias("rn"),
+    )
+    return rk.select(
+        "l_orderkey",
+        "l_linenumber",
+        (
+            F.col("floor_cents")
+            + F.when(F.col("rn") <= F.col("leftover"), 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("alloc_cents"),
+    ).orderBy("l_orderkey", "l_linenumber")
+
+
+@register(
+    "x20_cdc_apply",
+    """
+    WITH log AS (
+        SELECT user_id AS k, ts, event_id,
+               CASE event_type WHEN 'signup' THEN 'I'
+                               WHEN 'error' THEN 'D'
+                               ELSE 'U' END AS op,
+               CAST(FLOOR(value * 100) AS BIGINT) AS val_cents
+        FROM events
+        WHERE event_type IN ('signup', 'click', 'view', 'purchase', 'error')
+    ),
+    last_op AS (
+        SELECT k, op, val_cents
+        FROM log
+        QUALIFY ROW_NUMBER() OVER (PARTITION BY k ORDER BY ts DESC, event_id DESC) = 1
+    )
+    SELECT k AS user_id, op AS last_op, val_cents
+    FROM last_op
+    WHERE op <> 'D'
+    ORDER BY user_id
+    """,
+)
+def x20_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X20: change-data-capture apply — collapse an ordered I/U/D
+    changelog (Debezium-shaped: signup=insert, activity=update,
+    error=delete here) into the final table state: per key the LAST
+    operation wins, and a last-op DELETE removes the key entirely.
+    This is the semantics x7's keep-latest upsert lacks (upsert never
+    forgets); the delete branch is what makes CDC replication and
+    GDPR-erasure pipelines correct.
+
+    Plan: one window rank per key ordered by (ts, event_id) DESC — a
+    single shuffle on the key, group state bounded by events-per-key —
+    then a filter. At 100 TB the same query runs incrementally: new
+    changelog batches fold in via x8's agg-state merge or as a
+    MERGE INTO against the materialized state; the batch form here is
+    the semantics oracle."""
+    ev = t(spark, sf_dir, "events")
+    # same domain filter as the oracle: a future event type outside the
+    # changelog vocabulary must be excluded on BOTH sides, not silently
+    # mapped to 'U' here while the oracle drops it
+    log = ev.where(
+        F.col("event_type").isin("signup", "click", "view", "purchase", "error")
+    ).select(
+        F.col("user_id").alias("k"),
+        "ts",
+        "event_id",
+        F.when(F.col("event_type") == "signup", "I")
+        .when(F.col("event_type") == "error", "D")
+        .otherwise("U")
+        .alias("op"),
+        F.floor(F.col("value") * 100).cast("bigint").alias("val_cents"),
+    )
+    w = Window.partitionBy("k").orderBy(F.col("ts").desc(), F.col("event_id").desc())
+    return (
+        log.withColumn("rn", F.row_number().over(w))
+        .where((F.col("rn") == 1) & (F.col("op") != "D"))
+        .select(F.col("k").alias("user_id"), F.col("op").alias("last_op"), "val_cents")
+        .orderBy("user_id")
+    )

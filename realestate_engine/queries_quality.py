@@ -1,16 +1,18 @@
-"""Data-quality / audit operators, split out of queries_extra.py
-(round 7, mechanical move — no semantic change): expectation suites,
-drift audits, snapshot diffs, MAD outliers, Benford, skipping-index
-audit, observe() metrics, k-anonymity, and Wasserstein drift.
+"""Data-quality / audit operators, the ``dq*`` queries: expectation
+suites, drift audits (L1, PSI, KS, Wasserstein), snapshot and Merkle
+diffs, MAD and Mahalanobis outliers, Benford, skipping-index audit,
+observe() metrics, k-anonymity, functional dependencies, referential
+integrity, uniqueness, table fingerprints and rater agreement.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from realestate_engine.dedup import lane_hash, lane_hash_sql, portable_hash32
+from realestate_engine.ordered import distributed_prefix_sum
 from realestate_engine.queries_sources_sql import _interleave_bits_expr
 from realestate_engine.registry import cache_once, register, stable_tmp, t
 from realestate_engine.text import _DSIR_CTES, dsir_terms
@@ -56,10 +58,13 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return key_stats.crossJoin(orphans).crossJoin(domains)
 
 
-@register(
-    "dq_drift_audit",
-    """
-    WITH bucketed AS (
+# --- Two-period drift: orders' price buckets before and after 1998 ---------
+#
+# dq2 (L1 shares) and dq13 (PSI) score the same per-bucket counts; this
+# CTE and period_bucket_counts are the one definition on each engine.
+
+_PERIOD_BUCKET_CTES = """
+    bucketed AS (
         SELECT CAST(FLOOR(o_totalprice / 50000.0) AS BIGINT) AS bucket,
                CASE WHEN o_orderdate < TIMESTAMP '1998-01-01' THEN 'a' ELSE 'b' END AS period
         FROM orders
@@ -69,7 +74,30 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CASE WHEN period = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
                CAST(SUM(CASE WHEN period = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
         FROM bucketed GROUP BY bucket
-    ),
+    )"""
+
+
+def period_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(bucket, n_a, n_b): orders per o_totalprice/50000 bucket in
+    period a (before 1998) and period b (from 1998), as BIGINT counts.
+    One scan and one aggregate; the Spark twin of
+    _PERIOD_BUCKET_CTES."""
+    b = t(spark, sf_dir, "orders").select(
+        F.floor(F.col("o_totalprice") / 50000.0).cast("bigint").alias("bucket"),
+        F.when(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"), "a")
+        .otherwise("b")
+        .alias("period"),
+    )
+    return b.groupBy("bucket").agg(
+        F.sum(F.when(F.col("period") == "a", 1).otherwise(0)).cast("bigint").alias("n_a"),
+        F.sum(F.when(F.col("period") == "b", 1).otherwise(0)).cast("bigint").alias("n_b"),
+    )
+
+
+@register(
+    "dq_drift_audit",
+    f"""
+    WITH {_PERIOD_BUCKET_CTES},
     tot AS (SELECT SUM(n_a) AS ta, SUM(n_b) AS tb FROM counts)
     SELECT bucket, n_a, n_b,
            CAST(n_a AS DOUBLE) / ta AS share_a,
@@ -88,16 +116,7 @@ def dq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     of identical doubles — bit-identical cross-engine, where PSI's
     ln() would inherit libm variance. One scan, one agg, a broadcast
     1-row totals join."""
-    b = t(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") / 50000.0).cast("bigint").alias("bucket"),
-        F.when(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"), "a")
-        .otherwise("b")
-        .alias("period"),
-    )
-    counts = b.groupBy("bucket").agg(
-        F.sum(F.when(F.col("period") == "a", 1).otherwise(0)).cast("bigint").alias("n_a"),
-        F.sum(F.when(F.col("period") == "b", 1).otherwise(0)).cast("bigint").alias("n_b"),
-    )
+    counts = period_bucket_counts(spark, sf_dir)
     tot = counts.agg(F.sum("n_a").alias("ta"), F.sum("n_b").alias("tb"))
     share_a = F.col("n_a").cast("double") / F.col("ta")
     share_b = F.col("n_b").cast("double") / F.col("tb")
@@ -112,6 +131,62 @@ def dq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.abs(share_a - share_b).alias("drift"),
         )
         .orderBy("bucket")
+    )
+
+
+@register(
+    "dq13_psi_drift",
+    f"""
+    WITH {_PERIOD_BUCKET_CTES},
+    tot AS (
+        SELECT SUM(n_a) AS tot_a, SUM(n_b) AS tot_b,
+               CAST(COUNT(*) AS BIGINT) AS k
+        FROM counts
+    ),
+    terms AS (
+        SELECT CAST(FLOOR(((n_a + 1.0) / (tot_a + k) - (n_b + 1.0) / (tot_b + k))
+                    * LN(((n_a + 1.0) / (tot_a + k)) / ((n_b + 1.0) / (tot_b + k)))
+                    * 1e6) AS BIGINT) AS term_micro,
+               n_a, n_b
+        FROM counts, tot
+    )
+    SELECT CAST(SUM(term_micro) AS BIGINT) AS psi_micro,
+           CAST(SUM(n_a) AS BIGINT) AS n_period_a,
+           CAST(SUM(n_b) AS BIGINT) AS n_period_b,
+           CAST(COUNT(*) AS BIGINT) AS n_buckets
+    FROM terms
+    """,
+)
+def dq13_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ13: population stability index between two periods — the
+    industry drift score dq2's L1 audit deliberately avoided because
+    PSI's ln() looked engine-unportable. The repo's integer-micro trick
+    makes it oracle-able after all: Laplace-smoothed shares ((n+1)/
+    (tot+k), so empty buckets never hit ln(0)) are single IEEE
+    divisions — bit-identical cross-engine — each bucket's
+    (pa-pb)·ln(pa/pb) term is FLOOR-scaled to integer micros
+    INDIVIDUALLY, and the integer sum is order-free where a float sum
+    would inherit summation-order ulps. One scan, one per-bucket
+    aggregate, a broadcast 1-row totals join; PSI > 0.2 is the
+    conventional 'retrain' alarm (here expressed in micros)."""
+    per = period_bucket_counts(spark, sf_dir)
+    tot = per.agg(
+        F.sum("n_a").alias("tot_a"),
+        F.sum("n_b").alias("tot_b"),
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+    )
+    pa = (F.col("n_a") + 1.0) / (F.col("tot_a") + F.col("k"))
+    pb = (F.col("n_b") + 1.0) / (F.col("tot_b") + F.col("k"))
+    terms = per.crossJoin(F.broadcast(tot)).select(
+        F.floor((pa - pb) * F.log(pa / pb) * 1e6).cast("bigint").alias("term_micro"),
+        "n_a",
+        "n_b",
+    )
+    return terms.agg(
+        F.sum("term_micro").cast("bigint").alias("psi_micro"),
+        F.sum("n_a").cast("bigint").alias("n_period_a"),
+        F.sum("n_b").cast("bigint").alias("n_period_b"),
+        F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
     )
 
 
@@ -284,8 +359,8 @@ _DQ14_Z = _interleave_bits_expr("x", "y")
     "dq14_skipping_audit",
     f"""
     WITH pts AS (
-        SELECT (l_partkey * 769 + 12289) % 2147483647 % 1024 AS x,
-               (l_suppkey * 1543 + 24593) % 2147483647 % 1024 AS y
+        SELECT {lane_hash_sql('l_partkey', 0, 1024)} AS x,
+               {lane_hash_sql('l_suppkey', 1, 1024)} AS y
         FROM lineitem
     ),
     keyed AS (
@@ -327,8 +402,8 @@ def dq14_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     top key bits is deterministic (no repartitionByRange sampling),
     one groupBy, bit-exact integers end to end."""
     li = t(spark, sf_dir, "lineitem").select(
-        ((F.col("l_partkey") * 769 + 12289) % 2147483647 % 1024).alias("x"),
-        ((F.col("l_suppkey") * 1543 + 24593) % 2147483647 % 1024).alias("y"),
+        lane_hash(F.col("l_partkey"), 0, 1024).alias("x"),
+        lane_hash(F.col("l_suppkey"), 1, 1024).alias("y"),
     )
     keyed = li.select(
         "x",
@@ -746,8 +821,6 @@ def p24_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     does not touch the plan. (The derandomization is what makes the
     release oracle-checkable; a keyed-hash DP variant is also a real
     pattern — e.g. reproducible DP releases keyed on a secret.)"""
-    from realestate_engine.dedup import portable_hash32
-
     cells = (
         t(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nation"), F.col("c_mktsegment").alias("seg"))
@@ -1669,3 +1742,854 @@ def dq24_pk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_distinct") == F.col("n_rows")).alias("is_unique_key"),
         (F.col("n_rows") - F.col("n_distinct")).cast("bigint").alias("n_duplicates"),
     ).orderBy("cols")
+
+
+@register(
+    "dq6_functional_dependency",
+    """
+    WITH pk AS (
+        SELECT l_partkey AS k, COUNT(DISTINCT l_suppkey) AS nd, COUNT(*) AS n
+        FROM lineitem GROUP BY l_partkey
+    ),
+    ok AS (
+        SELECT l_orderkey AS k, COUNT(DISTINCT l_returnflag) AS nd, COUNT(*) AS n
+        FROM lineitem GROUP BY l_orderkey
+    )
+    SELECT fd, n_keys, n_violating_keys, max_distinct, n_violating_rows
+    FROM (
+        SELECT 'l_partkey->l_suppkey' AS fd,
+               CAST(COUNT(*) AS BIGINT) AS n_keys,
+               CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_keys,
+               CAST(MAX(nd) AS BIGINT) AS max_distinct,
+               CAST(SUM(CASE WHEN nd > 1 THEN n ELSE 0 END) AS BIGINT) AS n_violating_rows
+        FROM pk
+        UNION ALL
+        SELECT 'l_orderkey->l_returnflag' AS fd,
+               CAST(COUNT(*) AS BIGINT),
+               CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT),
+               CAST(MAX(nd) AS BIGINT),
+               CAST(SUM(CASE WHEN nd > 1 THEN n ELSE 0 END) AS BIGINT)
+        FROM ok
+    )
+    ORDER BY fd
+    """,
+)
+def dq6_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ6: functional-dependency audit — does A determine B in the
+    data? Profilers (Metanome-style) phrase candidate FDs as 'every A
+    value maps to exactly one B value'; the violation count is the
+    repair workload. One groupBy per candidate (distributed, two-level
+    agg), then a tiny union of per-FD summary rows."""
+    li = t(spark, sf_dir, "lineitem")
+
+    def audit(key: str, dep: str, fd_name: str) -> DataFrame:
+        per_key = li.groupBy(F.col(key).alias("k")).agg(
+            F.countDistinct(dep).alias("nd"), F.count(F.lit(1)).alias("n")
+        )
+        return per_key.agg(
+            F.lit(fd_name).alias("fd"),
+            F.count(F.lit(1)).cast("bigint").alias("n_keys"),
+            F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_violating_keys"),
+            F.max("nd").cast("bigint").alias("max_distinct"),
+            F.sum(F.when(F.col("nd") > 1, F.col("n")).otherwise(0))
+            .cast("bigint")
+            .alias("n_violating_rows"),
+        )
+
+    return (
+        audit("l_partkey", "l_suppkey", "l_partkey->l_suppkey")
+        .unionAll(audit("l_orderkey", "l_returnflag", "l_orderkey->l_returnflag"))
+        .orderBy("fd")
+    )
+
+
+@register(
+    "dq7_seasonal_anomaly",
+    """
+    WITH daily AS (
+        SELECT CAST(o_orderdate AS DATE) AS d,
+               ISODOW(o_orderdate) - 1 AS dow,
+               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
+        FROM orders GROUP BY 1, 2
+    ),
+    med AS (
+        SELECT dow, CAST(quantile_disc(rev_cents, 0.5) AS BIGINT) AS med_cents
+        FROM daily GROUP BY dow
+    ),
+    dev AS (
+        SELECT daily.d, daily.dow, daily.rev_cents, med.med_cents,
+               ABS(daily.rev_cents - med.med_cents) AS adev
+        FROM daily JOIN med USING (dow)
+    ),
+    mad AS (
+        SELECT dow, CAST(quantile_disc(adev, 0.5) AS BIGINT) AS mad_cents
+        FROM dev GROUP BY dow
+    )
+    SELECT dev.d AS day, CAST(dev.dow AS BIGINT) AS dow,
+           dev.rev_cents, dev.med_cents, mad.mad_cents
+    FROM dev JOIN mad USING (dow)
+    WHERE dev.adev > 3 * mad.mad_cents
+    ORDER BY day
+    """,
+)
+def dq7_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ7: seasonality-aware anomaly flags — daily revenue compared to
+    its OWN day-of-week median with a 3x MAD band (weekends differ from
+    Tuesdays; a global band flags every Saturday). Median + MAD instead
+    of mean + stddev because both are outlier-robust — the anomaly
+    can't drag its own baseline. All arithmetic is exact: integer
+    cents, discrete medians via the GK accuracy>n pin (= DuckDB
+    quantile_disc), integer absolute deviations, integer 3*MAD
+    threshold — no float anywhere, so the flag set is bit-stable.
+    Scale: the raw scan reduces to a days-sized frame in one
+    partial-agg shuffle; the two median passes run on that tiny frame
+    (at 100 TB: still |days| rows). Day-of-week convention pinned to
+    0=Monday on both engines (Spark weekday(), DuckDB ISODOW-1)."""
+    o = t(spark, sf_dir, "orders")
+    exact_gk = 10_000_000
+    daily = (
+        o.groupBy(
+            F.col("o_orderdate").cast("date").alias("d"),
+            F.weekday("o_orderdate").alias("dow"),
+        )
+        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint").alias("rev_cents"))
+    )
+    med = daily.groupBy("dow").agg(
+        F.percentile_approx("rev_cents", 0.5, exact_gk).cast("bigint").alias("med_cents")
+    )
+    dev = daily.join(F.broadcast(med), "dow").withColumn(
+        "adev", F.abs(F.col("rev_cents") - F.col("med_cents"))
+    )
+    mad = dev.groupBy("dow").agg(
+        F.percentile_approx("adev", 0.5, exact_gk).cast("bigint").alias("mad_cents")
+    )
+    return (
+        dev.join(F.broadcast(mad), "dow")
+        .where(F.col("adev") > 3 * F.col("mad_cents"))
+        # timestamp output (f10_monthly_revenue idiom): keeps the day
+        # column in the datetime family on both fetch paths
+        .select(
+            F.col("d").cast("timestamp").alias("day"),
+            F.col("dow").cast("bigint").alias("dow"),
+            "rev_cents",
+            "med_cents",
+            "mad_cents",
+        )
+        .orderBy("day")
+    )
+
+
+@register(
+    "dq8_id_gap_islands",
+    """
+    WITH ok AS (
+        SELECT event_id FROM events WHERE event_type <> 'error'
+    ),
+    grp AS (
+        SELECT event_id,
+               event_id - ROW_NUMBER() OVER (ORDER BY event_id) AS island_key
+        FROM ok
+    ),
+    islands AS (
+        SELECT CAST(MIN(event_id) AS BIGINT) AS island_start,
+               CAST(MAX(event_id) AS BIGINT) AS island_end,
+               CAST(COUNT(*) AS BIGINT) AS island_len
+        FROM grp GROUP BY island_key
+    )
+    SELECT island_start, island_end, island_len
+    FROM islands
+    ORDER BY island_len DESC, island_start
+    LIMIT 50
+    """,
+)
+def dq8_id_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ8: gaps-and-islands over a surrogate-key sequence — the
+    completeness audit that answers "which id ranges are missing?"
+    after filtering out quarantined rows (here: 'error' events play the
+    dropped records). Classic islands construction: id minus its row
+    number is constant within every contiguous run. The global
+    ROW_NUMBER is computed as a distributed_prefix_sum running count
+    over range partitions of event_id (two-phase, ordered.py) — no
+    single-partition global window anywhere in the plan, so the audit
+    scales with the table instead of funneling it through one task.
+    Top-50 longest islands returned (exact integers throughout)."""
+    ev = (
+        t(spark, sf_dir, "events")
+        .where(F.col("event_type") != "error")
+        .select("event_id", F.lit(1).alias("one"))
+    )
+    # rank = running count of rows in event_id order == ROW_NUMBER
+    ranked = distributed_prefix_sum(ev, [F.col("event_id")], "one", out_col="rn")
+    grp = ranked.select(
+        "event_id", (F.col("event_id") - F.col("rn")).alias("island_key")
+    )
+    return (
+        grp.groupBy("island_key")
+        .agg(
+            F.min("event_id").cast("bigint").alias("island_start"),
+            F.max("event_id").cast("bigint").alias("island_end"),
+            F.count(F.lit(1)).cast("bigint").alias("island_len"),
+        )
+        .select("island_start", "island_end", "island_len")
+        .orderBy(F.desc("island_len"), "island_start")
+        .limit(50)
+    )
+
+
+@register(
+    "dq9_referential_integrity",
+    """
+    SELECT 'lineitem.l_orderkey -> orders' AS fk,
+           CAST((SELECT COUNT(*) FROM lineitem l
+                 WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT) AS n_orphans
+    UNION ALL
+    SELECT 'lineitem.l_partkey -> part',
+           CAST((SELECT COUNT(*) FROM lineitem l
+                 WHERE NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'lineitem.l_suppkey -> supplier',
+           CAST((SELECT COUNT(*) FROM lineitem l
+                 WHERE NOT EXISTS (SELECT 1 FROM supplier s WHERE s.s_suppkey = l.l_suppkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'orders.o_custkey -> customer',
+           CAST((SELECT COUNT(*) FROM orders o
+                 WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'customer.c_nationkey -> nation',
+           CAST((SELECT COUNT(*) FROM customer c
+                 WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'supplier.s_nationkey -> nation',
+           CAST((SELECT COUNT(*) FROM supplier s
+                 WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = s.s_nationkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'nation.n_regionkey -> region',
+           CAST((SELECT COUNT(*) FROM nation n
+                 WHERE NOT EXISTS (SELECT 1 FROM region r WHERE r.r_regionkey = n.n_regionkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'events.user_id -> customer',
+           CAST((SELECT COUNT(*) FROM events e
+                 WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = e.user_id)) AS BIGINT)
+    ORDER BY fk
+    """,
+)
+def dq9_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ9: whole-schema referential-integrity sweep — one query that
+    anti-joins every declared FK edge of the star schema and reports
+    orphan counts per edge (the audit a warehouse runs after every
+    load; a non-zero row is a broken pipeline, not a data fact). Each
+    leg is an anti join against the parent's key — Spark broadcasts
+    the small parents and shuffle-joins the big ones, every leg
+    partial-aggregates to ONE row before the 8-row union, so the sweep
+    costs one pass over each child table regardless of scale. events →
+    customer is intentionally included: user_id is only a SOFT
+    reference, so its orphan count documents the real referential
+    status of the event stream rather than assuming it."""
+    edges = [
+        ("lineitem.l_orderkey -> orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+        ("lineitem.l_partkey -> part", "lineitem", "l_partkey", "part", "p_partkey"),
+        ("lineitem.l_suppkey -> supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
+        ("orders.o_custkey -> customer", "orders", "o_custkey", "customer", "c_custkey"),
+        ("customer.c_nationkey -> nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+        ("supplier.s_nationkey -> nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
+        ("nation.n_regionkey -> region", "nation", "n_regionkey", "region", "r_regionkey"),
+        ("events.user_id -> customer", "events", "user_id", "customer", "c_custkey"),
+    ]
+    parts = []
+    for fk, child, ck, parent, pk in edges:
+        orphans = (
+            t(spark, sf_dir, child)
+            .select(F.col(ck).alias("k"))
+            .join(
+                t(spark, sf_dir, parent).select(F.col(pk).alias("k")),
+                "k",
+                "left_anti",
+            )
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_orphans"))
+            .select(F.lit(fk).alias("fk"), "n_orphans")
+        )
+        parts.append(orphans)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("fk")
+
+
+@register(
+    "dq10_uniqueness_audit",
+    """
+    SELECT 'customer.c_custkey' AS pk,
+           CAST((SELECT COUNT(*) FROM customer) AS BIGINT) AS n_rows,
+           CAST((SELECT COUNT(DISTINCT c_custkey) FROM customer) AS BIGINT) AS n_keys
+    UNION ALL
+    SELECT 'events.event_id',
+           CAST((SELECT COUNT(*) FROM events) AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT event_id) FROM events) AS BIGINT)
+    UNION ALL
+    SELECT 'lineitem.(l_orderkey,l_linenumber,l_suppkey,l_partkey)',
+           CAST((SELECT COUNT(*) FROM lineitem) AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT CONCAT(
+                    COALESCE(CAST(l_orderkey AS VARCHAR), chr(1)), ':',
+                    COALESCE(CAST(l_linenumber AS VARCHAR), chr(1)), ':',
+                    COALESCE(CAST(l_suppkey AS VARCHAR), chr(1)), ':',
+                    COALESCE(CAST(l_partkey AS VARCHAR), chr(1)))) FROM lineitem) AS BIGINT)
+    UNION ALL
+    SELECT 'nation.n_nationkey',
+           CAST((SELECT COUNT(*) FROM nation) AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT n_nationkey) FROM nation) AS BIGINT)
+    UNION ALL
+    SELECT 'orders.o_orderkey',
+           CAST((SELECT COUNT(*) FROM orders) AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT o_orderkey) FROM orders) AS BIGINT)
+    UNION ALL
+    SELECT 'part.p_partkey',
+           CAST((SELECT COUNT(*) FROM part) AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT p_partkey) FROM part) AS BIGINT)
+    UNION ALL
+    SELECT 'region.r_regionkey',
+           CAST((SELECT COUNT(*) FROM region) AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT r_regionkey) FROM region) AS BIGINT)
+    UNION ALL
+    SELECT 'supplier.s_suppkey',
+           CAST((SELECT COUNT(*) FROM supplier) AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT s_suppkey) FROM supplier) AS BIGINT)
+    ORDER BY pk
+    """,
+)
+def dq10_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ10: primary-key uniqueness sweep — rows vs distinct keys for
+    every table's declared (or candidate) key, the load audit that
+    catches double-ingestion before joins fan out. Notably lineitem's
+    key must be the FULL (orderkey, linenumber, suppkey, partkey)
+    tuple: (l_orderkey, l_linenumber) alone is NOT unique in this
+    testdata — a fact several window tiebreaks in the engine already
+    encode, now stated as a checked row. Each leg is one
+    partial-aggregated count-distinct; the sweep is one pass per
+    table."""
+    keys = [
+        ("customer.c_custkey", "customer", ["c_custkey"]),
+        ("events.event_id", "events", ["event_id"]),
+        (
+            "lineitem.(l_orderkey,l_linenumber,l_suppkey,l_partkey)",
+            "lineitem",
+            ["l_orderkey", "l_linenumber", "l_suppkey", "l_partkey"],
+        ),
+        ("nation.n_nationkey", "nation", ["n_nationkey"]),
+        ("orders.o_orderkey", "orders", ["o_orderkey"]),
+        ("part.p_partkey", "part", ["p_partkey"]),
+        ("region.r_regionkey", "region", ["r_regionkey"]),
+        ("supplier.s_suppkey", "supplier", ["s_suppkey"]),
+    ]
+    parts = []
+    for pk, table, cols in keys:
+        if len(cols) == 1:
+            # single-column: COUNT(DISTINCT col) skips NULLs
+            # identically in both engines
+            key_count = F.count_distinct(F.col(cols[0]))
+        else:
+            # multi-column: Spark's count_distinct drops a tuple if ANY
+            # field is null, DuckDB's row-tuple distinct keeps it — the
+            # exact condition a uniqueness audit must detect. Canonical
+            # sentinel key (chr(1) per null field) agrees on both sides
+            # and counts null-bearing tuples as distinct keys.
+            key_count = F.count_distinct(
+                F.concat_ws(
+                    ":",
+                    *[F.coalesce(F.col(c).cast("string"), F.lit("\x01")) for c in cols],
+                )
+            )
+        parts.append(
+            t(spark, sf_dir, table).agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                key_count.cast("bigint").alias("n_keys"),
+            ).select(F.lit(pk).alias("pk"), "n_rows", "n_keys")
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("pk")
+
+
+@register(
+    "dq11_table_fingerprint",
+    """
+    WITH o AS (
+        SELECT COUNT(*) AS n,
+               SUM(('0x' || SUBSTR(MD5(CONCAT(CAST(o_orderkey AS VARCHAR), ':',
+                    CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) AS VARCHAR))), 1, 8))::BIGINT) AS fp
+        FROM orders
+    ),
+    l AS (
+        SELECT COUNT(*) AS n,
+               SUM(('0x' || SUBSTR(MD5(CONCAT(CAST(l_orderkey AS VARCHAR), ':',
+                    CAST(l_linenumber AS VARCHAR), ':', CAST(l_suppkey AS VARCHAR), ':',
+                    CAST(CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS VARCHAR))), 1, 8))::BIGINT) AS fp
+        FROM lineitem
+    ),
+    c AS (
+        SELECT COUNT(*) AS n,
+               SUM(('0x' || SUBSTR(MD5(CONCAT(CAST(c_custkey AS VARCHAR), ':',
+                    CAST(CAST(ROUND(c_acctbal * 100) AS BIGINT) AS VARCHAR))), 1, 8))::BIGINT) AS fp
+        FROM customer
+    )
+    SELECT 'customer' AS table_name, CAST(n AS BIGINT) AS n_rows, CAST(fp AS BIGINT) AS fingerprint FROM c
+    UNION ALL
+    SELECT 'lineitem', CAST(n AS BIGINT), CAST(fp AS BIGINT) FROM l
+    UNION ALL
+    SELECT 'orders', CAST(n AS BIGINT), CAST(fp AS BIGINT) FROM o
+    ORDER BY table_name
+    """,
+)
+def dq11_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ11: content fingerprints — an order-independent checksum per
+    table (SUM of a portable row hash over key + value columns), the
+    cheap equality proof replication/migration pipelines compare
+    instead of diffing rows: two copies agree iff (n_rows,
+    fingerprint) agree, across engines, partitionings and file
+    layouts. The row hash is the md5-prefix integer (portable_hash32)
+    of a canonical key:value string; the SUM is commutative so any
+    execution order gives the same BIGINT (2^32-bounded terms overflow
+    signed 64-bit only past ~2^31 rows — shard the sum by key range
+    beyond that). One map-side pass + 1-row aggregate per table."""
+    def fp(df, parts) -> DataFrame:
+        key = F.concat_ws(":", *parts)
+        return df.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum(portable_hash32(key)).cast("bigint").alias("fingerprint"),
+        )
+
+    o = t(spark, sf_dir, "orders")
+    li = t(spark, sf_dir, "lineitem")
+    c = t(spark, sf_dir, "customer")
+    rows = [
+        fp(c, [F.col("c_custkey").cast("string"),
+               F.round(F.col("c_acctbal") * 100).cast("bigint").cast("string")])
+        .select(F.lit("customer").alias("table_name"), "n_rows", "fingerprint"),
+        fp(li, [F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string"),
+                F.col("l_suppkey").cast("string"),
+                F.round(F.col("l_extendedprice") * 100).cast("bigint").cast("string")])
+        .select(F.lit("lineitem").alias("table_name"), "n_rows", "fingerprint"),
+        fp(o, [F.col("o_orderkey").cast("string"),
+               F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string")])
+        .select(F.lit("orders").alias("table_name"), "n_rows", "fingerprint"),
+    ]
+    out = rows[0]
+    for r in rows[1:]:
+        out = out.unionByName(r)
+    return out.orderBy("table_name")
+
+
+@register(
+    "dq12_merkle_bucket_diff",
+    """
+    WITH mutated AS (
+        SELECT o_orderkey,
+               CASE WHEN o_orderkey % 97 = 0
+                    THEN CAST(ROUND(o_totalprice * 100) AS BIGINT) + 1
+                    ELSE CAST(ROUND(o_totalprice * 100) AS BIGINT) END AS cents
+        FROM orders
+    ),
+    a AS (
+        SELECT o_orderkey % 64 AS bucket,
+               CAST(SUM(('0x' || SUBSTR(MD5(CONCAT(CAST(o_orderkey AS VARCHAR), ':',
+                    CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) AS VARCHAR))), 1, 8))::BIGINT)
+                    AS BIGINT) AS fp,
+               CAST(COUNT(*) AS BIGINT) AS n
+        FROM orders GROUP BY 1
+    ),
+    b AS (
+        SELECT o_orderkey % 64 AS bucket,
+               CAST(SUM(('0x' || SUBSTR(MD5(CONCAT(CAST(o_orderkey AS VARCHAR), ':',
+                    CAST(cents AS VARCHAR))), 1, 8))::BIGINT) AS BIGINT) AS fp,
+               CAST(COUNT(*) AS BIGINT) AS n
+        FROM mutated GROUP BY 1
+    )
+    SELECT a.bucket, a.n AS n_rows,
+           (a.fp <> b.fp) AS differs
+    FROM a JOIN b ON a.bucket = b.bucket
+    WHERE a.fp <> b.fp
+    ORDER BY a.bucket
+    """,
+)
+def dq12_merkle_bucket_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ12: Merkle-style bucket diff — the anti-entropy primitive for
+    synchronizing two 100 TB copies of a table without comparing rows:
+    fingerprint each side per key-bucket (order-independent SUM of
+    portable row hashes), join the two 64-row fingerprint frames, and
+    only the buckets whose digests differ need row-level reconciliation
+    (here: a deterministic mutation of every 97th order's cents, so
+    exactly the buckets containing a multiple of 97 differ). Each side
+    is one partial-aggregated scan; the diff join touches 64 rows
+    regardless of table size — this is how dq11's whole-table
+    fingerprint generalizes into an incremental-repair plan."""
+    o = t(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+
+    def side(cents_col) -> DataFrame:
+        row_fp = portable_hash32(
+            F.concat_ws(":", F.col("o_orderkey").cast("string"), cents_col.cast("string"))
+        )
+        return o.groupBy((F.col("o_orderkey") % 64).alias("bucket")).agg(
+            F.sum(row_fp).cast("bigint").alias("fp"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+        )
+
+    a = side(cents)
+    mutated = F.when(F.col("o_orderkey") % 97 == 0, cents + 1).otherwise(cents)
+    b = side(mutated)
+    return (
+        a.alias("a")
+        .join(b.alias("b"), "bucket")
+        .filter(F.col("a.fp") != F.col("b.fp"))
+        .select(
+            "bucket",
+            F.col("a.n").alias("n_rows"),
+            (F.col("a.fp") != F.col("b.fp")).alias("differs"),
+        )
+        .orderBy("bucket")
+    )
+
+
+@register(
+    "dq18_ks_test",
+    """
+    WITH tagged AS (
+        SELECT c.c_nationkey AS nation,
+               CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents,
+               CASE WHEN o.o_orderdate < TIMESTAMP '1998-01-01' THEN 0 ELSE 1 END AS period
+        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    ),
+    per_value AS (
+        SELECT nation, cents,
+               SUM(CASE WHEN period = 0 THEN 1 ELSE 0 END) AS a,
+               SUM(CASE WHEN period = 1 THEN 1 ELSE 0 END) AS b
+        FROM tagged GROUP BY nation, cents
+    ),
+    cum AS (
+        SELECT nation,
+               ABS(SUM(a) OVER (PARTITION BY nation ORDER BY cents)
+                     * SUM(b) OVER (PARTITION BY nation)
+                   - SUM(b) OVER (PARTITION BY nation ORDER BY cents)
+                     * SUM(a) OVER (PARTITION BY nation)) AS gap,
+               SUM(a) OVER (PARTITION BY nation) AS na,
+               SUM(b) OVER (PARTITION BY nation) AS nb
+        FROM per_value
+    )
+    SELECT CAST(nation AS BIGINT) AS nation,
+           CAST(ANY_VALUE(na) AS BIGINT) AS n_pre,
+           CAST(ANY_VALUE(nb) AS BIGINT) AS n_post,
+           CAST(MAX(gap) * 1000000 // (ANY_VALUE(na) * ANY_VALUE(nb)) AS BIGINT) AS ks_micro,
+           CAST(CASE WHEN MAX(gap) * 10 > ANY_VALUE(na) * ANY_VALUE(nb)
+                THEN 1 ELSE 0 END AS BIGINT) AS drifted
+    FROM cum GROUP BY nation ORDER BY nation
+    """,
+)
+def dq18_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ18: two-sample Kolmogorov-Smirnov drift test per nation — the
+    nonparametric sibling of dq13_psi_drift (binned) and
+    dq17_wasserstein_drift (transport): KS = max ECDF gap between the
+    pre-/post-1998 order-value samples. Everything stays exact
+    integer: the gap |F_a - F_b| is cross-multiplied
+    (|ca*nb - cb*na| over na*nb), reported in floor micros, and the
+    drift flag is the 0.1-threshold comparison done as integers too —
+    nothing for libm to disagree on.
+
+    Plan shape: hash-agg to distinct (nation, cents) first (collapses
+    ties and bounds the window input), then cumulative sums over a
+    window PARTITIONED by nation (no global funnel; the per-nation
+    totals ride the same partition), one final max-agg. At 100 TB the
+    dedup-then-window pattern keeps per-task state at the distinct
+    value count of one nation, and nation is the natural partition
+    key."""
+    o = t(spark, sf_dir, "orders")
+    c = t(spark, sf_dir, "customer")
+    from pyspark.sql.window import Window
+
+    tagged = o.join(F.broadcast(c.select("c_custkey", "c_nationkey")), o.o_custkey == F.col("c_custkey")).select(
+        F.col("c_nationkey").alias("nation"),
+        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("cents"),
+        F.when(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"), 0).otherwise(1).alias("period"),
+    )
+    per_value = tagged.groupBy("nation", "cents").agg(
+        F.sum(F.when(F.col("period") == 0, 1).otherwise(0)).alias("a"),
+        F.sum(F.when(F.col("period") == 1, 1).otherwise(0)).alias("b"),
+    )
+    w_cum = Window.partitionBy("nation").orderBy("cents")
+    w_tot = Window.partitionBy("nation")
+    cum = per_value.select(
+        "nation",
+        F.abs(
+            F.sum("a").over(w_cum) * F.sum("b").over(w_tot)
+            - F.sum("b").over(w_cum) * F.sum("a").over(w_tot)
+        ).alias("gap"),
+        F.sum("a").over(w_tot).alias("na"),
+        F.sum("b").over(w_tot).alias("nb"),
+    )
+    return (
+        cum.groupBy(F.col("nation").cast("long").alias("nation"))
+        .agg(
+            F.first("na").cast("long").alias("n_pre"),
+            F.first("nb").cast("long").alias("n_post"),
+            F.expr("CAST(MAX(gap) * 1000000 DIV (FIRST(na) * FIRST(nb)) AS BIGINT)").alias("ks_micro"),
+            F.expr(
+                "CAST(CASE WHEN MAX(gap) * 10 > FIRST(na) * FIRST(nb) THEN 1 ELSE 0 END AS BIGINT)"
+            ).alias("drifted"),
+        )
+        .orderBy("nation")
+    )
+
+
+# --- DQ26: Mahalanobis outlier audit (bivariate, exact moments) --------------
+
+# Scatter-matrix entries A = n*Sxx - Sx^2, B, C formed in DOUBLE from
+# exact BIGINT moments (identical int->double rounding both engines;
+# forming them in BIGINT would overflow past ~sf10 at n*Sxx ~ 1e19).
+# d^2 = (n-1)/n * (B*U^2 - 2C*U*W + A*W^2) / (A*B - C^2) with
+# U = n*x - Sx, W = n*y - Sy exact BIGINTs — one fixed IEEE chain,
+# floored to micro.
+_MAHA_A = "(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)"
+_MAHA_B = "(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)"
+_MAHA_C = "(CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)"
+_MAHA_D2 = (
+    f"CAST(CASE WHEN {_MAHA_A} * {_MAHA_B} - {_MAHA_C} * {_MAHA_C} <= 0"
+    " THEN 0 ELSE FLOOR((CAST(n AS DOUBLE) - 1) / n * ("
+    f"{_MAHA_B} * (n * x - sx) * (n * x - sx)"
+    f" - 2 * {_MAHA_C} * (n * x - sx) * (n * y - sy)"
+    f" + {_MAHA_A} * (n * y - sy) * (n * y - sy)"
+    f") / ({_MAHA_A} * {_MAHA_B} - {_MAHA_C} * {_MAHA_C})"
+    " * 1000000) END AS BIGINT)"
+)
+
+_DQ26_ORACLE = f"""
+    WITH items AS (
+        SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS y
+        FROM lineitem GROUP BY l_orderkey
+    ),
+    base AS (
+        SELECT o.o_orderkey,
+               CAST(ROUND(o.o_totalprice * 100) AS BIGINT) // 100 AS x,
+               i.y
+        FROM orders o JOIN items i ON i.l_orderkey = o.o_orderkey
+    ),
+    mom AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+               CAST(SUM(x * x) AS BIGINT) AS sxx,
+               CAST(SUM(y * y) AS BIGINT) AS syy,
+               CAST(SUM(x * y) AS BIGINT) AS sxy
+        FROM base
+    )
+    SELECT b.o_orderkey, b.x AS price_dollars, b.y AS n_items,
+           {_MAHA_D2} AS d2_micro
+    FROM base b, mom
+    ORDER BY d2_micro DESC, b.o_orderkey
+    LIMIT 20
+"""
+
+
+@register("dq26_mahalanobis_outliers", _DQ26_ORACLE)
+def dq26_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ26: bivariate Mahalanobis outlier audit over (order price,
+    lineitem count) — the multivariate sibling of dq4's univariate MAD:
+    an order that is expensive FOR ITS ITEM COUNT (high price, one
+    item) outranks one that is merely expensive, because d^2 whitens by
+    the 2x2 sample covariance. The inverse is the exact Cramer adjugate
+    (the m49 closed-form posture): scatter entries A/B/C are formed in
+    DOUBLE from exact BIGINT moments (identical correctly-rounded
+    int->double casts both engines; BIGINT formation would overflow
+    n*Sxx past ~sf10 — documented boundary, decimal(38) beyond), the
+    quadratic form runs per row in _MAHA_D2's fixed IEEE chain on exact
+    integer deviations U = n*x - Sx, W = n*y - Sy, floored to micro.
+    Degenerate covariance (det <= 0) pins d^2 = 0. Population is
+    orders WITH lineitems (inner join — the m57 census lesson: 27
+    childless orders at sf0.001). Plan: one lineitem-sized groupBy,
+    one orders-sized join, a 1-row moment broadcast onto one map-side
+    pass, TakeOrderedAndProject top-20 (d2 desc, orderkey tiebreak) —
+    no global sort materializes."""
+    items = t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
+        F.count(F.lit(1)).cast("bigint").alias("y")
+    )
+    o = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT) DIV 100").alias("x"),
+    )
+    base = o.join(items, o.o_orderkey == items.l_orderkey).select(
+        "o_orderkey", "x", "y"
+    )
+    mom = base.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("x").cast("bigint").alias("sx"),
+        F.sum("y").cast("bigint").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
+        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
+    )
+    return (
+        base.crossJoin(F.broadcast(mom))
+        .select(
+            "o_orderkey",
+            F.col("x").alias("price_dollars"),
+            F.col("y").alias("n_items"),
+            F.expr(_MAHA_D2).alias("d2_micro"),
+        )
+        .orderBy(F.desc("d2_micro"), "o_orderkey")
+        .limit(20)
+    )
+
+
+# --- DQ27: inter-rater agreement (Fleiss + pairwise Cohen kappa) --------------
+
+# Kappas in one fixed IEEE chain each, from exact BIGINT tallies.
+# Fleiss (3 raters, 2 categories): P_bar = S1/(6n) with
+# S1 = sum_i sum_j n_ij(n_ij - 1); P_e = (cp^2 + cf^2)/(3n)^2.
+_FLEISS = (
+    "CAST(CASE WHEN CAST(9 AS DOUBLE) * n * n"
+    " - (CAST(cp AS DOUBLE) * cp + CAST(cf AS DOUBLE) * cf) = 0 THEN 0"
+    " ELSE FLOOR("
+    "(CAST(s1 AS DOUBLE) / 6 / n"
+    " - (CAST(cp AS DOUBLE) * cp + CAST(cf AS DOUBLE) * cf) / 9 / n / n)"
+    " / (1 - (CAST(cp AS DOUBLE) * cp + CAST(cf AS DOUBLE) * cf) / 9 / n / n)"
+    " * 1000000) END AS BIGINT)"
+)
+
+
+def _cohen(a: str, b: str, agree: str) -> str:
+    """Cohen's kappa for the rater pair (a, b): po = agree/n,
+    pe = (a*b + (n-a)(n-b))/n^2, kappa = (po - pe)/(1 - pe)."""
+    pe = (
+        f"((CAST({a} AS DOUBLE) * {b}"
+        f" + (CAST(n AS DOUBLE) - {a}) * (CAST(n AS DOUBLE) - {b})) / n / n)"
+    )
+    return (
+        f"CAST(CASE WHEN 1 - {pe} = 0 THEN 0 ELSE FLOOR("
+        f"(CAST({agree} AS DOUBLE) / n - {pe}) / (1 - {pe}) * 1000000)"
+        f" END AS BIGINT)"
+    )
+
+
+def rater_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The votes of three deterministic document-quality raters, one
+    (ra, rb, rc) row of 0/1 per document: ra = at least 50 tokens;
+    rb = type-token ratio >= 0.6, tested by integer
+    cross-multiplication; rc = no token longer than 15 chars. Tokens
+    are the non-empty whitespace splits of the trimmed, lower-cased
+    text. The oracle is _RATER_VOTES_CTES (feat, votes). Read by
+    dq27_rater_agreement and m62_dawid_skene."""
+    words = F.filter(
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
+        lambda x: F.length(x) > 0,
+    )
+    feat = t(spark, sf_dir, "documents").select(
+        F.size(words).cast("bigint").alias("n_tok"),
+        F.size(F.array_distinct(words)).cast("bigint").alias("n_dis"),
+        F.size(F.filter(words, lambda x: F.length(x) > 15))
+        .cast("bigint")
+        .alias("n_long"),
+    )
+    return feat.select(
+        F.when(F.col("n_tok") >= 50, 1).otherwise(0).alias("ra"),
+        F.when(F.col("n_dis") * 5 >= F.col("n_tok") * 3, 1)
+        .otherwise(0)
+        .alias("rb"),
+        F.when(F.col("n_long") == 0, 1).otherwise(0).alias("rc"),
+    )
+
+
+_RATER_VOTES_CTES = r"""
+    WITH feat AS (
+        SELECT CAST(LEN(LIST_FILTER(STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+'),
+                                    x -> LEN(x) > 0)) AS BIGINT) AS n_tok,
+               CAST(LEN(LIST_DISTINCT(LIST_FILTER(
+                   STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+'),
+                   x -> LEN(x) > 0))) AS BIGINT) AS n_dis,
+               CAST(LEN(LIST_FILTER(STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+'),
+                                    x -> LEN(x) > 15)) AS BIGINT) AS n_long
+        FROM documents
+    ),
+    votes AS (
+        SELECT CASE WHEN n_tok >= 50 THEN 1 ELSE 0 END AS ra,
+               CASE WHEN n_dis * 5 >= n_tok * 3 THEN 1 ELSE 0 END AS rb,
+               CASE WHEN n_long = 0 THEN 1 ELSE 0 END AS rc
+        FROM feat
+    )"""
+
+
+_DQ27_ORACLE = _RATER_VOTES_CTES + f""",
+    tal AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(ra) AS BIGINT) AS pa,
+               CAST(SUM(rb) AS BIGINT) AS pb,
+               CAST(SUM(rc) AS BIGINT) AS pc,
+               CAST(SUM(ra + rb + rc) AS BIGINT) AS cp,
+               CAST(SUM(3 - ra - rb - rc) AS BIGINT) AS cf,
+               CAST(SUM((ra + rb + rc) * (ra + rb + rc - 1)
+                        + (3 - ra - rb - rc) * (2 - ra - rb - rc)) AS BIGINT)
+                   AS s1,
+               CAST(SUM(CASE WHEN ra = rb THEN 1 ELSE 0 END) AS BIGINT) AS ab,
+               CAST(SUM(CASE WHEN ra = rc THEN 1 ELSE 0 END) AS BIGINT) AS ac,
+               CAST(SUM(CASE WHEN rb = rc THEN 1 ELSE 0 END) AS BIGINT) AS bc
+        FROM votes
+    )
+    SELECT n AS n_docs, pa AS pass_a, pb AS pass_b, pc AS pass_c,
+           {_FLEISS} AS fleiss_kappa_micro,
+           {_cohen("pa", "pb", "ab")} AS kappa_ab_micro,
+           {_cohen("pa", "pc", "ac")} AS kappa_ac_micro,
+           {_cohen("pb", "pc", "bc")} AS kappa_bc_micro
+    FROM tal
+"""
+
+
+@register("dq27_rater_agreement", _DQ27_ORACLE)
+def dq27_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ27: inter-rater agreement — Fleiss' kappa across the three
+    rater_votes quality raters plus the three pairwise Cohen's
+    kappas. THE labeling-QA statistic for training-data pipelines:
+    raters that agree no better than chance (kappa ~ 0) mean the
+    rubric, not the corpus, is broken — and rule-based raters make the
+    operator a rubric-redundancy audit (kappa ~ 1 between two rules
+    says one is dead weight in the t29 curation stack). Exactness:
+    every tally (per-item vote counts, S1 = sum n_ij(n_ij-1),
+    category masses, pairwise agreements) is an exact BIGINT off ONE
+    corpus-sized pass; each kappa is a single fixed IEEE chain from
+    those integers (_FLEISS/_cohen). At 100 TB: one scan + one 1-row
+    frame — agreement is metadata."""
+    votes = rater_votes(spark, sf_dir)
+    tal = votes.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("ra").cast("bigint").alias("pa"),
+        F.sum("rb").cast("bigint").alias("pb"),
+        F.sum("rc").cast("bigint").alias("pc"),
+        F.sum(F.col("ra") + F.col("rb") + F.col("rc")).cast("bigint").alias("cp"),
+        F.sum(3 - F.col("ra") - F.col("rb") - F.col("rc"))
+        .cast("bigint")
+        .alias("cf"),
+        F.sum(
+            (F.col("ra") + F.col("rb") + F.col("rc"))
+            * (F.col("ra") + F.col("rb") + F.col("rc") - 1)
+            + (3 - F.col("ra") - F.col("rb") - F.col("rc"))
+            * (2 - F.col("ra") - F.col("rb") - F.col("rc"))
+        )
+        .cast("bigint")
+        .alias("s1"),
+        F.sum(F.when(F.col("ra") == F.col("rb"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("ab"),
+        F.sum(F.when(F.col("ra") == F.col("rc"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("ac"),
+        F.sum(F.when(F.col("rb") == F.col("rc"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("bc"),
+    )
+    return tal.selectExpr(
+        "n AS n_docs",
+        "pa AS pass_a",
+        "pb AS pass_b",
+        "pc AS pass_c",
+        f"{_FLEISS} AS fleiss_kappa_micro",
+        f"{_cohen('pa', 'pb', 'ab')} AS kappa_ab_micro",
+        f"{_cohen('pa', 'pc', 'ac')} AS kappa_ac_micro",
+        f"{_cohen('pb', 'pc', 'bc')} AS kappa_bc_micro",
+    )

@@ -1,10 +1,10 @@
-"""Source/sink formats and the SQL-language surface, split out of
-queries_extra.py (round 7, mechanical move — no semantic change):
+"""Source/sink formats and the SQL-language surface:
 ORC/JSON/XML/text/binaryFile round trips, compaction, schema
 evolution, Z-order layout, the Python DataSource API, dynamic
 partition overwrite/pruning, bucketed no-shuffle joins, and the
 sql_* statement forms (CTE, GROUP BY ALL, PIVOT, session variables,
-EXECUTE IMMEDIATE, scalar UDF, recursion).
+EXECUTE IMMEDIATE, scalar UDF, recursion, EXISTS subqueries,
+GROUPING SETS).
 
 Same rules as queries_core.py: sinks round-trip through stable_tmp
 and the oracle checks the logical content; every computed column is
@@ -19,7 +19,6 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from realestate_engine.registry import ORACLES, cache_once, register, stable_tmp, t
 
@@ -1115,3 +1114,79 @@ def s26_csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_lines.alias("n_lines"),
         F.conv(F.substring(F.md5("payload"), 1, 8), 16, 10).cast("long").alias("payload_hash"),
     ).orderBy("doc_id")
+
+
+_SQL_EXISTS = """
+    SELECT c_mktsegment,
+           CAST(COUNT(*) AS BIGINT) AS n_loyal_small
+    FROM {customer} c
+    WHERE EXISTS (SELECT 1 FROM {orders} o
+                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
+      AND NOT EXISTS (SELECT 1 FROM {orders} o2
+                      WHERE o2.o_custkey = c.c_custkey
+                        AND o2.o_totalprice > 450000)
+    GROUP BY c_mktsegment
+    ORDER BY c_mktsegment
+"""
+
+
+@register(
+    "sql_exists_subquery",
+    _SQL_EXISTS.format(customer="customer", orders="orders"),
+)
+def sql_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL6: correlated EXISTS / NOT EXISTS subqueries — the same SQL
+    text runs on both engines. Catalyst rewrites EXISTS to a left-semi
+    join and NOT EXISTS to a left-anti join (RewritePredicateSubquery),
+    so the physical plan is two hash joins on o_custkey — fully
+    distributed, no per-row subquery execution."""
+    t(spark, sf_dir, "customer").createOrReplaceTempView("_sql_ex_customer")
+    t(spark, sf_dir, "orders").createOrReplaceTempView("_sql_ex_orders")
+    return spark.sql(
+        _SQL_EXISTS.format(customer="_sql_ex_customer", orders="_sql_ex_orders")
+    )
+
+
+@register(
+    "sql_grouping_sets",
+    """
+    SELECT COALESCE(l_returnflag, '(all)') AS returnflag,
+           COALESCE(l_linestatus, '(all)') AS linestatus,
+           CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS gid,
+           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM lineitem
+    GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus), ())
+    ORDER BY gid, returnflag, linestatus
+    """,
+)
+def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL surface: explicit GROUPING SETS with grouping_id
+    disambiguation — the general form behind rollup (a10) and cube
+    (a11), here with a non-hierarchical set list (both margins + total)
+    that neither rollup nor cube alone expresses. COALESCE + the
+    grouping bits distinguish 'NULL because aggregated away' from a
+    genuine NULL group value. One Expand + one hash aggregate; the
+    expand factor equals the number of sets (4), and partial
+    aggregation still applies before the shuffle."""
+    li = t(spark, sf_dir, "lineitem")
+    df = li.groupingSets(
+        [["l_returnflag", "l_linestatus"], ["l_returnflag"], ["l_linestatus"], []],
+        "l_returnflag",
+        "l_linestatus",
+    ).agg(
+        (F.grouping("l_returnflag") * 2 + F.grouping("l_linestatus"))
+        .cast("bigint")
+        .alias("gid"),
+        F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("rev_cents"),
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+    )
+    return df.select(
+        F.coalesce("l_returnflag", F.lit("(all)")).alias("returnflag"),
+        F.coalesce("l_linestatus", F.lit("(all)")).alias("linestatus"),
+        "gid",
+        "rev_cents",
+        "n",
+    ).orderBy("gid", "returnflag", "linestatus")

@@ -308,8 +308,9 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_all() -> None:
     """Import every module that registers queries (idempotent)."""
     import realestate_engine.queries_core  # noqa: F401
+    import realestate_engine.queries_aggregates  # noqa: F401
     import realestate_engine.queries_functions  # noqa: F401
-    import realestate_engine.queries_tpch2  # noqa: F401
+    import realestate_engine.queries_tpch  # noqa: F401
     import realestate_engine.queries_ml  # noqa: F401
     import realestate_engine.dedup  # noqa: F401
     import realestate_engine.similarity  # noqa: F401
@@ -321,11 +322,6 @@ def load_all() -> None:
     import realestate_engine.queries_media_probes  # noqa: F401
     import realestate_engine.timeseries  # noqa: F401
     import realestate_engine.packing  # noqa: F401
-    import realestate_engine.queries_extra  # noqa: F401
-    import realestate_engine.queries_extra2  # noqa: F401
-    import realestate_engine.queries_extra3  # noqa: F401
-    import realestate_engine.queries_extra4  # noqa: F401
-    import realestate_engine.queries_extra5  # noqa: F401
     import realestate_engine.queries_sources_sql  # noqa: F401
     import realestate_engine.queries_experiments  # noqa: F401
     import realestate_engine.queries_quality  # noqa: F401
@@ -334,5 +330,4 @@ def load_all() -> None:
     import realestate_engine.queries_preference  # noqa: F401
     import realestate_engine.queries_lakehouse  # noqa: F401
     import realestate_engine.graph  # noqa: F401
-    import realestate_engine.graph2  # noqa: F401
     import realestate_engine.ordered  # noqa: F401

@@ -18,22 +18,6 @@ from pyspark.sql import types as T
 # Reference domain: real-estate listings
 # ---------------------------------------------------------------------------
 
-_NUMERIC_DOUBLE = [
-    "approximate_latitude",
-    "approximate_longitude",
-    "size",
-    "land_size",
-    "energy_performance_value",
-    "ghg_value",
-    # binary flags stored as double 0/1 (reference: src/inference/predict.py:52-58)
-    "has_a_balcony",
-    "nb_terraces",
-    "has_a_cellar",
-    "has_a_garage",
-    "has_air_conditioning",
-    "last_floor",
-    "upper_floors",
-]
 _NUMERIC_INT = [
     "id_annonce",
     "postal_code",
@@ -110,10 +94,6 @@ CAST_PLAN: dict[str, str] = {
     **{c: "string" for c in _CATEGORICAL},
     "price": "double",
 }
-
-CATEGORICAL_COLUMNS = list(_CATEGORICAL)
-NUMERIC_INT_COLUMNS = list(_NUMERIC_INT)
-NUMERIC_DOUBLE_COLUMNS = list(_NUMERIC_DOUBLE)
 
 # ---------------------------------------------------------------------------
 # Driver testdata (FIXTURES.md §B) — explicit schemas so production reads

@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from realestate_engine.registry import cache_once, register, t
+from realestate_engine.dedup import _MINHASH_PRIME
+from realestate_engine.registry import cache_once, iterate, register, t
 
 _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
@@ -1030,7 +1031,7 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB step 3's frame is # partitions rows — KBs — while all
     row-level work stays fully parallel. Same shape as p14_dense_reid's
-    zipWithIndex replacement (queries_extra.py:1627). The budget (total
+    zipWithIndex replacement (queries_core.py). The budget (total
     tokens div 4) is a 1-row broadcast, never a driver constant."""
     d = t(spark, sf_dir, "documents")
     # Integer `div` (not `/`, which is double division in Spark) so the
@@ -1391,7 +1392,6 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CDC_BOUNDARY_MOD = 16  # expected chunk length ~16 words
-_CDC_PRIME = 2147483647
 
 
 @register(
@@ -1417,7 +1417,7 @@ _CDC_PRIME = 2147483647
     ),
     chunks AS (
         SELECT doc_id, chunk_no,
-               CAST(SUM(h * k) % {_CDC_PRIME} AS BIGINT) AS fp,
+               CAST(SUM(h * k) % {_MINHASH_PRIME} AS BIGINT) AS fp,
                CAST(COUNT(*) AS BIGINT) AS chunk_len
         FROM inchunk GROUP BY doc_id, chunk_no
     )
@@ -1469,7 +1469,7 @@ def text_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_in = Window.partitionBy("doc_id", "chunk_no").orderBy("pos")
     inchunk = marked.withColumn("k", F.row_number().over(w_in))
     chunks = inchunk.groupBy("doc_id", "chunk_no").agg(
-        (F.sum(F.col("h") * F.col("k")) % _CDC_PRIME).cast("bigint").alias("fp"),
+        (F.sum(F.col("h") * F.col("k")) % _MINHASH_PRIME).cast("bigint").alias("fp"),
         F.count(F.lit(1)).cast("bigint").alias("chunk_len"),
     )
     return (
@@ -1981,4 +1981,166 @@ def t28_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "dsir_logweight_micro")
         .orderBy(F.col("dsir_logweight_micro").desc(), "doc_id")
         .limit(50)
+    )
+
+
+# --- T34: TextRank keyword extraction (damped pagerank on co-occurrence) ------
+
+_TR_VOCAB = 200
+_TR_ROUNDS = 3
+_TR_TOPK = 20
+
+
+def _tr_round_sql(prev: str, out: str) -> str:
+    """One damped power-iteration step, ALL integer (the ev26/pagerank
+    contract): per-term floor(pi * p_micro / 1e6) then the 0.85 damp as
+    *85//100, base (1-d) = 0.15 in 1e9 fixed point; left join keeps
+    in-edge-less vocab words at the base rank."""
+    return f"""
+    {out} AS MATERIALIZED (
+        SELECT t.word,
+               CAST(150000000 + COALESCE(SUM(
+                   v.pi * p.p_micro // 1000000 * 85 // 100), 0) AS BIGINT) AS pi
+        FROM top t
+        LEFT JOIN pmat p ON p.dst = t.word
+        LEFT JOIN {prev} v ON v.word = p.src
+        GROUP BY t.word
+    )"""
+
+
+_T34_ORACLE = rf"""
+    WITH w AS (
+        SELECT STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\s+') AS words
+        FROM documents
+    ),
+    toks AS (
+        SELECT UNNEST(words) AS word, GENERATE_SUBSCRIPTS(words, 1) AS i,
+               ROW_NUMBER() OVER () AS doc_row
+        FROM w
+    ),
+    uni AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS nx
+            FROM toks WHERE word <> '' GROUP BY word),
+    top AS (
+        SELECT word, nx, ROW_NUMBER() OVER (ORDER BY nx DESC, word) AS rnk
+        FROM uni QUALIFY rnk <= {_TR_VOCAB}
+    ),
+    big AS (
+        SELECT a.word AS w1, b.word AS w2, CAST(COUNT(*) AS BIGINT) AS c
+        FROM toks a JOIN toks b ON a.doc_row = b.doc_row AND b.i = a.i + 1
+        WHERE a.word <> b.word
+        GROUP BY a.word, b.word
+    ),
+    edges AS MATERIALIZED (
+        SELECT e.src, e.dst, CAST(SUM(e.c) AS BIGINT) AS wgt FROM (
+            SELECT b.w1 AS src, b.w2 AS dst, b.c FROM big b
+            JOIN top t1 ON t1.word = b.w1 JOIN top t2 ON t2.word = b.w2
+            UNION ALL
+            SELECT b.w2 AS src, b.w1 AS dst, b.c FROM big b
+            JOIN top t1 ON t1.word = b.w1 JOIN top t2 ON t2.word = b.w2
+        ) e GROUP BY e.src, e.dst
+    ),
+    outw AS (SELECT src, CAST(SUM(wgt) AS BIGINT) AS wsum FROM edges GROUP BY src),
+    pmat AS MATERIALIZED (
+        SELECT e.src, e.dst,
+               CAST(e.wgt * 1000000 // o.wsum AS BIGINT) AS p_micro
+        FROM edges e JOIN outw o ON o.src = e.src
+    ),
+    p0 AS (SELECT word, CAST(1000000000 AS BIGINT) AS pi FROM top),
+    {",".join(_tr_round_sql(f"p{i}", f"p{i + 1}") for i in range(_TR_ROUNDS))}
+    SELECT p.word AS keyword, p.pi AS rank_nano, t.nx AS n_occurrences
+    FROM p{_TR_ROUNDS} p JOIN top t ON t.word = p.word
+    ORDER BY p.pi DESC, p.word LIMIT {_TR_TOPK}
+"""
+
+
+@register("t34_textrank_keywords", _T34_ORACLE)
+def t34_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T34: TextRank keyword extraction (Mihalcea-Tarau 2004) — damped
+    pagerank over the word co-occurrence graph, the unsupervised
+    keyword/keyphrase primitive for corpus labeling and index-term
+    selection. Graph: adjacent-word pairs (window 1, self-loops
+    dropped) restricted to the top-{v} vocabulary by (freq DESC, word)
+    — a BOUNDED graph, so after the corpus-sized token explode every
+    frame is vocab-sized regardless of SF; symmetrized like the trade
+    graph. Ranks run the ev26/pagerank ALL-INTEGER contract in 1e9
+    fixed point: transition probs floored to micro once, each round is
+    per-term floor(pi*p/1e6)*85//100 + 0.15e9 with left joins keeping
+    in-edge-less words at the base (dangling mass is dropped, the
+    classic simplified TextRank; identical on both engines — no IEEE
+    anywhere). {r} unrolled rounds, then top-{k} by (rank DESC, word).
+    Spark builds bigrams with zip_with against the 1-shifted word
+    array (the t15 posture — no positional self-join); the oracle can
+    afford GENERATE_SUBSCRIPTS. 100 TB: one explode + two hash aggs at
+    corpus scale, everything after is a {v}-row graph.""".format(
+        v=_TR_VOCAB, r=_TR_ROUNDS, k=_TR_TOPK
+    )
+    d = t(spark, sf_dir, "documents")
+    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = d.select(F.explode(words).alias("word")).where(F.col("word") != "")
+    uni = toks.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("nx"))
+    top = uni.orderBy(F.desc("nx"), "word").limit(_TR_VOCAB)
+    pairs = F.filter(
+        F.zip_with(
+            words,
+            F.slice(words, 2, F.greatest(F.size(words) - 1, F.lit(0))),
+            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+        ),
+        lambda s: s["w2"].isNotNull() & (s["w1"] != s["w2"]),
+    )
+    big = (
+        d.select(F.explode(pairs).alias("p"))
+        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    tv = F.broadcast(top.select(F.col("word").alias("t_w")))
+    bigv = (
+        big.join(tv, big.w1 == F.col("t_w")).drop("t_w")
+        .join(tv, big.w2 == F.col("t_w")).drop("t_w")
+    )
+    edges = (
+        bigv.select(F.col("w1").alias("src"), F.col("w2").alias("dst"), "c")
+        .unionByName(
+            bigv.select(F.col("w2").alias("src"), F.col("w1").alias("dst"), "c")
+        )
+        .groupBy("src", "dst")
+        .agg(F.sum("c").cast("bigint").alias("wgt"))
+    )
+    outw = edges.groupBy("src").agg(F.sum("wgt").cast("bigint").alias("wsum"))
+    pmat = (
+        edges.join(outw, "src")
+        .selectExpr("src", "dst", "CAST(wgt * 1000000 DIV wsum AS BIGINT) AS p_micro")
+        .localCheckpoint()
+    )
+
+    def step(pi: DataFrame, r: int) -> DataFrame:
+        contrib = pmat.join(pi, pi.word == pmat.src).selectExpr(
+            "dst", "pi * p_micro DIV 1000000 * 85 DIV 100 AS term"
+        )
+        return (
+            top.select("word")
+            .join(
+                contrib.groupBy("dst").agg(F.sum("term").alias("s")),
+                F.col("word") == F.col("dst"),
+                "left",
+            )
+            .select(
+                "word",
+                (F.lit(150000000) + F.coalesce(F.col("s"), F.lit(0)))
+                .cast("bigint")
+                .alias("pi"),
+            )
+        )
+
+    pi0 = top.select("word", F.lit(1000000000).cast("bigint").alias("pi"))
+    pi = iterate(pi0, step, _TR_ROUNDS)[-1]
+    return (
+        pi.join(top.select("word", "nx"), "word")
+        .select(
+            F.col("word").alias("keyword"),
+            F.col("pi").alias("rank_nano"),
+            F.col("nx").alias("n_occurrences"),
+        )
+        .orderBy(F.desc("rank_nano"), "keyword")
+        .limit(_TR_TOPK)
     )

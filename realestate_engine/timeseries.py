@@ -1681,3 +1681,187 @@ def ts19_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = frame if out is None else out.unionByName(frame)
     return out.orderBy("lag")
+
+
+@register(
+    "ts7_theil_sen_trend",
+    """
+    WITH monthly AS (
+        SELECT c.c_nationkey AS nation,
+               CAST(YEAR(o.o_orderdate) * 12 + MONTH(o.o_orderdate) AS BIGINT) AS m,
+               SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS rev
+        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        GROUP BY nation, m
+    ),
+    slopes AS (
+        SELECT a.nation,
+               (b.rev - a.rev) * 1000 // (b.m - a.m) AS slope_milli,
+               ROW_NUMBER() OVER (
+                   PARTITION BY a.nation
+                   ORDER BY (b.rev - a.rev) * 1000 // (b.m - a.m), a.m, b.m
+               ) AS rn,
+               COUNT(*) OVER (PARTITION BY a.nation) AS np
+        FROM monthly a JOIN monthly b ON a.nation = b.nation AND a.m < b.m
+    )
+    SELECT CAST(nation AS BIGINT) AS nation,
+           CAST(ANY_VALUE(np) AS BIGINT) AS n_pairs,
+           CAST(MAX(CASE WHEN rn = (np + 1) // 2 THEN slope_milli END) AS BIGINT)
+               AS median_slope_milli
+    FROM slopes GROUP BY nation ORDER BY nation
+    """,
+)
+def ts7_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TS7: Theil-Sen robust trend per nation — the median of all
+    pairwise slopes of the monthly-revenue series, immune to the
+    outlier months that wreck the OLS fit (t19_zipf_fit's estimator).
+    Slopes are exact integers (cents*1000 per month, both engines'
+    integer division truncating toward zero identically) and the
+    median is the deterministic lower median by (slope, m1, m2)
+    ROW_NUMBER — no float quantile anywhere.
+
+    Scale: the pair join is per-nation over the ~80-row monthly
+    aggregate (6.4k pairs/nation, CONSTANT in corpus size — the raw
+    scan collapses to months first), the ranking window is partitioned
+    by nation. At 100 TB only the first aggregation grows; the
+    Theil-Sen stage is fixed work."""
+    o = t(spark, sf_dir, "orders")
+    c = t(spark, sf_dir, "customer")
+    from pyspark.sql.window import Window
+
+    monthly = (
+        o.join(F.broadcast(c.select("c_custkey", "c_nationkey")), o.o_custkey == F.col("c_custkey"))
+        .groupBy(
+            F.col("c_nationkey").alias("nation"),
+            (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("long").alias("m"),
+        )
+        .agg(F.expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))").alias("rev"))
+    )
+    a, b = monthly.alias("a"), monthly.alias("b")
+    slopes = a.join(
+        b, (F.col("a.nation") == F.col("b.nation")) & (F.col("a.m") < F.col("b.m"))
+    ).select(
+        F.col("a.nation").alias("nation"),
+        F.expr("(b.rev - a.rev) * 1000 DIV (b.m - a.m)").alias("slope_milli"),
+        F.col("a.m").alias("m1"),
+        F.col("b.m").alias("m2"),
+    )
+    w_rank = Window.partitionBy("nation").orderBy("slope_milli", "m1", "m2")
+    w_n = Window.partitionBy("nation")
+    ranked = slopes.select(
+        "nation",
+        "slope_milli",
+        F.row_number().over(w_rank).alias("rn"),
+        F.count(F.lit(1)).over(w_n).alias("np"),
+    )
+    return (
+        ranked.groupBy(F.col("nation").cast("long").alias("nation"))
+        .agg(
+            F.first("np").cast("long").alias("n_pairs"),
+            F.expr("CAST(MAX(CASE WHEN rn = (np + 1) DIV 2 THEN slope_milli END) AS BIGINT)")
+            .alias("median_slope_milli"),
+        )
+        .orderBy("nation")
+    )
+
+
+# --- TS20: Haar wavelet energy by scale (dyadic 16-day window) ----------------
+
+_HAAR_LEVELS = 4
+
+
+def _haar_level_sql(prev: str, k: int) -> str:
+    """One unnormalized Haar level: pair (2i, 2i+1) -> detail = even -
+    odd, approx = even + odd. All integers; energies are sums of
+    squared BIGINT details."""
+    return f"""
+    lvl{k} AS MATERIALIZED (
+        SELECT o // 2 AS o,
+               CAST(SUM(CASE WHEN o % 2 = 0 THEN x ELSE -x END) AS BIGINT) AS d,
+               CAST(SUM(x) AS BIGINT) AS x
+        FROM {prev} GROUP BY o // 2
+    ),
+    en{k} AS (
+        SELECT CAST({k} AS BIGINT) AS level,
+               CAST(COUNT(*) AS BIGINT) AS n_pairs,
+               CAST(SUM(d * d) AS BIGINT) AS energy
+        FROM lvl{k}
+    )"""
+
+
+_TS20_ORACLE = _DAILY_CTE + f""",
+    win AS (
+        SELECT day_idx, v // 100000 AS x, ROW_NUMBER() OVER (ORDER BY day_idx) - 1 AS o
+        FROM daily QUALIFY o < 16
+    ),
+    lvl0 AS (SELECT o, x FROM win),
+    {",".join(_haar_level_sql(f"lvl{k - 1}", k) for k in range(1, _HAAR_LEVELS + 1))},
+    allen AS (
+        {" UNION ALL ".join(f"SELECT * FROM en{k}" for k in range(1, _HAAR_LEVELS + 1))}
+    ),
+    tot AS (SELECT CAST(SUM(energy) AS BIGINT) AS e_tot FROM allen)
+    SELECT level, n_pairs, energy,
+           CAST(CASE WHEN e_tot = 0 THEN 0
+                ELSE energy * 1000000 // e_tot END AS BIGINT) AS share_micro
+    FROM allen, tot ORDER BY level
+"""
+
+
+@register("ts20_haar_energy", _TS20_ORACLE)
+def ts20_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TS20: Haar wavelet energy by scale over the first 16 observed
+    days — which time scale carries the variation: day-to-day noise
+    (level 1), 2-4-day swings, or the 8-16-day regime (level 4)? The
+    time-LOCALIZED complement to ts14's periodogram (Fourier smears a
+    burst across all frequencies; Haar pins it to a scale and epoch) —
+    the classic multi-resolution feature for training-series triage.
+    Exactness: UNNORMALIZED Haar — detail = even - odd, approx = even
+    + odd — keeps every coefficient an exact BIGINT (the 2^(k/2)
+    normalizer cancels in energy SHARES, which is what the operator
+    reports; raw energies are also emitted per level). Daily values
+    are pre-scaled DIV 1e5 so level-4 squared details stay BIGINT at
+    any SF. The 16-day ordinal comes from the t19 broadcast rank-join
+    idiom (a 16-row frame earns no window, and an unpartitioned window
+    is banned); levels are 4 chained 16->8->4->2-row aggregates. One
+    events-sized groupBy; metadata after."""
+    daily = daily_milli_events(spark, sf_dir).groupBy("day_idx").agg(
+        F.expr("sum(v) div 100000").cast("bigint").alias("x")
+    )
+    win16 = daily.orderBy("day_idx").limit(16)
+    a = win16.select(F.col("day_idx").alias("a_d"), F.col("x").alias("a_x"))
+    lvl = (
+        a.join(F.broadcast(win16), F.col("day_idx") <= F.col("a_d"))
+        .groupBy("a_d", "a_x")
+        .agg((F.count(F.lit(1)) - 1).alias("o"))
+        .select("o", F.col("a_x").alias("x"))
+    )
+    energies = []
+    for k in range(1, _HAAR_LEVELS + 1):
+        nxt = lvl.groupBy(F.expr("o div 2").alias("o")).agg(
+            F.sum(F.when(F.col("o") % 2 == 0, F.col("x")).otherwise(-F.col("x")))
+            .cast("bigint")
+            .alias("d"),
+            F.sum("x").cast("bigint").alias("x"),
+        )
+        energies.append(
+            nxt.agg(
+                F.lit(k).cast("bigint").alias("level"),
+                F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+                F.sum(F.col("d") * F.col("d")).cast("bigint").alias("energy"),
+            )
+        )
+        lvl = nxt.select("o", "x")
+    allen = energies[0]
+    for e in energies[1:]:
+        allen = allen.unionByName(e)
+    tot = allen.agg(F.sum("energy").cast("bigint").alias("e_tot"))
+    return (
+        allen.crossJoin(F.broadcast(tot))
+        .selectExpr(
+            "level",
+            "n_pairs",
+            "energy",
+            "CAST(CASE WHEN e_tot = 0 THEN 0"
+            " ELSE energy * 1000000 DIV e_tot END AS BIGINT) AS share_micro",
+        )
+        .orderBy("level")
+    )

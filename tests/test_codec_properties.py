@@ -322,6 +322,23 @@ def test_ogg_byte_flips_raise():
             parse_ogg(b)
 
 
+def test_jpeg_byte_flips_raise_or_decode():
+    """A corrupted JPEG either decodes or raises ValueError: every byte
+    of a 16x16 baseline stream with a restart marker after each MCU and
+    of a progressive stream, inverted or with its lowest or highest bit
+    flipped. No IndexError, KeyError, TypeError, StopIteration or
+    struct.error escapes from a bad length, table id or component id."""
+    from realestate_engine.jpeg import decode_jpeg, encode_jpeg, encode_jpeg_progressive
+
+    rgb = _pin_raster(16, 16)
+    for blob in (encode_jpeg(16, 16, rgb, restart_interval=1), encode_jpeg_progressive(16, 16, rgb)):
+        for b in _byte_flips(blob):
+            try:
+                decode_jpeg(b)
+            except ValueError:
+                pass
+
+
 def _pin_raster(w: int, h: int) -> bytes:
     return bytes(
         (x * 31 + y * 17 + c * 90 + (x * y) % 13) % 256

@@ -753,7 +753,7 @@ def _broadcast_subtrees(plan: str) -> list[str]:
 
 
 def test_rich_club_broadcasts_only_the_threshold_grid(spark, sf_dir):
-    """Pin the round-10 broadcast-direction fix (graph2.py): both
+    """Pin the round-10 broadcast-direction fix (graph.py): both
     threshold fan-outs must be BNLJ RightOuter building the 6-row
     k-grid (BuildRight), never the degree census. BNLJ, unlike BHJ,
     honors build-right for a right-outer join — a silent flip back to

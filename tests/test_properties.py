@@ -314,7 +314,7 @@ def test_ev11_pareto_tie_semantics(spark, cents_per_user):
     import os
     import tempfile
 
-    from realestate_engine.queries_extra2 import ev11_pareto_concentration
+    from realestate_engine.queries_experiments import ev11_pareto_concentration
 
     d = tempfile.mkdtemp(prefix="ev11_tie_")
     rows = [(i, c / 100.0) for i, c in enumerate(cents_per_user)]

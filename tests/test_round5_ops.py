@@ -108,7 +108,7 @@ def test_skyline_matches_bruteforce_reference(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from realestate_engine.queries_extra3 import a38_skyline_frontier
+    from realestate_engine.queries_aggregates import a38_skyline_frontier
 
     @given(
         st.lists(

@@ -298,7 +298,7 @@ def test_wasserstein_zero_on_identical_and_positive_on_shifted(spark):
     )
 
     def run(a, b):
-        import realestate_engine.queries_extra as qx
+        import realestate_engine.queries_quality as qx
 
         # reuse the registered query's inner cogroup shape via a direct call
         from pyspark.sql import functions as F  # noqa: F401

@@ -2,8 +2,9 @@
 
 Each derived relation below has one Spark builder and one oracle CTE
 text (DESIGN.md, "Shared derived relations"). This pins every
-consumer, plus the trade-graph degree distribution and the queries
-on the shared media stages (``doc_rows``, ``payload_features``),
+consumer, plus the trade-graph degree distribution, the queries on
+the shared media stages (``doc_rows``, ``payload_features``) and the
+readers of the shared lane hash (``dedup.lane_hash``) and its prime,
 against its DuckDB oracle at the test scale, through the same compare
 the oracle checker uses. The ALS pair has no oracle (its factor math is
 iteration-order dependent), so it only has to return rows.
@@ -55,6 +56,11 @@ SHARED_RELATION_QUERIES = [
     "mm_mp4_probe", "mm_ogg_probe", "mm_mp3_probe", "mm_ogg_crc_audit", "mm_bmp_roundtrip",
     # payload_features
     "mm_image_features", "mm_audio_features",
+    # period_bucket_counts / _PERIOD_BUCKET_CTES
+    "dq_drift_audit", "dq13_psi_drift",
+    # lane_hash / lane_hash_sql, and the prime a22 shares with them
+    "j10_bloom_join_prune", "a39_selfjoin_size_sketch", "dq14_skipping_audit",
+    "a22_count_min_sketch",
 ]
 
 

@@ -20,17 +20,14 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from realestate_engine.schemas import TESTDATA_TABLES  # noqa: E402
 
 
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """A DuckDB connection with one view per engine table over the
     parquet files in sf_dir: what every oracle SQL reads."""
     con = duckdb.connect()
-    for tb in TABLES:
+    for tb in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {tb} AS SELECT * FROM read_parquet('{sf_dir}/{tb}.parquet')")
     return con
 
