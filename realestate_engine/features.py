@@ -9,7 +9,13 @@ Semantics reproduced, scale bugs fixed:
 - quantile capping — ONE multi-column approxQuantile call instead of
   the reference's 11 sequential per-column jobs (:217-220);
 - capping clamp via least/greatest instead of a when-chain (:171-180);
-- StringIndexer → OneHotEncoder → VectorAssembler pipeline (:226-268);
+- one multi-column StringIndexer → one multi-column OneHotEncoder →
+  VectorAssembler: 3 stages where the reference fits an indexer and an
+  encoder per categorical (:226-268), so the fit runs one indexer
+  aggregate, not four, and save/load handle 3 stages, not 9;
+  artifacts saved in the per-categorical layout still serve
+  (``fitted_labels``);
+- each row-wise step (impute, derive, cap) as one projection;
 - fit-state persistence as JSON + Spark ML pipeline save/load
   (:295-340).
 
@@ -84,25 +90,18 @@ def add_derived_features(df: DataFrame) -> DataFrame:
     """All derived columns as native expressions in one projection."""
     size_ok = F.col("size").isNotNull() & (F.col("size") > 0)
     land_ok = F.col("land_size").isNotNull() & (F.col("land_size") > 0)
-    return (
-        df.withColumn(
-            "distance_to_eiffel",
-            F.when(
-                F.col("approximate_latitude").isNotNull() & F.col("approximate_longitude").isNotNull(),
-                haversine_km(F.col("approximate_latitude"), F.col("approximate_longitude"), EIFFEL_LAT, EIFFEL_LON),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "rooms_per_m2",
-            F.when(size_ok & F.col("nb_rooms").isNotNull(), F.col("nb_rooms") / F.col("size")).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "is_house",
-            F.when(F.col("property_type").isin("house", "villa", "maison"), 1.0).otherwise(0.0),
-        )
-        .withColumn("log_size", F.when(size_ok, F.log(F.col("size"))).otherwise(F.lit(0.0)))
-        .withColumn("log_land_size", F.when(land_ok, F.log(F.col("land_size"))).otherwise(F.lit(0.0)))
-    )
+    return df.withColumns({
+        "distance_to_eiffel": F.when(
+            F.col("approximate_latitude").isNotNull() & F.col("approximate_longitude").isNotNull(),
+            haversine_km(F.col("approximate_latitude"), F.col("approximate_longitude"), EIFFEL_LAT, EIFFEL_LON),
+        ).otherwise(F.lit(0.0)),
+        "rooms_per_m2": F.when(
+            size_ok & F.col("nb_rooms").isNotNull(), F.col("nb_rooms") / F.col("size")
+        ).otherwise(F.lit(0.0)),
+        "is_house": F.when(F.col("property_type").isin("house", "villa", "maison"), 1.0).otherwise(0.0),
+        "log_size": F.when(size_ok, F.log(F.col("size"))).otherwise(F.lit(0.0)),
+        "log_land_size": F.when(land_ok, F.log(F.col("land_size"))).otherwise(F.lit(0.0)),
+    })
 
 
 def derived_row(r: dict[str, Any]) -> dict[str, float]:
@@ -136,10 +135,25 @@ def add_price_per_m2(df: DataFrame) -> DataFrame:
     return df.withColumn("price_per_m2", F.when(ok, F.col("price") / F.col("size")).otherwise(F.lit(None)))
 
 
+def fitted_labels(model: PipelineModel) -> list[tuple[str, str, list[str]]]:
+    """(categorical, indexed column, fitted labels) per categorical, read
+    from a multi-column StringIndexerModel or from the one single-column
+    model per categorical that artifacts saved before the encoder became
+    multi-column hold (those have no ``inputCols`` set)."""
+    out = []
+    for s in model.stages:
+        if isinstance(s, StringIndexerModel):
+            if s.isSet("inputCols"):
+                out += zip(s.getInputCols(), s.getOutputCols(), s.labelsArray)
+            else:
+                out.append((s.getInputCol(), s.getOutputCol(), s.labelsArray[0]))
+    return out
+
+
 class FeatureEngineering:
     """Fit/transform feature pipeline with persisted fit state.
 
-    strict_mode=True  → training: the StringIndexers skip (drop) rows
+    strict_mode=True  → training: the StringIndexer skips (drops) rows
     with an unseen category.
     strict_mode=False → inference (reference src/models/train.py:210
     reconstructs in permissive mode). A pipeline fitted here would keep
@@ -156,11 +170,8 @@ class FeatureEngineering:
 
     # -- imputation (reference :83-91) ------------------------------------
     def impute(self, df: DataFrame) -> DataFrame:
-        num_present = [c for c in NUMERIC_FEATURES if c in df.columns]
-        cat_present = [c for c in CATEGORICAL_FEATURES if c in df.columns]
-        return df.na.fill({c: _NUMERIC_FILL for c in num_present}).na.fill(
-            {c: _CATEGORICAL_FILL for c in cat_present}
-        )
+        fills = {c: _NUMERIC_FILL for c in NUMERIC_FEATURES} | {c: _CATEGORICAL_FILL for c in CATEGORICAL_FEATURES}
+        return df.na.fill({c: v for c, v in fills.items() if c in df.columns})
 
     # -- capping (reference :152-180; fixed to ONE quantile job) ----------
     def fit_capping(self, df: DataFrame, cols: list[str] | None = None) -> None:
@@ -170,33 +181,34 @@ class FeatureEngineering:
         self.capping_values = {c: (q[0], q[1]) for c, q in zip(cols, quantiles)}
 
     def apply_capping(self, df: DataFrame) -> DataFrame:
-        for c, (lo, hi) in self.capping_values.items():
-            if c in df.columns:
-                df = df.withColumn(c, F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi)))
-        return df
+        return df.withColumns({
+            c: F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi))
+            for c, (lo, hi) in self.capping_values.items()
+            if c in df.columns
+        })
 
     # -- encoder pipeline (reference :226-268) -----------------------------
     def _build_pipeline(self, df: DataFrame) -> Pipeline:
-        handle = "skip" if self.strict_mode else "keep"
         cats = [c for c in CATEGORICAL_FEATURES if c in df.columns]
-        stages = []
-        for c in cats:
-            stages.append(StringIndexer(inputCol=c, outputCol=f"{c}_indexed", handleInvalid=handle))
-            stages.append(
-                OneHotEncoder(
-                    inputCols=[f"{c}_indexed"],
-                    outputCols=[f"{c}_encoded"],
-                    dropLast=True,
-                    handleInvalid="error" if self.strict_mode else "keep",
-                )
-            )
+        indexed = [f"{c}_indexed" for c in cats]
+        encoded = [f"{c}_encoded" for c in cats]
         feature_cols = (
             [c for c in NUMERIC_FEATURES if c in df.columns]
             + [c for c in DERIVED_FEATURES if c in df.columns]
-            + [f"{c}_encoded" for c in cats]
+            + encoded
         )
-        stages.append(VectorAssembler(inputCols=feature_cols, outputCol="features", handleInvalid="keep"))
-        return Pipeline(stages=stages)
+        return Pipeline(stages=[
+            StringIndexer(
+                inputCols=cats, outputCols=indexed, handleInvalid="skip" if self.strict_mode else "keep"
+            ),
+            OneHotEncoder(
+                inputCols=indexed,
+                outputCols=encoded,
+                dropLast=True,
+                handleInvalid="error" if self.strict_mode else "keep",
+            ),
+            VectorAssembler(inputCols=feature_cols, outputCol="features", handleInvalid="keep"),
+        ])
 
     def fit_transform(self, df: DataFrame) -> DataFrame:
         df = self.impute(df)
@@ -228,16 +240,15 @@ class FeatureEngineering:
             raise RuntimeError("FeatureEngineering is not fitted; call fit_transform first")
         stages = self.pipeline_model.stages
         index = {  # indexed column -> (categorical, {label: index})
-            s.getOutputCol(): (s.getInputCol(), {label: i for i, label in enumerate(s.labels)})
-            for s in stages
-            if isinstance(s, StringIndexerModel)
+            dst: (src, {label: i for i, label in enumerate(labels)})
+            for src, dst, labels in fitted_labels(self.pipeline_model)
         }
         onehot = {}  # encoded column -> (categorical, {label: index}, width)
         for s in stages:
             if isinstance(s, OneHotEncoderModel):
-                (src,), (dst,), (n,) = s.getInputCols(), s.getOutputCols(), s.categorySizes
-                width = n - s.getDropLast() + (s.getHandleInvalid() == "keep")
-                onehot[dst] = (*index[src], width)
+                extra = (s.getHandleInvalid() == "keep") - s.getDropLast()
+                for src, dst, n in zip(s.getInputCols(), s.getOutputCols(), s.categorySizes):
+                    onehot[dst] = (*index[src], n + extra)
         assembled = next(s for s in stages if isinstance(s, VectorAssembler)).getInputCols()
         caps = self.capping_values
 

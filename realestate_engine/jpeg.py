@@ -751,6 +751,21 @@ def decode_jpeg(payload: bytes) -> dict:
         elif marker == 0xDA:
             if not comps or width == 0:
                 raise ValueError("SOS before SOF")
+            (ns,) = _unpack(">B", data)
+            scan_comps = []
+            for i in range(ns):
+                cs, tables = _unpack(">2B", data, 1 + 2 * i)
+                comp = next((c for c in comps if c["id"] == cs), None)
+                if comp is None:
+                    raise ValueError(f"scan names unknown component {cs}")
+                comp["dc"] = huff_dc.get(tables >> 4)
+                comp["ac"] = huff_ac.get(tables & 0x0F)
+                scan_comps.append(comp)
+            sstart, send, ahal = _unpack(">3B", data, 1 + 2 * ns)
+            if lossless and not 1 <= sstart <= 7:
+                raise ValueError(f"illegal lossless scan: predictor selector {sstart}")
+            if not lossless and not sstart <= send <= 63:
+                raise ValueError("illegal scan: spectral band outside 0-63")
             if geom is None and lossless:
                 if any(c["h"] != 1 or c["v"] != 1 for c in comps):
                     raise NotImplementedError("subsampled lossless JPEG not supported")
@@ -771,19 +786,6 @@ def decode_jpeg(payload: bytes) -> dict:
                     c["tbh"] = -(-chh // 8)
                     c["coef"] = [0] * (c["bw"] * c["bh"] * 64)
                 geom = (max_h, max_v, mcus_x, mcus_y)
-            (ns,) = _unpack(">B", data)
-            scan_comps = []
-            for i in range(ns):
-                cs, tables = _unpack(">2B", data, 1 + 2 * i)
-                comp = next((c for c in comps if c["id"] == cs), None)
-                if comp is None:
-                    raise ValueError(f"scan names unknown component {cs}")
-                comp["dc"] = huff_dc.get(tables >> 4)
-                comp["ac"] = huff_ac.get(tables & 0x0F)
-                scan_comps.append(comp)
-            sstart, send, ahal = _unpack(">3B", data, 1 + 2 * ns)
-            if not lossless and not sstart <= send <= 63:
-                raise ValueError("illegal scan: spectral band outside 0-63")
             pos += seglen
             if lossless:
                 pos = _decode_lossless_scan(
@@ -1096,8 +1098,6 @@ def _decode_lossless_scan(
     """Decode one lossless scan: Huffman DC-style difference categories,
     modulo-65536 predictive reconstruction, raster order interleaved one
     sample per component per MCU."""
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"illegal lossless scan: predictor selector {predictor}")
     reader = _BitReader(data, pos)
     default = 1 << (precision - point_transform - 1)
     mask16 = (1 << 16) - 1

@@ -48,12 +48,11 @@ import threading
 import time
 from typing import Any
 
-from pyspark.ml.feature import StringIndexerModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, _make_type_verifier
 
-from realestate_engine.features import _CATEGORICAL_FILL, FeatureEngineering
+from realestate_engine.features import _CATEGORICAL_FILL, FeatureEngineering, fitted_labels
 from realestate_engine.predict import predict_batch
 from realestate_engine.schemas import LISTINGS_SCHEMA
 from realestate_engine.target import TargetTransformer
@@ -92,11 +91,8 @@ class PredictionService:
         # are served as); both paths clamp with it. Empty in strict mode.
         self._vocab = {}
         if not fe.strict_mode:
-            for stage in fe.pipeline_model.stages:
-                if isinstance(stage, StringIndexerModel):
-                    labels = list(stage.labels)
-                    fallback = _CATEGORICAL_FILL if _CATEGORICAL_FILL in labels else labels[0]
-                    self._vocab[stage.getInputCol()] = (labels, fallback)
+            for col, _indexed, labels in fitted_labels(fe.pipeline_model):
+                self._vocab[col] = (labels, _CATEGORICAL_FILL if _CATEGORICAL_FILL in labels else labels[0])
 
     @classmethod
     def load(cls, spark: SparkSession, artifact_dir: str) -> "PredictionService":
@@ -109,23 +105,19 @@ class PredictionService:
     # -- serve-time category clamp ---------------------------------------
 
     def _clamp_unseen(self, df: DataFrame) -> DataFrame:
-        """Serve-time guard (round-6 fix): the fitted StringIndexers
-        carry handleInvalid='skip' from strict training, which silently
-        DROPS any request row holding an unseen category — a form
-        submission would get no price. Switching the
-        fitted stages to 'keep' is not an option either: it grows the
-        one-hot width past what the model was trained on. So clamp each
-        categorical to the fitted vocabulary instead — unseen or null
-        values map to the imputation fill if it was fitted, else the
-        most frequent label (index 0) — and every request yields a
-        prediction, which is the reference webapp's contract."""
-        for col, (labels, fallback) in self._vocab.items():
-            if col in df.columns:
-                df = df.withColumn(
-                    col,
-                    F.when(F.col(col).isin(labels), F.col(col)).otherwise(F.lit(fallback)),
-                )
-        return df
+        """Clamp each categorical to its fitted labels, in one projection:
+        an unseen or null value becomes the imputation fill if it was
+        fitted, else the most frequent label (index 0). The fitted
+        StringIndexer keeps handleInvalid='skip' from strict training and
+        would drop such a row, so a request would get no price; 'keep'
+        would widen the one-hot past what the model was trained on. With
+        the clamp every request gets a prediction, as in the reference
+        webapp."""
+        return df.withColumns({
+            col: F.when(F.col(col).isin(labels), F.col(col)).otherwise(F.lit(fallback))
+            for col, (labels, fallback) in self._vocab.items()
+            if col in df.columns
+        })
 
     # -- single prediction (app.py predict_single, :52-66) --------------
 

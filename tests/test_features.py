@@ -7,6 +7,8 @@ import math
 
 import pytest
 
+from pyspark.ml.feature import OneHotEncoderModel, StringIndexerModel, VectorAssembler
+
 from realestate_engine.features import (
     CAPPED_COLUMNS,
     DERIVED_FEATURES,
@@ -101,15 +103,19 @@ def test_price_per_m2_deviation_b2(spark):
     assert row.price_per_m2 == pytest.approx(10000.0)
 
 
-def test_fit_transform_and_persistence_roundtrip(spark, tmp_path):
-    rows = [
+def _varied_listings(n: int) -> list[dict]:
+    return [
         _listing(id_annonce=i, size=30.0 + i, nb_rooms=1 + i % 4,
                  property_type=["appartement", "maison", "villa"][i % 3],
                  energy_performance_category="ABCDEFG"[i % 7],
                  ghg_category="ABCDEFG"[i % 5],
                  exposition=["Nord", "Sud", "Est", "Ouest"][i % 4])
-        for i in range(30)
+        for i in range(n)
     ]
+
+
+def test_fit_transform_and_persistence_roundtrip(spark, tmp_path):
+    rows = _varied_listings(30)
     fe = FeatureEngineering(strict_mode=True)
     out = fe.fit_transform(_df(spark, rows))
     assert out.count() == 30
@@ -142,3 +148,22 @@ def test_capping_is_single_job_and_clamps(spark):
     capped = fe.apply_capping(df)
     mn, mx = capped.agg({"size": "min"}).first()[0], capped.agg({"size": "max"}).first()[0]
     assert mn >= lo and mx <= hi
+
+
+def test_encoder_is_three_stages_fitted_in_five_jobs(spark):
+    """The encoder is one multi-column StringIndexer, one multi-column
+    OneHotEncoder and the assembler, and fit_transform launches 5 Spark
+    jobs: 2 for the capping quantiles and 3 for the one indexer's label
+    counts (an adaptive-execution aggregate). The per-categorical layout
+    (9 stages) launched 14, 3 per StringIndexer."""
+    df = _df(spark, _varied_listings(30))
+    sc = spark.sparkContext
+    tag = "test.features.fit_transform"
+    sc.setJobGroup(tag, "fit_transform")
+    try:
+        fe = FeatureEngineering(strict_mode=True)
+        fe.fit_transform(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [type(s) for s in fe.pipeline_model.stages] == [StringIndexerModel, OneHotEncoderModel, VectorAssembler]
+    assert len(sc.statusTracker().getJobIdsForGroup(tag)) == 5

@@ -16,9 +16,11 @@ import urllib.request
 
 import pytest
 
+from pyspark.ml import Pipeline
+from pyspark.ml.feature import OneHotEncoder, StringIndexer, StringIndexerModel
 from pyspark.sql import functions as F
 
-from realestate_engine.features import FeatureEngineering
+from realestate_engine.features import CATEGORICAL_FEATURES, FeatureEngineering, add_derived_features, fitted_labels
 from realestate_engine.schemas import LISTINGS_SCHEMA
 from realestate_engine.serving import PredictionService, RouteStats, serve
 from realestate_engine.target import TargetTransformer
@@ -62,9 +64,10 @@ def _listing(i: int, rng: random.Random) -> tuple:
     return tuple(rec.get(f.name) for f in LISTINGS_SCHEMA.fields)
 
 
-def _train_service(spark, root, model_type: str):
-    """Fit features, target and a ``model_type`` model on 300 generated
-    listings, save the artifacts under ``root`` and load them back."""
+def _train_service(spark, root, model_type: str, fit=FeatureEngineering.fit_transform):
+    """Fit features (with ``fit``), target and a ``model_type`` model on
+    300 generated listings, save the artifacts under ``root`` and load
+    them back."""
     rng = random.Random(11)
     x = spark.createDataFrame([_listing(i, rng) for i in range(300)], LISTINGS_SCHEMA)
     y = x.select(
@@ -73,7 +76,7 @@ def _train_service(spark, root, model_type: str):
     )
     joined = x.join(y, "id_annonce")
     fe = FeatureEngineering(strict_mode=True)
-    feats = fe.fit_transform(joined)
+    feats = fit(fe, joined)
     tt = TargetTransformer().fit(feats)
     trainer = ModelTrainer(model_type=model_type, label_col="log_price").train(tt.transform(feats))
     fe.save(str(root / "fe"))
@@ -87,8 +90,34 @@ def service(spark, tmp_path_factory):
     return _train_service(spark, tmp_path_factory.mktemp("artifacts"), "rf")
 
 
-@pytest.fixture(scope="module", params=["rf", "lr", "gbt"])
+def _fit_per_categorical(fe: FeatureEngineering, df):
+    """``fit_transform`` with the encoder layout artifacts were saved in
+    before it became multi-column: one single-column StringIndexer and
+    one OneHotEncoder per categorical, then the same assembler (9
+    stages)."""
+    df = add_derived_features(fe.impute(df))
+    fe.fit_capping(df)
+    df = fe.apply_capping(df)
+    stages = []
+    for c in CATEGORICAL_FEATURES:
+        stages.append(StringIndexer(inputCol=c, outputCol=f"{c}_indexed", handleInvalid="skip"))
+        stages.append(OneHotEncoder(
+            inputCols=[f"{c}_indexed"], outputCols=[f"{c}_encoded"], dropLast=True, handleInvalid="error"
+        ))
+    stages.append(fe._build_pipeline(df).getStages()[-1])
+    fe.pipeline_model = Pipeline(stages=stages).fit(df)
+    return fe.pipeline_model.transform(df)
+
+
+@pytest.fixture(scope="module")
+def per_categorical_service(spark, tmp_path_factory):
+    return _train_service(spark, tmp_path_factory.mktemp("per_categorical"), "rf", fit=_fit_per_categorical)
+
+
+@pytest.fixture(scope="module", params=["rf", "lr", "gbt", "per_categorical"])
 def model_service(request, spark, tmp_path_factory):
+    if request.param == "per_categorical":
+        return request.getfixturevalue("per_categorical_service")
     return _train_service(spark, tmp_path_factory.mktemp(request.param), request.param)
 
 
@@ -136,6 +165,17 @@ def test_single_matches_batch_path(model_service):
         got[out["id_annonce"]] = _cents(out["predicted_price"])
     assert len(want) == len(recs)
     assert got == want
+
+
+def test_per_categorical_artifacts_still_serve(per_categorical_service, service):
+    """Artifacts saved with one single-column StringIndexerModel per
+    categorical (no ``inputCols`` set) load with the same labels as the
+    multi-column fit on the same rows; test_single_matches_batch_path
+    checks that they serve."""
+    model = per_categorical_service[0].fe.pipeline_model
+    assert len(model.stages) == 9
+    assert not any(s.isSet("inputCols") for s in model.stages if isinstance(s, StringIndexerModel))
+    assert fitted_labels(model) == fitted_labels(service[0].fe.pipeline_model)
 
 
 def test_single_launches_no_spark_job(service):
